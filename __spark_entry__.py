@@ -2,12 +2,17 @@
 
 ``entry(spark)`` runs the flagship point-in-time feature pipeline on
 sf0.001; ``queries()``/``oracle_sql()`` expose every implemented operator
-from SURVEY.md §2 with its DuckDB oracle (see ``fs2_data_spark/queries.py``).
+from SURVEY.md §2 with its DuckDB oracle (see ``fs2_data_spark/queries.py``),
+both in the driver-window order of ``tools/driver_order.py`` (loaded by path,
+computed once per process).
 """
 
 from __future__ import annotations
 
+import functools
+import importlib.util
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -42,19 +47,35 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+@functools.cache
+def driver_order_module():
+    """``tools/driver_order.py``, loaded by path: works from any caller cwd
+    and ``sys.path`` (the driver imports this module from anywhere)."""
+    spec = importlib.util.spec_from_file_location(
+        "fs2ds_driver_order",
+        Path(__file__).resolve().parent / "tools" / "driver_order.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@functools.cache
+def _ordered_registry() -> dict:
     from fs2_data_spark.queries import REGISTRY
 
+    return {n: REGISTRY[n] for n in driver_order_module().driver_order(REGISTRY)}
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             _tz(spark)
             return fn(spark, sf_dir)
         return run
 
-    return {name: wrap(fn) for name, (fn, _sql) in REGISTRY.items()}
+    return {name: wrap(fn) for name, (fn, _sql) in _ordered_registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from fs2_data_spark.queries import REGISTRY
-
-    return {name: sql for name, (_fn, sql) in REGISTRY.items() if sql is not None}
+    return {name: sql for name, (_fn, sql) in _ordered_registry().items()
+            if sql is not None}

@@ -123,15 +123,18 @@ def run_resumable(
     input_snapshot: str | None = None,
 ) -> dict:
     """Compute/refresh all stale buckets; returns a summary. A re-invocation
-    after a crash (or with unchanged input) only touches missing buckets."""
-    snap = input_snapshot or input_snapshot_id(df)
-    todo = resume_plan(path, n_buckets, snap)
-    bucketed = with_bucket(df, key, n_buckets)
-    if todo:
-        # one cached pass feeds every remaining bucket write
-        bucketed = bucketed.persist()
-    written = [write_partition(bucketed, path, b, snap) for b in todo]
-    if todo:
+    after a crash (or with unchanged input) only touches missing buckets.
+
+    ``df`` is evaluated once per call: the bucketed frame is persisted
+    first, so the snapshot job (over the cached plan minus the bucket
+    column, the same rows as ``df``) fills the cache every bucket write
+    then reads."""
+    bucketed = with_bucket(df, key, n_buckets).persist()
+    try:
+        snap = input_snapshot or input_snapshot_id(bucketed.drop(BUCKET_COL))
+        todo = resume_plan(path, n_buckets, snap)
+        written = [write_partition(bucketed, path, b, snap) for b in todo]
+    finally:
         bucketed.unpersist()
     return {
         "input_snapshot": snap,

@@ -359,10 +359,11 @@ def repetition_stats(df: DataFrame, tokens: str = "tokens", k: int = 4,
     })
 
 
-def _cc_union_find(rows: list) -> list[tuple[int, int]]:
-    """Driver-side union-find with path compression; returns the unique
-    component-min labeling (same function the iterative labeling
-    converges to — pinned by a parity test against the distributed path)."""
+def _cc_union_find(src: list[int], dst: list[int]) -> list[tuple[int, int]]:
+    """Driver-side union-find with path compression over the edges
+    ``zip(src, dst)``; returns the unique component-min labeling (same
+    function the iterative labeling converges to — pinned by a parity test
+    against the distributed path)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -373,15 +374,11 @@ def _cc_union_find(rows: list) -> list[tuple[int, int]]:
             parent[x], x = r, parent[x]
         return r
 
-    for a, b in rows:
+    for a, b in zip(src, dst):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = set()
-    for a, b in rows:
-        nodes.add(a)
-        nodes.add(b)
-    return [(n, find(n)) for n in sorted(nodes)]
+    return [(n, find(n)) for n in sorted(set(src) | set(dst))]
 
 
 def connected_components(pairs: DataFrame, src: str = "id1", dst: str = "id2",
@@ -411,9 +408,12 @@ def connected_components(pairs: DataFrame, src: str = "id1", dst: str = "id2",
     independent of partitioning and iteration schedule (min is idempotent,
     commutative, associative) — so an ANSI-SQL recursive-CTE oracle can
     recompute it exactly.
+
+    An edge with a NULL endpoint connects nothing and is dropped up front
+    on both paths, so no NULL node is ever emitted.
     """
     e = pairs.select(F.col(src).cast("bigint").alias("a"),
-                     F.col(dst).cast("bigint").alias("b"))
+                     F.col(dst).cast("bigint").alias("b")).dropna()
     # size-gated driver fast path (r6): near-dup pair graphs are orders of
     # magnitude smaller than the corpus (they are the *output* of the LSH +
     # verify funnel), and the iterative path pays ~4 scheduled jobs per
@@ -423,9 +423,10 @@ def connected_components(pairs: DataFrame, src: str = "id1", dst: str = "id2",
     # ``driver_max_edges`` (limit k+1, never an unbounded pull); bigger
     # graphs take the unchanged distributed min-label/pointer-jumping loop.
     if driver_max_edges:
-        head = e.limit(driver_max_edges + 1).collect()
-        if len(head) <= driver_max_edges:
-            labeled = _cc_union_find([(r["a"], r["b"]) for r in head])
+        head = e.limit(driver_max_edges + 1).toArrow()
+        if head.num_rows <= driver_max_edges:
+            labeled = _cc_union_find(head.column("a").to_numpy().tolist(),
+                                     head.column("b").to_numpy().tolist())
             spark = pairs.sparkSession
             return spark.createDataFrame(
                 labeled or [], "node bigint, component bigint")

@@ -37,6 +37,26 @@ def test_full_run_then_noop_resume(spark, tmp_path):
     assert verify_manifests(spark, path) == []
 
 
+def test_each_run_evaluates_input_once(spark, tmp_path):
+    """The snapshot job fills the cache the bucket writes read: a fresh run
+    and a no-op resume each pull every input row through ``df`` once."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    base = _data(spark)
+    df = base.mapInArrow(count, base.schema)
+    path = str(tmp_path / "out")
+    r1 = run_resumable(df, path, key="doc_id", n_buckets=8)
+    assert acc.value == 200 and r1["rows_written"] == 200
+    r2 = run_resumable(df, path, key="doc_id", n_buckets=8)
+    assert acc.value == 400 and r2["computed"] == []
+    assert r2["input_snapshot"] == r1["input_snapshot"] == input_snapshot_id(base)
+
+
 def test_crash_resume_completes_missing_buckets(spark, tmp_path):
     df = _data(spark)
     path = str(tmp_path / "out")

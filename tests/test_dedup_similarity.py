@@ -506,3 +506,20 @@ def test_connected_components_driver_vs_distributed_parity(spark):
             for r in connected_components(
                 pairs, driver_max_edges=0).collect()}
     assert fast == slow and fast
+
+
+def test_connected_components_drops_null_edges(spark):
+    """A pair with a NULL id connects nothing: both the driver union-find
+    and the distributed loop drop it, emit no NULL node, and agree."""
+    from fs2_data_spark.operators.dedup import connected_components
+
+    edges = [(1, 2), (2, None), (None, 3), (None, None), (3, 4), (5, 6),
+             (6, None), (None, 9)]
+    pairs = spark.createDataFrame(edges, "id1 bigint, id2 bigint")
+    nulls = spark.createDataFrame([(None, None), (7, None)],
+                                  "id1 bigint, id2 bigint")
+    for kw in ({}, {"driver_max_edges": 0}):
+        got = [(r.node, r.component)
+               for r in connected_components(pairs, **kw).collect()]
+        assert sorted(got) == [(1, 1), (2, 1), (3, 3), (4, 3), (5, 5), (6, 5)]
+        assert connected_components(nulls, **kw).collect() == []

@@ -65,11 +65,33 @@ def test_interarrival_uses_replica_not_f_round(spark):
     """The query's rounded columns must disagree with F.round exactly where
     DuckDB does — i.e. the replica is actually wired in (a regression to
     F.round would silently pass the loose %.10g canon this repo used to
-    have)."""
+    have).  sf0.001 holds such a boundary row (an expanding mean gap)."""
+    from conftest import SF_SMOKE
+
+    from fs2_data_spark.operators.encoding import interarrival_stats
     from fs2_data_spark.queries import REGISTRY
+
     fn, _ = REGISTRY["interarrival_events"]
-    out = fn(spark, "/root/testdata/sf0.001").limit(0)
-    assert {"mean_dt4", "burst4"} <= set(out.columns)
+    raw = interarrival_stats(
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        .select("event_id", "user_id", "ts"),
+        key="user_id", ts="ts", tiebreak="event_id")
+    rows = (fn(spark, SF_SMOKE).join(raw, "event_id")
+            .select("event_id", "mean_dt4", "burst4", "mean_dt_us", "burst",
+                    F.round("mean_dt_us", 4).alias("f_mean"),
+                    F.round("burst", 4).alias("f_burst"))
+            .collect())
+    con = duckdb.connect()
+    duck = {x: con.execute("SELECT ROUND(?::DOUBLE, 4)", [x]).fetchone()[0]
+            for r in rows for x in (r.mean_dt_us, r.burst) if x is not None}
+    witnesses = [
+        (r.event_id, col)
+        for r in rows
+        for col, got, f_round, x in (
+            ("mean_dt4", r.mean_dt4, r.f_mean, r.mean_dt_us),
+            ("burst4", r.burst4, r.f_burst, r.burst))
+        if x is not None and got != f_round and repr(got) == repr(duck[x])]
+    assert witnesses, "no row tells the DuckDB ROUND replica from F.round"
 
 
 def test_banded_levenshtein_matches_spark(spark):

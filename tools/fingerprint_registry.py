@@ -15,9 +15,10 @@ the function imports shows up as fingerprint drift.  Usage::
                                                      # tools/registry_fingerprints.json
 
 The committed snapshot records the fingerprints as of the LAST round's end
-(the driver's round-start tree); ``queries.py`` compares current vs snapshot
-to tier changed queries to the window front.  Regenerate the snapshot (with
-``--write``) as the final step of every round.
+(the driver's round-start tree); ``tools/driver_order.py`` compares current
+vs snapshot to tier changed queries to the window front of
+``__spark_entry__.queries()``.  Regenerate the snapshot (with ``--write``)
+as the final step of every round.
 """
 
 from __future__ import annotations
