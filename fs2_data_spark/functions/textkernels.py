@@ -6,25 +6,33 @@ per-word arithmetic as interpreted Catalyst higher-order folds — measured
 the dominant cost of ``jaccard_pairs`` / ``simhash_docs`` /
 ``minhash_band_buckets`` at sf1.  These kernels compute the identical
 integer values (pure int64 arithmetic — bit-exactness is trivial, unlike the
-float kernels in ``veckernels.py``) over whole Arrow batches.
+float kernels in ``veckernels.py``) over whole Arrow batches, each through
+the one runner (``functions/arrow_kernel.run_kernel``): the id rides through
+uncast, so string and UUID ids come back as themselves.
 
 Tokenization contract (replicates ``functions/text.py``): words are maximal
 runs of non-space (U+0020) *codepoints* (``split(text, ' ')`` + empty
-filter); ``ascii()``/``length()`` in the Catalyst tier operate on BMP
-codepoints, which the UTF-32 view below reproduces exactly.  Astral-plane
-codepoints (> U+FFFF) would diverge (Spark indexes UTF-16 units there) —
-the kernel raises on them rather than silently mis-hashing; no corpus or
-test exercises them.
+filter).  Catalyst's ``length``/``ascii``/``substring``/``split(w, '')``
+are code-point based over the whole range (``length('a😀b x')`` = 5,
+``ascii('😀')`` = 128512), and the UTF-32 view below keeps every code point
+up to U+10FFFF unnarrowed, so astral text (emoji) hashes exactly like the
+Catalyst expressions.  Where a Catalyst expression overflows bigint —
+``word_code * a + b`` once the code passes ~3.47e9 for SimHash (a word
+starting at about U+CF1B) or ~8.36e9 for the word-code MinHash (about
+U+1F22F: most emoji) — ANSI Spark raises ``ARITHMETIC_OVERFLOW``; the
+kernels raise ``ArithmeticError`` on the same rows instead of wrapping.
 
-NULL text hashes like the empty string (no words) — same final rows as the
-Catalyst NULL propagation produces for every consumer below (empty shingle
-set, NULL minhash components, SimHash 0).
+NULL rule: NULL text reads as the empty string (no words) — the same final
+rows the Catalyst NULL propagation produces for every consumer below (empty
+shingle set, NULL minhash components, SimHash 0).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+
+from fs2_data_spark.functions.arrow_kernel import run_kernel
 
 HASH_PRIME = 2_147_483_647
 _B = 1_000_003
@@ -66,10 +74,6 @@ def decode_batch(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     byte_offs = byte_offs - byte_offs[0]
     text = raw.tobytes().decode("utf-8")
     cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-    if cp.size and cp.max() > 0xFFFF:
-        raise ValueError("astral-plane codepoint: Catalyst ascii()/length() "
-                         "index UTF-16 units there; kernel parity not "
-                         "defined")
     # byte offsets -> char offsets: chars = non-continuation bytes
     is_start = (raw & 0xC0) != 0x80
     char_cum = np.zeros(raw.size + 1, dtype=np.int64)
@@ -145,130 +149,99 @@ def _word_codes(cp: np.ndarray, starts: np.ndarray, lens: np.ndarray
 
 _MINHASH_COEF = [(1_103_515_245 + 2 * i + 1, 12_345 + 7919 * i)
                  for i in range(64)]
+_I64_MAX = np.iinfo(np.int64).max
+
+
+def _affine_checked(x: np.ndarray, a: int, b: int) -> np.ndarray:
+    """``x*a + b`` over non-negative int64 ``x``, raising where the bigint
+    Catalyst expression raises ``ARITHMETIC_OVERFLOW`` (ANSI) instead of
+    wrapping."""
+    if x.size and int(x.max()) > (_I64_MAX - b) // a:
+        raise ArithmeticError(
+            f"long overflow in code*{a}+{b} (a word's first code point is "
+            f"too large for this hash; Catalyst raises ARITHMETIC_OVERFLOW)")
+    return x * a + b
+
+
+def _key(id_col: str, name: str):
+    import pyspark.sql.functions as F  # noqa: PLC0415
+    return F.col(id_col).alias(name)
 
 
 def _segmented_min(vals: np.ndarray, seg_id: np.ndarray, n_seg: int
                    ) -> tuple[np.ndarray, np.ndarray]:
     """(min per segment, has-any per segment) for sorted seg_id."""
-    out = np.full(n_seg, np.iinfo(np.int64).max, dtype=np.int64)
+    out = np.full(n_seg, _I64_MAX, dtype=np.int64)
     np.minimum.at(out, seg_id, vals)
     has = np.zeros(n_seg, dtype=bool)
     has[seg_id] = True
     return out, has
 
 
-def _mh_batch(ids: np.ndarray, dom: np.ndarray, dom_doc: np.ndarray,
+def _mh_batch(n_doc: int, dom: np.ndarray, dom_doc: np.ndarray,
               k: int, inner_mod: bool) -> list[pa.Array]:
     """k MinHash components over a per-doc integer domain (sorted by doc).
     ``inner_mod``: apply ``s mod P`` before the affine map (the shingle
-    variant); word codes skip it (always < P)."""
-    n_doc = len(ids)
+    variant); word codes skip it, like ``text.minhash_signature_from``."""
     s = dom % HASH_PRIME if inner_mod else dom
     cols = []
     for i in range(k):
         a, b = _MINHASH_COEF[i]
-        v = (s * a + b) % HASH_PRIME
+        v = _affine_checked(s, a, b) % HASH_PRIME
         mn, has = _segmented_min(v, dom_doc, n_doc)
         cols.append(pa.array(mn, mask=~has))
     return cols
 
 
+def _mh_fields(k: int) -> str:
+    return ", ".join(f"mh{i} long" for i in range(k))
+
+
 def shingle_minhash_kernel(df, id_col: str, text_col: str, k: int = 8,
                            shingle_n: int = 3):
-    """mapInArrow emitting ``(id, sh array<bigint>, mh0..mh{k-1})`` —
-    value-identical to the staged Catalyst pipeline in
-    ``operators/dedup.jaccard_lsh_pairs``: per-word poly-31 hashes mod
+    """Kernel emitting ``(id, sh array<bigint>, mh0..mh{k-1})`` —
+    value-identical to ``functions/text.shingle_hashes`` (as a set) and
+    ``text.minhash_signature_shingles``: per-word poly-31 hashes mod
     1000003, base-1000003 positional ``shingle_n``-gram mix, first-seen
     distinct, then ``min((s mod p)*a_i + b_i mod p)`` per component (NULL
     components for docs with < shingle_n words, empty ``sh``)."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    schema = ("id long, sh array<bigint>, "
-              + ", ".join(f"mh{i} long" for i in range(k)))
-    out_fields = [pa.field("id", pa.int64()),
-                  pa.field("sh", pa.list_(pa.int64()))] + [
-                  pa.field(f"mh{i}", pa.int64()) for i in range(k)]
-    out_schema = pa.schema(out_fields)
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        wh = _word_hash_poly31(cp, starts, lens, _B)
+        sh, sdoc = _positional_shingles(wh, wdoc, shingle_n, _B, None)
+        # distinct per doc (order irrelevant downstream: set semantics)
+        sv, cnt = _per_doc_distinct_sorted(sh, sdoc, nrow)
+        return [_list_array(sv, cnt),
+                *_mh_batch(nrow, sv, np.repeat(np.arange(nrow), cnt), k,
+                           inner_mod=True)]
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            wh = _word_hash_poly31(cp, starts, lens, _B)
-            # positional shingle mix over words of the same doc
-            if len(wh) >= shingle_n:
-                sh = wh[: len(wh) - shingle_n + 1].copy()
-                for j in range(1, shingle_n):
-                    sh = sh * _B + wh[j: len(wh) - shingle_n + 1 + j]
-                same = wdoc[: len(wh) - shingle_n + 1] == \
-                    wdoc[shingle_n - 1:]
-                sh = sh[same]
-                sdoc = wdoc[: len(wh) - shingle_n + 1][same]
-            else:
-                sh = np.empty(0, dtype=np.int64)
-                sdoc = np.empty(0, dtype=np.int64)
-            # distinct per doc (order irrelevant downstream: set semantics)
-            if sh.size:
-                key = np.lexsort((sh, sdoc))
-                sh, sdoc = sh[key], sdoc[key]
-                keep = np.empty(sh.size, dtype=bool)
-                keep[0] = True
-                keep[1:] = (sh[1:] != sh[:-1]) | (sdoc[1:] != sdoc[:-1])
-                sh, sdoc = sh[keep], sdoc[keep]
-            # per-doc list array
-            cnt = np.zeros(nrow, dtype=np.int64)
-            np.add.at(cnt, sdoc, 1)
-            offsets = pa.array(np.concatenate(
-                ([0], np.cumsum(cnt))).astype(np.int32))
-            sh_arr = pa.ListArray.from_arrays(offsets, pa.array(sh))
-            mh_cols = _mh_batch(ids, sh, sdoc, k, inner_mod=True)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), sh_arr, *mh_cols], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, schema)
+    return run_kernel(df, fn, [text_col],
+                      "sh array<bigint>, " + _mh_fields(k),
+                      keys=[_key(id_col, "id")])
 
 
 def word_code_minhash_kernel(df, id_col: str, text_col: str, k: int = 8):
-    """mapInArrow emitting ``(id, mh0..mh{k-1})`` over the *word-code*
-    domain — ``functions/text.minhash_signature_from(word_codes(...))``
-    exactly (no inner mod: codes < 2^24)."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
+    """Kernel emitting ``(id, mh0..mh{k-1})`` over the *word-code* domain —
+    ``functions/text.minhash_signature_from(word_codes(...))`` exactly (no
+    inner mod; raises where that expression overflows)."""
 
-    schema = "id long, " + ", ".join(f"mh{i} long" for i in range(k))
-    out_schema = pa.schema([pa.field("id", pa.int64())] + [
-        pa.field(f"mh{i}", pa.int64()) for i in range(k)])
+    def fn(text):
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _word_codes(cp, starts, lens)
+        return _mh_batch(len(text), codes, wdoc, k, inner_mod=False)
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = _word_codes(cp, starts, lens)
-            mh_cols = _mh_batch(ids, codes, wdoc, k, inner_mod=False)
-            yield pa.RecordBatch.from_arrays([pa.array(ids), *mh_cols],
-                                             schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, schema)
+    return run_kernel(df, fn, [text_col], _mh_fields(k),
+                      keys=[_key(id_col, "id")])
 
 
 def _list_array(vals: np.ndarray, counts: np.ndarray) -> pa.ListArray:
     offsets = pa.array(np.concatenate(
         ([0], np.cumsum(counts))).astype(np.int32))
-    return pa.ListArray.from_arrays(offsets, pa.array(vals))
+    return pa.ListArray.from_arrays(offsets, pa.array(vals, pa.int64()))
 
 
 def _per_doc_distinct_sorted(vals: np.ndarray, doc: np.ndarray, nrow: int
@@ -306,156 +279,104 @@ def _positional_shingles(wh: np.ndarray, wdoc: np.ndarray, n: int, mult: int,
 
 
 def winnow_fp_kernel(df, id_col: str, text_col: str, k: int = 3, w: int = 4):
-    """mapInArrow emitting ``(doc_id, fp array<bigint>)`` — the winnowing
+    """Kernel emitting ``(doc_id, fp array<bigint>)`` — the winnowing
     fingerprint set of ``functions/text.winnow_fingerprints_from`` exactly:
     positional ``k``-gram shingle hashes (no distinct), per-``w``-window
     minima (docs with 0 < |grams| < w keep one global min), then distinct
     ascending.  Pure int64 arithmetic."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    out_schema = pa.schema([pa.field("doc_id", pa.int64()),
-                            pa.field("fp", pa.list_(pa.int64()))])
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        wh = _word_hash_poly31(cp, starts, lens, _B)
+        hs, hdoc = _positional_shingles(wh, wdoc, k, _B, None)
+        # per-doc gram counts
+        ghn = np.zeros(nrow, dtype=np.int64)
+        np.add.at(ghn, hdoc, 1)
+        mins_list = [np.empty(0, dtype=np.int64)]
+        doc_list = [np.empty(0, dtype=np.int64)]
+        if hs.size >= w:
+            # full windows: min over w consecutive same-doc grams
+            mw = hs[: hs.size - w + 1].copy()
+            for j in range(1, w):
+                np.minimum(mw, hs[j: hs.size - w + 1 + j], out=mw)
+            full = hdoc[: hs.size - w + 1] == hdoc[w - 1:]
+            mins_list.append(mw[full])
+            doc_list.append(hdoc[: hs.size - w + 1][full])
+        # short docs (0 < |grams| < w): one global min
+        short_docs = np.nonzero((ghn > 0) & (ghn < w))[0]
+        if short_docs.size:
+            gmin = np.full(nrow, _I64_MAX, dtype=np.int64)
+            np.minimum.at(gmin, hdoc, hs)
+            mins_list.append(gmin[short_docs])
+            doc_list.append(short_docs.astype(np.int64))
+        fv, fc = _per_doc_distinct_sorted(np.concatenate(mins_list),
+                                          np.concatenate(doc_list), nrow)
+        return [_list_array(fv, fc)]
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            wh = _word_hash_poly31(cp, starts, lens, _B)
-            hs, hdoc = _positional_shingles(wh, wdoc, k, _B, None)
-            # per-doc gram counts
-            ghn = np.zeros(nrow, dtype=np.int64)
-            np.add.at(ghn, hdoc, 1)
-            mins_list = []
-            doc_list = []
-            if hs.size:
-                # full windows: min over w consecutive same-doc grams
-                if hs.size >= w:
-                    mw = hs[: hs.size - w + 1].copy()
-                    for j in range(1, w):
-                        np.minimum(mw, hs[j: hs.size - w + 1 + j], out=mw)
-                    full = hdoc[: hs.size - w + 1] == hdoc[w - 1:]
-                    mins_list.append(mw[full])
-                    doc_list.append(hdoc[: hs.size - w + 1][full])
-                # short docs (0 < |grams| < w): one global min
-                short_docs = np.nonzero((ghn > 0) & (ghn < w))[0]
-                if short_docs.size:
-                    gmin = np.full(nrow, np.iinfo(np.int64).max,
-                                   dtype=np.int64)
-                    np.minimum.at(gmin, hdoc, hs)
-                    mins_list.append(gmin[short_docs])
-                    doc_list.append(short_docs.astype(np.int64))
-            if mins_list:
-                mv = np.concatenate(mins_list)
-                md = np.concatenate(doc_list)
-            else:
-                mv = np.empty(0, dtype=np.int64)
-                md = np.empty(0, dtype=np.int64)
-            fv, fc = _per_doc_distinct_sorted(mv, md, nrow)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), _list_array(fv, fc)], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "doc_id long, fp array<bigint>")
+    return run_kernel(df, fn, [text_col], "fp array<bigint>",
+                      keys=[_key(id_col, "doc_id")])
 
 
 def shingles_kernel(df, text_col: str, keep: list[str], n: int = 3):
-    """mapInArrow emitting ``(keep..., sh array<bigint>)`` — the DISTINCT
+    """Kernel emitting ``(keep..., sh array<bigint>)`` — the DISTINCT
     word-``n``-gram shingle set of ``functions/text.shingle_hashes``
     (first-occurrence distinct is a set downstream; emitted ascending).
     Passthrough columns keep their types."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    keep_schema = df.select(*keep).schema
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in keep_schema.fields) + ", sh array<bigint>"
+    def fn(text):
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        wh = _word_hash_poly31(cp, starts, lens, _B)
+        sh, sdoc = _positional_shingles(wh, wdoc, n, _B, None)
+        return [_list_array(*_per_doc_distinct_sorted(sh, sdoc, len(text)))]
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            cp, offs = decode_batch(batch.column(len(keep)))
-            starts, lens, wdoc = word_segments(cp, offs)
-            wh = _word_hash_poly31(cp, starts, lens, _B)
-            sh, sdoc = _positional_shingles(wh, wdoc, n, _B, None)
-            sv, sc_ = _per_doc_distinct_sorted(sh, sdoc, nrow)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(len(keep))]
-                + [_list_array(sv, sc_)],
-                schema=pa.schema(list(batch.schema)[: len(keep)]
-                                 + [pa.field("sh", pa.list_(pa.int64()))]))
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(*[F.col(c) for c in keep], F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, ddl)
+    return run_kernel(df, fn, [text_col], "sh array<bigint>", keys=keep)
 
 
 _TOPGRAM_P = 1_000_000_007
 
 
+def _seg_max_runs(g: np.ndarray, gd: np.ndarray, nrow: int) -> np.ndarray:
+    """Per doc, the longest run of equal values in each doc's sorted
+    gram list (0 for docs without grams)."""
+    best = np.zeros(nrow, dtype=np.int64)
+    if g.size == 0:
+        return best
+    key = np.lexsort((g, gd))
+    v, d = g[key], gd[key]
+    new_run = np.empty(v.size, dtype=bool)
+    new_run[0] = True
+    new_run[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
+    run_id = np.cumsum(new_run) - 1
+    np.maximum.at(best, d[new_run], np.bincount(run_id))
+    return best
+
+
 def top_ngram_kernel(df, id_col: str, text_col: str,
                      ns: tuple[int, ...] = (2, 3, 4)):
-    """mapInArrow emitting ``(doc_id, n_words, top{n}_count ...)`` — the
+    """Kernel emitting ``(doc_id, n_words, top{n}_count ...)`` — the
     per-document most-frequent-n-gram counts of
     ``operators/quality.top_ngram_fraction`` (rolling-hash grams
     ``fold (a*1000003 + x) mod 1e9+7``, max run count over the sorted gram
     list).  All-integer; the caller derives the fractions with the same
     JVM expressions as before."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    fields = [pa.field("doc_id", pa.int64()), pa.field("n_words", pa.int32())]
-    for n in ns:
-        fields.append(pa.field(f"top{n}_count", pa.int32()))
-    out_schema = pa.schema(fields)
-    ddl = ("doc_id long, n_words int, "
-           + ", ".join(f"top{n}_count int" for n in ns))
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        wh = _word_hash_poly31(cp, starts, lens, _B)
+        nw = np.bincount(wdoc, minlength=nrow)
+        return [nw] + [
+            _seg_max_runs(*_positional_shingles(wh, wdoc, n, _B, _TOPGRAM_P),
+                          nrow) for n in ns]
 
-    def _seg_max_runs(g: np.ndarray, gd: np.ndarray, nrow: int) -> np.ndarray:
-        best = np.zeros(nrow, dtype=np.int64)
-        if g.size == 0:
-            return best
-        key = np.lexsort((g, gd))
-        v, d = g[key], gd[key]
-        new_run = np.empty(v.size, dtype=bool)
-        new_run[0] = True
-        new_run[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
-        run_id = np.cumsum(new_run) - 1
-        run_len = np.bincount(run_id)
-        run_doc = d[new_run]
-        np.maximum.at(best, run_doc, run_len)
-        return best
-
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            wh = _word_hash_poly31(cp, starts, lens, _B)
-            nw = np.zeros(nrow, dtype=np.int64)
-            np.add.at(nw, wdoc, 1)
-            cols = [pa.array(ids), pa.array(nw.astype(np.int32))]
-            for n in ns:
-                g, gd = _positional_shingles(wh, wdoc, n, _B, _TOPGRAM_P)
-                best = _seg_max_runs(g, gd, nrow)
-                cols.append(pa.array(best.astype(np.int32)))
-            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, ddl)
+    return run_kernel(df, fn, [text_col],
+                      "n_words int, " + ", ".join(f"top{n}_count int"
+                                                  for n in ns),
+                      keys=[_key(id_col, "doc_id")])
 
 
 def _token_codes(cp: np.ndarray, starts: np.ndarray, lens: np.ndarray
@@ -467,269 +388,165 @@ def _token_codes(cp: np.ndarray, starts: np.ndarray, lens: np.ndarray
 
 
 def token_spans_kernel(df, id_col: str, text_col: str, k: int = 8):
-    """mapInArrow emitting ``(doc_id, pos, span_h)`` for every ``k``-token
+    """Kernel emitting ``(doc_id, pos, span_h)`` for every ``k``-token
     window — the rolling span hash of ``operators/dedup._token_spans``
     (``fold (a*31 + x) mod 1e9+7`` over ``tokens_col`` codes), pure int64."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    out_schema = pa.schema([pa.field("doc_id", pa.int64()),
-                            pa.field("pos", pa.int32()),
-                            pa.field("span_h", pa.int64())])
+    def fn(text):
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _token_codes(cp, starts, lens)
+        if len(codes) < k:
+            return None
+        m = len(codes) - k + 1
+        g = codes[:m].copy()
+        for j in range(1, k):
+            g = (g * 31 + codes[j: m + j]) % 1_000_000_007
+        gidx = np.nonzero(wdoc[:m] == wdoc[k - 1:])[0]
+        gdoc = wdoc[gidx]
+        doc_start = np.searchsorted(wdoc, np.arange(len(text)))
+        return gdoc, [gidx - doc_start[gdoc], g[gidx]]
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = _token_codes(cp, starts, lens)
-            if len(codes) < k:
-                continue
-            m = len(codes) - k + 1
-            g = codes[:m].copy()
-            for j in range(1, k):
-                g = (g * 31 + codes[j: m + j]) % 1_000_000_007
-            same = wdoc[:m] == wdoc[k - 1:]
-            gidx = np.nonzero(same)[0]
-            if gidx.size == 0:
-                continue
-            gdoc = wdoc[gidx]
-            nwords = np.zeros(batch.num_rows, dtype=np.int64)
-            np.add.at(nwords, wdoc, 1)
-            doc_start = np.concatenate(([0], np.cumsum(nwords)[:-1]))
-            pos = gidx - doc_start[gdoc]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[gdoc]), pa.array(pos.astype(np.int32)),
-                 pa.array(g[gidx])], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "doc_id long, pos int, span_h long")
+    return run_kernel(df, fn, [text_col], "pos int, span_h long",
+                      keys=[_key(id_col, "doc_id")])
 
 
 def skipgram_partial_kernel(df, text_col: str, window: int = 2):
-    """mapInArrow emitting per-batch partial ``(center, context, c)``
+    """Kernel emitting per-batch partial ``(center, context, c)``
     counts — the skip-gram pair multiset of
     ``operators/seqops.skipgram_pairs`` over ``tokens_col`` codes, doc-
     fenced, distances 1..window both sides.  Caller sums the partials
     (one map-side-combined aggregation, same key space)."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    out_schema = pa.schema([pa.field("center", pa.int32()),
-                            pa.field("context", pa.int32()),
-                            pa.field("c", pa.int64())])
+    def fn(text):
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _token_codes(cp, starts, lens)
+        cs, xs = [], []
+        for dist in range(1, min(window, codes.size - 1) + 1):
+            same = wdoc[dist:] == wdoc[:-dist]
+            # right context: center i, context i+dist; left: i, i-dist
+            cs += [codes[:-dist][same], codes[dist:][same]]
+            xs += [codes[dist:][same], codes[:-dist][same]]
+        if not cs:
+            return None
+        key = np.concatenate(cs) * (1 << 32) + np.concatenate(xs)
+        uniq, cnt = np.unique(key, return_counts=True)
+        return [uniq >> 32, uniq & ((1 << 32) - 1), cnt]
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cp, offs = decode_batch(batch.column(0))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = _token_codes(cp, starts, lens)
-            if codes.size == 0:
-                continue
-            cs, xs = [], []
-            for dist in range(1, window + 1):
-                if codes.size <= dist:
-                    break
-                same = wdoc[dist:] == wdoc[:-dist]
-                # right context: center i, context i+dist
-                cs.append(codes[:-dist][same])
-                xs.append(codes[dist:][same])
-                # left context: center i, context i-dist
-                cs.append(codes[dist:][same])
-                xs.append(codes[:-dist][same])
-            if not cs:
-                continue
-            center = np.concatenate(cs)
-            context = np.concatenate(xs)
-            key = center * (1 << 32) + context
-            uniq, cnt = np.unique(key, return_counts=True)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array((uniq >> 32).astype(np.int32)),
-                 pa.array((uniq & ((1 << 32) - 1)).astype(np.int32)),
-                 pa.array(cnt.astype(np.int64))], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "center int, context int, c long")
+    return run_kernel(df, fn, [text_col], "center int, context int, c long")
 
 
 def cdc_chunks_kernel(df, id_col: str, text_col: str, k: int = 4,
                       divisor: int = 16):
-    """mapInArrow emitting ``(doc_id, chunk_no, start_pos, chunk_len,
+    """Kernel emitting ``(doc_id, chunk_no, start_pos, chunk_len,
     chunk_h)`` — ``operators/dedup.cdc_chunks`` over ``tokens_col`` codes:
     cut after end positions ``i`` in ``[k-1, n-2]`` whose ``k``-window
     31-fold hash (mod 1e9+7) is ``% divisor == 0``; chunk hashes are the
     same fold over each chunk's tokens.  Pure int64."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
     P = 1_000_000_007
-    out_schema = pa.schema([
-        pa.field("doc_id", pa.int64()), pa.field("chunk_no", pa.int32()),
-        pa.field("start_pos", pa.int32()), pa.field("chunk_len", pa.int32()),
-        pa.field("chunk_h", pa.int64())])
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = _token_codes(cp, starts, lens)
-            nwords = np.zeros(nrow, dtype=np.int64)
-            np.add.at(nwords, wdoc, 1)
-            doc_start = np.concatenate(([0], np.cumsum(nwords)[:-1]))
-            # window hashes (gram start p covers p..p+k-1, end i = p+k-1)
-            g, gdoc = _positional_shingles(codes, wdoc, k, 31, P)
-            # recover each gram's global start index to derive its end pos
-            if len(codes) >= k:
-                m = len(codes) - k + 1
-                same = wdoc[:m] == wdoc[k - 1:]
-                gidx = np.nonzero(same)[0]
-            else:
-                gidx = np.empty(0, dtype=np.int64)
-            end_in_doc = gidx + (k - 1) - doc_start[gdoc]
-            # cuts: hash % divisor == 0 AND end <= n-2 for that doc
-            is_cut = (g % divisor == 0) & (end_in_doc <= nwords[gdoc] - 2)
-            cut_doc = gdoc[is_cut]
-            cut_end = end_in_doc[is_cut]
-            # chunk segment starts per doc: 0 plus (cut+1)s; ends: next
-            # start or n — assemble per doc in order
-            ch_doc, ch_start, ch_len, ch_no = [], [], [], []
-            # group cuts by doc (cut_doc is non-decreasing)
-            docs_with_words = np.nonzero(nwords > 0)[0]
-            cut_ptr = 0
-            n_cuts = len(cut_doc)
-            for d in docs_with_words:
-                cs = []
-                while cut_ptr < n_cuts and cut_doc[cut_ptr] == d:
-                    cs.append(cut_end[cut_ptr])
-                    cut_ptr += 1
-                bounds = [0] + [c + 1 for c in cs] + [int(nwords[d])]
-                for cno in range(len(bounds) - 1):
-                    ch_doc.append(d)
-                    ch_start.append(bounds[cno])
-                    ch_len.append(bounds[cno + 1] - bounds[cno])
-                    ch_no.append(cno)
-            if not ch_doc:
-                continue
-            ch_doc = np.asarray(ch_doc, dtype=np.int64)
-            ch_start_g = (doc_start[ch_doc]
-                          + np.asarray(ch_start, dtype=np.int64))
-            ch_len_a = np.asarray(ch_len, dtype=np.int64)
-            # chunk hashes: 31-fold over each chunk's codes — same
-            # shrinking-active-set fold as the word hash
-            nchunk = len(ch_doc)
-            h = np.zeros(nchunk, dtype=np.int64)
-            maxlen = int(ch_len_a.max())
-            active = np.arange(nchunk)
-            p = 0
-            while p < maxlen:
-                active = active[ch_len_a[active] > p]
-                h[active] = (h[active] * 31
-                             + codes[ch_start_g[active] + p]) % P
-                p += 1
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[ch_doc]),
-                 pa.array(np.asarray(ch_no, dtype=np.int32)),
-                 pa.array(np.asarray(ch_start, dtype=np.int32)),
-                 pa.array(ch_len_a.astype(np.int32)),
-                 pa.array(h)], schema=out_schema)
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _token_codes(cp, starts, lens)
+        nwords = np.bincount(wdoc, minlength=nrow)
+        doc_start = np.concatenate(([0], np.cumsum(nwords)[:-1]))
+        # window hashes (gram start p covers p..p+k-1, end i = p+k-1)
+        g, gdoc = _positional_shingles(codes, wdoc, k, 31, P)
+        # recover each gram's global start index to derive its end pos
+        if len(codes) >= k:
+            m = len(codes) - k + 1
+            gidx = np.nonzero(wdoc[:m] == wdoc[k - 1:])[0]
+        else:
+            gidx = np.empty(0, dtype=np.int64)
+        end_in_doc = gidx + (k - 1) - doc_start[gdoc]
+        # cuts: hash % divisor == 0 AND end <= n-2 for that doc
+        is_cut = (g % divisor == 0) & (end_in_doc <= nwords[gdoc] - 2)
+        cut_doc = gdoc[is_cut]
+        cut_end = end_in_doc[is_cut]
+        # chunk segment starts per doc: 0 plus (cut+1)s; ends: next
+        # start or n — assemble per doc in order (cut_doc is sorted)
+        ch_doc, ch_start, ch_len, ch_no = [], [], [], []
+        cut_ptr = 0
+        n_cuts = len(cut_doc)
+        for d in np.nonzero(nwords > 0)[0]:
+            cs = []
+            while cut_ptr < n_cuts and cut_doc[cut_ptr] == d:
+                cs.append(cut_end[cut_ptr])
+                cut_ptr += 1
+            bounds = [0] + [c + 1 for c in cs] + [int(nwords[d])]
+            for cno in range(len(bounds) - 1):
+                ch_doc.append(d)
+                ch_start.append(bounds[cno])
+                ch_len.append(bounds[cno + 1] - bounds[cno])
+                ch_no.append(cno)
+        if not ch_doc:
+            return None
+        ch_doc = np.asarray(ch_doc, dtype=np.int64)
+        ch_start = np.asarray(ch_start, dtype=np.int64)
+        ch_start_g = doc_start[ch_doc] + ch_start
+        ch_len_a = np.asarray(ch_len, dtype=np.int64)
+        # chunk hashes: 31-fold over each chunk's codes — same
+        # shrinking-active-set fold as the word hash
+        h = np.zeros(len(ch_doc), dtype=np.int64)
+        active = np.arange(len(ch_doc))
+        for p in range(int(ch_len_a.max())):
+            active = active[ch_len_a[active] > p]
+            h[active] = (h[active] * 31 + codes[ch_start_g[active] + p]) % P
+        return ch_doc, [ch_no, ch_start, ch_len_a, h]
 
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(
-        gen, "doc_id long, chunk_no int, start_pos int, chunk_len int, "
-             "chunk_h long")
+    return run_kernel(
+        df, fn, [text_col],
+        "chunk_no int, start_pos int, chunk_len int, chunk_h long",
+        keys=[_key(id_col, "doc_id")])
 
 
 def word_segment_rows_kernel(df, id_col: str, text_col: str,
                              seg_words: int = 8):
-    """mapInArrow emitting ``(doc_id, seg_no, seg)`` — the non-overlapping
+    """Kernel emitting ``(id_col, seg_no, seg)`` — the non-overlapping
     ``seg_words``-word segments of ``operators/dedup._word_segment_rows``
     (words = split-on-' ' with empties dropped, segment text = the words
     re-joined with single spaces, final segment may be shorter; wordless
-    docs emit no rows)."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
+    docs emit no rows).  Python ``str`` is code-point indexed, like
+    Catalyst's ``split``/``slice``."""
 
-    out_schema = pa.schema([pa.field("doc_id", pa.int64()),
-                            pa.field("seg_no", pa.int32()),
-                            pa.field("seg", pa.string())])
+    def fn(text):
+        rows, on, os_ = [], [], []
+        for r, tx in enumerate(text.to_pylist()):
+            words = [w for w in (tx or "").split(" ") if w]
+            for sno in range(0, len(words), seg_words):
+                rows.append(r)
+                on.append(sno // seg_words)
+                os_.append(" ".join(words[sno:sno + seg_words]))
+        return rows, [on, os_]
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            oi, on, os_ = [], [], []
-            for did, tx in zip(ids, texts):
-                words = [w for w in (tx or "").split(" ") if w]
-                for sno in range(0, (len(words) + seg_words - 1)
-                                 // seg_words):
-                    oi.append(did)
-                    on.append(sno)
-                    os_.append(" ".join(
-                        words[sno * seg_words:(sno + 1) * seg_words]))
-            if oi:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(oi, pa.int64()), pa.array(on, pa.int32()),
-                     pa.array(os_, pa.string())], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "doc_id long, seg_no int, seg string")
+    return run_kernel(df, fn, [text_col], "seg_no int, seg string",
+                      keys=[id_col])
 
 
 def hashed_bow_kernel(df, id_col: str, text_col: str, dim: int = 32):
-    """mapInArrow emitting ``(doc_id, n_words, vec array<bigint>)`` — the
+    """Kernel emitting ``(doc_id, n_words, vec array<bigint>)`` — the
     hashing-trick BoW of ``functions/text.hashed_bow`` over poly-31 word
     hashes (bucket ``d`` counts words with ``hash mod dim == d``)."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    out_schema = pa.schema([pa.field("doc_id", pa.int64()),
-                            pa.field("n_words", pa.int64()),
-                            pa.field("vec", pa.list_(pa.int64()))])
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        wh = _word_hash_poly31(cp, starts, lens, _B)
+        vec = np.zeros((nrow, dim), dtype=np.int64)
+        np.add.at(vec, (wdoc, wh % dim), 1)
+        return [np.bincount(wdoc, minlength=nrow),
+                _list_array(vec.reshape(-1), np.full(nrow, dim))]
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            wh = _word_hash_poly31(cp, starts, lens, _B)
-            nw = np.zeros(nrow, dtype=np.int64)
-            np.add.at(nw, wdoc, 1)
-            vec = np.zeros((nrow, dim), dtype=np.int64)
-            if wh.size:
-                np.add.at(vec, (wdoc, wh % dim), 1)
-            counts = np.full(nrow, dim, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(nw),
-                 _list_array(vec.reshape(-1), counts)], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "doc_id long, n_words long, vec array<bigint>")
+    return run_kernel(df, fn, [text_col], "n_words long, vec array<bigint>",
+                      keys=[_key(id_col, "doc_id")])
 
 
 def token_entropy_kernel(df, id_col: str, text_col: str):
-    """mapInArrow emitting ``(doc_id, n_tok, n_distinct, max_freq,
+    """Kernel emitting ``(doc_id, n_tok, n_distinct, max_freq,
     entropy_raw)`` — the per-row unigram triplet of ``tok_entropy_docs``
     over the corpus ``tokens_col`` codes (``len(word)*256 + ascii(word)``):
     counts exact; ``entropy_raw`` replicates the Catalyst fold bit-for-bit
@@ -739,103 +556,65 @@ def token_entropy_kernel(df, id_col: str, text_col: str):
     ``array_max(empty)``."""
     import math  # noqa: PLC0415
 
-    import pyspark.sql.functions as F  # noqa: PLC0415
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _token_codes(cp, starts, lens)
+        nt = np.bincount(wdoc, minlength=nrow)
+        # sorted distinct codes + run counts per doc
+        key = np.lexsort((codes, wdoc))
+        v, d = codes[key], wdoc[key]
+        new = np.ones(v.size, dtype=bool)
+        new[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
+        run_cnt = np.bincount(np.cumsum(new) - 1) if v.size else d
+        run_doc = d[new]
+        nd = np.bincount(run_doc, minlength=nrow)
+        mf = np.zeros(nrow, dtype=np.int64)
+        np.maximum.at(mf, run_doc, run_cnt)
+        ent = np.zeros(nrow, dtype=np.float64)
+        # left-fold per doc over the ascending-code runs (scalar libm
+        # log — the summation order and per-term bits of the Catalyst
+        # fold); run_doc is non-decreasing, so runs per doc are
+        # contiguous
+        pos = 0
+        nruns = len(run_cnt)
+        while pos < nruns:
+            doc = run_doc[pos]
+            nf = float(nt[doc])
+            acc = 0.0
+            while pos < nruns and run_doc[pos] == doc:
+                c = float(run_cnt[pos])
+                acc += (c / nf) * math.log(nf / c)
+                pos += 1
+            ent[doc] = acc
+        return [nt, nd, pa.array(mf, pa.int32(), mask=(nt == 0)), ent]
 
-    out_schema = pa.schema([
-        pa.field("doc_id", pa.int64()), pa.field("n_tok", pa.int32()),
-        pa.field("n_distinct", pa.int32()), pa.field("max_freq", pa.int32()),
-        pa.field("entropy_raw", pa.float64())])
-
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = (lens * 256 + cp[starts].astype(np.int64)
-                     if len(starts) else np.empty(0, dtype=np.int64))
-            nt = np.zeros(nrow, dtype=np.int64)
-            np.add.at(nt, wdoc, 1)
-            # sorted distinct codes + run counts per doc
-            key = np.lexsort((codes, wdoc))
-            v, d = codes[key], wdoc[key]
-            new = np.empty(v.size, dtype=bool)
-            if v.size:
-                new[0] = True
-                new[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
-            run_id = np.cumsum(new) - 1 if v.size else new.astype(np.int64)
-            run_cnt = np.bincount(run_id) if v.size else run_id
-            run_doc = d[new] if v.size else d
-            nd = np.zeros(nrow, dtype=np.int64)
-            mf = np.zeros(nrow, dtype=np.int64)
-            if v.size:
-                np.add.at(nd, run_doc, 1)
-                np.maximum.at(mf, run_doc, run_cnt)
-            ent = np.zeros(nrow, dtype=np.float64)
-            # left-fold per doc over the ascending-code runs (scalar libm
-            # log — the summation order and per-term bits of the Catalyst
-            # fold); run_doc is non-decreasing, so runs per doc are
-            # contiguous
-            pos = 0
-            nruns = len(run_cnt)
-            while pos < nruns:
-                doc = run_doc[pos]
-                nf = float(nt[doc])
-                acc = 0.0
-                while pos < nruns and run_doc[pos] == doc:
-                    c = float(run_cnt[pos])
-                    acc += (c / nf) * math.log(nf / c)
-                    pos += 1
-                ent[doc] = acc
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(nt.astype(np.int32)),
-                 pa.array(nd.astype(np.int32)),
-                 pa.array(mf.astype(np.int32), mask=(nt == 0)),
-                 pa.array(ent)], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(
-        gen, "doc_id long, n_tok int, n_distinct int, max_freq int, "
-             "entropy_raw double")
+    return run_kernel(
+        df, fn, [text_col],
+        "n_tok int, n_distinct int, max_freq int, entropy_raw double",
+        keys=[_key(id_col, "doc_id")])
 
 
 def simhash_kernel(df, id_col: str, text_col: str, bits: int = 16):
-    """mapInArrow emitting ``(doc_id, sh)`` — the SimHash over word codes
+    """Kernel emitting ``(doc_id, sh)`` — the SimHash over word codes
     (``(code*2654435761 + 104729) mod p``, per-bit ±1 majority votes),
     value-identical to both the HOF ``functions/text.simhash`` and the
     relational vote formulation in ``queries.simhash_docs``; empty/NULL
     docs emit 0 like the restored left join did."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
 
-    out_schema = pa.schema([pa.field("doc_id", pa.int64()),
-                            pa.field("sh", pa.int64())])
+    def fn(text):
+        nrow = len(text)
+        cp, offs = decode_batch(text)
+        starts, lens, wdoc = word_segments(cp, offs)
+        codes = _word_codes(cp, starts, lens)
+        h = _affine_checked(codes, 2_654_435_761, 104_729) % HASH_PRIME
+        sh = np.zeros(nrow, dtype=np.int64)
+        for b in range(bits):
+            votes = np.bincount(wdoc, weights=((h >> b) & 1) * 2 - 1,
+                                minlength=nrow)
+            sh += (votes > 0).astype(np.int64) << b
+        return [sh]
 
-    def gen(batches):
-        for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            cp, offs = decode_batch(batch.column(1))
-            starts, lens, wdoc = word_segments(cp, offs)
-            codes = _word_codes(cp, starts, lens)
-            h = (codes * 2_654_435_761 + 104_729) % HASH_PRIME
-            sh = np.zeros(nrow, dtype=np.int64)
-            for b in range(bits):
-                pm = ((h >> b) & 1) * 2 - 1
-                votes = np.zeros(nrow, dtype=np.int64)
-                np.add.at(votes, wdoc, pm)
-                sh += (votes > 0).astype(np.int64) << b
-            yield pa.RecordBatch.from_arrays([pa.array(ids), pa.array(sh)],
-                                             schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(text_col).alias("__t"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "doc_id long, sh long")
+    return run_kernel(df, fn, [text_col], "sh long",
+                      keys=[_key(id_col, "doc_id")])

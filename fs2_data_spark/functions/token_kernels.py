@@ -17,8 +17,6 @@ token pages never cross an exchange: the output is the narrow feature table.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
 FINGERPRINT_MOD = 1_000_000_007
@@ -36,60 +34,47 @@ def token_features_arrow(df: DataFrame, tokens_col: str = "tokens",
     shuffles stay narrow.
     """
     import numpy as np  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
 
-    out_names = [f.name for f in df.schema.fields if not (drop_tokens and f.name == tokens_col)]
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-         if not (drop_tokens and f.name == tokens_col)]
-        + ["tok_fp bigint", "tok_sum bigint", "tok_mean double",
-           "tok_min int", "tok_max int"]
-    )
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
 
-    def kernel(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tok = batch.column(batch.schema.get_field_index(tokens_col))
-            if isinstance(tok, pa.ChunkedArray):  # pragma: no cover
-                tok = tok.combine_chunks()
-            # flat values + offsets: the zero-copy list layout
-            offs = tok.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = tok.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            starts, ends = offs[:-1], offs[1:]
-            lens = ends - starts
-            nonempty = lens > 0
-            # positions within each list: global index - repeated start
-            pos = np.arange(len(vals), dtype=np.int64) - np.repeat(starts, lens)
-            weighted = (pos + 1) * vals
-            # reduceat boundaries: only non-empty segment starts. An empty
-            # segment's start equals its neighbor's boundary, and clamping a
-            # trailing empty's start (== len(vals)) into range would shift the
-            # preceding segment's end and silently truncate it. Consecutive
-            # non-empty starts delimit exactly one segment because empty
-            # segments contribute a zero-width interval between them.
-            ne_starts = starts[nonempty]
+    def kernel(tok):
+        # flat values + offsets: the zero-copy list layout
+        offs = tok.offsets.to_numpy().astype(np.int64)
+        vals = tok.values.to_numpy(zero_copy_only=False).astype(np.int64)
+        starts, ends = offs[:-1], offs[1:]
+        lens = ends - starts
+        nonempty = lens > 0
+        # positions within each list: global index - repeated start
+        pos = np.arange(len(vals), dtype=np.int64) - np.repeat(starts, lens)
+        weighted = (pos + 1) * vals
+        # reduceat boundaries: only non-empty segment starts. An empty
+        # segment's start equals its neighbor's boundary, and clamping a
+        # trailing empty's start (== len(vals)) into range would shift the
+        # preceding segment's end and silently truncate it. Consecutive
+        # non-empty starts delimit exactly one segment because empty
+        # segments contribute a zero-width interval between them.
+        ne_starts = starts[nonempty]
 
-            def seg(op, src, fill):
-                out = np.full(len(lens), fill, dtype=np.int64)
-                if len(ne_starts):
-                    out[nonempty] = op.reduceat(src, ne_starts)
-                return out
+        def seg(op, src, fill):
+            out = np.full(len(lens), fill, dtype=np.int64)
+            if len(ne_starts):
+                out[nonempty] = op.reduceat(src, ne_starts)
+            return out
 
-            # mod once at the end: values < 2^17, pos < 2^31 -> no overflow
-            fp = seg(np.add, weighted, 0) % FINGERPRINT_MOD
-            tsum = seg(np.add, vals, 0)
-            tmin = seg(np.minimum, vals, 0)
-            tmax = seg(np.maximum, vals, 0)
-            mean = np.where(nonempty, tsum / np.maximum(lens, 1), np.nan)
+        # mod once at the end: values < 2^17, pos < 2^31 -> no overflow
+        fp = seg(np.add, weighted, 0) % FINGERPRINT_MOD
+        tsum = seg(np.add, vals, 0)
+        mean = np.where(nonempty, tsum / np.maximum(lens, 1), np.nan)
+        # null (not NaN) for empty docs — matches the SQL CASE WHEN
+        # len > 0 mean and the tok_stats tier
+        return [fp, tsum, np.where(nonempty, mean, None),
+                np.where(nonempty, seg(np.minimum, vals, 0), None),
+                np.where(nonempty, seg(np.maximum, vals, 0), None)]
 
-            cols = [batch.column(i) for i, n in enumerate(batch.schema.names)
-                    if n in out_names]
-            cols += [pa.array(fp, pa.int64()), pa.array(tsum, pa.int64()),
-                     # null (not NaN) for empty docs — matches the SQL
-                     # CASE WHEN len > 0 mean and the tok_stats tier
-                     pa.array(np.where(nonempty, mean, None), pa.float64()),
-                     pa.array(np.where(nonempty, tmin, None), pa.int32()),
-                     pa.array(np.where(nonempty, tmax, None), pa.int32())]
-            yield pa.RecordBatch.from_arrays(
-                cols, out_names + ["tok_fp", "tok_sum", "tok_mean", "tok_min", "tok_max"])
-
-    return df.mapInArrow(kernel, schema_str)
+    # no exchange: the kernel rides the scan stage
+    return run_kernel(
+        df, kernel, [tokens_col],
+        "tok_fp bigint, tok_sum bigint, tok_mean double, tok_min int, "
+        "tok_max int",
+        keys=[c for c in df.columns if not (drop_tokens and c == tokens_col)],
+        exchange=False)

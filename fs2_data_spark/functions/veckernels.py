@@ -25,6 +25,16 @@ IEEE-754 operation sequence of the Catalyst expression it replaces:
   provably a superset-then-exact-match of what the Catalyst plan keeps.  The
   *output* score column is still produced by JVM ``F.round`` on the raw double.
 
+Runner, ids and NULLs: every kernel runs through
+``functions/arrow_kernel.run_kernel``, so ids of any type (bigint, string,
+UUID string) pass through uncast; the kernels that compare ids (self-pair
+exclusion, the ``j < i`` fence, the id tie-break of the top-k trim) compare
+the values themselves — Python ``str`` order is code-point order, which is
+Spark's UTF-8 byte order — and raise on a NULL id.  A NULL vector reads as
+the zero vector (norm 0, so every cosine against it is the 0.0 the
+Catalyst ``_cos`` CASE yields); a non-NULL vector of the wrong length
+raises ``ValueError`` (the Catalyst ``zip_with`` padding is not replicated).
+
 Driver/broadcast discipline: the only driver-side reads are of sides the
 legacy plans already collected for broadcast (the query set of the brute-force
 baseline was a ``BroadcastNestedLoopJoin`` build side; IVF centroids are
@@ -38,6 +48,8 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pyarrow as pa
+
+from fs2_data_spark.functions.arrow_kernel import id_values, run_kernel
 
 __all__ = [
     "spark_round",
@@ -161,7 +173,8 @@ def mat_to_list_array(m: np.ndarray) -> pa.ListArray:
 def _trim_topk(scores: np.ndarray, ids: np.ndarray, k: int, dp: int | None
                ) -> np.ndarray:
     """Indices of the exact per-batch top-k by (round(score, dp) DESC, id ASC)
-    from a pre-banded candidate set.  ``scores`` raw doubles."""
+    from a pre-banded candidate set.  ``scores`` raw doubles; ``ids`` from
+    :func:`id_values` (int64 or Python objects — both order like Spark)."""
     if len(scores) <= k:
         order = np.lexsort((ids, -scores))
         return order
@@ -173,9 +186,14 @@ def _trim_topk(scores: np.ndarray, ids: np.ndarray, k: int, dp: int | None
     return np.asarray(keyed[:k], dtype=np.int64)
 
 
+def _id_ddl(q_ids: pa.Array) -> str:
+    from pyspark.sql.pandas.types import from_arrow_type  # noqa: PLC0415
+    return from_arrow_type(q_ids.type).simpleString()
+
+
 def cosine_topk_candidates(
     corpus,
-    q_ids: np.ndarray,
+    q_ids: pa.Array,
     q_mat: np.ndarray,
     id_col: str,
     vec_col: str,
@@ -184,76 +202,65 @@ def cosine_topk_candidates(
     dim: int,
 ):
     """Per-batch exact top-k cosine candidates of ``corpus`` rows against the
-    broadcast query matrix.  Emits ``(q_vec_id, n_vec_id, cos_raw)`` where
+    broadcast query matrix.  Emits ``(n_vec_id, q_vec_id, cos_raw)`` where
     ``cos_raw`` is bit-identical to the Catalyst
-    ``_cos(_dot(qv, cv), qn, cn)`` double.  Guarantee: the union of emitted
-    rows over all batches contains the global top-k per query under
+    ``_cos(_dot(qv, cv), qn, cn)`` double and both ids keep their types
+    (``q_ids`` is the collected Arrow id column).  Guarantee: the union of
+    emitted rows over all batches contains the global top-k per query under
     (``round(cos_raw, round_dp)`` DESC, n_vec_id ASC) — each batch emits its
     *own* exact top-k under that comparator, and any global winner must be a
     batch winner.
     """
     import pyspark.sql.functions as F  # noqa: PLC0415 (kernel module stays importable without spark)
 
-    q_ids = np.ascontiguousarray(q_ids, dtype=np.int64)
+    q_key = id_values(q_ids)
     q_mat = np.ascontiguousarray(q_mat, dtype=np.float64)
     qn = fold_norm(q_mat)
-    nq = len(q_ids)
+    nq = len(q_key)
     # conservative raw-score band half-width: one rounding quantum + slack
     band = (1.5 * 10.0 ** (-round_dp)) if round_dp is not None else 0.0
 
-    out_schema = pa.schema([
-        pa.field("q_vec_id", pa.int64()),
-        pa.field("n_vec_id", pa.int64()),
-        pa.field("cos_raw", pa.float64()),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0 or nq == 0:
+    def fn(id_arr, vec):
+        nb = len(vec)
+        if nq == 0:
+            return None
+        ids = id_values(id_arr)
+        x = list_to_mat(vec, dim)
+        cn = fold_norm(x)
+        dot = fold_dot_mat(x, q_mat)                     # (nb, nq)
+        denom = cn[:, None] * qn[None, :]                # an*bn (commut.)
+        valid = (qn[None, :] > 0) & (cn[:, None] > 0)
+        scores = np.where(valid, np.divide(dot, denom,
+                                           out=np.zeros_like(dot),
+                                           where=denom != 0), 0.0)
+        # self-pair exclusion: sentinel below any real cosine
+        self_mask = ids[:, None] == q_key[None, :]
+        scores[self_mask] = -np.inf
+        kk = min(k, nb)
+        cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
+        keep = scores >= np.maximum(cut - band, -1.0)
+        keep &= ~self_mask
+        orow, oq, oc = [], [], []
+        rows, cols = np.nonzero(keep.T)  # rows=query idx, cols=corpus idx
+        for qi in range(nq):
+            sel = cols[rows == qi]
+            if len(sel) == 0:
                 continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            cn = fold_norm(x)
-            dot = fold_dot_mat(x, q_mat)                     # (nb, nq)
-            denom = cn[:, None] * qn[None, :]                # an*bn (commut.)
-            valid = (qn[None, :] > 0) & (cn[:, None] > 0)
-            scores = np.where(valid, np.divide(dot, denom,
-                                               out=np.zeros_like(dot),
-                                               where=denom != 0), 0.0)
-            # self-pair exclusion: sentinel below any real cosine
-            self_mask = ids[:, None] == q_ids[None, :]
-            scores[self_mask] = -np.inf
-            kk = min(k, nb)
-            cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
-            keep = scores >= np.maximum(cut - band, -1.0)
-            keep &= ~self_mask
-            oq, on, oc = [], [], []
-            rows, cols = np.nonzero(keep.T)  # rows=query idx, cols=corpus idx
-            for qi in range(nq):
-                sel = cols[rows == qi]
-                if len(sel) == 0:
-                    continue
-                s = scores[sel, qi]
-                nid = ids[sel]
-                top = _trim_topk(s, nid, k, round_dp)
-                oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
-                on.append(nid[top])
-                oc.append(s[top])
-            if not oq:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(oq)), pa.array(np.concatenate(on)),
-                 pa.array(np.concatenate(oc))], schema=out_schema)
+            s = scores[sel, qi]
+            top = _trim_topk(s, ids[sel], k, round_dp)
+            orow.append(sel[top])
+            oq.append(np.full(len(top), qi))
+            oc.append(s[top])
+        if not orow:
+            return None
+        return np.concatenate(orow), [q_ids.take(np.concatenate(oq)),
+                                      np.concatenate(oc)]
 
-    sc = corpus.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = corpus.select(F.col(id_col).cast("long").alias("__id"),
-                        F.col(vec_col).alias("__v"))
-    # the source is typically one small parquet split; spread it so the kernel
-    # runs on every core (round-robin exchange of ids+vectors only)
-    src = src.repartition(n_part)
-    return src.mapInArrow(gen, "q_vec_id long, n_vec_id long, cos_raw double")
+    # the source is typically one small parquet split; the runner spreads it
+    # so the kernel runs on every core (round-robin exchange of ids+vectors)
+    return run_kernel(corpus, fn, ["n_vec_id", vec_col],
+                      f"q_vec_id {_id_ddl(q_ids)}, cos_raw double",
+                      keys=[F.col(id_col).alias("n_vec_id")])
 
 
 # ---------------------------------------------------------------------------
@@ -262,7 +269,7 @@ def cosine_topk_candidates(
 
 def l2_int_topk_candidates(
     coded,
-    q_ids: np.ndarray,
+    q_ids: pa.Array,
     q_codes: np.ndarray,
     id_col: str,
     code_col: str,
@@ -275,63 +282,49 @@ def l2_int_topk_candidates(
     order yields the identical distances, so per-batch exact top-k is
     trivially a superset-free candidate set (each batch emits exactly its
     own top-k under the global comparator).  Emits
-    ``(q_vec_id, n_vec_id, dist_sq)``."""
+    ``(n_vec_id, q_vec_id, dist_sq)``, ids in their own types."""
     import pyspark.sql.functions as F  # noqa: PLC0415
 
-    q_ids = np.ascontiguousarray(q_ids, dtype=np.int64)
+    q_key = id_values(q_ids)
     q_mat = np.ascontiguousarray(q_codes, dtype=np.int64)
-    nq = len(q_ids)
+    nq = len(q_key)
 
-    out_schema = pa.schema([
-        pa.field("q_vec_id", pa.int64()),
-        pa.field("n_vec_id", pa.int64()),
-        pa.field("dist_sq", pa.int64()),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0 or nq == 0:
+    def fn(id_arr, code):
+        nb = len(code)
+        if nq == 0:
+            return None
+        ids = id_values(id_arr)
+        vals = np.asarray(code.flatten(), dtype=np.int64)
+        if vals.size != nb * dim:
+            raise ValueError("ragged code rows")
+        x = vals.reshape(nb, dim)
+        dist = np.zeros((nb, nq), dtype=np.int64)
+        for j in range(dim):
+            d = x[:, j, None] - q_mat[None, :, j]
+            dist += d * d
+        self_mask = ids[:, None] == q_key[None, :]
+        dist[self_mask] = np.iinfo(np.int64).max
+        kk = min(k, nb)
+        cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
+        orow, oq, oc = [], [], []
+        for qi in range(nq):
+            sel = np.nonzero((dist[:, qi] <= cut[qi])
+                             & ~self_mask[:, qi])[0]
+            if len(sel) == 0:
                 continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            vals = np.asarray(col.flatten(), dtype=np.int64)
-            if vals.size != nb * dim:
-                raise ValueError("ragged code rows")
-            x = vals.reshape(nb, dim)
-            dist = np.zeros((nb, nq), dtype=np.int64)
-            for j in range(dim):
-                d = x[:, j, None] - q_mat[None, :, j]
-                dist += d * d
-            self_mask = ids[:, None] == q_ids[None, :]
-            big = np.iinfo(np.int64).max
-            dist[self_mask] = big
-            kk = min(k, nb)
-            cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
-            oq, on, oc = [], [], []
-            for qi in range(nq):
-                sel = np.nonzero((dist[:, qi] <= cut[qi])
-                                 & ~self_mask[:, qi])[0]
-                if len(sel) == 0:
-                    continue
-                dd, nid = dist[sel, qi], ids[sel]
-                top = np.lexsort((nid, dd))[:k]
-                oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
-                on.append(nid[top])
-                oc.append(dd[top])
-            if not oq:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(oq)), pa.array(np.concatenate(on)),
-                 pa.array(np.concatenate(oc))], schema=out_schema)
+            dd = dist[sel, qi]
+            top = np.lexsort((ids[sel], dd))[:k]
+            orow.append(sel[top])
+            oq.append(np.full(len(top), qi))
+            oc.append(dd[top])
+        if not orow:
+            return None
+        return np.concatenate(orow), [q_ids.take(np.concatenate(oq)),
+                                      np.concatenate(oc)]
 
-    sc = coded.sparkSession.sparkContext
-    src = coded.select(F.col(id_col).cast("long").alias("__id"),
-                       F.col(code_col).alias("__q"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "q_vec_id long, n_vec_id long, dist_sq long")
+    return run_kernel(coded, fn, ["n_vec_id", code_col],
+                      f"q_vec_id {_id_ddl(q_ids)}, dist_sq long",
+                      keys=[F.col(id_col).alias("n_vec_id")])
 
 
 # ---------------------------------------------------------------------------
@@ -358,41 +351,25 @@ def lsh_augment_kernel(
     dim: int,
     seed: int,
 ):
-    """mapInArrow producing ``(vec_id, v array<double>, nrm, sig)`` —
-    bit-identical to the staged Catalyst projection in ``lsh_bucket_topk``:
-    the signature's per-plane projection is the same left-to-right fold of
-    ``x * w(p, j)`` and the sign test is the same ``proj > 0``."""
+    """Kernel producing ``(vec_id, v array<double>, nrm, sig)`` —
+    bit-identical to ``similarity.hyperplane_signature`` + ``_norm`` over
+    the double-cast vector: the signature's per-plane projection is the
+    same left-to-right fold of ``x * w(p, j)`` and the sign test is the
+    same ``proj > 0``."""
     import pyspark.sql.functions as F  # noqa: PLC0415
 
     w = hyperplane_weights(n_planes, dim, seed)
     bits = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
 
-    out_schema = pa.schema([
-        pa.field("vec_id", pa.int64()),
-        pa.field("v", pa.list_(pa.float64())),
-        pa.field("nrm", pa.float64()),
-        pa.field("sig", pa.int64()),
-    ])
+    def fn(vec):
+        x = list_to_mat(vec, dim)
+        proj = fold_dot_mat(x, w)               # (n, n_planes), exact fold
+        return [mat_to_list_array(x), fold_norm(x),
+                ((proj > 0) * bits[None, :]).sum(axis=1)]
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            nrm = fold_norm(x)
-            proj = fold_dot_mat(x, w)               # (n, n_planes), exact fold
-            sig = ((proj > 0) * bits[None, :]).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x), pa.array(nrm),
-                 pa.array(sig)], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v")).repartition(n_part)
-    return src.mapInArrow(
-        gen, "vec_id long, v array<double>, nrm double, sig long")
+    return run_kernel(df, fn, [vec_col],
+                      "v array<double>, nrm double, sig long",
+                      keys=[F.col(id_col).alias("vec_id")])
 
 
 # ---------------------------------------------------------------------------
@@ -407,7 +384,7 @@ def ivf_assign_kernel(
     dim: int = 64,
     canonical: bool = False,
 ):
-    """mapInArrow replica of ``ivf_index``'s ``assign``: squared-distance fold
+    """Kernel replica of ``ivf_index``'s ``assign``: squared-distance fold
     ``zip_with(v, cv, (a,b) -> (a-b)*(a-b))`` summed left-to-right per
     centroid, argmin by (``round(d, 6)`` when canonical else raw ``d``) ASC,
     cell ASC.  Emits ``(id, v array<double>, cell)``.
@@ -423,46 +400,31 @@ def ivf_assign_kernel(
     cells, cmat = cells[order], cmat[order]
     ncell = len(cells)
 
-    out_schema = pa.schema([
-        pa.field("id", pa.int64()),
-        pa.field("v", pa.list_(pa.float64())),
-        pa.field("cell", pa.int32()),
-    ])
+    def fn(vec):
+        nb = len(vec)
+        x = list_to_mat(vec, dim)
+        dist = np.zeros((nb, ncell), dtype=np.float64)
+        for j in range(dim):
+            dj = x[:, j, None] - cmat[None, :, j]
+            dist += dj * dj
+        if not canonical:
+            best = np.argmin(dist, axis=1)  # ties -> lowest index == lowest cell
+        else:
+            # argmin on ROUNDED distance: band-prune on raw, exact-trim
+            cut = dist.min(axis=1)
+            best = np.empty(nb, dtype=np.int64)
+            for i in range(nb):
+                cand = np.nonzero(dist[i] <= cut[i] + 1.002e-6)[0]
+                if len(cand) == 1:
+                    best[i] = cand[0]
+                else:
+                    rr = [(spark_round(dist[i, c], 6), cells[c], c)
+                          for c in cand]
+                    best[i] = min(rr)[2]
+        return [mat_to_list_array(x), cells[best]]
 
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            dist = np.zeros((nb, ncell), dtype=np.float64)
-            for j in range(dim):
-                dj = x[:, j, None] - cmat[None, :, j]
-                dist += dj * dj
-            if not canonical:
-                best = np.argmin(dist, axis=1)  # ties -> lowest index == lowest cell
-            else:
-                # argmin on ROUNDED distance: band-prune on raw, exact-trim
-                cut = dist.min(axis=1)
-                best = np.empty(nb, dtype=np.int64)
-                for i in range(nb):
-                    cand = np.nonzero(dist[i] <= cut[i] + 1.002e-6)[0]
-                    if len(cand) == 1:
-                        best[i] = cand[0]
-                    else:
-                        rr = [(spark_round(dist[i, c], 6), cells[c], c)
-                              for c in cand]
-                        best[i] = min(rr)[2]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x),
-                 pa.array(cells[best].astype(np.int32))], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v")).repartition(n_part)
-    return src.mapInArrow(gen, "id long, v array<double>, cell int")
+    return run_kernel(df, fn, [vec_col], "v array<double>, cell int",
+                      keys=[F.col(id_col).alias("id")])
 
 
 # ---------------------------------------------------------------------------
@@ -484,7 +446,7 @@ def _cos_vs(x: np.ndarray, nrm: np.ndarray, qv: np.ndarray, qn: float
 
 
 def mmr_rel_kernel(df, id_col: str, vec_col: str, qv: list, dim: int):
-    """mapInArrow emitting ``(vec_id, v array<double>, nrm, rel_raw)`` —
+    """Kernel emitting ``(vec_id, v array<double>, nrm, rel_raw)`` —
     the relevance pass of ``mmr_select`` (cosine of every pool row against
     the query anchor), bit-identical folds."""
     import pyspark.sql.functions as F  # noqa: PLC0415
@@ -492,79 +454,50 @@ def mmr_rel_kernel(df, id_col: str, vec_col: str, qv: list, dim: int):
     q = np.asarray(qv, dtype=np.float64)
     qn = float(fold_norm(q[None, :])[0])
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            nrm = fold_norm(x)
-            rel = _cos_vs(x, nrm, q, qn)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x), pa.array(nrm),
-                 pa.array(rel)],
-                schema=pa.schema([pa.field("vec_id", pa.int64()),
-                                  pa.field("v", pa.list_(pa.float64())),
-                                  pa.field("nrm", pa.float64()),
-                                  pa.field("rel_raw", pa.float64())]))
+    def fn(vec):
+        x = list_to_mat(vec, dim)
+        nrm = fold_norm(x)
+        return [mat_to_list_array(x), nrm, _cos_vs(x, nrm, q, qn)]
 
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(
-        gen, "vec_id long, v array<double>, nrm double, rel_raw double")
+    return run_kernel(df, fn, [vec_col],
+                      "v array<double>, nrm double, rel_raw double",
+                      keys=[F.col(id_col).alias("vec_id")])
 
 
 def mmr_ms_update_kernel(cand, sv: list, sn: float, round_dp: int,
                          dim: int):
     """One MMR step's running-max-similarity update:
     ``_ms' = max(_ms, spark_round(cos(v, sv), round_dp))`` over the
-    candidate pool — the greatest-of-already-rounded contract of
-    ``mmr_select``, with :func:`spark_round_vec` supplying the exact JVM
-    rounding for the selection-critical values."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
+    candidate pool ``(vec_id, v, nrm, rel, _ms)`` — the
+    greatest-of-already-rounded contract of ``mmr_select``, with
+    :func:`spark_round_vec` supplying the exact JVM rounding for the
+    selection-critical values."""
     s = np.asarray(sv, dtype=np.float64)
     sn = float(sn)
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            nrm = np.asarray(batch.column(2), dtype=np.float64)
-            rel = np.asarray(batch.column(3), dtype=np.float64)
-            ms = np.asarray(batch.column(4), dtype=np.float64)
-            cos = _cos_vs(x, nrm, s, sn)
-            ms2 = np.maximum(ms, spark_round_vec(cos, round_dp))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x), pa.array(nrm),
-                 pa.array(rel), pa.array(ms2)],
-                schema=pa.schema([pa.field("vec_id", pa.int64()),
-                                  pa.field("v", pa.list_(pa.float64())),
-                                  pa.field("nrm", pa.float64()),
-                                  pa.field("rel", pa.float64()),
-                                  pa.field("_ms", pa.float64())]))
+    def fn(vec, nrm, ms):
+        cos = _cos_vs(list_to_mat(vec, dim), np.asarray(nrm, np.float64),
+                      s, sn)
+        return [np.maximum(np.asarray(ms, np.float64),
+                           spark_round_vec(cos, round_dp))]
 
-    return cand.select("vec_id", "v", "nrm", "rel", "_ms").mapInArrow(
-        gen, "vec_id long, v array<double>, nrm double, rel double, "
-             "_ms double")
+    return run_kernel(cand, fn, ["v", "nrm", "_ms"], "_ms double",
+                      keys=["vec_id", "v", "nrm", "rel"], exchange=False)
 
 
 # ---------------------------------------------------------------------------
 # same-cell pair candidates (SemDeDup)
 # ---------------------------------------------------------------------------
 
-def _unpack_tile(col: pa.Array, row: int) -> tuple[np.ndarray, np.ndarray]:
-    """One list<struct<id, v>> cell -> (ids int64, matrix float64)."""
+def _unpack_tile(col: pa.Array, row: int
+                 ) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """One list<struct<id, v>> cell -> (Arrow ids, id_values, float64
+    matrix).  NULL vectors read as zero vectors; ragged ones raise."""
     structs = col[row].values           # StructArray slice, zero-copy
-    ids = np.asarray(structs.field("id"), dtype=np.int64)
-    if len(ids) == 0:
-        return ids, np.empty((0, 0), dtype=np.float64)
-    flat = np.asarray(structs.field("v").flatten(), dtype=np.float64)
-    return ids, flat.reshape(len(ids), -1)
+    ids = structs.field("id")
+    v = structs.field("v")
+    sizes = np.diff(v.offsets.to_numpy())
+    return ids, id_values(ids), list_to_mat(v, int(sizes.max(initial=0)))
 
 
 def cell_pair_candidates(
@@ -585,8 +518,9 @@ def cell_pair_candidates(
     one (measured: one 4-plane bucket held most of sf1's 20k vectors — a
     single 29-GFLOP straggler before tiling).  The |cell|^2 fencing and the
     arithmetic are unchanged: same fold-order cosines, so identical values.
-    Emits ``(i, j, cos_raw)``; caller rounds in JVM and re-applies the
-    exact ``>= threshold`` filter.
+    Emits ``(i, j, cos_raw)`` with ids in their own type (the ``j < i``
+    fence compares the id values, Spark's order); caller rounds in JVM and
+    re-applies the exact ``>= threshold`` filter.
 
     Candidate guarantee: emits every pair whose raw cosine can round to
     >= threshold (band ``threshold - 1.5 quanta``) — a superset of the
@@ -598,39 +532,34 @@ def cell_pair_candidates(
     band = threshold - (1.5 * 10.0 ** (-round_dp) if round_dp is not None
                         else 0.0)
 
-    out_schema = pa.schema([pa.field("i", pa.int64()),
-                            pa.field("j", pa.int64()),
-                            pa.field("cos_raw", pa.float64())])
-
-    def gen(batches):
-        for batch in batches:
-            ra, rb = batch.column(0), batch.column(1)
-            for r in range(batch.num_rows):
-                ids_a, xa = _unpack_tile(ra, r)
-                ids_b, xb = _unpack_tile(rb, r)
-                same = (len(ids_a) == len(ids_b)
-                        and ids_a[0] == ids_b[0]) if len(ids_a) else True
-                na, nb = fold_norm(xa), fold_norm(xb)
-                # i rides the b side (larger ids), j the a side
-                dot = fold_dot_mat(xb, xa)                  # (nb_rows, na)
-                denom = nb[:, None] * na[None, :]
-                valid = (nb[:, None] > 0) & (na[None, :] > 0)
-                cos = np.where(valid,
-                               np.divide(dot, denom,
-                                         out=np.zeros_like(dot),
-                                         where=denom != 0), 0.0)
-                keep = cos >= band
-                if same:
-                    keep &= ids_b[:, None] > ids_a[None, :]
-                iu, ju = np.nonzero(keep)
-                if len(iu) == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_b[iu]), pa.array(ids_a[ju]),
-                     pa.array(cos[iu, ju])], schema=out_schema)
+    def fn(ra, rb):
+        oi, oj, oc = [], [], []
+        for r in range(len(ra)):
+            arr_a, ids_a, xa = _unpack_tile(ra, r)
+            arr_b, ids_b, xb = _unpack_tile(rb, r)
+            same = (len(ids_a) == len(ids_b)
+                    and ids_a[0] == ids_b[0]) if len(ids_a) else True
+            na, nb = fold_norm(xa), fold_norm(xb)
+            # i rides the b side (larger ids), j the a side
+            dot = fold_dot_mat(xb, xa)                  # (nb_rows, na)
+            denom = nb[:, None] * na[None, :]
+            valid = (nb[:, None] > 0) & (na[None, :] > 0)
+            cos = np.where(valid,
+                           np.divide(dot, denom,
+                                     out=np.zeros_like(dot),
+                                     where=denom != 0), 0.0)
+            keep = cos >= band
+            if same:
+                keep &= ids_b[:, None] > ids_a[None, :]
+            iu, ju = np.nonzero(keep)
+            oi.append(arr_b.take(iu))
+            oj.append(arr_a.take(ju))
+            oc.append(cos[iu, ju])
+        return [pa.concat_arrays(oi), pa.concat_arrays(oj),
+                np.concatenate(oc)]
 
     d = assigned.select(F.col(cell_col).alias("_c"),
-                        F.col(id_col).cast("long").alias("id"),
+                        F.col(id_col).alias("id"),
                         F.col(vec_col).alias("v"))
     d = d.withColumn("_blk", ((F.row_number().over(
         Window.partitionBy("_c").orderBy("id")) - 1)
@@ -645,6 +574,6 @@ def cell_pair_candidates(
     tiles = (a.join(b, (F.col("_c") == F.col("_c2"))
                     & (F.col("_ba") <= F.col("_bb")))
              .select("_ra", "_rb"))
-    sc = assigned.sparkSession.sparkContext
-    tiles = tiles.repartition(max(sc.defaultParallelism, 1))
-    return tiles.mapInArrow(gen, "i long, j long, cos_raw double")
+    idt = assigned.schema[id_col].dataType.simpleString()
+    return run_kernel(tiles, fn, ["_ra", "_rb"],
+                      f"i {idt}, j {idt}, cos_raw double")

@@ -14,16 +14,18 @@ Scale shape per round:
   map-side-combined shuffle whose output is pair-vocabulary-sized;
 - **argmax**: a 1-row ``orderBy(...).limit(1)`` collect — a bounded
   planning read, same class as the connected-components convergence count;
-- **apply**: a pure per-row rewrite — zero shuffle.  Two tiers: a Catalyst
-  ``aggregate`` fold (exact reference, interpreted lambda, O(n) steps each
-  copying the accumulator — fine for short sequences, quadratic memory
-  traffic on long ones) and an Arrow kernel (``mapInArrow``) that edits the
-  flat ``ListArray`` buffers with numpy — vectorized, no per-row Python;
+- **apply**: a pure per-row rewrite — zero shuffle — as an Arrow kernel
+  that edits the flat ``ListArray`` buffers with numpy (vectorized, no
+  per-row Python).  :func:`merge_pair_expr` is the same rewrite as a
+  Catalyst ``aggregate`` fold for use inside a ``select`` (interpreted
+  lambda, each step copies the accumulator: quadratic memory traffic on
+  long sequences);
 - the corpus is ``localCheckpoint``-ed every round so round ``r`` does not
   re-execute rounds ``0..r-1`` (the connected-components lineage lesson).
 
-Greedy-overlap semantics (what "apply one merge" means, and what both
-tiers, the pure-Python test reference, and the SQL oracle all implement):
+Greedy-overlap semantics (what "apply one merge" means, and what the
+kernel, the fold expression, the pure-Python test reference, and the SQL
+oracle all implement):
 scan left to right, merge ``(a, b)`` at position ``i`` only if position
 ``i`` was not itself consumed by the previous merge.  Overlapping matches
 require ``a == b`` (a match at ``i`` and ``i+1`` forces ``t[i+1] = b = a``),
@@ -41,8 +43,6 @@ Spark rounds.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -75,9 +75,8 @@ def merge_pair_expr(tokens: Column | str, a: int, b: int, new_id: int) -> Column
     token unless the accumulator's last element is ``a`` and the incoming
     token is ``b`` — replacing the last element implements exactly the
     "position consumed by the previous merge" rule, because a consumed
-    position's output is ``new_id``, never ``a``.  Reference tier: each
-    step copies the accumulator, so prefer :func:`merge_pair_arrow` for
-    long sequences."""
+    position's output is ``new_id``, never ``a``.  Each step copies the
+    accumulator, so :func:`apply_merges_arrow` is the engine's path."""
     t = _c(tokens)
 
     def step(acc, x):
@@ -144,31 +143,26 @@ def apply_merges_arrow(
     import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
 
-    schema_str = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    names = [f.name for f in df.schema.fields]
-    ti = names.index(tokens)
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
 
-    def kernel(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tok = batch.column(ti)
-            offs = tok.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = tok.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            # the values buffer may extend past this batch's window (slices
-            # share buffers); re-root on the window
-            vals = vals[offs[0]:offs[-1]]
-            offs = offs - offs[0]
-            for a, b, z in merges:
-                vals, lens = _merge_flat(vals, offs, a, b, z)
-                offs = np.concatenate(([0], np.cumsum(lens)))
-            arr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()),
-                pa.array(vals, type=pa.int32()))
-            cols = [arr if i == ti else batch.column(i)
-                    for i in range(batch.num_columns)]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+    def fn(tok):
+        offs = tok.offsets.to_numpy().astype(np.int64)
+        vals = tok.values.to_numpy(zero_copy_only=False).astype(np.int64)
+        # the values buffer may extend past this batch's window (slices
+        # share buffers); re-root on the window
+        vals = vals[offs[0]:offs[-1]]
+        offs = offs - offs[0]
+        for a, b, z in merges:
+            vals, lens = _merge_flat(vals, offs, a, b, z)
+            offs = np.concatenate(([0], np.cumsum(lens)))
+        return [pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()),
+                                         pa.array(vals, type=pa.int32()))]
 
-    return df.mapInArrow(kernel, schema_str)
+    out = run_kernel(
+        df, fn, [tokens],
+        f"`{tokens}` {df.schema[tokens].dataType.simpleString()}",
+        keys=[c for c in df.columns if c != tokens], exchange=False)
+    return out.select(*df.columns)
 
 
 def bpe_learn(
@@ -176,7 +170,6 @@ def bpe_learn(
     tokens: str = "tokens",
     n_merges: int = 8,
     new_id_base: int | None = None,
-    tier: str = "arrow",
 ) -> tuple[list[tuple[int, int, int, int, int]], DataFrame]:
     """Learn ``n_merges`` BPE merges over the corpus.
 
@@ -184,11 +177,9 @@ def bpe_learn(
     ``(round, a, b, new_id, cnt)``.  ``new_id_base`` defaults to
     ``max token + 1`` (one bounded planning read); round ``r`` mints
     ``new_id_base + r``.  Each round: count pairs, collect the 1-row
-    argmax (count desc, pair lexicographic — deterministic), rewrite via
-    the chosen tier, ``localCheckpoint`` to cut lineage.  Stops early when
-    no pair is left."""
-    if tier not in ("arrow", "catalyst"):
-        raise ValueError(f"unknown tier {tier!r} (arrow | catalyst)")
+    argmax (count desc, pair lexicographic — deterministic), rewrite with
+    :func:`apply_merges_arrow`, ``localCheckpoint`` to cut lineage.  Stops
+    early when no pair is left."""
     if new_id_base is None:
         mx = df.agg(F.max(F.array_max(_c(tokens)))).collect()[0][0]
         new_id_base = (mx if mx is not None else 0) + 1
@@ -202,11 +193,7 @@ def bpe_learn(
         a, b, cnt = int(best[0].a), int(best[0].b), int(best[0].cnt)
         z = new_id_base + r
         table.append((r, a, b, z, cnt))
-        if tier == "arrow":
-            work = apply_merges_arrow(work, [(a, b, z)], tokens)
-        else:
-            work = work.withColumn(tokens, merge_pair_expr(tokens, a, b, z))
-        work = work.localCheckpoint()
+        work = apply_merges_arrow(work, [(a, b, z)], tokens).localCheckpoint()
     return table, work
 
 

@@ -127,39 +127,16 @@ def jaccard_lsh_pairs(
     formulation.
     """
     P = F.lit(2_147_483_647).cast("bigint")
-    from pyspark.sql import types as T
-    if isinstance(df.schema[id_col].dataType,
-                  (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        # per-char/per-word arithmetic as a numpy mapInArrow kernel
-        # (guide §4.2): identical integer values (poly-31 word hashes,
-        # positional shingle mix, minhash permutations), one Arrow pass
-        # instead of interpreted HOF folds per char — the dominant cost of
-        # this operator at sf1.  Bands/candidates/verify stay JVM-side.
-        from fs2_data_spark.functions.textkernels import (
-            shingle_minhash_kernel,
-        )
-        aug = shingle_minhash_kernel(df, id_col, text_col, k, shingle_n)
-        idt = df.schema[id_col].dataType
-        base = aug.select(F.col("id").cast(idt).alias("id"), "sh")
-        sig = aug.select(F.col("id").cast(idt).alias("id"),
-                         *[f"mh{i}" for i in range(k)])
-    else:
-        # stage word hashes, then shingles, as real projection columns:
-        # expensive expressions evaluated once per row (CollapseProject keeps
-        # multi-use non-cheap aliases staged), instead of re-evaluated inside
-        # every lambda
-        base = (df.select(F.col(id_col).alias("id"),
-                          TXT.word_hashes(text_col).alias("wh"))
-                .select("id", TXT.shingle_hashes_from(
-                    F.col("wh"), shingle_n).alias("sh")))
-        sig = base.select("id", *[
-            F.array_min(F.transform(
-                "sh",
-                (lambda a_, b_: lambda s: F.pmod(F.pmod(s, P) * a_ + b_, P))(
-                    1_103_515_245 + 2 * i + 1, 12_345 + 7919 * i),
-            )).alias(f"mh{i}")
-            for i in range(k)
-        ])
+    # per-char/per-word arithmetic as a numpy Arrow kernel (guide §4.2):
+    # the integer values of ``text.shingle_hashes`` +
+    # ``text.minhash_signature_shingles`` (poly-31 word hashes, positional
+    # shingle mix, minhash permutations), one Arrow pass instead of
+    # interpreted HOF folds per char — the dominant cost of this operator
+    # at sf1.  Bands/candidates/verify stay JVM-side.
+    from fs2_data_spark.functions.textkernels import shingle_minhash_kernel
+    aug = shingle_minhash_kernel(df, id_col, text_col, k, shingle_n)
+    base = aug.select("id", "sh")
+    sig = aug.select("id", *[f"mh{i}" for i in range(k)])
     n_bands = k // 2
     band_cols = [
         F.struct(F.lit(b).alias("band_id"),
@@ -483,40 +460,13 @@ def _word_segment_rows(df: DataFrame, text_col: str, id_col: str,
     (the final one may be shorter): per-row array arithmetic riding the
     scan, zero shuffle. Returns ``(n_seg_col, seg_rows_df)`` where
     ``seg_rows`` has ``(id_col, seg_no, seg)``."""
-    from pyspark.sql import types as T
-    ws_orig = TXT.words(text_col)
-    n_seg = F.ceil(F.size(ws_orig) / F.lit(seg_words)).cast("integer")
-    if isinstance(df.schema[id_col].dataType,
-                  (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        # r6: segment construction as an Arrow kernel (identical strings;
-        # the interpreted transform/slice/array_join chain measured 6 s of
-        # the 15.5 s boilerplate query at sf1)
-        from fs2_data_spark.functions.textkernels import (
-            word_segment_rows_kernel,
-        )
-        idt = df.schema[id_col].dataType
-        seg_rows = (word_segment_rows_kernel(df, id_col, text_col,
-                                             seg_words)
-                    .select(F.col("doc_id").cast(idt).alias(id_col),
-                            "seg_no", "seg"))
-        return n_seg, seg_rows
-    # stage the word array as a real projection first (r6): interpreted
-    # HOFs have no common-subexpression elimination, so an inlined
-    # ``words(text)`` is re-split once per segment slice — O(n_seg * n)
-    # per document instead of O(n)
-    staged = df.select(F.col(id_col), TXT.words(text_col).alias("__ws"))
-    ws = F.col("__ws")
-    n_seg_local = F.ceil(F.size(ws) / F.lit(seg_words)).cast("integer")
-    segs = F.when(
-        F.size(ws) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_seg_local - 1),
-            lambda i: F.array_join(
-                F.slice(ws, i * seg_words + 1, seg_words), " "))
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-    seg_rows = (staged.select(F.col(id_col), segs.alias("_segs"))
-                .select(id_col, F.posexplode("_segs").alias("seg_no", "seg")))
-    return n_seg, seg_rows
+    # r6: segment construction as an Arrow kernel (identical strings; the
+    # interpreted transform/slice/array_join chain measured 6 s of the
+    # 15.5 s boilerplate query at sf1)
+    from fs2_data_spark.functions.textkernels import word_segment_rows_kernel
+    n_seg = F.ceil(F.size(TXT.words(text_col)) / F.lit(seg_words)
+                   ).cast("integer")
+    return n_seg, word_segment_rows_kernel(df, id_col, text_col, seg_words)
 
 
 def segment_dedup(df: DataFrame, text_col: str = "text",

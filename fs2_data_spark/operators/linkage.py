@@ -72,8 +72,9 @@ def blocked_edit_pairs(
     # (26 s for 5.7k pairs at sf1); the banded DP below computes the same
     # exact integer distance (codepoint semantics, like Spark's) in ~1 ms
     # of Python per pair, parallel across tasks.  A distance-parity test
-    # pins the kernel against F.levenshtein.
-    import pyarrow as pa  # noqa: PLC0415
+    # pins the kernel against F.levenshtein.  The ids ride through the
+    # runner untouched, so string/UUID ids come back as themselves.
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
 
     def _lev_banded(s: str, t: str, kb: int) -> int:
         la, lb = len(s), len(t)
@@ -99,37 +100,14 @@ def blocked_edit_pairs(
             prev = cur
         return prev[lb] if prev[lb] <= kb else -1
 
-    def gen(batches):
-        for batch in batches:
-            ia = batch.column(0).to_pylist()
-            ta = batch.column(1).to_pylist()
-            la = batch.column(2).to_pylist()
-            ib = batch.column(3).to_pylist()
-            tb = batch.column(4).to_pylist()
-            lb_ = batch.column(5).to_pylist()
-            oa, ob, ola, olb, ol = [], [], [], [], []
-            for x in range(batch.num_rows):
-                d = _lev_banded(ta[x] or "", tb[x] or "", max_dist)
-                if d >= 0:
-                    oa.append(ia[x])
-                    ob.append(ib[x])
-                    ola.append(la[x])
-                    olb.append(lb_[x])
-                    ol.append(d)
-            if oa:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(oa, pa.int64()), pa.array(ob, pa.int64()),
-                     pa.array(ola, pa.int32()), pa.array(olb, pa.int32()),
-                     pa.array(ol, pa.int32())],
-                    names=["id_a", "id_b", "len_a", "len_b", "lev"])
+    def fn(ta, tb):
+        rows, ol = [], []
+        for x, (a, b) in enumerate(zip(ta.to_pylist(), tb.to_pylist())):
+            d = _lev_banded(a or "", b or "", max_dist)
+            if d >= 0:
+                rows.append(x)
+                ol.append(d)
+        return rows, [ol]
 
-    idt = docs.schema[id_col].dataType
-    src = pairs.select(F.col("id_a").cast("long"), "_ta", "len_a",
-                       F.col("id_b").cast("long"), "_tb", "len_b")
-    sc = docs.sparkSession.sparkContext
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    out = src.mapInArrow(
-        gen, "id_a long, id_b long, len_a int, len_b int, lev int")
-    return out.select(F.col("id_a").cast(idt).alias("id_a"),
-                      F.col("id_b").cast(idt).alias("id_b"),
-                      "len_a", "len_b", "lev")
+    return run_kernel(pairs, fn, ["_ta", "_tb"], "lev int",
+                      keys=["id_a", "id_b", "len_a", "len_b"])

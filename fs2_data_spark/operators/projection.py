@@ -21,9 +21,9 @@ Engine-portable by construction (the canonical-oracle discipline):
   ±1 multiplication is a sign flip, and both Spark and DuckDB evaluate
   the identical chain in the identical order — bit-identical doubles,
   surfaced through one ``ROUND(x * 1/sqrt(out_dim), round_dp)``.
-- Zero-shuffle per-row projection; the expression tree is
-  ``out_dim x dim`` scalar ops fused into whole-stage codegen (the same
-  width discipline as ``operators/quantize.py corpus_dim_stats``).
+- Spark evaluates that chain as one per-row numpy Arrow kernel (no
+  shuffle) that replicates it bit for bit; the SQL chain
+  (:func:`jl_chain_sql`) is what the DuckDB oracle runs.
 
 Reference parity: fs2-data has no vector module; this extends the
 SURVEY §2 "beyond the reference" similarity-search scale path.
@@ -67,19 +67,6 @@ def jl_signs(dim: int, out_dim: int, seed: int = 42) -> list[list[int]]:
             for j in range(out_dim)]
 
 
-def _chain(vec_col: str, signs: list[int]) -> Column:
-    """Left-associated ±CAST(vec[i] AS DOUBLE) chain in index order."""
-    expr: Column | None = None
-    for i, s in enumerate(signs):
-        t = F.element_at(F.col(vec_col), i + 1).cast("double")
-        if expr is None:
-            expr = t if s == 1 else -t
-        else:
-            expr = expr + t if s == 1 else expr - t
-    assert expr is not None
-    return expr
-
-
 def jl_project(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -90,64 +77,60 @@ def jl_project(
     prefix: str = "jl",
 ) -> DataFrame:
     """Adds ``{prefix}_0 .. {prefix}_{out_dim-1}`` double columns: the
-    scaled sign-projection of ``vec_col``, rounded to ``round_dp``."""
-    signs = jl_signs(dim, out_dim, seed)
+    scaled sign-projection of ``vec_col``, rounded to ``round_dp``.
+
+    A NULL vector, or one holding a NULL element, projects to NULL in every
+    component — what the ±CAST chain (:func:`jl_chain_sql`) gives.  A
+    non-NULL vector whose length is not ``dim`` raises
+    ``ValueError("ragged vector ...")``: the chain itself fails on short
+    rows (ANSI ``element_at``) and would silently drop the tail of long
+    ones."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
+    from fs2_data_spark.functions.veckernels import list_to_mat
+
+    # r6: the out_dim x dim ±-chains run as a numpy Arrow kernel.
+    # Bit-exactness: the left-associated ± chain equals
+    # ``acc = s_0*x_0; acc += s_i*x_i`` elementwise (x - y is exactly
+    # x + (-y), and ±1.0 multiplication is an exact sign flip), and the
+    # final ``* scale`` is the same single multiply; JVM F.round produces
+    # the output.  Beyond the per-row win, this removes the
+    # ~dim*out_dim-node expression tree whose generated code measured 5x
+    # slower inside the full bench batch than standalone (JIT code-cache
+    # pressure after ~100 plans, BASELINE.md r5).
+    smat = np.asarray(jl_signs(dim, out_dim, seed), dtype=np.float64)
     scale = 1.0 / math.sqrt(out_dim)
-    try:
-        # r6: the out_dim x dim ±-chains run as a numpy mapInArrow kernel.
-        # Bit-exactness: the left-associated ± chain equals
-        # ``acc = s_0*x_0; acc += s_i*x_i`` elementwise (x - y is exactly
-        # x + (-y), and ±1.0 multiplication is an exact sign flip), and the
-        # final ``* scale`` is the same single multiply; JVM F.round
-        # produces the output.  Beyond the per-row win, this removes the
-        # ~dim*out_dim-node expression tree whose generated code measured
-        # 5x slower inside the full bench batch than standalone (JIT
-        # code-cache pressure after ~100 plans, BASELINE.md r5).
-        import numpy as np  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
 
-        from fs2_data_spark.functions.veckernels import list_to_mat
-
-        smat = np.asarray(signs, dtype=np.float64)        # (out_dim, dim)
-        in_fields = df.schema.fields
-        ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                        for f in in_fields)
-        ddl += ", " + ", ".join(f"__jlraw_{j} double"
-                                for j in range(out_dim))
-        vec_idx = df.columns.index(vec_col)
-
-        def gen(batches):
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                x = list_to_mat(batch.column(vec_idx), dim)
-                outs = []
-                for j in range(out_dim):
-                    acc = x[:, 0] * smat[j, 0]
-                    for i in range(1, dim):
-                        acc += x[:, i] * smat[j, i]
-                    outs.append(pa.array(acc * scale))
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(i) for i in range(batch.num_columns)]
-                    + outs,
-                    names=[f.name for f in in_fields]
-                    + [f"__jlraw_{j}" for j in range(out_dim)])
-
-        sc = df.sparkSession.sparkContext
-        out = (df.repartition(max(sc.defaultParallelism, 1))
-               .mapInArrow(gen, ddl))
-        cols = [F.col(f.name) for f in in_fields]
+    def fn(vec):
+        valid = np.asarray(vec.is_valid())
+        sizes = np.diff(vec.offsets.to_numpy())
+        bad = valid & (sizes != dim)
+        if bad.any():
+            raise ValueError(f"ragged vector rows (len != {dim}) in "
+                             f"{vec_col!r}: {np.unique(sizes[bad])}")
+        # NULL rows and rows holding a NULL element project to NULL
+        null = ~valid
+        elem_null = np.asarray(vec.flatten().is_null())
+        if elem_null.any():
+            rows = np.repeat(np.arange(len(vec)), np.where(valid, sizes, 0))
+            null[rows[elem_null]] = True
+        x = list_to_mat(vec, dim)
+        outs = []
         for j in range(out_dim):
-            cols.append(F.round(F.col(f"__jlraw_{j}"), round_dp)
-                        .alias(f"{prefix}_{j}"))
-        return out.select(*cols)
-    except Exception:  # noqa: BLE001 — fall back to the Catalyst chains
-        pass
-    cols = [F.col(c) for c in df.columns]
-    for j in range(out_dim):
-        cols.append(F.round(_chain(vec_col, signs[j]) * F.lit(scale),
-                            round_dp).alias(f"{prefix}_{j}"))
-    return df.select(*cols)
+            acc = x[:, 0] * smat[j, 0]
+            for i in range(1, dim):
+                acc += x[:, i] * smat[j, i]
+            outs.append(pa.array(acc * scale, mask=null))
+        return outs
+
+    out = run_kernel(df, fn, [vec_col],
+                     ", ".join(f"__jlraw_{j} double" for j in range(out_dim)),
+                     keys=df.columns)
+    return out.select(*df.columns, *[
+        F.round(F.col(f"__jlraw_{j}"), round_dp).alias(f"{prefix}_{j}")
+        for j in range(out_dim)])
 
 
 def jl_chain_sql(vec_expr: str, signs: list[int]) -> str:

@@ -112,38 +112,31 @@ def quantized_topk(
     corpus candidates by exact integer squared-L2 (ties by neighbor id).
     Returns ``(q_vec_id, n_vec_id, dist_sq)``.
     """
-    from pyspark.sql import types as T
     base = embeddings.select(F.col(id_col).alias("id"),
                              _as_double(F.col(vec_col)).alias("v"),
                              query_pred.alias("is_q"))
     coded = quantize(base, "v", dim)
-    if isinstance(embeddings.schema[id_col].dataType,
-                  (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        # the (|corpus| x |queries|) integer distance arithmetic as a numpy
-        # mapInArrow kernel (guide §4.2): all-integer squared-L2, so any
-        # association order is value-identical and per-batch exact top-k
-        # prunes candidates with no rounding discipline needed; the query
-        # collect is the BNLJ broadcast build side the legacy plan shipped
-        import numpy as np  # noqa: PLC0415
+    # the (|corpus| x |queries|) integer distance arithmetic as a numpy
+    # Arrow kernel (guide §4.2): all-integer squared-L2, so any association
+    # order is value-identical and per-batch exact top-k prunes candidates
+    # with no rounding discipline needed; the query collect is the BNLJ
+    # broadcast build side of the Catalyst plan below, which still serves
+    # query sets above 200k rows
+    import numpy as np  # noqa: PLC0415
 
-        from fs2_data_spark.functions import veckernels as VK
-        q_rows = (coded.filter("is_q").select("id", "q")
-                  .limit(200_001).collect())
-        if len(q_rows) <= 200_000:
-            idt = embeddings.schema[id_col].dataType
-            q_ids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-            q_codes = (np.array([list(r["q"]) for r in q_rows],
-                                dtype=np.int64)
-                       if q_rows else np.empty((0, dim), dtype=np.int64))
-            cand = VK.l2_int_topk_candidates(coded, q_ids, q_codes,
-                                             "id", "q", k, dim)
-            w = Window.partitionBy("q_vec_id").orderBy(
-                F.col("dist_sq").asc(), F.col("n_vec_id").asc())
-            return (cand.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") <= k)
-                    .select(F.col("q_vec_id").cast(idt).alias("q_vec_id"),
-                            F.col("n_vec_id").cast(idt).alias("n_vec_id"),
-                            "dist_sq"))
+    from fs2_data_spark.functions import veckernels as VK
+    q_rows = coded.filter("is_q").select("id", "q").limit(200_001).toArrow()
+    if q_rows.num_rows <= 200_000:
+        q_codes = np.array(q_rows.column(1).to_pylist(),
+                           dtype=np.int64).reshape(-1, dim)
+        cand = VK.l2_int_topk_candidates(
+            coded, q_rows.column(0).combine_chunks(), q_codes, "id", "q", k,
+            dim)
+        w = Window.partitionBy("q_vec_id").orderBy(
+            F.col("dist_sq").asc(), F.col("n_vec_id").asc())
+        return (cand.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= k)
+                .select("q_vec_id", "n_vec_id", "dist_sq"))
     q = (coded.filter("is_q")
               .select(F.col("id").alias("q_vec_id"), F.col("q").alias("qq")))
     c = coded.select(F.col("id").alias("n_vec_id"), F.col("q").alias("cq"))

@@ -1,194 +1,32 @@
-"""Segmented-timeline operators: parallelizing ordered per-key scans.
+"""Heavy-hitter detection for the skew-aware pipeline.
 
 ``Window.partitionBy(key).orderBy(ts)`` serializes each key into ONE task, so
 a heavy-hitter key (10% of rows on one doc_id) caps whole-job scaling at
 ~1/frac regardless of cluster size. Salting is unsound for order-sensitive
-operators (SURVEY §7.3), so this module implements the sound alternative:
-**segmented scan** (the classic parallel-prefix decomposition).
+operators (SURVEY §7.3); the sound alternative is a **segmented scan** (the
+classic parallel-prefix decomposition), implemented once, fused with the
+lag/lead and sessionization features, in ``pipeline._fused_segmented``:
 
     1. split each key's timeline into time buckets;
     2. compute the operator within (key, bucket) partitions — parallel even
        for a single hot key;
-    3. aggregate one summary row per (key, bucket) (last payload / first+last
-       rows / session-flag counts) — thousands of rows, not billions;
+    3. aggregate one summary row per (key, bucket) — thousands of rows, not
+       billions;
     4. resolve cross-bucket carries on the summary with a cheap per-key
        window (prefix sums / LOCF over buckets);
-    5. broadcast-join carries back and combine.
+    5. join carries back and combine.
 
-Results are exactly equal to the single-window implementations (pinned by
-tests/test_segmented.py), mirroring how fs2-data proves its optimized and
-non-optimized compilers equivalent (reference
-``finite-state/shared/src/test/scala/fs2/data/mft/QuerySpec.scala:32-34``).
+This module keeps the sampled detection that decides which keys take that
+path.  Results equal the single-window plan (pinned by
+tests/test_fused_pipeline.py and tests/test_segmented.py), mirroring how
+fs2-data proves its optimized and non-optimized compilers equivalent
+(reference ``finite-state/shared/src/test/scala/fs2/data/mft/
+QuerySpec.scala:32-34``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame, Window, functions as F
-
-from fs2_data_spark.functions.timeutil import epoch_us
-
-_B, _TS, _SIDE, _L, _R = "__seg_b", "__seg_ts", "__seg_side", "__seg_l", "__seg_r"
-
-
-def time_bucket(ts_col, bucket_us: int) -> F.Column:
-    return F.floor(epoch_us(ts_col) / F.lit(bucket_us)).cast("bigint")
-
-
-def segmented_asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "doc_id",
-    left_ts: str = "event_time",
-    right_ts: str = "obs_time",
-    right_cols: list[str] | None = None,
-    bucket_us: int = 3_600_000_000,
-    allow_exact: bool = True,
-    suffix: str = "",
-    carry_join: str = "broadcast",
-) -> DataFrame:
-    """As-of join whose parallelism is independent of key skew.
-
-    Same semantics as ``asof_join(strategy='union')``; the per-key window is
-    replaced by (key, time-bucket) windows + a LOCF carry over the per-bucket
-    summary. Exactness pinned by tests.
-
-    ``carry_join``: how the per-(key, bucket) carry summary joins back.
-    ``"broadcast"`` (default) is right for the hybrid router, which sends
-    only sampled heavy hitters through this plan (carry rows = hot keys x
-    buckets, thousands). Calling this directly on a FULL billion-key table
-    makes the summary |keys| x |buckets| rows — pass ``"shuffle"`` there or
-    the broadcast will not fit.
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in {on, right_ts}]
-    r = (right.select(on, F.col(right_ts).alias(_TS), F.struct(*right_cols).alias(_R))
-         .groupBy(on, _TS).agg(F.max(_R).alias(_R)))
-    l_side, r_side = (1, 0) if allow_exact else (0, 1)
-    l = left.select(
-        on, F.col(left_ts).alias(_TS), F.lit(l_side).alias(_SIDE),
-        F.struct(*left.columns).alias(_L),
-        F.lit(None).cast(r.schema[_R].dataType).alias(_R),
-    )
-    r = r.select(on, _TS, F.lit(r_side).alias(_SIDE),
-                 F.lit(None).cast(l.schema[_L].dataType).alias(_L), _R)
-    u = l.unionByName(r).withColumn(_B, time_bucket(F.col(_TS), bucket_us))
-
-    w_b = (Window.partitionBy(on, _B).orderBy(_TS, _SIDE)
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    matched_in = F.last(_R, ignorenulls=True).over(w_b)
-
-    # per-(key,bucket) last right payload; (ts, side) max picks the latest
-    summary = u.groupBy(on, _B).agg(
-        F.max(F.when(F.col(_R).isNotNull(),
-                     F.struct(F.col(_TS), F.col(_R)))).alias("__last_r"))
-    w_c = (Window.partitionBy(on).orderBy(_B)
-           .rowsBetween(Window.unboundedPreceding, -1))
-    carried = summary.select(
-        on, _B,
-        F.last("__last_r", ignorenulls=True).over(w_c).getField(_R).alias("__carried"),
-    )
-
-    carried = F.broadcast(carried) if carry_join == "broadcast" else carried
-    out = (u.withColumn("__m_in", matched_in)
-           .filter(F.col(_L).isNotNull())
-           .join(carried, [on, _B], "left")
-           .withColumn(_R, F.coalesce(F.col("__m_in"), F.col("__carried"))))
-    return out.select(
-        F.col(_L + ".*"),
-        *[F.col(f"{_R}.{c}").alias(c + suffix) for c in right_cols],
-    )
-
-
-def segmented_features(
-    df: DataFrame,
-    key: str = "doc_id",
-    ts: str = "event_time",
-    tiebreak: str | None = None,
-    lag_cols: Sequence[str] = ("n_tok",),
-    gap_s: int | None = 3600,
-    bucket_us: int = 3_600_000_000,
-    carry_join: str = "broadcast",
-) -> DataFrame:
-    """lag1/lead1 features + gap-sessionization with skew-independent
-    parallelism (same outputs as ``with_lag_lead`` + ``sessionize``).
-
-    Adds ``lag1_<c>``/``lead1_<c>`` per ``lag_cols`` entry and (when ``gap_s``
-    is set) ``session_seq``. ``carry_join``: see
-    :func:`segmented_asof_join` — keep ``"broadcast"`` only when the plan
-    receives hot keys from the hybrid router, not a full key population.
-    """
-    order = [ts] + ([tiebreak] if tiebreak else [])
-    d = df.withColumn(_B, time_bucket(F.col(ts), bucket_us))
-    w_b = Window.partitionBy(key, _B).orderBy(*order)
-    w_run = w_b.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_cnt = Window.partitionBy(key, _B)
-
-    gap_us = F.lit(int(gap_s) * 1_000_000) if gap_s is not None else None
-    row_struct = F.struct(*[F.col(c) for c in order], *[F.col(c) for c in lag_cols],
-                          F.col(ts).alias("__ts"))
-    d = d.withColumn("__rn", F.row_number().over(w_b)) \
-         .withColumn("__cnt", F.count(F.lit(1)).over(w_cnt))
-    for c in lag_cols:
-        d = d.withColumn(f"__lag_in_{c}", F.lag(c).over(w_b))
-        d = d.withColumn(f"__lead_in_{c}", F.lead(c).over(w_b))
-    if gap_s is not None:
-        prev_ts = F.lag(ts).over(w_b)
-        d = d.withColumn(
-            "__flag_known",
-            F.when(prev_ts.isNotNull()
-                   & ((epoch_us(F.col(ts)) - epoch_us(prev_ts)) > gap_us), 1)
-            .otherwise(0))
-        d = d.withColumn("__cum_known", F.sum("__flag_known").over(w_run))
-
-    aggs = [
-        F.min(row_struct).alias("__first"),
-        F.max(row_struct).alias("__last"),
-    ]
-    if gap_s is not None:
-        aggs.append(F.sum("__flag_known").alias("__flags"))
-    summary = d.groupBy(key, _B).agg(*aggs)
-
-    w_s = Window.partitionBy(key).orderBy(_B)
-    summary = summary.withColumn("__prev_last", F.lag("__last").over(w_s)) \
-                     .withColumn("__next_first", F.lead("__first").over(w_s))
-    if gap_s is not None:
-        first_flag = F.when(F.col("__prev_last").isNull(), F.lit(1)).when(
-            (epoch_us(F.col("__first.__ts")) - epoch_us(F.col("__prev_last.__ts"))) > gap_us,
-            F.lit(1)).otherwise(F.lit(0))
-        summary = summary.withColumn("__first_flag", first_flag)
-        w_sc = w_s.rowsBetween(Window.unboundedPreceding, -1)
-        summary = summary.withColumn(
-            "__carry",
-            F.coalesce(F.sum(F.col("__first_flag") + F.col("__flags")).over(w_sc),
-                       F.lit(0)))
-    carry_cols = [key, _B, "__prev_last", "__next_first"]
-    if gap_s is not None:
-        carry_cols += ["__first_flag", "__carry"]
-    carry = summary.select(*carry_cols)
-    if carry_join == "broadcast":
-        carry = F.broadcast(carry)
-    out = d.join(carry, [key, _B], "left")
-
-    for c in lag_cols:
-        out = out.withColumn(
-            f"lag1_{c}",
-            F.when(F.col("__rn") > 1, F.col(f"__lag_in_{c}"))
-            .otherwise(F.col(f"__prev_last.{c}")))
-        out = out.withColumn(
-            f"lead1_{c}",
-            F.when(F.col("__rn") < F.col("__cnt"), F.col(f"__lead_in_{c}"))
-            .otherwise(F.col(f"__next_first.{c}")))
-    if gap_s is not None:
-        out = out.withColumn(
-            "session_seq",
-            (F.col("__carry") + F.col("__first_flag") + F.col("__cum_known")).cast("bigint"))
-    drop = [_B, "__rn", "__cnt", "__prev_last", "__next_first"]
-    drop += [f"__lag_in_{c}" for c in lag_cols] + [f"__lead_in_{c}" for c in lag_cols]
-    if gap_s is not None:
-        drop += ["__flag_known", "__cum_known", "__first_flag", "__carry"]
-    return out.drop(*drop)
+from pyspark.sql import DataFrame, functions as F
 
 
 def detect_hot_keys(df: DataFrame, key: str, threshold_frac: float = 0.01,

@@ -43,12 +43,6 @@ def _cos(dot: F.Column, an: F.Column, bn: F.Column) -> F.Column:
     return F.when((an > 0) & (bn > 0), dot / (an * bn)).otherwise(F.lit(0.0))
 
 
-def _integral_id(df: DataFrame, id_col: str) -> bool:
-    from pyspark.sql import types as T
-    return isinstance(df.schema[id_col].dataType,
-                      (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
-
-
 # query sets above this are not "the small broadcast side" any more; the
 # Catalyst BNLJ path (which would also have to broadcast them) takes over
 _KERNEL_MAX_QUERIES = 200_000
@@ -61,56 +55,50 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 3,
     round_dp: int | None = 4,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (q_vec_id, n_vec_id, cos_sim).
 
     The ranking key is the *rounded* cosine (+ id tie-break) so results are
     deterministic under floating-point summation-order differences.
 
-    ``strategy='auto'`` (default) runs the (|corpus| x |queries|) pair
-    arithmetic as a numpy ``mapInArrow`` kernel (guide §4.2) whenever the
-    query side is collectible (it is the BNLJ *broadcast build side* in the
-    legacy plan, so the driver read is the same bytes the broadcast already
-    shipped) and ids are integral: measured 49 s -> ~1 s at sf1 (400 x 20k
-    pairs of 64-dim interpreted-HOF folds).  The kernel emits per-batch exact
-    top-k candidates under the (rounded cos DESC, id ASC) comparator with
-    bit-identical raw cosines (fold-order replica, see
-    ``functions/veckernels.py``); JVM ``F.round`` + one window over the tiny
-    candidate set produce the final rows — value-identical to the Catalyst
-    path (pinned by tests + the frozen DuckDB oracle).
-    ``strategy='catalyst'`` keeps the legacy broadcast-NLJ plan.
+    The (|corpus| x |queries|) pair arithmetic runs as a numpy Arrow kernel
+    (guide §4.2) whenever the query side is collectible (it is the BNLJ
+    *broadcast build side* of the Catalyst plan, so the driver read is the
+    same bytes the broadcast ships) and its vectors share one dimension:
+    measured 49 s -> ~1 s at sf1 (400 x 20k pairs of 64-dim interpreted-HOF
+    folds).  The kernel emits per-batch exact top-k candidates under the
+    (rounded cos DESC, id ASC) comparator with bit-identical raw cosines
+    (fold-order replica, see ``functions/veckernels.py``) and ids of any
+    type; JVM ``F.round`` + one window over the tiny candidate set produce
+    the final rows — value-identical to the Catalyst plan (pinned by tests +
+    the frozen DuckDB oracle), which still serves query sets above
+    ``_KERNEL_MAX_QUERIES`` and ragged query dimensions.
     """
-    if strategy == "auto" and _integral_id(queries, id_col):
-        import numpy as np
+    import numpy as np
 
-        from fs2_data_spark.functions import veckernels as VK
-        rows = (queries.select(F.col(id_col).cast("long"), vec_col)
-                .limit(_KERNEL_MAX_QUERIES + 1).collect())
-        dims = {len(r[1]) for r in rows if r[1] is not None}
-        if len(rows) <= _KERNEL_MAX_QUERIES and len(dims) == 1:
-            dim = dims.pop()
-            q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-            q_mat = np.array(
-                [r[1] if r[1] is not None and len(r[1]) == dim
-                 else [0.0] * dim for r in rows], dtype=np.float64)
-            cand = VK.cosine_topk_candidates(
-                corpus, q_ids, q_mat, id_col, vec_col, k, round_dp, dim)
-            cos = F.col("cos_raw")
-            if round_dp is not None:
-                cos = F.round(cos, round_dp)
-            qt = queries.schema[id_col].dataType
-            ct = corpus.schema[id_col].dataType
-            pairs = cand.select(F.col("q_vec_id").cast(qt).alias("q_vec_id"),
-                                F.col("n_vec_id").cast(ct).alias("n_vec_id"),
-                                cos.alias("cos_sim"))
-            w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"),
-                                                       "n_vec_id")
-            return (pairs.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= k).drop("__rn"))
-    # legacy Catalyst plan: stage the double-cast vector as its own
-    # projection: interpreted HOFs have no common-subexpression elimination,
-    # so norm+dot would otherwise re-evaluate the cast array per use
+    from fs2_data_spark.functions import veckernels as VK
+    rows = (queries.select(id_col, vec_col)
+            .limit(_KERNEL_MAX_QUERIES + 1).toArrow())
+    vecs = rows.column(1).to_pylist()
+    dims = {len(v) for v in vecs if v is not None}
+    if rows.num_rows <= _KERNEL_MAX_QUERIES and len(dims) == 1:
+        dim = dims.pop()
+        q_mat = np.array([v if v is not None and len(v) == dim
+                          else [0.0] * dim for v in vecs], dtype=np.float64)
+        cand = VK.cosine_topk_candidates(
+            corpus, rows.column(0).combine_chunks(), q_mat, id_col, vec_col,
+            k, round_dp, dim)
+        cos = F.col("cos_raw")
+        if round_dp is not None:
+            cos = F.round(cos, round_dp)
+        pairs = cand.select("q_vec_id", "n_vec_id", cos.alias("cos_sim"))
+        w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"),
+                                                   "n_vec_id")
+        return (pairs.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= k).drop("__rn"))
+    # Catalyst plan: stage the double-cast vector as its own projection:
+    # interpreted HOFs have no common-subexpression elimination, so
+    # norm+dot would otherwise re-evaluate the cast array per use
     q = (queries.select(F.col(id_col).alias("q_vec_id"),
                         _as_double(F.col(vec_col)).alias("qv"))
          .select("q_vec_id", "qv", _norm(F.col("qv")).alias("qn")))
@@ -198,13 +186,12 @@ def ivf_index(
         [(i, list(r.v)) for i, r in enumerate(seeds)], "cell int, cv array<double>")
 
     # assignment strategy: the (|corpus| x n_cells) distance folds run as a
-    # numpy mapInArrow kernel (bit-identical fold order + rounded-argmin trim,
-    # see functions/veckernels.py) when the id is integral — the centroid
-    # collect below reads the same n_cells rows the legacy broadcast shipped.
-    # Falls back to the Catalyst broadcast-NL plan otherwise.
-    use_kernel = _integral_id(c, "id")
+    # numpy Arrow kernel (bit-identical fold order + rounded-argmin trim,
+    # see functions/veckernels.py) — the centroid collect below reads the
+    # same n_cells rows the broadcast ships.  Ragged dimensions (seeds or
+    # centroids) take the Catalyst broadcast-NL plan.
     dims = {len(r.v) for r in seeds if r.v is not None}
-    kernel_dim = dims.pop() if use_kernel and len(dims) == 1 else None
+    kernel_dim = dims.pop() if len(dims) == 1 else None
 
     def assign(df, cents_df):
         if kernel_dim is not None:
@@ -212,11 +199,8 @@ def ivf_index(
             cent_rows = [(r["cell"], list(r["cv"]))
                          for r in cents_df.collect()]
             if all(len(v) == kernel_dim for _, v in cent_rows):
-                out = VK.ivf_assign_kernel(df, cent_rows, "id", "v",
-                                           kernel_dim, canonical)
-                return out.select(
-                    F.col("id").cast(df.schema["id"].dataType).alias("id"),
-                    "v", "cell")
+                return VK.ivf_assign_kernel(df, cent_rows, "id", "v",
+                                            kernel_dim, canonical)
         dist = F.aggregate(
             F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0), lambda acc, x: acc + x)
@@ -309,37 +293,19 @@ def lsh_bucket_topk(
     broadcast scan) — the 100 TB-friendly variant.
 
     The per-row signature+norm projection (8 interpreted 64-dim folds per
-    row) runs as a numpy ``mapInArrow`` kernel when ids are integral
-    (guide §4.2; bit-identical folds — ``functions/veckernels.py``); the
-    bucket-fenced pair verification stays in the JVM (bucket pair counts are
-    small by construction).
+    row) runs as a numpy Arrow kernel (guide §4.2; bit-identical folds —
+    ``functions/veckernels.py``); the bucket-fenced pair verification stays
+    in the JVM (bucket pair counts are small by construction).
     """
-    if _integral_id(queries, id_col) and _integral_id(corpus, id_col):
-        from fs2_data_spark.functions import veckernels as VK
-        q = VK.lsh_augment_kernel(queries, id_col, vec_col, n_planes, dim,
-                                  seed=42).select(
-            F.col("vec_id").cast(queries.schema[id_col].dataType)
-            .alias("q_vec_id"), F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"), "sig")
-        c = VK.lsh_augment_kernel(corpus, id_col, vec_col, n_planes, dim,
-                                  seed=42).select(
-            F.col("vec_id").cast(corpus.schema[id_col].dataType)
-            .alias("n_vec_id"), F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"), "sig")
-    else:
-        # staged double-cast vector: the signature evaluates n_planes
-        # interpreted folds over it, and norm/dot two more — without the
-        # projection barrier each of those re-casts the float array
-        q = (queries.select(F.col(id_col).alias("q_vec_id"),
-                            _as_double(F.col(vec_col)).alias("qv"))
-             .select("q_vec_id", "qv", _norm(F.col("qv")).alias("qn"),
-                     hyperplane_signature(F.col("qv"), n_planes, dim,
-                                          cast=False).alias("sig")))
-        c = (corpus.select(F.col(id_col).alias("n_vec_id"),
-                           _as_double(F.col(vec_col)).alias("cv"))
-             .select("n_vec_id", "cv", _norm(F.col("cv")).alias("cn"),
-                     hyperplane_signature(F.col("cv"), n_planes, dim,
-                                          cast=False).alias("sig")))
+    from fs2_data_spark.functions import veckernels as VK
+    q = VK.lsh_augment_kernel(queries, id_col, vec_col, n_planes, dim,
+                              seed=42).select(
+        F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"), "sig")
+    c = VK.lsh_augment_kernel(corpus, id_col, vec_col, n_planes, dim,
+                              seed=42).select(
+        F.col("vec_id").alias("n_vec_id"), F.col("v").alias("cv"),
+        F.col("nrm").alias("cn"), "sig")
     cos = _cos(_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
     if round_dp is not None:
         cos = F.round(cos, round_dp)
@@ -382,37 +348,19 @@ def semantic_dedup(
     """
     _, assigned = ivf_index(corpus, id_col, vec_col, n_cells,
                             canonical=canonical)
-    if _integral_id(assigned, "id"):
-        # cell-fenced pair arithmetic as a grouped numpy kernel (guide §4.2):
-        # same one-shuffle-on-cell fencing, sum(|cell|^2) cost, bit-identical
-        # raw cosines (veckernels fold-order contract); the >= threshold
-        # filter and best-per-i ranking re-apply the exact JVM rounding.
-        from fs2_data_spark.functions import veckernels as VK
-        raw = VK.cell_pair_candidates(assigned, threshold, round_dp,
-                                      id_col="id", vec_col="v",
-                                      cell_col="cell")
-        cos = F.col("cos_raw")
-        if round_dp is not None:
-            cos = F.round(cos, round_dp)
-        idt = assigned.schema["id"].dataType
-        pairs = (raw.select(F.col("i").cast(idt).alias("i"),
-                            F.col("j").cast(idt).alias("j"),
-                            cos.alias("cos_sim"))
-                 .filter(F.col("cos_sim") >= F.lit(threshold)))
-        w = assigned.select("id", "cell")
-    else:
-        w = assigned.select("id", "v", "cell", _norm(F.col("v")).alias("n"))
-        a = w.select(F.col("id").alias("i"), F.col("v").alias("vi"),
-                     F.col("n").alias("ni"), "cell")
-        b = w.select(F.col("id").alias("j"), F.col("v").alias("vj"),
-                     F.col("n").alias("nj"), "cell")
-        cos = _cos(_dot(F.col("vi"), F.col("vj")), F.col("ni"), F.col("nj"))
-        if round_dp is not None:
-            cos = F.round(cos, round_dp)
-        pairs = (a.join(b, "cell")
-                 .filter(F.col("j") < F.col("i"))
-                 .select("i", "j", cos.alias("cos_sim"))
-                 .filter(F.col("cos_sim") >= F.lit(threshold)))
+    # cell-fenced pair arithmetic as a grouped numpy kernel (guide §4.2):
+    # same one-shuffle-on-cell fencing, sum(|cell|^2) cost, bit-identical
+    # raw cosines (veckernels fold-order contract); the >= threshold
+    # filter and best-per-i ranking re-apply the exact JVM rounding.
+    from fs2_data_spark.functions import veckernels as VK
+    raw = VK.cell_pair_candidates(assigned, threshold, round_dp,
+                                  id_col="id", vec_col="v", cell_col="cell")
+    cos = F.col("cos_raw")
+    if round_dp is not None:
+        cos = F.round(cos, round_dp)
+    pairs = (raw.select("i", "j", cos.alias("cos_sim"))
+             .filter(F.col("cos_sim") >= F.lit(threshold)))
+    w = assigned.select("id", "cell")
     wk = Window.partitionBy("i").orderBy(F.desc("cos_sim"), "j")
     best = (pairs.withColumn("__rn", F.row_number().over(wk))
             .filter(F.col("__rn") == 1)
@@ -571,56 +519,52 @@ def mmr_select(
     """
     lam = float(lam)
     oml = 1.0 - lam
-    if _integral_id(emb, id_col):
-        # all k cosine passes as numpy mapInArrow kernels (guide §4.2) with
-        # the module's round-before-rank contract intact: rel is JVM
-        # F.round over the bit-exact raw cosine; the _ms carry uses
-        # veckernels.spark_round_vec (proven == F.round); each step's top-1
-        # stays a JVM TakeOrdered; per-step collects are 1-row planning
-        # reads (the legacy plan broadcast the same single row)
-        from fs2_data_spark.functions import veckernels as VK
-        spark = emb.sparkSession
-        qrow = (emb.filter(F.col(id_col) == int(query_id))
-                .select(_as_double(F.col(vec_col)).alias("qv")).collect())
-        qv = list(qrow[0][0]) if qrow and qrow[0][0] is not None else None
-        if qv:
-            dim = len(qv)
-            idt = emb.schema[id_col].dataType
-            pool = (emb.filter(F.col(id_col) != int(query_id))
-                    .select(id_col, vec_col))
-            aug = VK.mmr_rel_kernel(pool, id_col, vec_col, qv, dim)
-            # localCheckpoint per stage: each greedy step both collects a
-            # 1-row top and feeds the next kernel — without truncation the
-            # k-step lineage re-runs every earlier kernel per step (O(k^2)
-            # pool passes, measured slower than the interpreted plan)
-            cand = aug.select("vec_id", "v", "nrm",
-                              F.round("rel_raw", round_dp).alias("rel"),
-                              F.lit(0.0).alias("_ms")).localCheckpoint()
-            picks_rows = []
-            for step in range(1, int(k) + 1):
-                c2 = cand.withColumn(
-                    "_mmr",
-                    F.lit(lam) * F.col("rel") - F.lit(oml) * F.col("_ms"))
-                sel = (c2.orderBy(F.col("_mmr").desc(), F.col("vec_id"))
-                       .limit(1)
-                       .select("vec_id", "rel",
-                               F.round("_mmr", 6).alias("mmr"), "v", "nrm")
-                       .collect())
-                if not sel:
-                    break
-                r = sel[0]
-                picks_rows.append((step, int(r["vec_id"]),
-                                   r["rel"], r["mmr"]))
-                if step < int(k):
-                    cand = VK.mmr_ms_update_kernel(
-                        cand.filter(F.col("vec_id") != int(r["vec_id"])),
-                        list(r["v"]), float(r["nrm"]), round_dp,
-                        dim).localCheckpoint()
-            out = spark.createDataFrame(
-                picks_rows, "step int, vec_id long, rel double, mmr double")
-            return out.select("step",
-                              F.col("vec_id").cast(idt).alias("vec_id"),
-                              "rel", "mmr")
+    # all k cosine passes as numpy Arrow kernels (guide §4.2) with the
+    # module's round-before-rank contract intact: rel is JVM F.round over
+    # the bit-exact raw cosine; the _ms carry uses
+    # veckernels.spark_round_vec (proven == F.round); each step's top-1
+    # stays a JVM TakeOrdered; per-step collects are 1-row planning reads
+    # (the Catalyst plan broadcasts the same single row).  A query row
+    # that is missing or has a NULL/empty vector takes the Catalyst plan.
+    from fs2_data_spark.functions import veckernels as VK
+    spark = emb.sparkSession
+    qrow = (emb.filter(F.col(id_col) == int(query_id))
+            .select(_as_double(F.col(vec_col)).alias("qv")).collect())
+    qv = list(qrow[0][0]) if qrow and qrow[0][0] is not None else None
+    if qv:
+        dim = len(qv)
+        pool = (emb.filter(F.col(id_col) != int(query_id))
+                .select(id_col, vec_col))
+        aug = VK.mmr_rel_kernel(pool, id_col, vec_col, qv, dim)
+        # localCheckpoint per stage: each greedy step both collects a
+        # 1-row top and feeds the next kernel — without truncation the
+        # k-step lineage re-runs every earlier kernel per step (O(k^2)
+        # pool passes, measured slower than the interpreted plan)
+        cand = aug.select("vec_id", "v", "nrm",
+                          F.round("rel_raw", round_dp).alias("rel"),
+                          F.lit(0.0).alias("_ms")).localCheckpoint()
+        picks_rows = []
+        for step in range(1, int(k) + 1):
+            c2 = cand.withColumn(
+                "_mmr",
+                F.lit(lam) * F.col("rel") - F.lit(oml) * F.col("_ms"))
+            sel = (c2.orderBy(F.col("_mmr").desc(), F.col("vec_id"))
+                   .limit(1)
+                   .select("vec_id", "rel",
+                           F.round("_mmr", 6).alias("mmr"), "v", "nrm")
+                   .collect())
+            if not sel:
+                break
+            r = sel[0]
+            picks_rows.append((step, r["vec_id"], r["rel"], r["mmr"]))
+            if step < int(k):
+                cand = VK.mmr_ms_update_kernel(
+                    cand.filter(F.col("vec_id") != F.lit(r["vec_id"])),
+                    list(r["v"]), float(r["nrm"]), round_dp,
+                    dim).localCheckpoint()
+        idt = emb.schema[id_col].dataType.simpleString()
+        return spark.createDataFrame(
+            picks_rows, f"step int, vec_id {idt}, rel double, mmr double")
     base = emb.select(F.col(id_col).alias("vec_id"),
                       _as_double(F.col(vec_col)).alias("_v"))
     n = base.select("vec_id", "_v", _norm(F.col("_v")).alias("_nrm"))

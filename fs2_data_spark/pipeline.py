@@ -14,12 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fs2_data_spark.functions.timeutil import epoch_us
-from fs2_data_spark.operators.asof import asof_join
-from fs2_data_spark.operators.segmented import detect_hot_keys
-from fs2_data_spark.operators.sessionize import sessionize
-from fs2_data_spark.operators.windows import with_lag_lead
 from pyspark.sql import Window
+
+from fs2_data_spark.functions.timeutil import epoch_us
+from fs2_data_spark.operators.segmented import detect_hot_keys
 
 
 def fused_pit_features(
@@ -55,8 +53,7 @@ def fused_pit_features(
     per-(key, bucket) summary joined back. Output is exactly equal to the
     unsegmented plan for every bucket size (pinned by tests).
 
-    ``carry_join`` (mirrors ``segmented_asof_join``): how that summary joins
-    back. ``"broadcast"`` (default) is right under the hybrid router, which
+    ``carry_join``: how that summary joins back. ``"broadcast"`` (default) is right under the hybrid router, which
     sends only sampled heavy hitters through this plan — carry rows are
     |hot keys| x |buckets|, thousands. Calling ``bucket_us=...`` directly on
     a FULL billion-key table makes the summary |keys| x |buckets| rows —
@@ -240,8 +237,6 @@ def pit_feature_pipeline(
     an estimated ``hot_min_rows`` per key — below that a single window task
     handles the key faster than the segmented machinery.
     """
-    from fs2_data_spark.functions.timeutil import epoch_us
-
     seqs = seqs.drop(*[c for c in drop_payload_cols if c in seqs.columns])
     if right_cols is None:
         right_cols = [c for c in obs.columns if c not in {key, right_ts}]

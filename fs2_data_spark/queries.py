@@ -3200,7 +3200,7 @@ def bpe_learn_docs(spark, sf_dir):
     list rebuild)."""
     from fs2_data_spark.operators.bpe import bpe_learn
     d = _doc_tokens(spark, sf_dir).select("doc_id", "tokens")
-    table, _ = bpe_learn(d, n_merges=6, tier="arrow")
+    table, _ = bpe_learn(d, n_merges=6)
     return spark.createDataFrame(
         table, "round int, a int, b int, new_id int, cnt bigint")
 
@@ -3221,7 +3221,7 @@ def bpe_apply_docs(spark, sf_dir):
     of the merge table."""
     from fs2_data_spark.operators.bpe import bpe_learn
     d = _doc_tokens(spark, sf_dir).select("doc_id", "tokens")
-    _, final = bpe_learn(d, n_merges=6, tier="arrow")
+    _, final = bpe_learn(d, n_merges=6)
     return final.select(
         "doc_id", _arr_str(F.col("tokens")).alias("tokens_str"),
         F.size("tokens").alias("n_tok"))

@@ -1,0 +1,353 @@
+"""The one Arrow kernel runner (``functions/arrow_kernel.run_kernel``) and
+the contracts it gives every kernel: ids of any type ride through uncast,
+astral text hashes like the Catalyst expressions, NULL vectors project to
+NULL, and no ``mapInArrow`` or integral-id gate lives outside the runner."""
+
+import ast
+import uuid
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from fs2_data_spark.functions import text as TXT
+from fs2_data_spark.functions import textkernels as TK
+from fs2_data_spark.functions.tokens import token_entropy
+from fs2_data_spark.tables import tokens_col
+
+PKG = Path(__file__).resolve().parent.parent / "fs2_data_spark"
+
+# --- guard: one way to run an Arrow kernel ---------------------------------
+
+_INTEGRAL = {"LongType", "IntegerType", "ShortType", "ByteType"}
+# mixing.negative_pairs gates a grouped applyInPandas kernel whose hash is
+# defined on bigint ids — not an Arrow-runner kernel
+_GATE_OK = {"operators/mixing.py"}
+
+
+def test_no_mapinarrow_or_integral_id_gate_outside_runner():
+    """``.mapInArrow(`` is called only in ``functions/arrow_kernel.py``, and
+    no module brings back ``_integral_id`` or an integral-type test on a
+    column's ``dataType`` (the gates that kept Catalyst twins alive for
+    non-integer ids)."""
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInArrow"
+                    and rel != "functions/arrow_kernel.py"):
+                bad.append(f"{rel}:{node.lineno} mapInArrow")
+            if isinstance(node, (ast.FunctionDef, ast.Name, ast.Attribute)):
+                name = getattr(node, "name", None) or getattr(
+                    node, "id", None) or getattr(node, "attr", None)
+                if name == "_integral_id":
+                    bad.append(f"{rel}:{node.lineno} _integral_id")
+            if (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "isinstance"
+                    and len(node.args) == 2
+                    and "dataType" in ast.dump(node.args[0])):
+                kinds = {getattr(n, "attr", None) or getattr(n, "id", None)
+                         for n in ast.walk(node.args[1])}
+                if kinds & _INTEGRAL and rel not in _GATE_OK:
+                    bad.append(f"{rel}:{node.lineno} integral-id gate")
+    assert not bad, bad
+
+
+# --- astral text: kernels == Catalyst on emoji ------------------------------
+
+# emoji inside words (never first: a word-initial code point from about U+CF1B
+# overflows the Catalyst SimHash/word-code MinHash, pinned separately)
+# and whole astral words for the kernels without that multiplier
+_SAFE = [
+    (1, "a😀b x😀 y z w a😀b x😀 y"),
+    (2, "hello w😀rld smile😀😀 end end end end"),
+    (3, "q𝔘𝔫𝔦 text q𝔘𝔫𝔦 text q𝔘𝔫𝔦 text more"),
+    (4, ""),
+    (5, "plain words only here a b c d e f g h i j"),
+]
+_ASTRAL_FIRST = [
+    (6, "😀 😀😀 🎉party 😀 x 😀😀 🎉party 😀 x"),
+    (7, "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text 𝔘𝔫𝔦𝔠𝔬𝔡𝔢"),
+]
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def _ngram_top(wh, n):
+    """max count of one rolling-hash word n-gram (0 below n words)."""
+    P = F.lit(1_000_000_007).cast("bigint")
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(wh) - n),
+        lambda i: F.aggregate(F.slice(wh, i + 1, n), F.lit(0).cast("bigint"),
+                              lambda a, x: F.pmod(a * 1_000_003 + x, P)))
+    top = F.array_max(F.transform(
+        F.array_distinct(grams),
+        lambda g: F.size(F.filter(grams, lambda x: x == g))))
+    return F.when(F.size(wh) >= n, top).otherwise(F.lit(0))
+
+
+def _segments(words, seg_words):
+    n_seg = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
+    return F.when(F.size(words) > 0, F.transform(
+        F.sequence(F.lit(0), n_seg - 1),
+        lambda i: F.array_join(F.slice(words, i * seg_words + 1, seg_words),
+                               " "))).otherwise(F.array().cast("array<string>"))
+
+
+def _case(name, d):
+    """(kernel frame, Catalyst frame) over the same ``(doc_id, text)``."""
+    from fs2_data_spark.operators.dedup import _token_spans, cdc_chunks
+    from fs2_data_spark.operators.seqops import skipgram_pairs
+
+    t = d.withColumn("tokens", tokens_col("text"))
+    mh = [f"mh{i}" for i in range(8)]
+    if name == "shingle_minhash":
+        k = TK.shingle_minhash_kernel(d, "doc_id", "text", 8, 3).select(
+            "id", F.array_sort("sh").alias("sh"), *mh)
+        c = d.select(F.col("doc_id").alias("id"),
+                     F.array_sort(TXT.shingle_hashes("text", 3)).alias("sh"),
+                     *TXT.minhash_signature_shingles("text", 8, 3))
+    elif name == "word_code_minhash":
+        k = TK.word_code_minhash_kernel(d, "doc_id", "text", 8)
+        c = d.select(F.col("doc_id").alias("id"),
+                     *TXT.minhash_signature("text", 8))
+    elif name == "winnow_fp":
+        k = TK.winnow_fp_kernel(d, "doc_id", "text", 3, 4)
+        c = d.select("doc_id", TXT.winnow_fingerprints("text", 3, 4)
+                     .alias("fp"))
+    elif name == "shingles":
+        k = TK.shingles_kernel(d, "text", ["doc_id"], 3).select(
+            "doc_id", F.array_sort("sh").alias("sh"))
+        c = d.select("doc_id",
+                     F.array_sort(TXT.shingle_hashes("text", 3)).alias("sh"))
+    elif name == "top_ngram":
+        k = TK.top_ngram_kernel(d, "doc_id", "text", (2, 3))
+        wh = d.select("doc_id", TXT.words("text").alias("w"),
+                      TXT.word_hashes("text").alias("wh"))
+        c = wh.select("doc_id", F.size("w").alias("n_words"),
+                      _ngram_top(F.col("wh"), 2).alias("top2_count"),
+                      _ngram_top(F.col("wh"), 3).alias("top3_count"))
+    elif name == "token_spans":
+        k = TK.token_spans_kernel(d, "doc_id", "text", 3)
+        c = _token_spans(t, "tokens", "doc_id", 3)
+    elif name == "skipgram":
+        k = (TK.skipgram_partial_kernel(d, "text", 2)
+             .groupBy("center", "context").agg(F.sum("c").alias("cnt")))
+        c = skipgram_pairs(t, "tokens", 2)
+    elif name == "cdc_chunks":
+        k = TK.cdc_chunks_kernel(d, "doc_id", "text", 2, 3)
+        c = cdc_chunks(t, "tokens", "doc_id", 2, 3)
+    elif name == "word_segments":
+        k = TK.word_segment_rows_kernel(d, "doc_id", "text", 3)
+        c = d.select("doc_id", F.posexplode(
+            _segments(TXT.words("text"), 3)).alias("seg_no", "seg"))
+    elif name == "hashed_bow":
+        k = TK.hashed_bow_kernel(d, "doc_id", "text", 8)
+        c = d.select("doc_id", TXT.token_count("text").alias("n_words"),
+                     TXT.hashed_bow(TXT.word_hashes("text"), 8).alias("vec"))
+    elif name == "token_entropy":
+        k = TK.token_entropy_kernel(d, "doc_id", "text")
+        tk = F.col("tokens")
+        dist = F.array_distinct(tk)
+        c = t.select(
+            "doc_id", F.size(tk).alias("n_tok"),
+            F.size(dist).alias("n_distinct"),
+            F.array_max(F.transform(dist, lambda x: F.size(
+                F.filter(tk, lambda v: v == x)))).alias("max_freq"),
+            token_entropy("tokens").alias("entropy_raw"))
+    else:
+        assert name == "simhash"
+        k = TK.simhash_kernel(d, "doc_id", "text", 16)
+        c = d.select("doc_id", TXT.simhash("text", 16).alias("sh"))
+    return k, c
+
+
+def _rows(df):
+    return sorted(str(tuple(r)) for r in df.collect())
+
+
+_TEXT_KERNELS = ["shingle_minhash", "word_code_minhash", "winnow_fp",
+                 "shingles", "top_ngram", "token_spans", "skipgram",
+                 "cdc_chunks", "word_segments", "hashed_bow",
+                 "token_entropy", "simhash"]
+_OVERFLOWING = {"word_code_minhash", "simhash"}
+
+
+@pytest.mark.parametrize("name", _TEXT_KERNELS)
+def test_text_kernel_astral_rows_equal_catalyst(spark, name):
+    rows = _SAFE + ([] if name in _OVERFLOWING else _ASTRAL_FIRST)
+    k, c = _case(name, _docs(spark, rows))
+    assert k.columns == c.columns
+    got, exp = _rows(k), _rows(c)
+    assert got == exp
+    assert got  # the emoji rows produced output
+
+
+@pytest.mark.parametrize("name", sorted(_OVERFLOWING))
+def test_astral_first_word_overflow_raises_like_catalyst(spark, name):
+    """A word starting at U+1F600 overflows ``code * a`` in bigint: ANSI
+    Catalyst raises ARITHMETIC_OVERFLOW, and so does the kernel (it never
+    wraps silently)."""
+    k, c = _case(name, _docs(spark, _ASTRAL_FIRST[:1]))
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        c.collect()
+    with pytest.raises(Exception, match="long overflow"):
+        k.collect()
+
+
+# --- jl_project: NULL vectors -> NULL, ragged -> documented error ----------
+
+
+def test_jl_project_null_vector_is_null(spark):
+    from fs2_data_spark.operators.projection import jl_project
+    df = spark.createDataFrame(
+        [(1, [1.0, -2.0, 0.5, 3.0]), (2, None), (3, [1.0, None, 0.5, 3.0])],
+        "vec_id bigint, embedding array<float>")
+    got = {r.vec_id: r for r in jl_project(df, dim=4, out_dim=3).collect()}
+    assert all(got[1][f"jl_{j}"] is not None for j in range(3))
+    for vid in (2, 3):
+        assert [got[vid][f"jl_{j}"] for j in range(3)] == [None] * 3
+
+
+def test_jl_project_ragged_vector_raises(spark):
+    from fs2_data_spark.operators.projection import jl_project
+    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0, 4.0]), (2, [1.0, 2.0])],
+                               "vec_id bigint, embedding array<float>")
+    with pytest.raises(Exception, match="ragged vector"):
+        jl_project(df, dim=4, out_dim=3).collect()
+
+
+# --- string ids: same result as integer ids, relabelled ---------------------
+
+
+def _label(i):
+    return f"d{i:08d}"  # order-preserving: string order == integer order
+
+
+def _relabel(df, col):
+    return df.withColumn(col, F.format_string("d%08d", F.col(col)))
+
+
+def _ann_case(name):
+    """(run(ids_df, id_col, is_string) -> rows, id columns of the output)."""
+    from fs2_data_spark.operators.dedup import jaccard_lsh_pairs, segment_dedup
+    from fs2_data_spark.operators.linkage import blocked_edit_pairs
+    from fs2_data_spark.operators.quantize import quantized_topk
+    from fs2_data_spark.operators.similarity import (
+        cosine_topk,
+        ivf_topk,
+        lsh_bucket_topk,
+        semantic_dedup,
+    )
+
+    def q5(e, s):
+        return e.filter(F.col("vec_id") < (F.lit(_label(5)) if s else 5))
+
+    table = {
+        "blocked_edit_pairs": (
+            "documents", lambda d, s: blocked_edit_pairs(
+                d, prefix_len=4, max_dist=40), ["id_a", "id_b"]),
+        "jaccard_lsh_pairs": (
+            "documents", lambda d, s: jaccard_lsh_pairs(d, threshold=0.3),
+            ["id1", "id2"]),
+        "segment_dedup": (
+            "documents", lambda d, s: segment_dedup(d, seg_words=4),
+            ["doc_id"]),
+        "cosine_topk": (
+            "embeddings", lambda e, s: cosine_topk(q5(e, s), e, k=3),
+            ["q_vec_id", "n_vec_id"]),
+        "lsh_bucket_topk": (
+            "embeddings", lambda e, s: lsh_bucket_topk(q5(e, s), e, k=2,
+                                                       n_planes=4),
+            ["q_vec_id", "n_vec_id"]),
+        # every cell probed: the seeds (hash of the id label) may differ
+        # between labellings, the exact top-k over all cells may not
+        "ivf_topk": (
+            "embeddings", lambda e, s: ivf_topk(q5(e, s), e, k=2, n_cells=4,
+                                                nprobe=4),
+            ["q_vec_id", "n_vec_id"]),
+        # one cell for the same reason: pairs are then all-pairs
+        "semantic_dedup": (
+            "embeddings", lambda e, s: semantic_dedup(e, n_cells=1,
+                                                      threshold=0.3),
+            ["vec_id", "dup_of"]),
+        "quantized_topk": (
+            "embeddings", lambda e, s: quantized_topk(
+                e, F.col("vec_id") < (F.lit(_label(5)) if s else 5), k=3),
+            ["q_vec_id", "n_vec_id"]),
+    }
+    return table[name]
+
+
+@pytest.mark.parametrize("name", [
+    "blocked_edit_pairs", "jaccard_lsh_pairs", "segment_dedup",
+    "cosine_topk", "lsh_bucket_topk", "ivf_topk", "semantic_dedup",
+    "quantized_topk"])
+def test_string_ids_equal_integer_ids_relabelled(request, name):
+    table, run, id_cols = _ann_case(name)
+    base = request.getfixturevalue(table)
+    id_col = "doc_id" if table == "documents" else "vec_id"
+    base = base.filter(F.col(id_col) < 120).cache()
+    as_int = run(base, False)
+    as_str = run(_relabel(base, id_col), True)
+    for c in id_cols:
+        assert dict(as_str.dtypes)[c] == "string", c
+    exp = as_int
+    for c in id_cols:
+        exp = exp.withColumn(c, F.when(F.col(c).isNotNull(),
+                                       F.format_string("d%08d", F.col(c))))
+    cols = sorted(as_int.columns)
+    got = _rows(as_str.select(cols))
+    assert got == _rows(exp.select(cols))
+    assert got
+
+
+def test_linkage_uuid_ids(spark):
+    """UUID-string ids come back as themselves, never as NULL; pairs are
+    oriented by string order, the ``id_a < id_b`` rule of the operator."""
+    from fs2_data_spark.operators.linkage import blocked_edit_pairs
+    texts = ["the quick brown fox jumps", "the quick brown fox jumped",
+             "the quick brown cat jumps", "the quick brown fox jumps",
+             "a different block entirely"]
+    uid = {i: str(uuid.uuid5(uuid.NAMESPACE_OID, str(i)))
+           for i in range(len(texts))}
+    as_int = blocked_edit_pairs(spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"),
+        prefix_len=10, max_dist=5).collect()
+    as_uuid = blocked_edit_pairs(spark.createDataFrame(
+        [(uid[i], t) for i, t in enumerate(texts)],
+        "doc_id string, text string"), prefix_len=10, max_dist=5).collect()
+    exp = set()
+    for r in as_int:
+        a, b, la, lb = uid[r.id_a], uid[r.id_b], r.len_a, r.len_b
+        if b < a:
+            a, b, la, lb = b, a, lb, la
+        exp.add((a, b, la, lb, r.lev))
+    got = {tuple(r) for r in as_uuid}
+    assert len(as_int) == 6
+    assert got == exp
+
+
+def test_runner_keeps_key_type_and_takes_rows(spark):
+    """Keys come back with their own type; a kernel emitting several rows
+    per input row gets each row's keys by index."""
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
+
+    df = spark.createDataFrame(
+        [("u-1", 2, "x"), ("u-2", 0, "y"), ("u-3", 3, None)],
+        "k string, n int, s string")
+
+    def fn(n, s):
+        counts = n.to_numpy()
+        rows = [r for r, c in enumerate(counts) for _ in range(c)]
+        return rows, [[i for c in counts for i in range(c)]]
+
+    out = run_kernel(df, fn, ["n", "s"], "i int", keys=["k", "s"])
+    assert out.dtypes == [("k", "string"), ("s", "string"), ("i", "int")]
+    assert sorted(map(tuple, out.collect())) == [
+        ("u-1", "x", 0), ("u-1", "x", 1),
+        ("u-3", None, 0), ("u-3", None, 1), ("u-3", None, 2)]

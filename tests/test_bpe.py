@@ -1,5 +1,6 @@
-"""BPE merge learning: both execution tiers vs a pure-Python reference,
-greedy-overlap laws on the flat kernel, merge-chain application."""
+"""BPE merge learning: the Arrow kernel and the fold expression vs a
+pure-Python reference, greedy-overlap laws on the flat kernel, merge-chain
+application."""
 
 import random
 from collections import Counter
@@ -103,7 +104,7 @@ def test_merge_flat_matches_reference_randomized():
             (trial, rows, a, b)
 
 
-# --- Spark tiers vs reference ----------------------------------------------
+# --- Spark paths vs reference ----------------------------------------------
 
 
 def _rand_corpus(seed, nrows=25, vocab=4, maxlen=14):
@@ -141,12 +142,11 @@ def test_apply_merges_arrow_chain(spark):
     assert got == exp
 
 
-@pytest.mark.parametrize("tier", ["arrow", "catalyst"])
-def test_bpe_learn_matches_reference(spark, tier):
+def test_bpe_learn_matches_reference(spark):
     rows = _rand_corpus(8, nrows=30, vocab=3)
     base = max((max(t) for t in rows if t), default=0) + 1
     exp_table, exp_rows = _ref_learn(rows, 5, base)
-    table, final = bpe_learn(_mk(spark, rows), n_merges=5, tier=tier)
+    table, final = bpe_learn(_mk(spark, rows), n_merges=5)
     assert table == exp_table
     got = {r.doc_id: list(r.tokens) for r in final.collect()}
     assert got == {i: t for i, t in enumerate(exp_rows)}
@@ -160,7 +160,3 @@ def test_bpe_learn_early_stop(spark):
     assert {r.doc_id: list(r.tokens) for r in final.collect()} == \
         {0: [1], 1: [], 2: [2]}
 
-
-def test_bpe_learn_bad_tier(spark):
-    with pytest.raises(ValueError):
-        bpe_learn(_mk(spark, [[1, 2]]), tier="gpu")

@@ -1,18 +1,14 @@
-"""Segmented-scan operators must equal the single-window implementations
-exactly — the optimized-vs-unoptimized equivalence pattern of the reference
-(``finite-state/shared/src/test/scala/fs2/data/mft/QuerySpec.scala:32-34``)."""
+"""Hot-key routing: sampled heavy-hitter detection, and the hybrid pipeline
+(hot keys through the segmented-scan plan) equal to the single-window plan
+— the optimized-vs-unoptimized equivalence pattern of the reference
+(``finite-state/shared/src/test/scala/fs2/data/mft/QuerySpec.scala:32-34``).
+The segmented plan itself is pinned against the single-window plan for
+several bucket sizes, strict as-of and both carry joins in
+tests/test_fused_pipeline.py."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from fs2_data_spark.operators.asof import asof_join
-from fs2_data_spark.operators.segmented import (
-    detect_hot_keys,
-    segmented_asof_join,
-    segmented_features,
-)
-from fs2_data_spark.operators.sessionize import sessionize
-from fs2_data_spark.operators.windows import with_lag_lead
+from fs2_data_spark.operators.segmented import detect_hot_keys
 from fs2_data_spark.pipeline import pit_feature_pipeline
 from fs2_data_spark.tables import observations, token_sequences
 
@@ -34,48 +30,6 @@ def _sorted(df, cols=("doc_id", "event_time", "seq_no")):
 BUCKET_US = 45 * 60 * 1_000_000  # 45 min: rows are 60s apart, many per bucket
 
 
-def test_segmented_asof_equals_union(spark, payload):
-    seqs, obs = payload
-    a = asof_join(seqs, obs, on="doc_id", left_ts="event_time", right_ts="obs_time",
-                  right_cols=["feature_vec"], strategy="union")
-    b = segmented_asof_join(seqs, obs, on="doc_id", left_ts="event_time",
-                            right_ts="obs_time", right_cols=["feature_vec"],
-                            bucket_us=BUCKET_US)
-    assert _sorted(a) == _sorted(b)
-
-
-def test_segmented_asof_strict(spark, payload):
-    seqs, obs = payload
-    a = asof_join(seqs, obs, on="doc_id", left_ts="event_time", right_ts="obs_time",
-                  right_cols=["feature_vec"], strategy="union", allow_exact=False)
-    b = segmented_asof_join(seqs, obs, on="doc_id", left_ts="event_time",
-                            right_ts="obs_time", right_cols=["feature_vec"],
-                            bucket_us=BUCKET_US, allow_exact=False)
-    assert _sorted(a) == _sorted(b)
-
-
-def test_segmented_features_equal_windows(spark, payload):
-    seqs, _ = payload
-    order = ["event_time", "seq_no"]
-    a = with_lag_lead(seqs, ["n_tok"], key="doc_id", ts=order)
-    a = sessionize(a, key="doc_id", ts="event_time", gap_s=1800, order_by=order)
-    b = segmented_features(seqs, key="doc_id", ts="event_time", tiebreak="seq_no",
-                           lag_cols=("n_tok",), gap_s=1800, bucket_us=BUCKET_US)
-    cols = ["doc_id", "event_time", "seq_no", "lag1_n_tok", "lead1_n_tok", "session_seq"]
-    assert _sorted(a.select(cols)) == _sorted(b.select(cols))
-
-
-@pytest.mark.parametrize("bucket_us", [60_000_000, 7 * 60 * 1_000_000, 10**12])
-def test_segmented_bucket_size_invariance(spark, payload, bucket_us):
-    """Any bucket size gives the same answer (incl. one-row and one-bucket)."""
-    seqs, obs = payload
-    small = seqs.filter(F.col("doc_id").isin("doc_0", "doc_3"))
-    a = segmented_asof_join(small, obs, right_cols=["feature_vec"], bucket_us=bucket_us)
-    b = asof_join(small, obs, on="doc_id", left_ts="event_time", right_ts="obs_time",
-                  right_cols=["feature_vec"], strategy="union")
-    assert _sorted(a) == _sorted(b)
-
-
 def test_detect_hot_keys(spark, payload):
     seqs, _ = payload
     hot = detect_hot_keys(seqs, "doc_id", threshold_frac=0.05, sample_fraction=1.0)
@@ -90,18 +44,3 @@ def test_pipeline_hybrid_equals_normal(spark, payload):
     plain = pit_feature_pipeline(seqs, obs, gap_s=1800, hot_keys=[])
     cols = sorted(set(hybrid.columns) & set(plain.columns))
     assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols))
-
-
-def test_segmented_shuffle_carry_equals_broadcast(spark, events):
-    """carry_join='shuffle' (the full-key-population mode) must be
-    value-identical to the broadcast carry."""
-    from fs2_data_spark.operators.segmented import segmented_features
-    ev = events.filter(F.col("user_id") < 50).select("user_id", "ts", "value")
-    kw = dict(key="user_id", ts="ts", lag_cols=("value",), gap_s=1800,
-              bucket_us=45 * 60 * 1_000_000)
-    a = segmented_features(ev, carry_join="broadcast", **kw)
-    b = segmented_features(ev, carry_join="shuffle", **kw)
-    cols = sorted(a.columns)
-    ra = sorted(map(str, a.select(*cols).collect()))
-    rb = sorted(map(str, b.select(*cols).collect()))
-    assert ra == rb
