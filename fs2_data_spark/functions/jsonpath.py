@@ -51,15 +51,6 @@ def select_path_variant(col: Column | str, path: str, as_type: str = "string") -
     return F.try_variant_get(c, path, as_type)
 
 
-def select_fields(df: DataFrame, col: str, schema: str, *fields: str) -> DataFrame:
-    """Typed multi-field selection: parse once with an explicit schema, then
-    project nested fields (strict mode: FAILFAST parse)."""
-    parsed = F.from_json(F.col(col), schema, {"mode": "FAILFAST"})
-    return df.withColumn("__p", parsed).select(
-        *df.columns, *[F.col(f"__p.{f}").alias(f.replace(".", "_")) for f in fields]
-    ).drop("__p")
-
-
 def iterate_array(df: DataFrame, array_col: str, keep: list[str] | None = None) -> DataFrame:
     """``$.a[*]`` iterator: one row per element with its 0-based ordinal
     (document order preserved through ``pos``)."""

@@ -72,16 +72,6 @@ def tok_transform_at(tokens: Column | str, positions: Column | str | None, fn) -
     return F.transform(t, lambda x, i: F.when(F.array_contains(p, i), fn(x)).otherwise(x))
 
 
-def tok_filter(tokens: Column | str, pred) -> Column:
-    """Keep tokens satisfying ``pred`` (jq ``map(select(...))``)."""
-    return F.filter(_c(tokens), pred)
-
-
-def tok_flatten(nested: Column | str) -> Column:
-    """Recursive-descent flatten of one nesting level (jq ``..`` over arrays)."""
-    return F.flatten(_c(nested))
-
-
 def tok_fingerprint(tokens: Column | str, mod: int = FINGERPRINT_MOD) -> Column:
     """Deterministic positional fingerprint ``sum((i+1) * t_i) mod m`` —
     a rolling-hash-style document fingerprint that is order-sensitive (two

@@ -19,7 +19,12 @@ Two physical strategies:
     exchange + per-partition sort; AQE handles stragglers. Tie-breaking is
     encoded in the ``side`` ordinal: with ``allow_exact`` right rows sort
     before left rows at equal ts (visible), strict mode sorts them after
-    (invisible).
+    (invisible). Forward is the same running frame over the descending ts
+    order, nearest runs both orders over the one exchange. One builder
+    (``_asof_union_plan``) makes that union for :func:`asof_join`,
+    :func:`asof_join_multi` and ``pipeline.fused_pit_features``, and every
+    carry uses the one frame ``(unboundedPreceding, currentRow)``
+    (``_running``) — never a following frame, which Spark re-scans per row.
 
 ``strategy="pandas"``
     Cogrouped ``applyInPandas`` running ``pandas.merge_asof`` per key group —
@@ -36,15 +41,84 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-_TS, _SIDE, _L, _R, _MTS = "__asof_ts", "__asof_side", "__asof_l", "__asof_r", "__asof_mts"
+_TS, _SIDE, _MTS = "__asof_ts", "__asof_side", "__asof_mts"
 
 
-def _right_payload_cols(left: DataFrame, right: DataFrame, on, right_ts: str,
+def _right_payload_cols(right: DataFrame, on, right_ts: str,
                         right_cols: list[str] | None) -> list[str]:
-    keys = set(on) | {right_ts}
     if right_cols is None:
+        keys = set(on) | {right_ts}
         right_cols = [c for c in right.columns if c not in keys]
     return right_cols
+
+
+def _asof_union_plan(left: DataFrame, rights, on: list[str], left_ts: str,
+                     allow_exact: bool, dedup: bool = True):
+    """The one tagged union every union-strategy operator runs on
+    (:func:`asof_join`, :func:`asof_join_multi` and
+    ``pipeline.fused_pit_features``).
+
+    ``rights`` is a list of ``(df, ts, cols)``. Returns ``(u, is_left,
+    payloads)``: left columns stay flat (right rows carry only the key),
+    ``_TS`` holds either side's timestamp, and right ``i`` is the struct
+    column ``payloads[i]`` (null on every other row), deduplicated to the
+    max struct per ``(key, ts)`` when ``dedup``. One side ordinal orders
+    equal timestamps: right rows that are visible at equal ts
+    (``allow_exact``) sort before the left rows, invisible ones after.
+    Every carry is ``last(payload, ignorenulls=True)`` over
+    :func:`_running`; a forward carry is that same frame over the
+    descending ts order, so no operator needs a following frame.
+    """
+    n = len(rights)
+    l_side = n if allow_exact else 0
+    payloads = [f"__asof_r{i}" for i in range(n)]
+    u = left.select("*", F.col(left_ts).alias(_TS), F.lit(l_side).alias(_SIDE))
+    for i, (rdf, rts, cols) in enumerate(rights):
+        p = payloads[i]
+        r = rdf.select(*on, F.col(rts).alias(_TS), F.struct(*cols).alias(p))
+        if dedup:
+            # deterministic winner among (key, ts) duplicates: max struct
+            r = r.groupBy(*on, _TS).agg(F.max(p).alias(p))
+        side = i if allow_exact else i + 1
+        u = u.unionByName(r.withColumn(_SIDE, F.lit(side)),
+                          allowMissingColumns=True)
+    return u, F.col(_SIDE) == l_side, payloads
+
+
+def _order(tiebreak: str | None = None, descending: bool = False) -> list:
+    """Window order over the tagged union: ``(ts, side[, tiebreak])``;
+    ``descending`` reverses ts only, so equal-ts visibility is unchanged."""
+    ts = F.col(_TS).desc() if descending else F.col(_TS)
+    return [ts, F.col(_SIDE), *([F.col(tiebreak)] if tiebreak else [])]
+
+
+def _running(partition: list[str], tiebreak: str | None = None,
+             descending: bool = False):
+    """The one running frame ``(unboundedPreceding, currentRow)`` — Spark
+    evaluates it incrementally, O(n) per partition."""
+    return (Window.partitionBy(*partition).orderBy(*_order(tiebreak, descending))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+
+def _carry(payload: str, w):
+    """Latest payload and its timestamp over frame ``w``."""
+    ts = F.when(F.col(payload).isNotNull(), F.col(_TS))
+    return (F.last(payload, ignorenulls=True).over(w),
+            F.last(ts, ignorenulls=True).over(w))
+
+
+def _distance(ts_col: str):
+    """|t - t'| in microseconds between the row and a matched timestamp."""
+    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
+    return F.abs(us(_TS) - us(ts_col))
+
+
+def _project(u: DataFrame, is_left, lcols: list[str], picks) -> DataFrame:
+    """Left rows only: the left columns plus each ``(payload, cols,
+    suffix)`` pick's fields."""
+    return u.filter(is_left).select(
+        *lcols,
+        *[F.col(f"{p}.{c}").alias(c + suf) for p, cols, suf in picks for c in cols])
 
 
 def asof_join(
@@ -68,12 +142,14 @@ def asof_join(
       * ``"backward"`` — latest right row with ``t' <= t`` (point-in-time;
         the north-rule default, zero temporal leakage).
       * ``"forward"`` — earliest right row with ``t' >= t`` (label/outcome
-        attachment: "next purchase after this click").
+        attachment: "next purchase after this click"). The union strategy
+        runs it as the backward carry over the descending ts order — the
+        same linear running frame, never a following frame.
       * ``"nearest"`` — whichever of the two is closer in absolute time;
         ties go backward (pandas semantics, pinned by test). The union
         strategy supports nearest only with ``allow_exact=True`` — both
-        candidates come from one sort, and a strict-nearest would need a
-        second ordering; use ``strategy="pandas"`` for that corner.
+        candidates see equal-ts rows, and a strict-nearest would need a
+        second tagging; use ``strategy="pandas"`` for that corner.
 
     ``tolerance_us``: max allowed ``|t - t'|`` in microseconds (farther
     matches are nulled out, like ``pandas.merge_asof(tolerance=...)``).
@@ -87,10 +163,10 @@ def asof_join(
     if direction == "nearest" and not allow_exact and strategy == "union":
         raise ValueError(
             "direction='nearest' with allow_exact=False needs "
-            "strategy='pandas' (one sort order cannot exclude equal-ts rows "
+            "strategy='pandas' (one tagging cannot exclude equal-ts rows "
             "from both the backward and the forward candidate)")
     on = [on] if isinstance(on, str) else list(on)
-    right_cols = _right_payload_cols(left, right, on, right_ts, right_cols)
+    right_cols = _right_payload_cols(right, on, right_ts, right_cols)
     if strategy == "union":
         return _asof_union(left, right, on, left_ts, right_ts, right_cols,
                            allow_exact, tolerance_us, suffix, dedup_right,
@@ -105,86 +181,38 @@ def asof_join(
 def _asof_union(left, right, on, left_ts, right_ts, right_cols,
                 allow_exact, tolerance_us, suffix, dedup_right,
                 direction="backward"):
-    r = right.select(*on, F.col(right_ts).alias(_TS),
-                     F.struct(*right_cols).alias(_R))
-    if dedup_right:
-        # deterministic winner among (key, ts) duplicates: max struct
-        r = r.groupBy(*on, _TS).agg(F.max(_R).alias(_R))
-    # side ordinal: smaller sorts first. Backward scans the preceding frame,
-    # so a right row is visible at equal ts iff it sorts BEFORE the left row;
-    # forward scans the following frame, so visibility flips.
-    if direction == "backward" or direction == "nearest":
-        l_side, r_side = (1, 0) if allow_exact else (0, 1)
-    else:  # forward
-        l_side, r_side = (0, 1) if allow_exact else (1, 0)
-    l = left.select(
-        *on, F.col(left_ts).alias(_TS), F.lit(l_side).alias(_SIDE),
-        F.struct(*[c for c in left.columns]).alias(_L),
-        F.lit(None).cast(r.schema[_R].dataType).alias(_R),
-    )
-    r = r.select(*on, _TS, F.lit(r_side).alias(_SIDE),
-                 F.lit(None).cast(l.schema[_L].dataType).alias(_L), _R)
-    u = l.unionByName(r)
-    order = (F.col(_TS), F.col(_SIDE))
-    w_back = (Window.partitionBy(*on).orderBy(*order)
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_fwd = (Window.partitionBy(*on).orderBy(*order)
-             .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    u, is_left, (r,) = _asof_union_plan(
+        left, [(right, right_ts, right_cols)], on, left_ts, allow_exact,
+        dedup_right)
     if direction == "nearest":
-        return _asof_union_nearest(u, on, right_cols, tolerance_us, suffix,
-                                   w_back, w_fwd)
-    if direction == "forward":
-        w, matched = w_fwd, F.first(_R, ignorenulls=True).over(w_fwd)
+        u = _asof_union_nearest(u, r, on, tolerance_us)
     else:
-        w, matched = w_back, F.last(_R, ignorenulls=True).over(w_back)
-    if tolerance_us is None:
-        # no second window aggregate on the default path (the matched-ts
-        # carry measurably slows the plan; only tolerance needs it)
-        out = u.withColumn(_R, matched)
-    else:
-        # timestamp of the matched right row, carried by the same window spec
-        # (must be computed from the raw union, where _R is null on left rows)
-        mts_src = F.when(F.col(_R).isNotNull(), F.col(_TS))
-        if direction == "forward":
-            mts = F.first(mts_src, ignorenulls=True).over(w)
-            gap = (F.unix_micros(F.col(_MTS).cast("timestamp"))
-                   - F.unix_micros(F.col(_TS).cast("timestamp")))
+        matched, mts = _carry(r, _running(on, descending=direction == "forward"))
+        if tolerance_us is None:
+            # no second window aggregate on the default path (the matched-ts
+            # carry measurably slows the plan; only tolerance needs it)
+            u = u.withColumn(r, matched)
         else:
-            mts = F.last(mts_src, ignorenulls=True).over(w)
-            gap = (F.unix_micros(F.col(_TS).cast("timestamp"))
-                   - F.unix_micros(F.col(_MTS).cast("timestamp")))
-        out = u.withColumn(_MTS, mts).withColumn(_R, matched)
-        out = out.withColumn(_R, F.when(gap <= F.lit(tolerance_us), F.col(_R)))
-    out = out.filter(F.col(_L).isNotNull())
-    return out.select(
-        F.col(_L + ".*"),
-        *[F.col(f"{_R}.{c}").alias(c + suffix) for c in right_cols],
-    )
+            u = u.withColumn(_MTS, mts).withColumn(r, matched)
+            u = u.withColumn(r, F.when(_distance(_MTS) <= F.lit(tolerance_us),
+                                       F.col(r)))
+    return _project(u, is_left, left.columns, [(r, right_cols, suffix)])
 
 
-def _asof_union_nearest(u, on, right_cols, tolerance_us, suffix,
-                        w_back, w_fwd):
-    """Nearest = min(|t - t'|) over the backward-inclusive and the
-    strictly-forward candidate, tie to backward (pandas semantics).
+def _asof_union_nearest(u, r, on, tolerance_us):
+    """Nearest = min(|t - t'|) over the backward and the forward
+    candidate, tie to backward (pandas semantics).
 
-    Side ordinals put right rows BEFORE left rows at equal ts, so the
-    backward frame sees exact matches (distance 0 — backward then always
-    wins the tie against any strictly-forward row) and the forward frame
-    sees only strictly-later right rows. Both candidates ride the SAME
-    partition sort: one Exchange + one Sort, two WindowExec nodes
-    (plan-pinned by test_plans.py).
+    Both candidates are the same running frame, over the ascending and
+    the descending ts order. Both see an exact match (distance 0), and
+    backward then always wins the tie. Two Sorts over ONE Exchange, two
+    WindowExec nodes (plan-pinned by test_plans.py).
     """
-    mts_src = F.when(F.col(_R).isNotNull(), F.col(_TS))
-    b_ts = F.last(mts_src, ignorenulls=True).over(w_back)
-    f_ts = F.first(mts_src, ignorenulls=True).over(w_fwd)
-    b_r = F.last(_R, ignorenulls=True).over(w_back)
-    f_r = F.first(_R, ignorenulls=True).over(w_fwd)
-    out = (u.withColumn("__b_ts", b_ts).withColumn("__f_ts", f_ts)
-            .withColumn("__b_r", b_r).withColumn("__f_r", f_r)
-            .filter(F.col(_L).isNotNull()))
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    b_gap = us(_TS) - us("__b_ts")
-    f_gap = us("__f_ts") - us(_TS)
+    b_r, b_ts = _carry(r, _running(on))
+    f_r, f_ts = _carry(r, _running(on, descending=True))
+    u = (u.withColumn("__b_ts", b_ts).withColumn("__b_r", b_r)
+          .withColumn("__f_ts", f_ts).withColumn("__f_r", f_r))
+    b_gap, f_gap = _distance("__b_ts"), _distance("__f_ts")
     # pandas applies tolerance per CANDIDATE before choosing (an
     # out-of-tolerance backward row does not block an in-tolerance forward
     # one) — pinned by test_direction_adversarial_sweep
@@ -194,13 +222,8 @@ def _asof_union_nearest(u, on, right_cols, tolerance_us, suffix,
         b_ok = b_ok & (b_gap <= F.lit(tolerance_us))
         f_ok = f_ok & (f_gap <= F.lit(tolerance_us))
     use_f = f_ok & (~b_ok | (f_gap < b_gap))
-    chosen = (F.when(use_f, F.col("__f_r"))
-              .when(b_ok, F.col("__b_r")))
-    out = out.withColumn(_R, chosen)
-    return out.select(
-        F.col(_L + ".*"),
-        *[F.col(f"{_R}.{c}").alias(c + suffix) for c in right_cols],
-    )
+    return u.withColumn(r, F.when(use_f, F.col("__f_r"))
+                        .when(b_ok, F.col("__b_r")))
 
 
 def _asof_pandas(left, right, on, left_ts, right_ts, right_cols,
@@ -314,48 +337,20 @@ def asof_join_multi(
     duplicates, matching the single-table operator.
     """
     on = [on] if isinstance(on, str) else list(on)
-    n = len(rights)
-    if n == 0:
+    if not rights:
         raise ValueError("asof_join_multi needs at least one right table")
-    l_side = n if allow_exact else 0
-    r_cols_struct = []
-    prepared = []
-    for i, spec in enumerate(rights):
-        rdf, rts = spec["df"], spec["ts"]
-        cols = _right_payload_cols(left, rdf, on, rts, spec.get("cols"))
-        rc = f"__asof_r{i}"
-        r = rdf.select(*on, F.col(rts).alias(_TS),
-                       F.struct(*cols).alias(rc))
-        if dedup_right:
-            r = r.groupBy(*on, _TS).agg(F.max(rc).alias(rc))
-        prepared.append((r, rc, cols, spec.get("suffix", f"_{i}")))
-        r_cols_struct.append((rc, r.schema[rc].dataType))
-    l = left.select(
-        *on, F.col(left_ts).alias(_TS), F.lit(l_side).alias(_SIDE),
-        F.struct(*[c for c in left.columns]).alias(_L),
-        *[F.lit(None).cast(dt).alias(rc) for rc, dt in r_cols_struct],
-    )
-    u = l
-    for i, (r, rc, _cols, _suf) in enumerate(prepared):
-        side = i if allow_exact else i + 1
-        u = u.unionByName(
-            r.select(
-                *on, _TS, F.lit(side).alias(_SIDE),
-                F.lit(None).cast(l.schema[_L].dataType).alias(_L),
-                *[F.lit(None).cast(dt).alias(c) if c != rc else F.col(rc)
-                  for c, dt in r_cols_struct],
-            ))
-    w = (Window.partitionBy(*on).orderBy(F.col(_TS), F.col(_SIDE))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    out = u
-    for _r, rc, _cols, _suf in prepared:
-        out = out.withColumn(rc, F.last(rc, ignorenulls=True).over(w))
-    out = out.filter(F.col(_L).isNotNull())
-    return out.select(
-        F.col(_L + ".*"),
-        *[F.col(f"{rc}.{c}").alias(c + suf)
-          for _r, rc, cols, suf in prepared for c in cols],
-    )
+    specs = [(spec["df"], spec["ts"],
+              _right_payload_cols(spec["df"], on, spec["ts"], spec.get("cols")))
+             for spec in rights]
+    u, is_left, payloads = _asof_union_plan(left, specs, on, left_ts,
+                                            allow_exact, dedup_right)
+    w = _running(on)
+    for p in payloads:
+        u = u.withColumn(p, F.last(p, ignorenulls=True).over(w))
+    suffixes = [spec.get("suffix", f"_{i}") for i, spec in enumerate(rights)]
+    return _project(u, is_left, left.columns,
+                    [(p, cols, suf) for p, (_df, _ts, cols), suf
+                     in zip(payloads, specs, suffixes)])
 
 
 def backfill_locf(

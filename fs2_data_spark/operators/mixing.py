@@ -305,15 +305,6 @@ def cap_per_group(
               .withColumn("kept", F.col("cap_rank") <= cap))
 
 
-def cap_per_group_sql(cap: int, group_col: str = "source",
-                      id_expr: str = "doc_id", seed: int = 42) -> str:
-    """Oracle fragment: the identical rank/keep decision for the portable
-    hash tier, as a window expression over ``documents``-shaped input."""
-    h = portable_unit_hash_sql(id_expr, seed)
-    return (f"ROW_NUMBER() OVER (PARTITION BY {group_col} "
-            f"ORDER BY {h}, {id_expr})")
-
-
 def negative_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

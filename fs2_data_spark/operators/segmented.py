@@ -5,7 +5,9 @@ a heavy-hitter key (10% of rows on one doc_id) caps whole-job scaling at
 ~1/frac regardless of cluster size. Salting is unsound for order-sensitive
 operators (SURVEY §7.3); the sound alternative is a **segmented scan** (the
 classic parallel-prefix decomposition), implemented once, fused with the
-lag/lead and sessionization features, in ``pipeline._fused_segmented``:
+lag/lead and sessionization features, in ``pipeline._fused_segmented`` — on
+the same tagged union and running frame as every as-of operator
+(``operators/asof.py _asof_union_plan``):
 
     1. split each key's timeline into time buckets;
     2. compute the operator within (key, bucket) partitions — parallel even
@@ -14,7 +16,7 @@ lag/lead and sessionization features, in ``pipeline._fused_segmented``:
        billions;
     4. resolve cross-bucket carries on the summary with a cheap per-key
        window (prefix sums / LOCF over buckets);
-    5. join carries back and combine.
+    5. join carries back on ``struct(key)`` (NULL-safe) and combine.
 
 This module keeps the sampled detection that decides which keys take that
 path.  Results equal the single-window plan (pinned by

@@ -12,11 +12,10 @@ is purely a physical-plan decision — the engine's own little AQE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window, functions as F
 
 from fs2_data_spark.functions.timeutil import epoch_us
+from fs2_data_spark.operators.asof import _TS, _asof_union_plan, _order, _running
 from fs2_data_spark.operators.segmented import detect_hot_keys
 
 
@@ -32,12 +31,13 @@ def fused_pit_features(
     gap_s: int = 3600,
     allow_exact: bool = True,
     bucket_us: int | None = None,
-    carry_join: str = "broadcast",
 ) -> DataFrame:
     """The whole PIT feature stack in ONE exchange + ONE sort.
 
-    Trick: on the unioned (left ∪ right) stream ordered by (ts, side, tie),
-    every feature is a running aggregate over the same window spec:
+    Trick: on the as-of union (``operators/asof.py _asof_union_plan``,
+    the same tagged left ∪ right stream :func:`asof_join` runs on) ordered
+    by (ts, side, tie), every feature is a running aggregate over the same
+    window spec:
 
     - as-of match   = last(right payload, ignorenulls) over (-inf, 0]
     - lag/lead/session flags via O(n) offset functions on the left rows
@@ -49,63 +49,45 @@ def fused_pit_features(
     ``bucket_us`` switches to the **segmented** physical plan for skewed
     keys: windows partition by (key, time-bucket) — so a hot key's timeline
     is processed by many parallel tasks — and cross-bucket state (as-of
-    carry, bucket-boundary lag/lead, session counts) is resolved on a tiny
-    per-(key, bucket) summary joined back. Output is exactly equal to the
-    unsegmented plan for every bucket size (pinned by tests).
-
-    ``carry_join``: how that summary joins back. ``"broadcast"`` (default) is right under the hybrid router, which
-    sends only sampled heavy hitters through this plan — carry rows are
-    |hot keys| x |buckets|, thousands. Calling ``bucket_us=...`` directly on
-    a FULL billion-key table makes the summary |keys| x |buckets| rows —
-    pass ``"shuffle"`` there or the broadcast will not fit executor memory.
+    carry, bucket-boundary lag/lead, session counts) is resolved on a small
+    per-(key, bucket) summary joined back (NULL keys included). The join
+    carries no hint: AQE broadcasts the summary when it is small (hot keys x
+    buckets under the hybrid router) and shuffles it when it is not (a full
+    table), so a direct ``bucket_us=...`` call on any table is safe. Output
+    is exactly equal to the unsegmented plan for every bucket size (pinned
+    by tests).
     """
-    if carry_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"carry_join must be 'broadcast' or 'shuffle', got {carry_join!r}")
     if right_cols is None:
         right_cols = [c for c in obs.columns if c not in {key, right_ts}]
-    _ts, _side = "__f_ts", "__f_side"
-    r = (obs.select(key, F.col(right_ts).alias(_ts), F.struct(*right_cols).alias("__r"))
-         .groupBy(key, _ts).agg(F.max("__r").alias("__r")))
-    l_side, r_side = (1, 0) if allow_exact else (0, 1)
+    u, is_left, (r,) = _asof_union_plan(
+        seqs, [(obs, right_ts, right_cols)], [key], left_ts, allow_exact)
     lcols = list(seqs.columns)
-    l2 = seqs.select(
-        *lcols, F.col(left_ts).alias(_ts), F.lit(l_side).alias(_side),
-        F.lit(None).cast(r.schema["__r"].dataType).alias("__r"),
-    )
-    r2 = r.select(
-        *[F.col(key).alias(c) if c == key
-          else F.lit(None).cast(seqs.schema[c].dataType).alias(c) for c in lcols],
-        _ts, F.lit(r_side).alias(_side), "__r",
-    )
-    u = l2.unionByName(r2)
-    is_left = F.col(_side) == l_side
 
     if bucket_us is not None:
-        return _fused_segmented(u, key, _ts, _side, tiebreak, lcols, right_cols,
-                                lag_cols, gap_s, is_left, bucket_us, carry_join)
-
-    base = Window.partitionBy(key).orderBy(_ts, _side, tiebreak)
-    run = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return _fused_segmented(u, r, key, tiebreak, lcols, right_cols,
+                                lag_cols, gap_s, is_left, bucket_us)
 
     # pass 1 (union rows): the as-of match — incremental O(n) running frame
-    out = u.withColumn("__m", F.last("__r", ignorenulls=True).over(run)).filter(is_left)
+    run = _running([key], tiebreak)
+    out = u.withColumn("__m", F.last(r, ignorenulls=True).over(run)).filter(is_left)
 
     # pass 2 (left rows only): lag/lead/session via O(n) offset functions.
-    # Same partitioning and an order prefix-compatible with pass 1 (_side is
-    # constant on left rows), so Catalyst reuses the exchange; do NOT use
-    # first/last over (1, unboundedFollowing) frames here — Spark evaluates
-    # UnboundedFollowing frames by re-scanning per row (quadratic on a hot key)
-    w2 = Window.partitionBy(key).orderBy(_ts, _side, tiebreak)
-    w2run = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # Same partitioning and order as pass 1 (side is constant on left rows),
+    # so Catalyst reuses the exchange and the sort
+    w2 = Window.partitionBy(key).orderBy(*_order(tiebreak))
     for c in lag_cols:
         out = out.withColumn(f"lag1_{c}", F.lag(c).over(w2))
         out = out.withColumn(f"lead1_{c}", F.lead(c).over(w2))
     if gap_s is not None:
-        prev_ts = F.lag(_ts).over(w2)
+        prev_ts = F.lag(_TS).over(w2)
         flag = F.when(prev_ts.isNull()
-                      | ((epoch_us(F.col(_ts)) - epoch_us(prev_ts))
+                      | ((epoch_us(F.col(_TS)) - epoch_us(prev_ts))
                          > F.lit(int(gap_s) * 1_000_000)), 1).otherwise(0)
-        out = out.withColumn("session_seq", F.sum(flag).over(w2run).cast("bigint"))
+        out = out.withColumn("session_seq", F.sum(flag).over(run).cast("bigint"))
+    return _select_features(out, lcols, right_cols, lag_cols, gap_s)
+
+
+def _select_features(out, lcols, right_cols, lag_cols, gap_s):
     return out.select(
         *lcols,
         *[F.col(f"__m.{c}").alias(c) for c in right_cols],
@@ -114,59 +96,63 @@ def fused_pit_features(
         *(["session_seq"] if gap_s is not None else []))
 
 
-def _fused_segmented(u, key, _ts, _side, tiebreak, lcols, right_cols,
-                     lag_cols, gap_s, is_left, bucket_us,
-                     carry_join="broadcast"):
+def _fused_segmented(u, r, key, tiebreak, lcols, right_cols,
+                     lag_cols, gap_s, is_left, bucket_us):
     """Segmented physical plan of :func:`fused_pit_features` (see its
     docstring). One (key, bucket) exchange over the big data; summaries and
-    carries are per-(key, bucket) rows — thousands, not billions."""
-    _b = "__f_b"
-    u = u.withColumn(_b, F.floor(epoch_us(F.col(_ts)) / F.lit(bucket_us)).cast("bigint"))
-    wb = Window.partitionBy(key, _b).orderBy(_ts, _side, tiebreak)
-    wb_run = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_s = Window.partitionBy(key).orderBy(_b)
+    carries are per-(key, bucket) rows — thousands, not billions.
+
+    Everything partitions and joins on ``struct(key)``: it is never NULL
+    and equal for two NULL keys, so the carry join is NULL-safe while it
+    stays a plain equi-join on the window exchange's own columns (an
+    ``eqNullSafe`` join would re-shuffle the big side)."""
+    _k, _b = "__f_k", "__f_b"
+    u = (u.withColumn(_k, F.struct(key))
+         .withColumn(_b, F.floor(epoch_us(F.col(_TS)) / F.lit(bucket_us)).cast("bigint")))
+    wb = Window.partitionBy(_k, _b).orderBy(*_order(tiebreak))
+    wb_run = _running([_k, _b], tiebreak)
+    w_s = Window.partitionBy(_k).orderBy(_b)
     w_s_prev = w_s.rowsBetween(Window.unboundedPreceding, -1)
 
     # within-bucket as-of match (union rows)
-    d = u.withColumn("__m_in", F.last("__r", ignorenulls=True).over(wb_run))
+    d = u.withColumn("__m_in", F.last(r, ignorenulls=True).over(wb_run))
 
     # as-of carry: last right payload of each bucket, LOCF'd over buckets
-    sum_r = u.groupBy(key, _b).agg(
-        F.max(F.when(F.col("__r").isNotNull(),
-                     F.struct(F.col(_ts).alias("t"), F.col("__r").alias("r"))))
+    sum_r = u.groupBy(_k, _b).agg(
+        F.max(F.when(F.col(r).isNotNull(),
+                     F.struct(F.col(_TS).alias("t"), F.col(r).alias("r"))))
         .alias("__lr"))
     carry_r = sum_r.select(
-        key, _b,
+        _k, _b,
         F.last("__lr", ignorenulls=True).over(w_s_prev).getField("r").alias("__cr"))
 
     # left rows: within-bucket offsets + ordinals
     d = d.filter(is_left)
     d = d.withColumn("__rn", F.row_number().over(wb))
-    d = d.withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy(key, _b)))
+    d = d.withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy(_k, _b)))
     for c in lag_cols:
         d = d.withColumn(f"__lag_in_{c}", F.lag(c).over(wb))
         d = d.withColumn(f"__lead_in_{c}", F.lead(c).over(wb))
-    gap_cond = None
     if gap_s is not None:
         gap_us_lit = F.lit(int(gap_s) * 1_000_000)
-        prev_ts = F.lag(_ts).over(wb)
+        prev_ts = F.lag(_TS).over(wb)
         flag_known = F.when(prev_ts.isNotNull()
-                            & ((epoch_us(F.col(_ts)) - epoch_us(prev_ts)) > gap_us_lit),
+                            & ((epoch_us(F.col(_TS)) - epoch_us(prev_ts)) > gap_us_lit),
                             1).otherwise(0)
         d = d.withColumn("__flag_known", flag_known)
         d = d.withColumn("__cum_known", F.sum("__flag_known").over(wb_run))
 
     # per-bucket boundary summary of LEFT rows (first/last row in timeline
     # order; struct field order IS the ordering: ts, tiebreak, then values)
-    row_struct = F.struct(F.col(_ts).alias("__t"), F.col(tiebreak).alias("__tb"),
+    row_struct = F.struct(F.col(_TS).alias("__t"), F.col(tiebreak).alias("__tb"),
                           *[F.col(c).alias(c) for c in lag_cols])
     aggs = [F.min(row_struct).alias("__first"), F.max(row_struct).alias("__last")]
     if gap_s is not None:
         aggs.append(F.sum("__flag_known").alias("__flags"))
-    sum_l = d.groupBy(key, _b).agg(*aggs)
+    sum_l = d.groupBy(_k, _b).agg(*aggs)
     sum_l = (sum_l.withColumn("__prev_last", F.lag("__last").over(w_s))
              .withColumn("__next_first", F.lead("__first").over(w_s)))
-    fix_cols = [key, _b, "__prev_last", "__next_first"]
+    fix_cols = [_k, _b, "__prev_last", "__next_first"]
     if gap_s is not None:
         first_flag = F.when(F.col("__prev_last").isNull(), F.lit(1)).when(
             (epoch_us(F.col("__first.__t")) - epoch_us(F.col("__prev_last.__t")))
@@ -176,10 +162,9 @@ def _fused_segmented(u, key, _ts, _side, tiebreak, lcols, right_cols,
             "__carry_n",
             F.coalesce(F.sum(F.col("__ff") + F.col("__flags")).over(w_s_prev), F.lit(0)))
         fix_cols += ["__ff", "__carry_n"]
-    fix = sum_l.select(*fix_cols).join(carry_r, [key, _b], "left")
+    fix = sum_l.select(*fix_cols).join(carry_r, [_k, _b], "left")
 
-    out = d.join(F.broadcast(fix) if carry_join == "broadcast" else fix,
-                 [key, _b], "left")
+    out = d.join(fix, [_k, _b], "left")
     out = out.withColumn("__m", F.coalesce("__m_in", "__cr"))
     for c in lag_cols:
         out = out.withColumn(
@@ -194,12 +179,7 @@ def _fused_segmented(u, key, _ts, _side, tiebreak, lcols, right_cols,
         out = out.withColumn(
             "session_seq",
             (F.col("__carry_n") + F.col("__ff") + F.col("__cum_known")).cast("bigint"))
-    return out.select(
-        *lcols,
-        *[F.col(f"__m.{c}").alias(c) for c in right_cols],
-        *[f"lag1_{c}" for c in lag_cols],
-        *[f"lead1_{c}" for c in lag_cols],
-        *(["session_seq"] if gap_s is not None else []))
+    return _select_features(out, lcols, right_cols, lag_cols, gap_s)
 
 
 def pit_feature_pipeline(
@@ -219,7 +199,6 @@ def pit_feature_pipeline(
     n_buckets_target: int = 256,
     feature_dim: int = 8,
     drop_payload_cols: tuple[str, ...] = ("tokens",),
-    carry_join: str = "broadcast",
 ) -> DataFrame:
     """As-of features + lag/lead + sessions + derived feature vector.
 
@@ -244,33 +223,25 @@ def pit_feature_pipeline(
         hot_keys = detect_hot_keys(seqs, key, threshold_frac=hot_threshold,
                                    min_rows=hot_min_rows)
 
-    def featurize_normal(left: DataFrame, right: DataFrame) -> DataFrame:
-        return fused_pit_features(left, right, key=key, left_ts=left_ts,
-                                  right_ts=right_ts, tiebreak=tiebreak,
-                                  right_cols=right_cols, lag_cols=lag_cols,
-                                  gap_s=gap_s)
-
-    def featurize_hot(left: DataFrame, right: DataFrame) -> DataFrame:
-        return fused_pit_features(left, right, key=key, left_ts=left_ts,
-                                  right_ts=right_ts, tiebreak=tiebreak,
-                                  right_cols=right_cols, lag_cols=lag_cols,
-                                  gap_s=gap_s, bucket_us=bucket_us,
-                                  carry_join=carry_join)
-
+    kw = dict(key=key, left_ts=left_ts, right_ts=right_ts, tiebreak=tiebreak,
+              right_cols=right_cols, lag_cols=lag_cols, gap_s=gap_s)
+    # NULL keys always take the single-window plan
+    hot_keys = [k for k in hot_keys if k is not None]
     if hot_keys:
         hot_lit = F.array(*[F.lit(k) for k in hot_keys])
-        is_hot = F.array_contains(hot_lit, F.col(key))
+        is_hot = F.coalesce(F.array_contains(hot_lit, F.col(key)), F.lit(False))
         seqs_hot = seqs.filter(is_hot)
         if bucket_us is None:
             lo, hi = seqs_hot.agg(epoch_us(F.min(left_ts)),
                                   epoch_us(F.max(left_ts))).first()
             span = max((hi or 0) - (lo or 0), 1)
             bucket_us = max(span // n_buckets_target, 1)
-        norm = featurize_normal(seqs.filter(~is_hot), obs.filter(~is_hot))
-        hot = featurize_hot(seqs_hot, obs.filter(is_hot))
-        out = norm.unionByName(hot.select(*norm.columns))
+        norm = fused_pit_features(seqs.filter(~is_hot), obs.filter(~is_hot), **kw)
+        hot = fused_pit_features(seqs_hot, obs.filter(is_hot),
+                                 bucket_us=bucket_us, **kw)
+        out = norm.union(hot.select(*norm.columns))
     else:
-        out = featurize_normal(seqs, obs)
+        out = fused_pit_features(seqs, obs, **kw)
 
     return out.withColumn(
         "feature_out",

@@ -86,20 +86,6 @@ def salted_agg(
     ])
 
 
-def broadcast_if_small(df: DataFrame, max_sample_rows: int = 1_000_000) -> DataFrame:
-    """Broadcast hint for dimension sides of joins — applied only when a
-    bounded probe proves the side is small.
-
-    The probe is ``limit(max_sample_rows + 1).count()``: it scans at most
-    ``max_sample_rows + 1`` rows (LocalLimit short-circuits the scan), so the
-    check is cheap even on a 100 TB table. If the limit is hit the frame is
-    returned unhinted and Catalyst/AQE picks the join strategy."""
-    probed = df.limit(max_sample_rows + 1).count()
-    if probed <= max_sample_rows:
-        return F.broadcast(df)
-    return df
-
-
 def key_skew_audit(
     df: DataFrame,
     key: str | Sequence[str] = "user_id",

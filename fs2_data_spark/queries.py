@@ -420,8 +420,8 @@ def asof_events_forward(spark, sf_dir):
     NEXT purchase at or after it — the outcome-labeling mirror of the
     point-in-time feature join (``operators/asof.py`` direction='forward';
     DuckDB's forward ASOF JOIN ``c.ts <= p.ts`` is the oracle). Same
-    one-exchange union-window plan as backward, with the frame flipped to
-    (currentRow, unboundedFollowing)."""
+    one-exchange union-window plan and running frame as backward, over the
+    descending ts order."""
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purch = (ev.filter(F.col("event_type") == "purchase")
@@ -449,7 +449,7 @@ FROM b JOIN f USING (event_id)
 def asof_events_nearest(spark, sf_dir):
     """Nearest as-of: each click gets the purchase closest in absolute time,
     ties to the past (pandas.merge_asof direction='nearest' semantics).
-    Both candidates ride ONE sort (one Exchange, two WindowExec) —
+    Both candidates ride ONE Exchange (two sorts, two WindowExec) —
     ``operators/asof.py _asof_union_nearest``; the oracle recombines
     DuckDB's backward and forward ASOF JOINs with the same tie rule. An
     exact-ts match has backward distance 0 and therefore always wins, so

@@ -67,10 +67,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def configure_for_oracle(spark: SparkSession) -> SparkSession:
-    """Pin session confs that affect value-level parity with a DuckDB oracle
-    (UTC session timezone so TIMESTAMP_NTZ/naive semantics line up)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

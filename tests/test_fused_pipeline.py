@@ -3,6 +3,7 @@ kernel must exactly equal their composed / expression-level references."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from fs2_data_spark.functions.token_kernels import token_features_arrow
 from fs2_data_spark.functions.tokens import tok_fingerprint, tok_stats
@@ -59,12 +60,27 @@ def test_fused_plan_shape(spark, payload):
     assert plan.count("Exchange hashpartitioning") <= 3
 
 
-@pytest.mark.parametrize("bucket_us", [60_000_000, 45 * 60 * 1_000_000, 10**13])
-def test_fused_segmented_equals_fused(spark, payload, bucket_us):
+def _null_keys(df):
+    """doc_1 and doc_2 merged into one NULL key."""
+    return df.withColumn(
+        "doc_id", F.when(~F.col("doc_id").isin("doc_1", "doc_2"), F.col("doc_id")))
+
+
+_BUCKETS = [60_000_000, 45 * 60 * 1_000_000, 10**13]
+
+
+@pytest.mark.parametrize(
+    "bucket_us,null_keys",
+    [pytest.param(b, False, id=str(b)) for b in _BUCKETS]
+    + [pytest.param(b, True, id=f"null_keys-{b}") for b in _BUCKETS])
+def test_fused_segmented_equals_fused(spark, payload, bucket_us, null_keys):
     """The segmented physical plan (skew-proof (key, time-bucket) windows +
     summary carries) must be value-identical to the single-window plan for
-    every bucket size, incl. the degenerate one-bucket case."""
+    every bucket size, incl. the degenerate one-bucket case — and for NULL
+    keys, whose carries join back NULL-safe."""
     seqs, obs = payload
+    if null_keys:
+        seqs, obs = _null_keys(seqs), _null_keys(obs)
     a = fused_pit_features(seqs, obs, gap_s=1800)
     b = fused_pit_features(seqs, obs, gap_s=1800, bucket_us=bucket_us)
     cols = sorted(a.columns)
@@ -100,21 +116,10 @@ def test_token_kernel_partitioning_invariance(spark):
     assert a == b
 
 
-def test_fused_segmented_shuffle_carry_equals_broadcast(spark, payload):
-    """carry_join is a physical detail only: 'shuffle' output == 'broadcast'."""
-    seqs, obs = payload
-    a = fused_pit_features(seqs, obs, gap_s=1800, bucket_us=45 * 60 * 1_000_000)
-    b = fused_pit_features(seqs, obs, gap_s=1800, bucket_us=45 * 60 * 1_000_000,
-                           carry_join="shuffle")
-    cols = sorted(a.columns)
-    assert _rows(a, cols) == _rows(b, cols)
-
-
 def test_fused_zero_temporal_leakage(spark, payload):
     """north_rule invariant, pinned directly on the flagship plan: adding
     right-side observations strictly AFTER every sequence timestamp must not
     change a single output row (t' <= t, no future influence)."""
-    from pyspark.sql import functions as F
     seqs, obs = payload
     base = fused_pit_features(seqs, obs, gap_s=1800)
     max_t = seqs.agg(F.max("event_time")).first()[0]

@@ -71,29 +71,46 @@ def test_flagship_prunes_token_payload(spark):
 
 
 def test_fused_segmented_carry_join_shuffle_avoids_broadcast(spark):
-    """carry_join='shuffle' must not BroadcastExchange the carry summary —
-    on a full billion-key table the summary is |keys| x |buckets| rows and a
-    forced broadcast would OOM the executors (VERDICT r02 item #2)."""
+    """The segmented carry join carries no broadcast hint: with broadcasts
+    off it must not BroadcastExchange the carry summary — on a full
+    billion-key table the summary is |keys| x |buckets| rows and a forced
+    broadcast would OOM the executors (VERDICT r02 item #2). AQE broadcasts
+    it when its measured size allows."""
     from fs2_data_spark.pipeline import fused_pit_features
     from fs2_data_spark.tables import observations, token_sequences
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         seqs = token_sequences(spark, 1000, n_docs=50).drop("tokens")
         obs = observations(spark, 300, n_docs=50)
-        shuf = plan_of(fused_pit_features(seqs, obs, bucket_us=3_600_000_000,
-                                          carry_join="shuffle"))
-        bcast = plan_of(fused_pit_features(seqs, obs, bucket_us=3_600_000_000,
-                                           carry_join="broadcast"))
+        plan = plan_of(fused_pit_features(seqs, obs, bucket_us=3_600_000_000))
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    assert "BroadcastExchange" not in shuf
-    assert "BroadcastExchange" in bcast
+    assert "BroadcastExchange" not in plan
 
 
-def test_fused_segmented_carry_join_validated():
-    from fs2_data_spark.pipeline import fused_pit_features
-    with pytest.raises(ValueError, match="carry_join"):
-        fused_pit_features(None, None, carry_join="nope")
+def test_asof_plans_use_one_builder_and_running_frame(spark):
+    """One as-of union builder, one running frame: no following frame
+    (Spark re-scans it per row) and no second hand-built union in the
+    as-of operators or the fused pipeline."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "fs2_data_spark"
+    for rel in ("operators/asof.py", "pipeline.py"):
+        src = (root / rel).read_text()
+        assert "unboundedFollowing" not in src, rel
+        tree = ast.parse(src)
+        builder = {id(n) for f in ast.walk(tree)
+                   if isinstance(f, ast.FunctionDef) and f.name == "_asof_union_plan"
+                   for n in ast.walk(f)}
+        unions = [n.lineno for n in ast.walk(tree)
+                  if isinstance(n, ast.Attribute) and n.attr == "unionByName"
+                  and id(n) not in builder]
+        assert not unions, (rel, unions)
+    for name in ("asof_join_events_forward", "asof_join_events_nearest"):
+        plan = plan_of(q(spark, name)).lower()
+        assert "specifiedwindowframe" in plan, name
+        assert "unboundedfollowing" not in plan, name
 
 
 def test_xpath_fast_texts_stays_jvm_side(spark):
@@ -223,9 +240,10 @@ def test_pmi_topk_no_global_sort_single_explode(spark):
 
 def test_asof_nearest_single_sort_two_windows(spark):
     plan = plan_of(q(spark, "asof_join_events_nearest"))
-    # both direction candidates ride ONE partition sort: two WindowExec
-    # nodes (backward frame + forward frame) share a single window exchange;
-    # the only other exchange is the right-side (key, ts) dedup aggregation
+    # both direction candidates ride ONE window exchange: two WindowExec
+    # nodes (the running frame over the ascending and over the descending
+    # ts order, so two sorts) share it; the only other exchange is the
+    # right-side (key, ts) dedup aggregation
     assert plan.count(") Window") == 2
     assert plan.count("hashpartitioning(") <= 2
     assert "PythonUDF" not in plan

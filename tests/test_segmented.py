@@ -3,10 +3,11 @@
 — the optimized-vs-unoptimized equivalence pattern of the reference
 (``finite-state/shared/src/test/scala/fs2/data/mft/QuerySpec.scala:32-34``).
 The segmented plan itself is pinned against the single-window plan for
-several bucket sizes, strict as-of and both carry joins in
+several bucket sizes, strict as-of and NULL keys in
 tests/test_fused_pipeline.py."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from fs2_data_spark.operators.segmented import detect_hot_keys
 from fs2_data_spark.pipeline import pit_feature_pipeline
@@ -44,3 +45,14 @@ def test_pipeline_hybrid_equals_normal(spark, payload):
     plain = pit_feature_pipeline(seqs, obs, gap_s=1800, hot_keys=[])
     cols = sorted(set(hybrid.columns) & set(plain.columns))
     assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols))
+
+    # NULL keys take the single-window plan, also when the sampled hot list
+    # holds None (array_contains would be NULL for every other key)
+    n_seqs, n_obs = (df.withColumn("doc_id", F.when(
+        ~F.col("doc_id").isin("doc_1", "doc_2"), F.col("doc_id"))) for df in payload)
+    plain = pit_feature_pipeline(n_seqs, n_obs, gap_s=1800, hot_keys=[])
+    assert plain.count() == seqs.count()
+    for hot in (["doc_0"], ["doc_0", None]):
+        hybrid = pit_feature_pipeline(n_seqs, n_obs, gap_s=1800,
+                                      bucket_us=BUCKET_US, hot_keys=hot)
+        assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols)), hot
