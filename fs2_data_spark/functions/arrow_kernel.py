@@ -28,6 +28,19 @@ the runner owns the steps around it:
 ``defaultParallelism`` partitions before the kernel — the sources are often
 one small parquet split.  Kernels that must stay in the scan stage
 (``token_features_arrow``) or run on an already-spread input pass ``False``.
+
+**Per-row engines** (the JSON/XML/render format engines, codecs, charsets)
+run through :func:`run_rows`: ``fn(*values)`` gets one input row's Python
+values and returns that row's output tuples.  It is an adapter over
+:func:`run_kernel` (no exchange, so it stays in the input's stage) that owns
+the engines' strict/attempt modes and their **NULL-document rule**, the one
+Catalyst uses for ``explode(NULL)``/``from_json(NULL)``: a NULL document is
+not malformed, in both modes.  A one-row-per-match/token/event engine emits
+no rows for it; a one-row-per-document engine (``per_doc=True``) emits one
+row with NULL outputs and ``ok = true``.
+
+Every Python stage plans as one of :data:`PYTHON_NODES`; plan checks that
+pin "no Python in this plan" test against that tuple.
 """
 
 from __future__ import annotations
@@ -37,7 +50,13 @@ from collections.abc import Callable, Sequence
 import numpy as np
 import pyarrow as pa
 
-__all__ = ["run_kernel", "id_values"]
+__all__ = ["run_kernel", "run_rows", "id_values", "PYTHON_NODES"]
+
+# physical-plan nodes of Python stages: mapInArrow (both runners), the
+# grouped/cogrouped pandas kernels, and the pandas UDF / row-UDF evaluators
+PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "MapInArrow", "FlatMapGroupsInPandas",
+                "FlatMapCoGroupsInPandas")
 
 
 def id_values(arr: pa.Array) -> np.ndarray:
@@ -136,3 +155,64 @@ def run_kernel(
                 names=names)
 
     return src.mapInArrow(gen, out)
+
+
+def run_rows(
+    df,
+    fn: Callable,
+    inputs: Sequence,
+    fields: str,
+    keys: Sequence = (),
+    errors: tuple = (),
+    strict: bool = True,
+    on_error: Callable | None = None,
+    per_doc: bool = False,
+):
+    """Per-row form of :func:`run_kernel` for the document engines.
+
+    ``fn(*values)`` receives one input row's values (Python objects, one
+    per ``inputs`` column) and returns the list of output tuples for that
+    row, each matching ``fields``.  ``keys`` pass through as in
+    :func:`run_kernel`, repeated for every output row of their input row.
+
+    A row with a NULL input is a NULL document and never reaches ``fn``: it
+    emits nothing, or with ``per_doc=True`` one row of NULL outputs in which
+    a field named ``ok`` reads true.  An exception in ``errors`` raised by
+    ``fn`` fails the job when ``strict``; otherwise the row emits
+    ``on_error(exc)`` — by default nothing, or with ``per_doc=True`` one
+    row of NULL outputs with ``ok`` false.
+    """
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    names = [f.name for f in _parse_datatype_string(fields).fields]
+
+    def filled(ok: bool) -> list[tuple]:
+        row = tuple(ok if n == "ok" else None for n in names)
+        return [row] if per_doc else []
+
+    on_null = filled(True)
+    if on_error is None:
+        failed = filled(False)
+
+        def on_error(_exc):
+            return failed
+
+    def kernel(*arrays):
+        rows, out = [], []
+        for i, values in enumerate(zip(*(a.to_pylist() for a in arrays))):
+            if any(v is None for v in values):
+                got = on_null
+            else:
+                try:
+                    got = fn(*values)
+                except errors as e:
+                    if strict:
+                        raise
+                    got = on_error(e)
+            rows.extend([i] * len(got))
+            out.extend(got)
+        if not out:
+            return None
+        return rows, [list(c) for c in zip(*out)]
+
+    return run_kernel(df, kernel, inputs, fields, keys, exchange=False)

@@ -20,17 +20,16 @@ surface) with their full expressiveness:
   ``JqSpec.scala:40-458`` ported as golden tests).
 
 The reference compiles these to stream automata; a Spark column is already a
-materialized document, so the engine here is a value-level evaluator run as
-an Arrow-batched ``mapInPandas`` kernel (the UDx tier for logic Catalyst
-cannot express: recursion over untyped nesting). For *typed* or single-match
-paths prefer ``functions/jsonpath.py`` (pure Catalyst).
+materialized document, so the engine here is a value-level evaluator run
+per row through ``functions/arrow_kernel.run_rows`` (the UDx tier for logic
+Catalyst cannot express: recursion over untyped nesting). For *typed* or
+single-match paths prefer ``functions/jsonpath.py`` (pure Catalyst).
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -532,47 +531,29 @@ def _render(v) -> str:
     return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
 
 
+def _keep_keys(df: DataFrame, col: str, keep: list[str] | None) -> list[str]:
+    """Pass-through columns of a per-match engine, in ``df``'s order:
+    ``keep``, or every column but the document column ``col``."""
+    return [c for c in df.columns
+            if (c in keep if keep is not None else c != col)]
+
+
 def _run_engine(df: DataFrame, col: str, keep: list[str] | None,
                 evaluate, mode: str, max_matches: int | None = None) -> DataFrame:
-    """Shared mapInPandas driver: one output row per match, with ordinal.
+    """Shared per-match driver: one output row per match, with ordinal.
     ``max_matches`` caps matches PER DOCUMENT (the reference's ``maxMatch``
     knob, ``pfsa/TreeQueryPipe.scala:99-107``; ``filter.first`` = 1)."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    keep = keep if keep is not None else [c for c in df.columns if c != col]
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in df.schema.fields if f.name in keep]
-        + ["match_no int", "value string"])
+    def matches(raw):
+        doc = json_loads_strict(raw)
+        found = evaluate(doc)[:max_matches] if doc is not None else []
+        return [(j, _render(m)) for j, m in enumerate(found)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in keep}
-            ords, vals = [], []
-            # plain-list iteration: per-row pandas .iloc is ~2x slower than
-            # zipping materialized lists in this per-document hot loop
-            keep_lists = [pdf[k].tolist() for k in keep]
-            for i, raw in enumerate(pdf[col].tolist()):
-                try:
-                    doc = json_loads_strict(raw) if raw is not None else None
-                    matches = evaluate(doc) if doc is not None else []
-                except (ValueError, KeyError, TypeError):
-                    if strict:
-                        raise
-                    matches = []
-                if max_matches is not None:
-                    matches = matches[:max_matches]
-                for j, m in enumerate(matches):
-                    for k, kl in zip(keep, keep_lists):
-                        out[k].append(kl[i])
-                    ords.append(j)
-                    vals.append(_render(m))
-            out["match_no"] = ords
-            out["value"] = vals
-            yield pd.DataFrame(out, columns=[*keep, "match_no", "value"])
-
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, matches, [col], "match_no int, value string",
+                    keys=_keep_keys(df, col, keep),
+                    errors=(ValueError, KeyError, TypeError),
+                    strict=mode == "strict")
 
 
 def select_path_all(df: DataFrame, col: str, path: str,
@@ -614,27 +595,17 @@ def select_path_all(df: DataFrame, col: str, path: str,
 def json_merge_patch(df: DataFrame, target_col: str, patch_col: str,
                      out_col: str = "merged", mode: str = "strict") -> DataFrame:
     """Column-wise RFC 7396 merge patch: ``out_col`` = compact JSON of
-    ``merge_patch(target, patch)`` per row."""
-    import pandas as pd  # noqa: PLC0415
+    ``merge_patch(target, patch)`` per row (NULL when either side is
+    NULL)."""
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} string"])
+    def merged(t, p):
+        return [(_render(merge_patch(json_loads_strict(t),
+                                     json_loads_strict(p))),)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            merged = []
-            for t, p in zip(pdf[target_col], pdf[patch_col]):
-                try:
-                    merged.append(_render(merge_patch(json_loads_strict(t), json_loads_strict(p))))
-                except (ValueError, TypeError):
-                    if strict:
-                        raise
-                    merged.append(None)
-            yield pdf.assign(**{out_col: merged})
-
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, merged, [target_col, patch_col], f"`{out_col}` string",
+                    keys=df.columns, errors=(ValueError, TypeError),
+                    strict=mode == "strict", per_doc=True)
 
 
 def _depth_exceeds(v, limit: int, d: int = 0) -> bool:
@@ -656,28 +627,17 @@ def json_transform(df: DataFrame, col: str, path: str, fn,
     returning None writes JSON null; returning :data:`DELETE` removes the
     match (column null when the root itself is deleted). ``fn`` must be
     deterministic and picklable."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     parse_jsonpath(path)  # fail fast on driver for bad paths
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} string"])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for raw in pdf[col]:
-                try:
-                    res = transform_at(json_loads_strict(raw), path, fn)
-                    outs.append(None if res is None else _render(res))
-                except (ValueError, TypeError, KeyError):
-                    if strict:
-                        raise
-                    outs.append(None)
-            yield pdf.assign(**{out_col: outs})
+    def transformed(raw):
+        res = transform_at(json_loads_strict(raw), path, fn)
+        return [(None if res is None else _render(res),)]
 
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, transformed, [col], f"`{out_col}` string",
+                    keys=df.columns, errors=(ValueError, TypeError, KeyError),
+                    strict=mode == "strict", per_doc=True)
 
 
 def value_tokens(value, depth: int = 0):
@@ -719,39 +679,16 @@ def json_tokenize(df: DataFrame, col: str, keep: list[str] | None = None,
     """Token-stream view of a JSON string column: one row per token with
     ``(token_no, kind, text, depth)`` — the rows-as-tokens analogue of the
     reference's ``json.tokens`` pipe (like ``xml_events`` for XML)."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    keep = keep if keep is not None else [c for c in df.columns if c != col]
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in df.schema.fields if f.name in keep]
-        + ["token_no int", "kind string", "text string", "depth int"])
+    def tokens(raw):
+        return [(n, *tok) for n, tok in
+                enumerate(value_tokens(json_loads_tokens(raw)))]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in keep}
-            nos, kinds, texts, depths = [], [], [], []
-            keep_lists = [pdf[k].tolist() for k in keep]
-            for i, raw in enumerate(pdf[col].tolist()):
-                try:
-                    toks = list(value_tokens(json_loads_tokens(raw)))
-                except (ValueError, TypeError):
-                    if strict:
-                        raise
-                    continue
-                for n, (kind, text, depth) in enumerate(toks):
-                    for k, kl in zip(keep, keep_lists):
-                        out[k].append(kl[i])
-                    nos.append(n)
-                    kinds.append(kind)
-                    texts.append(text)
-                    depths.append(depth)
-            out.update(token_no=nos, kind=kinds, text=texts, depth=depths)
-            yield pd.DataFrame(out, columns=[*keep, "token_no", "kind",
-                                             "text", "depth"])
-
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, tokens, [col],
+                    "token_no int, kind string, text string, depth int",
+                    keys=_keep_keys(df, col, keep),
+                    errors=(ValueError, TypeError), strict=mode == "strict")
 
 
 def render_json_pretty(df: DataFrame, col: str, out_col: str = "pretty",
@@ -759,20 +696,14 @@ def render_json_pretty(df: DataFrame, col: str, out_col: str = "pretty",
     """``json.render.prettyPrint`` analogue (reference
     ``json/package.scala:291-293``): stable indented rendering of a JSON
     string column."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} string"])
+    def pretty(raw):
+        return [(json.dumps(json_loads_strict(raw), indent=indent,
+                            ensure_ascii=False),)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pdf.assign(**{out_col: [
-                json.dumps(json_loads_strict(v), indent=indent,
-                           ensure_ascii=False) if v is not None else None
-                for v in pdf[col]]})
-
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, pretty, [col], f"`{out_col}` string",
+                    keys=df.columns, per_doc=True)
 
 
 def jq_run(df: DataFrame, col: str, program: str,

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import json as _json
 import re
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 
@@ -384,29 +384,16 @@ def pretty_xml_text(s: str, width: int = 100, indent: int = 2) -> str:
 def _pretty_operator(df: DataFrame, col: str, fn, width: int, indent: int,
                      keep: list[str] | None, out_col: str,
                      mode: str) -> DataFrame:
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     keep = list(keep) if keep is not None else [c for c in df.columns if c != col]
-    ktypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = ", ".join([f"`{k}` {ktypes[k]}" for k in keep]
-                       + [f"`{out_col}` string", "ok boolean"])
-    strict = mode == "strict"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs, oks = [], []
-            for s in pdf[col]:
-                try:
-                    outs.append(fn(s, width, indent))
-                    oks.append(True)
-                except Exception:  # noqa: BLE001
-                    if strict:
-                        raise
-                    outs.append(None)
-                    oks.append(False)
-            yield pdf[keep].assign(**{out_col: outs, "ok": oks})
+    def pretty(s):
+        return [(fn(s, width, indent), True)]
 
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, pretty, [col], f"`{out_col}` string, ok boolean",
+                    keys=keep, errors=(Exception,), strict=mode == "strict",
+                    per_doc=True)
 
 
 def pretty_json(df: DataFrame, col: str, width: int = 100, indent: int = 2,

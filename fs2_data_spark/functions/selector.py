@@ -24,12 +24,11 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from fs2_data_spark.functions.jsonq import _render, json_loads_strict
+from fs2_data_spark.functions.jsonq import _keep_keys, _render, json_loads_strict
 
 
 class SelectorError(ValueError):
@@ -286,30 +285,18 @@ def apply_selector_wrapped(df: DataFrame, col: str, selector: str,
                            out_col: str = "filtered") -> DataFrame:
     """``json.filter(selector, wrap=true)`` analogue: one row per document
     with the skeleton-preserving filtered JSON (null when nothing matched)."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     steps = parse_selector(selector)
-    keep = keep if keep is not None else [c for c in df.columns if c != col]
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in df.schema.fields if f.name in keep]
-        + [f"{out_col} string"])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for raw in pdf[col]:
-                try:
-                    res = filter_selector(json_loads_strict(raw), steps)
-                    outs.append(None if isinstance(res, _Nothing) else _render(res))
-                except (SelectorError, ValueError, TypeError):
-                    if strict:
-                        raise
-                    outs.append(None)
-            yield pdf[keep].assign(**{out_col: outs})
+    def filtered(raw):
+        res = filter_selector(json_loads_strict(raw), steps)
+        return [(None if isinstance(res, _Nothing) else _render(res),)]
 
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, filtered, [col], f"`{out_col}` string",
+                    keys=_keep_keys(df, col, keep),
+                    errors=(SelectorError, ValueError, TypeError),
+                    strict=mode == "strict", per_doc=True)
 
 
 def apply_selector(df: DataFrame, col: str, selector: str,
@@ -318,34 +305,15 @@ def apply_selector(df: DataFrame, col: str, selector: str,
     """Run a selector over a JSON string column — one row per selected value
     (ordinal ``match_no``, compact JSON ``value``). strict mode propagates
     selector errors (fail-the-stream); attempt skips failing documents."""
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     steps = parse_selector(selector)
-    keep = keep if keep is not None else [c for c in df.columns if c != col]
-    strict = mode == "strict"
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in df.schema.fields if f.name in keep]
-        + ["match_no int", "value string"])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in keep}
-            nos, vals = [], []
-            keep_lists = [pdf[k].tolist() for k in keep]
-            for i, raw in enumerate(pdf[col].tolist()):
-                try:
-                    matches = eval_selector(json_loads_strict(raw), steps)
-                except (SelectorError, ValueError, TypeError):
-                    if strict:
-                        raise
-                    continue
-                for j, m in enumerate(matches):
-                    for k, kl in zip(keep, keep_lists):
-                        out[k].append(kl[i])
-                    nos.append(j)
-                    vals.append(_render(m))
-            out.update(match_no=nos, value=vals)
-            yield pd.DataFrame(out, columns=[*keep, "match_no", "value"])
+    def matches(raw):
+        return [(j, _render(m)) for j, m in
+                enumerate(eval_selector(json_loads_strict(raw), steps))]
 
-    return df.mapInPandas(kernel, schema)
+    return run_rows(df, matches, [col], "match_no int, value string",
+                    keys=_keep_keys(df, col, keep),
+                    errors=(SelectorError, ValueError, TypeError),
+                    strict=mode == "strict")

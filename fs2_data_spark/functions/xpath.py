@@ -20,7 +20,6 @@ token sub-stream).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -189,7 +188,7 @@ def match_chain(branches: list[list[_Step]], chain: list[tuple[str, dict]]) -> b
 # DataFrame operator
 # ---------------------------------------------------------------------------
 
-_OUT_SCHEMA = ("doc_key string, match_no int, event_no int, name string, "
+_OUT_FIELDS = ("match_no int, event_no int, name string, "
                "attrs map<string,string>, inner_text string, xml string")
 
 
@@ -211,10 +210,11 @@ def xpath_filter(df: DataFrame, xml_col: str, xpath: str,
     from xml.parsers import expat  # noqa: PLC0415
     from xml.sax.saxutils import escape, quoteattr  # noqa: PLC0415
 
-    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     branches = parse_xpath(xpath)
-    strict = mode == "strict"
 
     def render_start(name, attrs):
         parts = [f"<{name}"]
@@ -222,8 +222,8 @@ def xpath_filter(df: DataFrame, xml_col: str, xpath: str,
         parts.append(">")
         return "".join(parts)
 
-    def parse_one(key, xml):
-        rows = []          # (key, match_no, event_no, name, attrs, text, xml)
+    def parse_one(xml):
+        rows = []          # (match_no, event_no, name, attrs, text, xml)
         chain: list[tuple[str, dict]] = []
         # active captures: [depth_at_start, row_index, xml_parts, text_parts]
         active: list[list] = []
@@ -246,7 +246,7 @@ def xpath_filter(df: DataFrame, xml_col: str, xpath: str,
             attrs = dict(attr_items)
             chain.append((name, attrs))
             if match_chain(branches, chain):
-                rows.append([key, len(rows), state["n"], name, attrs, [], []])
+                rows.append([len(rows), state["n"], name, attrs, [], []])
                 active.append([len(chain), rows[-1], [], []])
             for cap in active:
                 cap[2].append(render_start(name, attrs))
@@ -259,8 +259,8 @@ def xpath_filter(df: DataFrame, xml_col: str, xpath: str,
                 cap[2].append(f"</{name}>")
             done = [c for c in active if c[0] == len(chain)]
             for cap in done:
-                cap[1][5] = " ".join(cap[3])
-                cap[1][6] = "".join(cap[2])
+                cap[1][4] = " ".join(cap[3])
+                cap[1][5] = "".join(cap[2])
             active = [c for c in active if c[0] != len(chain)]
             chain.pop()
             state["n"] += 1
@@ -273,21 +273,9 @@ def xpath_filter(df: DataFrame, xml_col: str, xpath: str,
         p.Parse(xml, True)
         return [tuple(r) for r in rows]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml.parsers.expat import ExpatError  # noqa: PLC0415
-        cols = ["doc_key", "match_no", "event_no", "name", "attrs",
-                "inner_text", "xml"]
-        for pdf in batches:
-            out = []
-            for key, xml in zip(pdf[key_col], pdf[xml_col]):
-                try:
-                    out.extend(parse_one(str(key), xml))
-                except ExpatError:
-                    if strict:
-                        raise
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(kernel, _OUT_SCHEMA)
+    return run_rows(df, parse_one, [xml_col], _OUT_FIELDS,
+                    keys=[F.col(key_col).cast("string").alias("doc_key")],
+                    errors=(expat.ExpatError,), strict=mode == "strict")
 
 
 # ---------------------------------------------------------------------------

@@ -14,16 +14,15 @@ The codec step is tiered (VERDICT r03 item #6, r04 missing-item #1):
    ``fake=True`` — a deterministic stand-in decode so pipelines are
    exercised end-to-end either way.
 
-At scale: binary payloads dominate row size, so operators here use
-``mapInPandas`` (iterator of Arrow batches — bounded memory per task,
-``spark.sql.execution.arrow.maxRecordsPerBatch`` controls batch bytes) and
-never collect or explode payloads.
+At scale: binary payloads dominate row size, so operators here run as Arrow
+kernels (``functions/arrow_kernel.run_kernel``: one Arrow batch at a time —
+bounded memory per task, ``spark.sql.execution.arrow.maxRecordsPerBatch``
+controls batch bytes) and never collect or explode payloads.
 """
 
 from __future__ import annotations
 
 import importlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -71,49 +70,45 @@ def decode_image(df: DataFrame, payload_col: str = "payload", *, fake: bool = Fa
     semantics).
     """
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"features array<float>"]
-    )
+    from fs2_data_spark.functions.arrow_kernel import run_kernel  # noqa: PLC0415
 
     use_pil = not fake and tier != "stdlib" and probe("PIL.Image") is not None
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(payloads):
         if use_pil:
             import io  # noqa: PLC0415
             from PIL import Image  # noqa: PLC0415
         from fs2_data_spark.sources.stdlib_media import decode_gray, sniff  # noqa: PLC0415
-        for pdf in batches:
-            feats = []
-            for raw in pdf[payload_col]:
-                if use_pil:
-                    img = Image.open(io.BytesIO(raw)).convert("L")
-                    strip = np.asarray(img.resize((out_dim, 1)),
-                                       dtype=np.float32).reshape(-1)
-                    feats.append(strip / np.float32(255.0))
+        feats = []
+        for raw in payloads.to_pylist():
+            if use_pil:
+                img = Image.open(io.BytesIO(raw)).convert("L")
+                strip = np.asarray(img.resize((out_dim, 1)),
+                                   dtype=np.float32).reshape(-1)
+                feats.append(strip / np.float32(255.0))
+                continue
+            if not fake:
+                if sniff(bytes(raw or b"")) in ("pgm", "ppm", "bmp"):
+                    px = decode_gray(bytes(raw)).reshape(-1)
+                    blocks = np.array_split(px, out_dim)
+                    feats.append(np.array(
+                        [float(c.mean()) / 255.0 if len(c) else 0.0
+                         for c in blocks], dtype=np.float32))
                     continue
-                if not fake:
-                    if sniff(bytes(raw or b"")) in ("pgm", "ppm", "bmp"):
-                        px = decode_gray(bytes(raw)).reshape(-1)
-                        blocks = np.array_split(px, out_dim)
-                        feats.append(np.array(
-                            [float(c.mean()) / 255.0 if len(c) else 0.0
-                             for c in blocks], dtype=np.float32))
-                        continue
-                    raise NotImplementedError(
-                        "image decoding beyond PGM/PPM/BMP requires Pillow "
-                        "('PIL' not importable in this environment); pass "
-                        "fake=True for the deterministic stub")
-                b = np.frombuffer(raw or b"\x00", dtype=np.uint8)
-                # deterministic fake "decode": strided byte means, unit-scaled
-                chunks = np.array_split(b, out_dim) if len(b) >= out_dim else [b] * out_dim
-                feats.append(np.array([float(c.mean()) / 255.0 if len(c) else 0.0
-                                       for c in chunks], dtype=np.float32))
-            yield pdf.assign(features=feats)
+                raise NotImplementedError(
+                    "image decoding beyond PGM/PPM/BMP requires Pillow "
+                    "('PIL' not importable in this environment); pass "
+                    "fake=True for the deterministic stub")
+            b = np.frombuffer(raw or b"\x00", dtype=np.uint8)
+            # deterministic fake "decode": strided byte means, unit-scaled
+            chunks = np.array_split(b, out_dim) if len(b) >= out_dim else [b] * out_dim
+            feats.append(np.array([float(c.mean()) / 255.0 if len(c) else 0.0
+                                   for c in chunks], dtype=np.float32))
+        return [feats]
 
-    return df.mapInPandas(kernel, out_schema)
+    return run_kernel(df, kernel, [payload_col], "features array<float>",
+                      keys=df.columns, exchange=False)
 
 
 def sample_frames(df: DataFrame, payload_col: str = "payload", every_n_bytes: int = 4096,
@@ -141,47 +136,45 @@ def resize_image(df: DataFrame, payload_col: str = "payload",
     the missing library. Output stays ``binary`` (thumbnails ride like any
     other payload)."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} binary"])
+    from fs2_data_spark.functions.arrow_kernel import run_kernel  # noqa: PLC0415
+
     n_out = width * height
 
     use_pil = not fake and probe("PIL.Image") is not None
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(payloads):
         if use_pil:
             import io  # noqa: PLC0415
             from PIL import Image  # noqa: PLC0415
         from fs2_data_spark.sources.stdlib_media import decode_gray, sniff  # noqa: PLC0415
-        for pdf in batches:
-            outs = []
-            for raw in pdf[payload_col]:
-                if use_pil:
-                    img = Image.open(io.BytesIO(raw)).convert("L")
-                    outs.append(img.resize((width, height)).tobytes())
+        outs = []
+        for raw in payloads.to_pylist():
+            if use_pil:
+                img = Image.open(io.BytesIO(raw)).convert("L")
+                outs.append(img.resize((width, height)).tobytes())
+                continue
+            if not fake:
+                if sniff(bytes(raw or b"")) in ("pgm", "ppm", "bmp"):
+                    px = decode_gray(bytes(raw)).astype(np.float64)
+                    # area-average: mean over each row-block x col-block
+                    cell = np.stack([
+                        np.stack([c.mean() if c.size else 0.0
+                                  for c in np.array_split(rb, width, axis=1)])
+                        for rb in np.array_split(px, height, axis=0)])
+                    outs.append(np.floor(cell + 0.5).astype(np.uint8).tobytes())
                     continue
-                if not fake:
-                    if sniff(bytes(raw or b"")) in ("pgm", "ppm", "bmp"):
-                        px = decode_gray(bytes(raw)).astype(np.float64)
-                        # area-average: mean over each row-block x col-block
-                        cell = np.stack([
-                            np.stack([c.mean() if c.size else 0.0
-                                      for c in np.array_split(rb, width, axis=1)])
-                            for rb in np.array_split(px, height, axis=0)])
-                        outs.append(np.floor(cell + 0.5).astype(np.uint8).tobytes())
-                        continue
-                    raise NotImplementedError(
-                        "image resizing beyond PGM/PPM/BMP requires Pillow "
-                        "('PIL' not importable in this environment); pass "
-                        "fake=True for the deterministic stub")
-                b = np.frombuffer(raw or b"\x00", dtype=np.uint8)
-                idx = np.linspace(0, len(b) - 1, n_out).astype(np.int64)
-                outs.append(b[idx].tobytes())
-            yield pdf.assign(**{out_col: outs})
+                raise NotImplementedError(
+                    "image resizing beyond PGM/PPM/BMP requires Pillow "
+                    "('PIL' not importable in this environment); pass "
+                    "fake=True for the deterministic stub")
+            b = np.frombuffer(raw or b"\x00", dtype=np.uint8)
+            idx = np.linspace(0, len(b) - 1, n_out).astype(np.int64)
+            outs.append(b[idx].tobytes())
+        return [outs]
 
-    return df.mapInPandas(kernel, out_schema)
+    return run_kernel(df, kernel, [payload_col], f"`{out_col}` binary",
+                      keys=df.columns, exchange=False)
 
 
 def extract_audio_features(df: DataFrame, payload_col: str = "payload",
@@ -196,42 +189,39 @@ def extract_audio_features(df: DataFrame, payload_col: str = "payload",
     shape a real MFCC/band-energy stage would emit, so downstream
     similarity/dedup operators compose on it."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} array<float>"])
+    from fs2_data_spark.functions.arrow_kernel import run_kernel  # noqa: PLC0415
 
     use_sf = not fake and probe("soundfile") is not None
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(payloads):
         if use_sf:
             import io  # noqa: PLC0415
             import soundfile  # noqa: PLC0415
         from fs2_data_spark.sources.stdlib_media import decode_wav, sniff  # noqa: PLC0415
-        for pdf in batches:
-            feats = []
-            for raw in pdf[payload_col]:
-                if use_sf:
-                    samples, _sr = soundfile.read(io.BytesIO(raw))
-                    b = np.abs(np.asarray(samples, dtype=np.float64)).reshape(-1)
-                    scale = 1.0
-                elif not fake:
-                    if sniff(bytes(raw or b"")) != "wav":
-                        raise NotImplementedError(
-                            "audio formats beyond PCM WAV require 'soundfile' "
-                            "(not importable in this environment); pass "
-                            "fake=True for the deterministic stub")
-                    samples, _sr = decode_wav(bytes(raw))
-                    b = np.abs(samples)
-                    scale = 1.0
-                else:
-                    b = np.frombuffer(raw or b"\x00", dtype=np.uint8).astype(np.float64)
-                    scale = 255.0
-                bands = np.array_split(b, n_bands) if len(b) >= n_bands else [b] * n_bands
-                feats.append(np.array(
-                    [float(np.sqrt((c ** 2).mean())) / scale if len(c) else 0.0
-                     for c in bands], dtype=np.float32))
-            yield pdf.assign(**{out_col: feats})
+        feats = []
+        for raw in payloads.to_pylist():
+            if use_sf:
+                samples, _sr = soundfile.read(io.BytesIO(raw))
+                b = np.abs(np.asarray(samples, dtype=np.float64)).reshape(-1)
+                scale = 1.0
+            elif not fake:
+                if sniff(bytes(raw or b"")) != "wav":
+                    raise NotImplementedError(
+                        "audio formats beyond PCM WAV require 'soundfile' "
+                        "(not importable in this environment); pass "
+                        "fake=True for the deterministic stub")
+                samples, _sr = decode_wav(bytes(raw))
+                b = np.abs(samples)
+                scale = 1.0
+            else:
+                b = np.frombuffer(raw or b"\x00", dtype=np.uint8).astype(np.float64)
+                scale = 255.0
+            bands = np.array_split(b, n_bands) if len(b) >= n_bands else [b] * n_bands
+            feats.append(np.array(
+                [float(np.sqrt((c ** 2).mean())) / scale if len(c) else 0.0
+                 for c in bands], dtype=np.float32))
+        return [feats]
 
-    return df.mapInPandas(kernel, out_schema)
+    return run_kernel(df, kernel, [payload_col], f"`{out_col}` array<float>",
+                      keys=df.columns, exchange=False)

@@ -5207,20 +5207,16 @@ def cbor_roundtrip(spark, sf_dir):
     (reference parity semantics ``cbor-json/shared/src/main/scala/fs2/data/
     cbor/package.scala:32-44``), so the DuckDB oracle is simply the source
     table — a hard value oracle on encode -> transcode -> parse."""
-    import pandas as pd  # noqa: PLC0415
-
+    from fs2_data_spark.functions.arrow_kernel import run_kernel
     from fs2_data_spark.sources.binary_codecs import cbor_encode, transcode_cbor_to_json
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
 
-    def enc(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [cbor_encode({"t": t, "l": lg})
-                            for t, lg in zip(pdf["text"], pdf["lang"])],
-            })
+    def enc(text, lang):
+        return [[cbor_encode({"t": t, "l": lg})
+                 for t, lg in zip(text.to_pylist(), lang.to_pylist())]]
 
-    enc_df = d.mapInPandas(enc, "doc_id bigint, payload binary")
+    enc_df = run_kernel(d, enc, ["text", "lang"], "payload binary",
+                        keys=["doc_id"], exchange=False)
     out = transcode_cbor_to_json(enc_df, "payload", mode="attempt")
     parsed = out.withColumn("j", F.from_json("json", "t string, l string"))
     return parsed.select("doc_id", F.col("j.t").alias("t"),

@@ -9,8 +9,9 @@ byte strings render as base64url, like the reference's tag-aware rules).
 
 The Spark surface is columnar: ``transcode_cbor_to_json`` /
 ``transcode_msgpack_to_json`` turn a ``binary`` column into a JSON string
-column inside Arrow-batched ``mapInPandas`` (binary payloads never explode
-row counts; per-batch memory is bounded by Arrow batch size). Python-side
+column inside a per-row Arrow kernel (``functions/arrow_kernel.run_rows``:
+binary payloads never explode row counts; per-batch memory is bounded by
+Arrow batch size). Python-side
 decoding is the honest cost of a format Spark has no native reader for —
 exactly the "(b) Pandas-UDF-backed" tier of the build rules.
 """
@@ -20,7 +21,6 @@ from __future__ import annotations
 import base64
 import json
 import struct
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -438,30 +438,18 @@ def _jsonable(v, enc: str = "b64url"):
 
 def _transcode(df: DataFrame, col: str, decoder, mode: str,
                out_col: str = "json") -> DataFrame:
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    strict = mode == "strict"
-    passthrough = [f for f in df.schema.fields if f.name not in (out_col, "ok")]
-    cols = [f.name for f in passthrough] + [out_col, "ok"]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in passthrough]
-        + [f"`{out_col}` string", "ok boolean"])
+    def transcoded(raw):
+        return [(json.dumps(_jsonable(decoder(raw)), sort_keys=True), True)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            js, oks = [], []
-            for raw in pdf[col]:
-                try:
-                    js.append(json.dumps(_jsonable(decoder(raw)), sort_keys=True))
-                    oks.append(True)
-                except Exception as e:  # noqa: BLE001
-                    if strict:
-                        raise
-                    js.append(json.dumps({"__error": str(e)}))
-                    oks.append(False)
-            yield pdf.assign(**{out_col: js, "ok": oks})[cols]
+    def error_row(e):
+        return [(json.dumps({"__error": str(e)}), False)]
 
-    return df.mapInPandas(kernel, out_schema)
+    return run_rows(df, transcoded, [col], f"`{out_col}` string, ok boolean",
+                    keys=[c for c in df.columns if c not in (out_col, "ok")],
+                    errors=(Exception,), strict=mode == "strict",
+                    on_error=error_row, per_doc=True)
 
 
 def transcode_cbor_to_json(df: DataFrame, col: str = "payload",
@@ -478,28 +466,14 @@ def transcode_msgpack_to_json(df: DataFrame, col: str = "payload",
 
 def _transcode_to_binary(df: DataFrame, col: str, encoder, out_col: str,
                          mode: str) -> DataFrame:
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    strict = mode == "strict"
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} binary", "ok boolean"])
+    def encoded(raw):
+        return [(encoder(json.loads(raw)), True)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, oks = [], []
-            for raw in pdf[col]:
-                try:
-                    payloads.append(encoder(json.loads(raw)))
-                    oks.append(True)
-                except Exception:  # noqa: BLE001
-                    if strict:
-                        raise
-                    payloads.append(None)
-                    oks.append(False)
-            yield pdf.assign(**{out_col: payloads, "ok": oks})
-
-    return df.mapInPandas(kernel, out_schema)
+    return run_rows(df, encoded, [col], f"`{out_col}` binary, ok boolean",
+                    keys=df.columns, errors=(Exception,),
+                    strict=mode == "strict", per_doc=True)
 
 
 def decode_msgpack(df: DataFrame, schema, col: str = "payload",

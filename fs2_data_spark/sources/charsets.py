@@ -16,14 +16,13 @@ Decode strategies:
   invalid sequences, exactly fail-the-stream. latin9 (no JVM charset)
   takes the Arrow kernel.
 - ``mode="attempt"``: failing rows yield null text + ``ok=false`` (the
-  reference's ``attempt*`` variants); Arrow-batched ``mapInPandas``.
+  reference's ``attempt*`` variants); per-row Arrow kernel
+  (``functions/arrow_kernel.run_rows``).
 - ``mode="replace"``: invalid sequences become U+FFFD; Arrow-batched
   (``bytes.decode(errors="replace")``).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -40,42 +39,23 @@ CHARSETS: dict[str, tuple[str, str | None]] = {
 def _convert_kernel(df: DataFrame, col: str, out_col: str, out_type: str,
                     mode: str, convert, fail_excs) -> DataFrame:
     """Shared Arrow kernel for both charset directions. NULL inputs pass
-    through as NULL/ok=true in EVERY mode — matching the JVM
-    ``F.decode``/``F.encode`` null-propagation, so strict-mode behavior does
-    not depend on which charset alias routed here (latin9 vs utf8)."""
+    through as NULL/ok=true in EVERY mode (the runner's NULL-document rule)
+    — matching the JVM ``F.decode``/``F.encode`` null-propagation, so
+    strict-mode behavior does not depend on which charset alias routed here
+    (latin9 vs utf8)."""
     if mode not in ("strict", "attempt", "replace"):
         raise ValueError(f"unknown mode {mode!r}")
 
-    import pandas as pd  # noqa: PLC0415
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
-    strict = mode == "strict"
     errors = "replace" if mode == "replace" else "strict"
-    passthrough = [f for f in df.schema.fields if f.name not in (out_col, "ok")]
-    cols = [f.name for f in passthrough] + [out_col, "ok"]
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in passthrough]
-        + [f"{out_col} {out_type}", "ok boolean"])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs, oks = [], []
-            for raw in pdf[col]:
-                if raw is None:
-                    outs.append(None)
-                    oks.append(True)
-                    continue
-                try:
-                    outs.append(convert(raw, errors))
-                    oks.append(True)
-                except fail_excs:
-                    if strict:
-                        raise
-                    outs.append(None)
-                    oks.append(False)
-            yield pdf.assign(**{out_col: outs, "ok": oks})[cols]
+    def converted(raw):
+        return [(convert(raw, errors), True)]
 
-    return df.mapInPandas(kernel, schema)
-
+    return run_rows(df, converted, [col], f"`{out_col}` {out_type}, ok boolean",
+                    keys=[c for c in df.columns if c not in (out_col, "ok")],
+                    errors=fail_excs, strict=mode == "strict", per_doc=True)
 
 
 def decode_text(df: DataFrame, col: str = "payload", charset: str = "utf8",

@@ -16,7 +16,7 @@ containers that ship neither library (VERDICT r04 missing-item #1):
 
 All decoders take ``bytes`` and return numpy arrays; they raise
 ``ValueError`` on malformed payloads and are pure functions — safe inside
-Arrow-batched ``mapInPandas`` kernels.
+Arrow kernels.
 """
 
 from __future__ import annotations

@@ -3,10 +3,13 @@
 The reference ships a validating streaming XML event parser
 (``xml/src/main/scala/fs2/data/xml/internals/EventParser.scala``, 1073 LoC).
 Spark has no native XML scan in this environment, so the event surface is
-re-expressed as an Arrow-batched ``mapInPandas`` over Python's stdlib
-*expat* parser (the same engine ``xml.etree`` wraps) — per-document
-streaming handlers (start/end/text/comment/pi in document order), bounded
-memory (no tree is built), with fs2-data's strict-vs-attempt error modes.
+re-expressed as a per-row Arrow kernel (``functions/arrow_kernel.run_rows``)
+over Python's stdlib *expat* parser (the same engine ``xml.etree`` wraps) —
+per-document streaming handlers (start/end/text/comment/pi in document
+order), bounded memory (no tree is built), with fs2-data's strict-vs-attempt
+error modes.  ``doc_key`` is the key column cast to ``string`` on the JVM
+(NULL stays NULL); a NULL document yields no events (``xml_dom``: a NULL
+``dom``).
 
 Emitted event rows mirror the ``XmlEvent`` ADT subset that survives
 normalization (reference ``xml/src/main/scala/fs2/data/xml/XmlEvent.scala``):
@@ -26,14 +29,41 @@ structural context maintained by the open-element stack:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
-EVENT_SCHEMA = ("doc_key string, event_no int, depth int, event string, "
+EVENT_FIELDS = ("event_no int, depth int, event string, "
                 "name string, attrs map<string,string>, text string, "
                 "parent string, path string, owner_no int, ok boolean, "
                 "error string")
+EVENT_SCHEMA = "doc_key string, " + EVENT_FIELDS
+
+
+def _doc_key(key_col: str, name: str = "doc_key"):
+    """The document key as the documented ``string`` column (NULL stays
+    NULL), cast on the JVM."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+    return F.col(key_col).cast("string").alias(name)
+
+
+def _run_events(df: DataFrame, parse_one, xml_col: str, key_col: str,
+                mode: str, raw: bool = False) -> DataFrame:
+    """One row per event of each document (``raw`` adds ``is_cdata``).  A
+    malformed document fails the job in strict mode; in attempt mode it
+    yields one ``ok=false`` row carrying the parse error."""
+    from xml.parsers import expat  # noqa: PLC0415
+
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
+
+    tail = (False,) if raw else ()
+
+    def error_row(e):
+        return [(0, 0, "Error", None, None, None, None, None, None, False,
+                 str(e), *tail)]
+
+    return run_rows(df, parse_one, [xml_col],
+                    EVENT_FIELDS + (", is_cdata boolean" if raw else ""),
+                    keys=[_doc_key(key_col)], errors=(expat.ExpatError,),
+                    strict=mode == "strict", on_error=error_row)
 
 
 def resolve_entities(entities: dict[str, str]) -> dict[str, str]:
@@ -155,14 +185,11 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
     enclosing element like XmlString rows do. ``entities`` is a custom
     ``{name: replacement}`` reference-resolver map (``xml/package.scala:
     58-66``), pre-expanded with cycle detection."""
-    import pandas as pd  # noqa: PLC0415
+    from xml.parsers import expat  # noqa: PLC0415
 
-    strict = mode == "strict"
     resolved = resolve_entities(entities) if entities else None
 
-    def parse_one(key, xml):
-        from xml.parsers import expat  # noqa: PLC0415
-
+    def parse_one(xml):
         if resolved:
             xml = substitute_entities(xml, resolved)
         events: list = []
@@ -185,7 +212,7 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
                 buf.clear()
                 if text.strip() and stack:
                     name, no, path = stack[-1]
-                    events.append((key, counter[0], len(stack), "XmlString",
+                    events.append((counter[0], len(stack), "XmlString",
                                    None, None, text.strip(), name, path, no,
                                    True, None))
                     counter[0] += 1
@@ -197,7 +224,7 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
             name = clark(name)
             path = f"{ppath}/{name}"
             no = counter[0]
-            events.append((key, no, len(stack), "StartTag", name,
+            events.append((no, len(stack), "StartTag", name,
                            {clark(k): v for k, v in attrs.items()}, None,
                            parent, path, no, True, None))
             stack.append((name, no, path))
@@ -207,7 +234,7 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
             flush_text()
             _n, start_no, path = stack.pop()
             parent = stack[-1][0] if stack else None
-            events.append((key, counter[0], len(stack), "EndTag", clark(name),
+            events.append((counter[0], len(stack), "EndTag", clark(name),
                            None, None, parent, path, start_no, True, None))
             counter[0] += 1
 
@@ -219,7 +246,7 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
             pname = stack[-1][0] if stack else None
             ppath = stack[-1][2] if stack else None
             owner = stack[-1][1] if stack else None
-            events.append((key, counter[0], len(stack), kind, name, None,
+            events.append((counter[0], len(stack), kind, name, None,
                            text, pname, ppath, owner, True, None))
             counter[0] += 1
 
@@ -233,25 +260,10 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
         if include_pis:
             p.ProcessingInstructionHandler = (
                 lambda target, data: attach("XmlPI", target, data))
-        try:
-            p.Parse(xml, True)
-        except expat.ExpatError as e:
-            if strict:
-                raise
-            return [(key, 0, 0, "Error", None, None, None, None, None, None,
-                     False, str(e))]
+        p.Parse(xml, True)
         return events
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_key", "event_no", "depth", "event", "name", "attrs", "text",
-                "parent", "path", "owner_no", "ok", "error"]
-        for pdf in batches:
-            rows = []
-            for key, xml in zip(pdf[key_col], pdf[xml_col]):
-                rows.extend(parse_one(str(key), xml))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(kernel, EVENT_SCHEMA)
+    return _run_events(df, parse_one, xml_col, key_col, mode)
 
 
 RAW_EVENT_SCHEMA = EVENT_SCHEMA + ", is_cdata boolean"
@@ -274,14 +286,11 @@ def xml_events_raw(df: DataFrame, xml_col: str = "xml",
     namespace-resolved (Clark notation) view. ``entities`` as in
     :func:`xml_events` (expat additionally expands internal-subset DTD
     entities natively)."""
-    import pandas as pd  # noqa: PLC0415
+    from xml.parsers import expat  # noqa: PLC0415
 
-    strict = mode == "strict"
     resolved = resolve_entities(entities) if entities else None
 
-    def parse_one(key, xml):
-        from xml.parsers import expat  # noqa: PLC0415
-
+    def parse_one(xml):
         if resolved:
             xml = substitute_entities(xml, resolved)
         events: list = []
@@ -298,7 +307,7 @@ def xml_events_raw(df: DataFrame, xml_col: str = "xml",
             pname = stack[-1][0] if stack else None
             ppath = path if path is not None else (stack[-1][2] if stack else None)
             own = owner if owner is not None else (stack[-1][1] if stack else None)
-            events.append((key, counter[0],
+            events.append((counter[0],
                            at_depth if at_depth is not None else len(stack),
                            event, name, attrs, text, pname, ppath, own, True,
                            None, is_cdata))
@@ -344,7 +353,7 @@ def xml_events_raw(df: DataFrame, xml_col: str = "xml",
             flush_text()
             _n, start_no, path = stack.pop()
             pname = stack[-1][0] if stack else None
-            events.append((key, counter[0], len(stack), "EndTag", name, None,
+            events.append((counter[0], len(stack), "EndTag", name, None,
                            None, pname, path, start_no, True, None, False))
             counter[0] += 1
 
@@ -381,25 +390,10 @@ def xml_events_raw(df: DataFrame, xml_col: str = "xml",
         p.EndCdataSectionHandler = on_cdata_end
         p.CommentHandler = on_comment
         p.ProcessingInstructionHandler = on_pi
-        try:
-            p.Parse(xml, True)
-        except expat.ExpatError as e:
-            if strict:
-                raise
-            return [(key, 0, 0, "Error", None, None, None, None, None, None,
-                     False, str(e), False)]
+        p.Parse(xml, True)
         return events
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_key", "event_no", "depth", "event", "name", "attrs",
-                "text", "parent", "path", "owner_no", "ok", "error", "is_cdata"]
-        for pdf in batches:
-            rows = []
-            for key, xml in zip(pdf[key_col], pdf[xml_col]):
-                rows.extend(parse_one(str(key), xml))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(kernel, RAW_EVENT_SCHEMA)
+    return _run_events(df, parse_one, xml_col, key_col, mode, raw=True)
 
 
 def xml_dom(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
@@ -413,9 +407,7 @@ def xml_dom(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
     import json as _json  # noqa: PLC0415
     import xml.etree.ElementTree as ET  # noqa: PLC0415
 
-    import pandas as pd  # noqa: PLC0415
-
-    strict = mode == "strict"
+    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
 
     def to_node(elem) -> dict:
         children: list = []
@@ -428,27 +420,20 @@ def xml_dom(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
         return {"tag": elem.tag, "attrs": dict(elem.attrib),
                 "children": children}
 
-    def kernel(batches):
-        for pdf in batches:
-            doms = []
-            for xml in pdf[xml_col]:
-                try:
-                    parser = ET.XMLPullParser(events=("end",))
-                    parser.feed(xml)
-                    parser.close()
-                    root = None
-                    for _ev, elem in parser.read_events():
-                        root = elem  # last end event = the root
-                    doms.append(_json.dumps(to_node(root),
-                                            separators=(",", ":"),
-                                            ensure_ascii=False))
-                except (ET.ParseError, AttributeError):
-                    if strict:
-                        raise
-                    doms.append(None)
-            yield pd.DataFrame({key_col: pdf[key_col], "dom": doms})
+    def dom(xml):
+        parser = ET.XMLPullParser(events=("end",))
+        parser.feed(xml)
+        parser.close()
+        root = None
+        for _ev, elem in parser.read_events():
+            root = elem  # last end event = the root
+        return [(_json.dumps(to_node(root), separators=(",", ":"),
+                             ensure_ascii=False),)]
 
-    return df.mapInPandas(kernel, f"{key_col} string, dom string")
+    return run_rows(df, dom, [xml_col], "dom string",
+                    keys=[_doc_key(key_col, key_col)],
+                    errors=(ET.ParseError, AttributeError),
+                    strict=mode == "strict", per_doc=True)
 
 
 def split_qname(col):

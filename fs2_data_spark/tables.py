@@ -151,10 +151,11 @@ def token_sequences_fast(
     """Vectorized (numpy/Arrow) variant of :func:`token_sequences` for large
     scales: the expression version evaluates its per-token lambda interpreted
     (HOFs are not codegen'd), ~2M tokens/s; this one generates ~100M tokens/s
-    per core via splitmix64 on uint64 arrays inside ``mapInPandas``. Same
+    per core via splitmix64 on uint64 arrays in an Arrow kernel. Same
     schema and invariants, same per-row determinism (pure function of id)."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
+
+    from fs2_data_spark.functions.arrow_kernel import run_kernel  # noqa: PLC0415
 
     if n_docs is None:
         n_docs = max(n_rows // 8, 1)
@@ -167,31 +168,31 @@ def token_sequences_fast(
             z = (z ^ (z >> np.uint64(30))) * np.uint64(0x94D049BB133111EB)
             return z ^ (z >> np.uint64(31))
 
-    def gen(batches):
-        srcs = np.array(SOURCES)
-        for pdf in batches:
-            ids = pdf["id"].to_numpy().astype(np.uint64)
-            is_hot = (sm(ids) % np.uint64(hot)) == 0
-            doc = np.where(is_hot, np.uint64(0), sm(ids ^ np.uint64(1)) % np.uint64(nd))
-            ln = (sm(ids ^ np.uint64(2)) % np.uint64(mx) + 1).astype(np.int64)
-            offs = np.zeros(len(ln) + 1, dtype=np.int64)
-            np.cumsum(ln, out=offs[1:])
-            pos = np.arange(offs[-1], dtype=np.uint64) - np.repeat(
-                offs[:-1], ln).astype(np.uint64)
-            rid = np.repeat(ids, ln)
-            with np.errstate(over="ignore"):
-                toks = (sm(rid * np.uint64(1_000_003) + pos) % np.uint64(VOCAB_SIZE)
-                        ).astype(np.int32)
-            yield pd.DataFrame({
-                "doc_id": np.char.add("doc_", doc.astype("int64").astype(str)),
-                "tokens": np.split(toks, offs[1:-1]),
-                "n_tok": ln.astype(np.int32),
-                "source": srcs[(sm(ids ^ np.uint64(3)) % np.uint64(len(srcs))).astype(np.int64)],
-                "id": pdf["id"].to_numpy(),
-            })
+    def gen(id_arr):
+        import pyarrow as pa  # noqa: PLC0415
 
-    base = spark.range(0, n_rows, numPartitions=num_partitions).mapInPandas(
-        gen, "doc_id string, tokens array<int>, n_tok int, source string, id long")
+        srcs = np.array(SOURCES)
+        ids = id_arr.to_numpy().astype(np.uint64)
+        is_hot = (sm(ids) % np.uint64(hot)) == 0
+        doc = np.where(is_hot, np.uint64(0), sm(ids ^ np.uint64(1)) % np.uint64(nd))
+        ln = (sm(ids ^ np.uint64(2)) % np.uint64(mx) + 1).astype(np.int64)
+        offs = np.zeros(len(ln) + 1, dtype=np.int64)
+        np.cumsum(ln, out=offs[1:])
+        pos = np.arange(offs[-1], dtype=np.uint64) - np.repeat(
+            offs[:-1], ln).astype(np.uint64)
+        rid = np.repeat(ids, ln)
+        with np.errstate(over="ignore"):
+            toks = (sm(rid * np.uint64(1_000_003) + pos) % np.uint64(VOCAB_SIZE)
+                    ).astype(np.int32)
+        return [np.char.add("doc_", doc.astype("int64").astype(str)),
+                pa.ListArray.from_arrays(offs.astype(np.int32), toks),
+                ln.astype(np.int32),
+                srcs[(sm(ids ^ np.uint64(3)) % np.uint64(len(srcs))).astype(np.int64)]]
+
+    base = run_kernel(
+        spark.range(0, n_rows, numPartitions=num_partitions), gen, ["id"],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+        keys=["id"], exchange=False)
     return base.select(
         "doc_id", "tokens", "n_tok", "source",
         F.timestamp_seconds(F.unix_timestamp(F.lit(BASE_TS)) + F.col("id") * 60

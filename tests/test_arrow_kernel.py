@@ -1,7 +1,9 @@
-"""The one Arrow kernel runner (``functions/arrow_kernel.run_kernel``) and
-the contracts it gives every kernel: ids of any type ride through uncast,
-astral text hashes like the Catalyst expressions, NULL vectors project to
-NULL, and no ``mapInArrow`` or integral-id gate lives outside the runner."""
+"""The one Arrow kernel runner (``functions/arrow_kernel.run_kernel``, and
+its per-row form ``run_rows``) and the contracts it gives every kernel: ids
+of any type ride through uncast, astral text hashes like the Catalyst
+expressions, NULL vectors project to NULL, a NULL document follows one rule
+in every per-row engine, and no ``mapInArrow``/``mapInPandas`` or
+integral-id gate lives outside the runner."""
 
 import ast
 import uuid
@@ -10,9 +12,16 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from fs2_data_spark.functions import jsonq as JQ
+from fs2_data_spark.functions import render as RENDER
+from fs2_data_spark.functions import selector as SEL
 from fs2_data_spark.functions import text as TXT
 from fs2_data_spark.functions import textkernels as TK
 from fs2_data_spark.functions.tokens import token_entropy
+from fs2_data_spark.functions.xpath import xpath_filter
+from fs2_data_spark.sources import xmlsrc as XML
+from fs2_data_spark.sources.binary_codecs import transcode_json_to_cbor
+from fs2_data_spark.sources.charsets import encode_text
 from fs2_data_spark.tables import tokens_col
 
 PKG = Path(__file__).resolve().parent.parent / "fs2_data_spark"
@@ -23,22 +32,33 @@ _INTEGRAL = {"LongType", "IntegerType", "ShortType", "ByteType"}
 # mixing.negative_pairs gates a grouped applyInPandas kernel whose hash is
 # defined on bigint ids — not an Arrow-runner kernel
 _GATE_OK = {"operators/mixing.py"}
+_RUNNER = "functions/arrow_kernel.py"
+# write_csv(escape_mode="never") writes a header line at the top of every
+# part file, empty partitions included: a per-partition prologue the
+# per-batch runner cannot express
+_MAP_IN_PANDAS_OK = {("sources/csvsrc.py", "write_csv")}
 
 
 def test_no_mapinarrow_or_integral_id_gate_outside_runner():
-    """``.mapInArrow(`` is called only in ``functions/arrow_kernel.py``, and
-    no module brings back ``_integral_id`` or an integral-type test on a
-    column's ``dataType`` (the gates that kept Catalyst twins alive for
-    non-integer ids)."""
+    """``.mapInArrow(`` and ``.mapInPandas(`` are called only in
+    ``functions/arrow_kernel.py`` (``write_csv``'s header is the one named
+    exception), and no module brings back ``_integral_id`` or an
+    integral-type test on a column's ``dataType`` (the gates that kept
+    Catalyst twins alive for non-integer ids)."""
     bad = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        for node in ast.walk(ast.parse(path.read_text(), rel)):
+        tree = ast.parse(path.read_text(), rel)
+        excepted = {id(n) for f in tree.body
+                    if isinstance(f, ast.FunctionDef)
+                    and (rel, f.name) in _MAP_IN_PANDAS_OK
+                    for n in ast.walk(f)}
+        for node in ast.walk(tree):
             if (isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "mapInArrow"
-                    and rel != "functions/arrow_kernel.py"):
-                bad.append(f"{rel}:{node.lineno} mapInArrow")
+                    and node.func.attr in ("mapInArrow", "mapInPandas")
+                    and rel != _RUNNER and id(node) not in excepted):
+                bad.append(f"{rel}:{node.lineno} {node.func.attr}")
             if isinstance(node, (ast.FunctionDef, ast.Name, ast.Attribute)):
                 name = getattr(node, "name", None) or getattr(
                     node, "id", None) or getattr(node, "attr", None)
@@ -351,3 +371,87 @@ def test_runner_keeps_key_type_and_takes_rows(spark):
     assert sorted(map(tuple, out.collect())) == [
         ("u-1", "x", 0), ("u-1", "x", 1),
         ("u-3", None, 0), ("u-3", None, 1), ("u-3", None, 2)]
+
+
+# --- one NULL-document rule for the per-row engines -------------------------
+
+_JSON, _XML = '{"a": [1, {"b": 2}]}', "<a><b>x</b></a>"
+
+
+# name -> (valid document, engine(df, mode), output column); output column
+# None = one row per match/token/event
+_NULL_DOC = {
+    "select_path_all": (_JSON, lambda df, m: JQ.select_path_all(
+        df, "doc", "$..b", mode=m), None),
+    "jq_run": (_JSON, lambda df, m: JQ.jq_run(df, "doc", ".a[]", mode=m), None),
+    "apply_selector": (_JSON, lambda df, m: SEL.apply_selector(
+        df, "doc", ".a", mode=m), None),
+    "json_tokenize": (_JSON, lambda df, m: JQ.json_tokenize(
+        df, "doc", mode=m), None),
+    "xpath_filter": (_XML, lambda df, m: xpath_filter(
+        df, "doc", "//b", key_col="id", mode=m), None),
+    "xml_events": (_XML, lambda df, m: XML.xml_events(
+        df, "doc", "id", mode=m), None),
+    "xml_events_raw": (_XML, lambda df, m: XML.xml_events_raw(
+        df, "doc", "id", mode=m), None),
+    "apply_selector_wrapped": (_JSON, lambda df, m: SEL.apply_selector_wrapped(
+        df, "doc", ".a", mode=m), "filtered"),
+    "json_transform": (_JSON, lambda df, m: JQ.json_transform(
+        df, "doc", "$.a", lambda v: v, mode=m), "transformed"),
+    "json_merge_patch": (_JSON, lambda df, m: JQ.json_merge_patch(
+        df, "doc", "doc", mode=m), "merged"),
+    "render_json_pretty": (_JSON, lambda df, m: JQ.render_json_pretty(
+        df, "doc"), "pretty"),
+    "pretty_json": (_JSON, lambda df, m: RENDER.pretty_json(
+        df, "doc", mode=m), "pretty"),
+    "pretty_xml": (_XML, lambda df, m: RENDER.pretty_xml(
+        df, "doc", mode=m), "pretty"),
+    "xml_dom": (_XML, lambda df, m: XML.xml_dom(df, "doc", "id", mode=m), "dom"),
+    "encode_text": (_JSON, lambda df, m: encode_text(
+        df, "doc", charset="latin9", mode=m), "payload"),
+    "transcode_json_to_cbor": (_JSON, lambda df, m: transcode_json_to_cbor(
+        df, "doc", mode=m), "payload"),
+}
+
+
+@pytest.mark.parametrize("mode", ["strict", "attempt"])
+@pytest.mark.parametrize("name", sorted(_NULL_DOC))
+def test_null_document_rule(spark, name, mode):
+    """A NULL document is not malformed, in either mode: a per-match engine
+    emits no rows for it, a per-document engine one row with a NULL output
+    and ``ok = true`` (like Catalyst's ``explode(NULL)``/
+    ``from_json(NULL)``); the other row is processed as usual."""
+    doc, engine, out_col = _NULL_DOC[name]
+    df = spark.createDataFrame([(1, None), (2, doc)], "id bigint, doc string")
+    rows = [r.asDict() for r in engine(df, mode).collect()]
+    key = "doc_key" if rows and "doc_key" in rows[0] else "id"
+    assert any(str(r[key]) == "2" for r in rows)
+    null_rows = [r for r in rows if str(r[key]) == "1"]
+    if out_col is None:
+        assert null_rows == []
+    else:
+        assert len(null_rows) == 1
+        assert null_rows[0][out_col] is None
+        assert null_rows[0].get("ok", True) is True
+
+
+def test_run_rows_keys_repeat_and_errors(spark):
+    """``run_rows``: keys repeat for each output row of their input row and
+    keep their type; strict fails on a listed error, attempt emits
+    ``on_error``'s rows."""
+    from fs2_data_spark.functions.arrow_kernel import run_rows
+
+    df = spark.createDataFrame([("u-1", "2"), ("u-2", "x"), ("u-3", "0")],
+                               "k string, s string")
+
+    def fn(s):
+        return [(i,) for i in range(int(s))]
+
+    out = run_rows(df, fn, ["s"], "i int", keys=["k"], errors=(ValueError,),
+                   strict=False, on_error=lambda e: [(-1,)])
+    assert out.dtypes == [("k", "string"), ("i", "int")]
+    assert sorted(map(tuple, out.collect())) == [
+        ("u-1", 0), ("u-1", 1), ("u-2", -1)]
+    with pytest.raises(Exception, match="invalid literal"):
+        run_rows(df, fn, ["s"], "i int", keys=["k"], errors=(ValueError,),
+                 strict=True).collect()

@@ -211,6 +211,7 @@ def test_duplicate_spans_candidates(spark):
 def test_duplicate_spans_plan_no_python_no_cartesian(spark):
     import io
     from contextlib import redirect_stdout
+    from fs2_data_spark.functions.arrow_kernel import PYTHON_NODES
     from fs2_data_spark.operators.dedup import duplicate_spans
     df = spark.createDataFrame([(1, [1, 2, 3, 4])],
                                "doc_id bigint, tokens array<int>")
@@ -218,8 +219,7 @@ def test_duplicate_spans_plan_no_python_no_cartesian(spark):
     with redirect_stdout(buf):
         duplicate_spans(df, k=2).explain("formatted")
     plan = buf.getvalue()
-    for marker in ("CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
-                   "MapInPandas"):
+    for marker in ("CartesianProduct", *PYTHON_NODES):
         assert marker not in plan
 
 

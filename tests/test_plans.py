@@ -10,6 +10,7 @@ from contextlib import redirect_stdout
 
 import pytest
 
+from fs2_data_spark.functions.arrow_kernel import PYTHON_NODES
 from fs2_data_spark.queries import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -20,6 +21,11 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def assert_no_python(plan: str) -> None:
+    for marker in PYTHON_NODES:
+        assert marker not in plan, f"Python stage in plan: {marker}"
 
 
 def q(spark, name):
@@ -121,8 +127,7 @@ def test_xpath_fast_texts_stays_jvm_side(spark):
     plan = plan_of(df)
     # the posexplode over the from_xml result lives in a Generate node
     assert "Generate" in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, f"Python tier leaked into plan: {marker}"
+    assert_no_python(plan)
     # projections/scan are codegen'd (the from_xml Generate itself is not)
     assert plan.count("* ") >= 3
 
@@ -133,8 +138,7 @@ def test_mix_sample_is_scan_side_filter(spark):
     rides the scan)."""
     plan = plan_of(q(spark, "mix_sample_docs"))
     assert "Exchange" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+    assert_no_python(plan)
 
 
 def test_tok_vocab_topk_no_global_sort(spark):
@@ -160,8 +164,7 @@ def test_hash_split_is_scan_side_case(spark):
     stratified-sample filter)."""
     plan = plan_of(q(spark, "split_assign_docs"))
     assert "Exchange" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+    assert_no_python(plan)
 
 
 def test_curriculum_corpus_side_never_shuffles(spark):
@@ -171,8 +174,7 @@ def test_curriculum_corpus_side_never_shuffles(spark):
     plan = plan_of(q(spark, "curriculum_buckets_docs"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+    assert_no_python(plan)
 
 
 @pytest.mark.parametrize("name", ["bpe_pretok_docs", "redact_pii_docs"])
@@ -181,8 +183,7 @@ def test_per_row_text_ops_ride_the_scan(spark, name):
     zero Exchange, zero Python — the whole query is one codegen'd scan."""
     plan = plan_of(q(spark, name))
     assert "Exchange" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+    assert_no_python(plan)
 
 
 def test_unigram_quality_vocab_broadcasts(spark):
@@ -192,8 +193,7 @@ def test_unigram_quality_vocab_broadcasts(spark):
     plan = plan_of(q(spark, "unigram_quality_docs"))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+    assert_no_python(plan)
 
 
 def test_quantized_topk_no_dim_explode_no_python(spark):

@@ -214,6 +214,26 @@ def test_python_tier_keeps_xmlns_attrs(spark):
     assert root[0].attrs == {"xmlns:ns": "http://x", "xmlns": "http://d"}
 
 
+@pytest.mark.parametrize("engine", ["xpath_filter", "xml_events",
+                                    "xml_events_raw", "xml_dom"])
+def test_doc_key_cast_to_string_null_stays_null(spark, engine):
+    """The documented ``doc_key string`` is the key cast on the JVM: a
+    bigint key reads as its decimal string and a NULL key stays NULL, not
+    ``'None'``."""
+    from fs2_data_spark.sources import xmlsrc
+
+    df = spark.createDataFrame([(7, _NS_XML), (None, _NS_XML)],
+                               "doc_key bigint, xml string")
+    if engine == "xpath_filter":
+        out = xpath_filter(df, "xml", "/ns:r")
+    else:
+        out = getattr(xmlsrc, engine)(df, "xml", "doc_key")
+    assert out.dtypes[0] == ("doc_key", "string")
+    keys = [r.doc_key for r in out.collect()]
+    assert set(keys) == {"7", None}
+    assert keys.count("7") == keys.count(None)
+
+
 def test_fast_path_fallback_same_schema(spark):
     """Ineligible query routes to the Python tier with the same output
     schema, so callers are agnostic to the routing decision."""

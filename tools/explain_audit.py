@@ -15,6 +15,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from fs2_data_spark.functions.arrow_kernel import PYTHON_NODES  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 
 AUDITED = [
@@ -74,7 +76,7 @@ AUDITED = [
     ("novelty_docs", ["arrow_kernel", "no_cartesian", "pruned_scan"]),
     # r5 late additions: sketches + heuristic filter + corpus rewrite
     ("gopher_rules_docs", ["no_python", "no_exchange", "pruned_scan"]),
-    ("segment_dedup_docs", ["no_python", "no_cartesian", "pruned_scan"]),
+    ("segment_dedup_docs", ["arrow_kernel", "no_cartesian", "pruned_scan"]),
     # per-group top-k over distinct hashes; the exact-count side joins the
     # 20-row sketch output, so the join must not plan as cartesian
     ("kmv_distinct_docs", ["arrow_kernel", "no_cartesian", "pruned_scan"]),
@@ -91,7 +93,7 @@ AUDITED = [
     ("pmi_bigrams_docs", ["no_python", "top_k_not_sort", "broadcast"]),
     ("asof_join_events_forward", ["single_window_exchange", "no_python"]),
     ("asof_join_events_nearest", ["single_window_exchange", "no_python"]),
-    ("boilerplate_segments_docs", ["no_python", "no_cartesian",
+    ("boilerplate_segments_docs", ["arrow_kernel", "no_cartesian",
                                    "pruned_scan"]),
     ("w_multi_horizon_events", ["no_python", "single_group_shuffle",
                                 "pruned_scan"]),
@@ -358,7 +360,7 @@ def check(name: str, plan: str, props: list[str]) -> list[str]:
                                     or "BroadcastNestedLoopJoin" in plan):
         problems.append("cartesian / broadcast-NL join present")
     if "no_python" in props:
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        for marker in PYTHON_NODES:
             if marker in plan:
                 problems.append(f"Python tier in plan: {marker}")
     if "no_exchange" in props and "Exchange" in plan:
