@@ -35,11 +35,14 @@ the zero vector (norm 0, so every cosine against it is the 0.0 the
 Catalyst ``_cos`` CASE yields); a non-NULL vector of the wrong length
 raises ``ValueError`` (the Catalyst ``zip_with`` padding is not replicated).
 
-Driver/broadcast discipline: the only driver-side reads are of sides the
-legacy plans already collected for broadcast (the query set of the brute-force
-baseline was a ``BroadcastNestedLoopJoin`` build side; IVF centroids are
-``n_cells`` rows).  Each helper takes rows, not DataFrames, so callers keep
-those reads explicit and bounded.
+Driver discipline: the only driver-side reads are the small sides — the
+query set of the brute-force top-k, the ``n_cells`` IVF centroids, the one
+MMR anchor row.  Each helper takes rows, not DataFrames, so callers keep
+those reads explicit.  The query side is tiled in blocks of
+``_Q_BLOCK`` queries, so a batch never holds more than (batch x
+``_Q_BLOCK``) pair scores whatever the query count; tiling splits only the
+query axis, so every cosine keeps its fold order and every per-query top-k
+is unchanged.
 """
 
 from __future__ import annotations
@@ -128,16 +131,17 @@ def fold_dot_mat(x: np.ndarray, q: np.ndarray) -> np.ndarray:
     return acc
 
 
-def list_to_mat(col: pa.Array, dim: int) -> np.ndarray:
+def list_to_mat(col: pa.Array, dim: int | None = None) -> np.ndarray:
     """Fixed-width list<float|double> column -> (n, dim) float64 matrix
-    (float32 -> float64 widening is exact).
+    (float32 -> float64 widening is exact).  ``dim=None`` takes the longest
+    row's length, so the rows must agree among themselves.
 
     NULL or empty rows become zero vectors — their fold-norm is then 0, so
     downstream ``_cos`` replicas yield the same 0.0 the Catalyst expression
     yields for them (zero/absent magnitude => no direction).  A non-null row
-    with 0 < len != dim raises: the legacy ``zip_with`` padding semantics for
-    ragged vectors (NULL cosine) are not replicated here, and silence would
-    be worse than a loud failure.
+    with 0 < len != dim is ragged and raises ``ValueError("ragged vector
+    ...")``: ``zip_with`` would pad it with NULLs and give a NULL cosine,
+    and silence would be worse than a loud failure.
     """
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
@@ -146,6 +150,8 @@ def list_to_mat(col: pa.Array, dim: int) -> np.ndarray:
     if col.null_count:
         valid = np.asarray(col.is_valid())
         sizes = np.where(valid, sizes, 0)
+    if dim is None:
+        dim = int(sizes.max(initial=0))
     bad = (sizes != 0) & (sizes != dim)
     if bad.any():
         raise ValueError(f"ragged vector rows (len not in {{0, {dim}}}): "
@@ -191,6 +197,20 @@ def _id_ddl(q_ids: pa.Array) -> str:
     return from_arrow_type(q_ids.type).simpleString()
 
 
+# queries per tile of the pair arithmetic: a batch of up to 10k corpus rows
+# then holds ~80 MB per (batch x tile) float64 array, whatever the query count
+_Q_BLOCK = 1024
+
+
+def _emit(parts, q_ids: pa.Array):
+    """Concatenate per-query ``(corpus rows, query index, score)`` parts
+    into the runner's ``(rows, [q ids, scores])`` form (None when empty)."""
+    if not parts:
+        return None
+    rows, qi, score = (np.concatenate(p) for p in zip(*parts))
+    return rows, [q_ids.take(qi), score]
+
+
 def cosine_topk_candidates(
     corpus,
     q_ids: pa.Array,
@@ -202,14 +222,16 @@ def cosine_topk_candidates(
     dim: int,
 ):
     """Per-batch exact top-k cosine candidates of ``corpus`` rows against the
-    broadcast query matrix.  Emits ``(n_vec_id, q_vec_id, cos_raw)`` where
-    ``cos_raw`` is bit-identical to the Catalyst
-    ``_cos(_dot(qv, cv), qn, cn)`` double and both ids keep their types
-    (``q_ids`` is the collected Arrow id column).  Guarantee: the union of
+    query matrix ``q_mat`` (n_queries x ``dim``; ``q_ids`` is the collected
+    Arrow id column).  Emits ``(n_vec_id, q_vec_id, cos_raw)`` where
+    ``cos_raw`` is bit-identical to the Catalyst ``_cos(_dot(qv, cv), qn,
+    cn)`` double and both ids keep their types.  Guarantee: the union of
     emitted rows over all batches contains the global top-k per query under
     (``round(cos_raw, round_dp)`` DESC, n_vec_id ASC) — each batch emits its
     *own* exact top-k under that comparator, and any global winner must be a
-    batch winner.
+    batch winner.  Corpus vectors must be ``dim`` long; ``dim = 0`` (every
+    query vector NULL or empty) makes every query the zero vector at the
+    corpus's width, so every cosine is 0.0.
     """
     import pyspark.sql.functions as F  # noqa: PLC0415 (kernel module stays importable without spark)
 
@@ -221,40 +243,36 @@ def cosine_topk_candidates(
     band = (1.5 * 10.0 ** (-round_dp)) if round_dp is not None else 0.0
 
     def fn(id_arr, vec):
-        nb = len(vec)
-        if nq == 0:
-            return None
         ids = id_values(id_arr)
-        x = list_to_mat(vec, dim)
+        x = list_to_mat(vec, dim or None)
+        q_all = q_mat if dim else np.zeros((nq, x.shape[1]))
         cn = fold_norm(x)
-        dot = fold_dot_mat(x, q_mat)                     # (nb, nq)
-        denom = cn[:, None] * qn[None, :]                # an*bn (commut.)
-        valid = (qn[None, :] > 0) & (cn[:, None] > 0)
-        scores = np.where(valid, np.divide(dot, denom,
-                                           out=np.zeros_like(dot),
-                                           where=denom != 0), 0.0)
-        # self-pair exclusion: sentinel below any real cosine
-        self_mask = ids[:, None] == q_key[None, :]
-        scores[self_mask] = -np.inf
+        nb = len(ids)
         kk = min(k, nb)
-        cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
-        keep = scores >= np.maximum(cut - band, -1.0)
-        keep &= ~self_mask
-        orow, oq, oc = [], [], []
-        rows, cols = np.nonzero(keep.T)  # rows=query idx, cols=corpus idx
-        for qi in range(nq):
-            sel = cols[rows == qi]
-            if len(sel) == 0:
-                continue
-            s = scores[sel, qi]
-            top = _trim_topk(s, ids[sel], k, round_dp)
-            orow.append(sel[top])
-            oq.append(np.full(len(top), qi))
-            oc.append(s[top])
-        if not orow:
-            return None
-        return np.concatenate(orow), [q_ids.take(np.concatenate(oq)),
-                                      np.concatenate(oc)]
+        parts = []
+        for lo in range(0, nq, _Q_BLOCK):
+            qs = slice(lo, lo + _Q_BLOCK)
+            dot = fold_dot_mat(x, q_all[qs])                 # (nb, block)
+            denom = cn[:, None] * qn[None, qs]               # an*bn (commut.)
+            valid = (qn[None, qs] > 0) & (cn[:, None] > 0)
+            scores = np.where(valid, np.divide(dot, denom,
+                                               out=np.zeros_like(dot),
+                                               where=denom != 0), 0.0)
+            # self-pair exclusion: sentinel below any real cosine
+            self_mask = ids[:, None] == q_key[None, qs]
+            scores[self_mask] = -np.inf
+            cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
+            keep = scores >= np.maximum(cut - band, -1.0)
+            keep &= ~self_mask
+            rows, cols = np.nonzero(keep.T)  # rows=query idx, cols=corpus idx
+            for qi in range(scores.shape[1]):
+                sel = cols[rows == qi]
+                if len(sel) == 0:
+                    continue
+                s = scores[sel, qi]
+                top = _trim_topk(s, ids[sel], k, round_dp)
+                parts.append((sel[top], np.full(len(top), lo + qi), s[top]))
+        return _emit(parts, q_ids)
 
     # the source is typically one small parquet split; the runner spreads it
     # so the kernel runs on every core (round-robin exchange of ids+vectors)
@@ -277,7 +295,7 @@ def l2_int_topk_candidates(
     dim: int,
 ):
     """Per-batch exact top-k by (int64 squared-L2 ASC, id ASC) of ``coded``
-    rows against the broadcast query code matrix.  All-integer arithmetic:
+    rows against the query code matrix.  All-integer arithmetic:
     no rounding or fold-order discipline needed at all — any association
     order yields the identical distances, so per-batch exact top-k is
     trivially a superset-free candidate set (each batch emits exactly its
@@ -291,36 +309,32 @@ def l2_int_topk_candidates(
 
     def fn(id_arr, code):
         nb = len(code)
-        if nq == 0:
-            return None
         ids = id_values(id_arr)
         vals = np.asarray(code.flatten(), dtype=np.int64)
         if vals.size != nb * dim:
             raise ValueError("ragged code rows")
         x = vals.reshape(nb, dim)
-        dist = np.zeros((nb, nq), dtype=np.int64)
-        for j in range(dim):
-            d = x[:, j, None] - q_mat[None, :, j]
-            dist += d * d
-        self_mask = ids[:, None] == q_key[None, :]
-        dist[self_mask] = np.iinfo(np.int64).max
         kk = min(k, nb)
-        cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
-        orow, oq, oc = [], [], []
-        for qi in range(nq):
-            sel = np.nonzero((dist[:, qi] <= cut[qi])
-                             & ~self_mask[:, qi])[0]
-            if len(sel) == 0:
-                continue
-            dd = dist[sel, qi]
-            top = np.lexsort((ids[sel], dd))[:k]
-            orow.append(sel[top])
-            oq.append(np.full(len(top), qi))
-            oc.append(dd[top])
-        if not orow:
-            return None
-        return np.concatenate(orow), [q_ids.take(np.concatenate(oq)),
-                                      np.concatenate(oc)]
+        parts = []
+        for lo in range(0, nq, _Q_BLOCK):
+            qs = slice(lo, lo + _Q_BLOCK)
+            q = q_mat[qs]
+            dist = np.zeros((nb, len(q)), dtype=np.int64)
+            for j in range(dim):
+                d = x[:, j, None] - q[None, :, j]
+                dist += d * d
+            self_mask = ids[:, None] == q_key[None, qs]
+            dist[self_mask] = np.iinfo(np.int64).max
+            cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
+            for qi in range(dist.shape[1]):
+                sel = np.nonzero((dist[:, qi] <= cut[qi])
+                                 & ~self_mask[:, qi])[0]
+                if len(sel) == 0:
+                    continue
+                dd = dist[sel, qi]
+                top = np.lexsort((ids[sel], dd))[:k]
+                parts.append((sel[top], np.full(len(top), lo + qi), dd[top]))
+        return _emit(parts, q_ids)
 
     return run_kernel(coded, fn, ["n_vec_id", code_col],
                       f"q_vec_id {_id_ddl(q_ids)}, dist_sq long",
@@ -448,16 +462,19 @@ def _cos_vs(x: np.ndarray, nrm: np.ndarray, qv: np.ndarray, qn: float
 def mmr_rel_kernel(df, id_col: str, vec_col: str, qv: list, dim: int):
     """Kernel emitting ``(vec_id, v array<double>, nrm, rel_raw)`` —
     the relevance pass of ``mmr_select`` (cosine of every pool row against
-    the query anchor), bit-identical folds."""
+    the query anchor), bit-identical folds.  ``dim = 0`` (a NULL or empty
+    anchor) is the zero vector at the pool's width: every ``rel_raw`` is
+    0.0."""
     import pyspark.sql.functions as F  # noqa: PLC0415
 
     q = np.asarray(qv, dtype=np.float64)
     qn = float(fold_norm(q[None, :])[0])
 
     def fn(vec):
-        x = list_to_mat(vec, dim)
+        x = list_to_mat(vec, dim or None)
         nrm = fold_norm(x)
-        return [mat_to_list_array(x), nrm, _cos_vs(x, nrm, q, qn)]
+        qx = q if dim else np.zeros(x.shape[1])
+        return [mat_to_list_array(x), nrm, _cos_vs(x, nrm, qx, qn)]
 
     return run_kernel(df, fn, [vec_col],
                       "v array<double>, nrm double, rel_raw double",
@@ -495,9 +512,7 @@ def _unpack_tile(col: pa.Array, row: int
     matrix).  NULL vectors read as zero vectors; ragged ones raise."""
     structs = col[row].values           # StructArray slice, zero-copy
     ids = structs.field("id")
-    v = structs.field("v")
-    sizes = np.diff(v.offsets.to_numpy())
-    return ids, id_values(ids), list_to_mat(v, int(sizes.max(initial=0)))
+    return ids, id_values(ids), list_to_mat(structs.field("v"))
 
 
 def cell_pair_candidates(

@@ -25,10 +25,11 @@ Scale shape:
   expressions; at embedding dims (64-4096) a single whole-stage-codegen
   pass is the right plan.
 - Quantization itself is a zero-shuffle per-row array projection.
-- The top-k probe broadcasts the (small) query side against the quantized
-  corpus — same broadcast-NL shape as `similarity.py cosine_topk`, but
-  moving 1/4 the bytes; `WindowGroupLimit` caps the per-task sort at `k`
-  rows per query.
+- The top-k probe collects the (small) query codes once and streams the
+  quantized corpus through a numpy Arrow kernel that tiles the queries in
+  fixed blocks — the same shape as `similarity.py cosine_topk`, on exact
+  integers; `WindowGroupLimit` caps the per-task sort at `k` rows per
+  query.
 
 Quantization math (engine-portable by construction): for dimension `j`
 with corpus range `[mn_j, mx_j]`,
@@ -90,13 +91,6 @@ def quantize(df: DataFrame, vec_col: str = "v", dim: int = 64,
     return joined.select(*df.columns, codes.alias("q"))
 
 
-def int_l2_sq(a: Column, b: Column) -> Column:
-    """Exact squared L2 distance between two int code arrays, as bigint."""
-    d = F.zip_with(a, b, lambda x, y: (x - y).cast("bigint")
-                   * (x - y).cast("bigint"))
-    return F.aggregate(d, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-
-
 def quantized_topk(
     embeddings: DataFrame,
     query_pred: Column,
@@ -111,44 +105,31 @@ def quantized_topk(
     splits off the rows matching ``query_pred`` as queries, and ranks
     corpus candidates by exact integer squared-L2 (ties by neighbor id).
     Returns ``(q_vec_id, n_vec_id, dist_sq)``.
+
+    The query codes are collected once; the (|corpus| x |queries|) integer
+    distance arithmetic runs as a numpy Arrow kernel over the corpus
+    batches, the queries tiled in fixed blocks so memory stays bounded
+    whatever their count.  All-integer squared-L2, so any association
+    order is value-identical and per-batch exact top-k prunes candidates
+    with no rounding discipline needed.
     """
+    import numpy as np  # noqa: PLC0415
+
+    from fs2_data_spark.functions import veckernels as VK
     base = embeddings.select(F.col(id_col).alias("id"),
                              _as_double(F.col(vec_col)).alias("v"),
                              query_pred.alias("is_q"))
     coded = quantize(base, "v", dim)
-    # the (|corpus| x |queries|) integer distance arithmetic as a numpy
-    # Arrow kernel (guide §4.2): all-integer squared-L2, so any association
-    # order is value-identical and per-batch exact top-k prunes candidates
-    # with no rounding discipline needed; the query collect is the BNLJ
-    # broadcast build side of the Catalyst plan below, which still serves
-    # query sets above 200k rows
-    import numpy as np  # noqa: PLC0415
-
-    from fs2_data_spark.functions import veckernels as VK
-    q_rows = coded.filter("is_q").select("id", "q").limit(200_001).toArrow()
-    if q_rows.num_rows <= 200_000:
-        q_codes = np.array(q_rows.column(1).to_pylist(),
-                           dtype=np.int64).reshape(-1, dim)
-        cand = VK.l2_int_topk_candidates(
-            coded, q_rows.column(0).combine_chunks(), q_codes, "id", "q", k,
-            dim)
-        w = Window.partitionBy("q_vec_id").orderBy(
-            F.col("dist_sq").asc(), F.col("n_vec_id").asc())
-        return (cand.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k)
-                .select("q_vec_id", "n_vec_id", "dist_sq"))
-    q = (coded.filter("is_q")
-              .select(F.col("id").alias("q_vec_id"), F.col("q").alias("qq")))
-    c = coded.select(F.col("id").alias("n_vec_id"), F.col("q").alias("cq"))
-    pairs = (F.broadcast(q)
-             .join(c, F.col("n_vec_id") != F.col("q_vec_id"))
-             .select("q_vec_id", "n_vec_id",
-                     int_l2_sq(F.col("qq"), F.col("cq")).alias("dist_sq")))
+    q_rows = coded.filter("is_q").select("id", "q").toArrow()
+    q_codes = np.array(q_rows.column(1).to_pylist(),
+                       dtype=np.int64).reshape(-1, dim)
+    cand = VK.l2_int_topk_candidates(
+        coded, q_rows.column(0).combine_chunks(), q_codes, "id", "q", k, dim)
     w = Window.partitionBy("q_vec_id").orderBy(
         F.col("dist_sq").asc(), F.col("n_vec_id").asc())
-    return (pairs.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") <= k)
-                 .select("q_vec_id", "n_vec_id", "dist_sq"))
+    return (cand.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .select("q_vec_id", "n_vec_id", "dist_sq"))
 
 
 def dequantize_error(coded: DataFrame, vec_col: str = "v", dim: int = 64,

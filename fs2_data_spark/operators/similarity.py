@@ -1,10 +1,19 @@
 """Similarity search over embedding columns (``array<float>``).
 
-``cosine_topk`` is the exact baseline: broadcast the (small) query set against
-the corpus and rank by cosine. At 100 TB the corpus side stays partitioned
-and only queries are broadcast — the join is a BroadcastNestedLoopJoin whose
-cost is (|corpus| x |queries|) vectorized JVM arithmetic, embarrassingly
-parallel across corpus partitions.
+``cosine_topk`` is the exact baseline: the (small) query set is collected
+once and every corpus batch is ranked against it by cosine in a numpy Arrow
+kernel (``functions/veckernels.py``, queries tiled in fixed blocks). At
+100 TB the corpus side stays partitioned — the cost is (|corpus| x
+|queries|) vectorized arithmetic, embarrassingly parallel across corpus
+partitions.
+
+One implementation per operator: the brute-force top-k, the IVF cell
+assignment and MMR's cosine passes run only their Arrow kernels, which
+replicate the Catalyst folds bit for bit (the frozen DuckDB oracles pin
+them).  Their input rules are the kernels' (``veckernels.list_to_mat``): a
+NULL or empty vector is the zero vector (cosine 0.0), a ragged vector
+raises ``ValueError("ragged vector ...")``, and ids of any type ride
+through.
 
 ``lsh_bucket_topk`` is the scale path: random-hyperplane signatures (LSH)
 bucket the corpus so each query only scans its bucket — turning the full scan
@@ -43,11 +52,6 @@ def _cos(dot: F.Column, an: F.Column, bn: F.Column) -> F.Column:
     return F.when((an > 0) & (bn > 0), dot / (an * bn)).otherwise(F.lit(0.0))
 
 
-# query sets above this are not "the small broadcast side" any more; the
-# Catalyst BNLJ path (which would also have to broadcast them) takes over
-_KERNEL_MAX_QUERIES = 200_000
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -61,55 +65,29 @@ def cosine_topk(
     The ranking key is the *rounded* cosine (+ id tie-break) so results are
     deterministic under floating-point summation-order differences.
 
-    The (|corpus| x |queries|) pair arithmetic runs as a numpy Arrow kernel
-    (guide §4.2) whenever the query side is collectible (it is the BNLJ
-    *broadcast build side* of the Catalyst plan, so the driver read is the
-    same bytes the broadcast ships) and its vectors share one dimension:
-    measured 49 s -> ~1 s at sf1 (400 x 20k pairs of 64-dim interpreted-HOF
-    folds).  The kernel emits per-batch exact top-k candidates under the
-    (rounded cos DESC, id ASC) comparator with bit-identical raw cosines
-    (fold-order replica, see ``functions/veckernels.py``) and ids of any
-    type; JVM ``F.round`` + one window over the tiny candidate set produce
-    the final rows — value-identical to the Catalyst plan (pinned by tests +
-    the frozen DuckDB oracle), which still serves query sets above
-    ``_KERNEL_MAX_QUERIES`` and ragged query dimensions.
+    The query side is collected once; the (|corpus| x |queries|) pair
+    arithmetic runs as a numpy Arrow kernel over the corpus batches, the
+    queries tiled in fixed blocks so memory stays bounded whatever their
+    count (measured 49 s -> ~1 s at sf1 against the interpreted-HOF folds
+    of 400 x 20k pairs of 64-dim vectors).  The kernel emits per-batch
+    exact top-k candidates under the (rounded cos DESC, id ASC) comparator
+    with bit-identical raw cosines (fold-order replica, see
+    ``functions/veckernels.py``) and ids of any type; JVM ``F.round`` + one
+    window over the tiny candidate set produce the final rows (pinned by
+    tests + the frozen DuckDB oracle).  A NULL or empty vector on either
+    side is the zero vector (cosine 0.0); a ragged vector raises
+    ``ValueError("ragged vector ...")``.
     """
-    import numpy as np
-
     from fs2_data_spark.functions import veckernels as VK
-    rows = (queries.select(id_col, vec_col)
-            .limit(_KERNEL_MAX_QUERIES + 1).toArrow())
-    vecs = rows.column(1).to_pylist()
-    dims = {len(v) for v in vecs if v is not None}
-    if rows.num_rows <= _KERNEL_MAX_QUERIES and len(dims) == 1:
-        dim = dims.pop()
-        q_mat = np.array([v if v is not None and len(v) == dim
-                          else [0.0] * dim for v in vecs], dtype=np.float64)
-        cand = VK.cosine_topk_candidates(
-            corpus, rows.column(0).combine_chunks(), q_mat, id_col, vec_col,
-            k, round_dp, dim)
-        cos = F.col("cos_raw")
-        if round_dp is not None:
-            cos = F.round(cos, round_dp)
-        pairs = cand.select("q_vec_id", "n_vec_id", cos.alias("cos_sim"))
-        w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"),
-                                                   "n_vec_id")
-        return (pairs.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= k).drop("__rn"))
-    # Catalyst plan: stage the double-cast vector as its own projection:
-    # interpreted HOFs have no common-subexpression elimination, so
-    # norm+dot would otherwise re-evaluate the cast array per use
-    q = (queries.select(F.col(id_col).alias("q_vec_id"),
-                        _as_double(F.col(vec_col)).alias("qv"))
-         .select("q_vec_id", "qv", _norm(F.col("qv")).alias("qn")))
-    c = (corpus.select(F.col(id_col).alias("n_vec_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
-         .select("n_vec_id", "cv", _norm(F.col("cv")).alias("cn")))
-    cos = _cos(_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
+    rows = queries.select(id_col, vec_col).toArrow()
+    q_mat = VK.list_to_mat(rows.column(1))
+    cand = VK.cosine_topk_candidates(
+        corpus, rows.column(0).combine_chunks(), q_mat, id_col, vec_col,
+        k, round_dp, q_mat.shape[1])
+    cos = F.col("cos_raw")
     if round_dp is not None:
         cos = F.round(cos, round_dp)
-    pairs = (F.broadcast(q).join(c, F.col("n_vec_id") != F.col("q_vec_id"))
-             .select("q_vec_id", "n_vec_id", cos.alias("cos_sim")))
+    pairs = cand.select("q_vec_id", "n_vec_id", cos.alias("cos_sim"))
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "n_vec_id")
     return (pairs.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k).drop("__rn"))
@@ -157,10 +135,10 @@ def ivf_index(
 
     Centroid init is hash-seeded (rows with ``xxhash64(id) % (n/n_cells)
     == 0``-style sampling), then ``iters`` Lloyd steps run as groupBy
-    averages — every stage is a broadcast join (centroids are tiny) or one
-    hash aggregation, so index build is linear with no driver-side loops
-    over data. Returns ``(centroids, assigned)`` where ``assigned`` adds a
-    ``cell`` column to the corpus.
+    averages — every stage is one kernel pass against the (tiny) centroid
+    set or one hash aggregation, so index build is linear with no
+    driver-side loops over data. Returns ``(centroids, assigned)`` where
+    ``assigned`` adds a ``cell`` column to the corpus.
 
     ``canonical=True`` makes the whole build *engine-portable* so an
     ANSI-SQL oracle can reproduce it bit-for-bit (VERDICT r04 #4): the seed
@@ -169,9 +147,15 @@ def ivf_index(
     (order-independent, bit-identical across engines) rounded to 9 dp, and
     assignment distances are rounded to 6 dp before the argmin so a
     sub-ulp cross-engine summation difference cannot flip a cell choice
-    (tie within the quantum breaks on cell id in both engines). The plan
-    shape is unchanged — same broadcasts, same single aggregation per step.
+    (tie within the quantum breaks on cell id in both engines).
+
+    Assignment — the (|corpus| x n_cells) squared-distance folds — runs as
+    a numpy Arrow kernel (bit-identical fold order + rounded-argmin trim,
+    see ``functions/veckernels.py``) against the ``n_cells`` centroid rows
+    collected each step.  A NULL or empty vector (seed or corpus) is the
+    zero vector; a ragged one raises ``ValueError("ragged vector ...")``.
     """
+    from fs2_data_spark.functions import veckernels as VK
     c = corpus.select(F.col(id_col).alias("id"),
                       _as_double(F.col(vec_col)).alias("v"))
     # deterministic spread-out seeds: hash-order top-k — planned as
@@ -180,43 +164,23 @@ def ivf_index(
     seed_hash = (F.pmod(F.col("id").cast("bigint") * 2_654_435_761,
                         F.lit(1_000_003)) if canonical
                  else F.xxhash64(F.col("id").cast("string")))
-    seeds = (c.orderBy(seed_hash, "id").limit(n_cells).collect())
+    seeds = VK.list_to_mat(c.orderBy(seed_hash, "id").limit(n_cells)
+                           .select("v").toArrow().column(0))
     spark = corpus.sparkSession
     cents = spark.createDataFrame(
-        [(i, list(r.v)) for i, r in enumerate(seeds)], "cell int, cv array<double>")
+        [(i, v) for i, v in enumerate(seeds.tolist())],
+        "cell int, cv array<double>")
 
-    # assignment strategy: the (|corpus| x n_cells) distance folds run as a
-    # numpy Arrow kernel (bit-identical fold order + rounded-argmin trim,
-    # see functions/veckernels.py) — the centroid collect below reads the
-    # same n_cells rows the broadcast ships.  Ragged dimensions (seeds or
-    # centroids) take the Catalyst broadcast-NL plan.
-    dims = {len(r.v) for r in seeds if r.v is not None}
-    kernel_dim = dims.pop() if len(dims) == 1 else None
-
-    def assign(df, cents_df):
-        if kernel_dim is not None:
-            from fs2_data_spark.functions import veckernels as VK
-            cent_rows = [(r["cell"], list(r["cv"]))
-                         for r in cents_df.collect()]
-            if all(len(v) == kernel_dim for _, v in cent_rows):
-                return VK.ivf_assign_kernel(df, cent_rows, "id", "v",
-                                            kernel_dim, canonical)
-        dist = F.aggregate(
-            F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        if canonical:
-            dist = F.round(dist, 6)
-        scored = (df.crossJoin(F.broadcast(cents_df))
-                  .select("id", "v", "cell", dist.alias("d")))
-        ww = Window.partitionBy("id").orderBy("d", "cell")
-        return (scored.withColumn("__rn", F.row_number().over(ww))
-                .filter(F.col("__rn") == 1).drop("__rn", "d"))
+    def assign(cents_df):
+        cent_rows = [(r["cell"], list(r["cv"])) for r in cents_df.collect()]
+        return VK.ivf_assign_kernel(c, cent_rows, "id", "v", seeds.shape[1],
+                                    canonical)
 
     mean = (F.round(F.sum(F.col("x").cast("decimal(27,12)")).cast("double")
                     / F.count(F.lit(1)), 9)
             if canonical else F.avg("x"))
     for _ in range(iters):
-        assigned = assign(c, cents)
+        assigned = assign(cents)
         # Lloyd step: per-cell mean vector (posexplode + groupBy, all JVM)
         exploded = assigned.select(
             "cell", F.posexplode(F.col("v")).alias("j", "x"))
@@ -225,7 +189,7 @@ def ivf_index(
                  .agg(F.array_sort(F.collect_list(F.struct("j", "m"))).alias("s"))
                  .select("cell", F.transform("s", lambda t: t.getField("m")).alias("cv")))
         cents = means
-    assigned = assign(c, cents)
+    assigned = assign(cents)
     return cents, assigned
 
 
@@ -509,96 +473,61 @@ def mmr_select(
     lam literals are repr-embedded).  If the pool has fewer than ``k``
     candidates both engines degrade identically (empty tail steps).
 
-    Scale notes (100 TB): each step is one broadcast of the single
-    selected vector against the candidate pool (map-side, no shuffle)
-    plus one ``TakeOrderedAndProject`` top-1 (plan-pinned, never a
-    global sort); lineage grows linearly in ``k`` — localCheckpoint
-    every few steps on a real cluster.  Relevance pre-ranking can cap
-    the pool first when k << N (disclosed trade; not done here so the
-    oracle covers the full pool).
+    The query row may be NULL or empty: it is then the zero vector, so
+    every ``rel`` is 0.0 and the picks follow diversity alone.  A missing
+    ``query_id`` gives no rows; a ragged vector raises ``ValueError("ragged
+    vector ...")``.
+
+    Scale notes (100 TB): every cosine pass is a numpy Arrow kernel — one
+    relevance pass over the pool against the query row, then per step one
+    running-max update against the single selected vector (map-side, no
+    shuffle) — and each step's top-1 is one JVM ``TakeOrderedAndProject``
+    (never a global sort).  Relevance pre-ranking can cap the pool first
+    when k << N (disclosed trade; not done here so the oracle covers the
+    full pool).
     """
     lam = float(lam)
     oml = 1.0 - lam
-    # all k cosine passes as numpy Arrow kernels (guide §4.2) with the
-    # module's round-before-rank contract intact: rel is JVM F.round over
-    # the bit-exact raw cosine; the _ms carry uses
-    # veckernels.spark_round_vec (proven == F.round); each step's top-1
-    # stays a JVM TakeOrdered; per-step collects are 1-row planning reads
-    # (the Catalyst plan broadcasts the same single row).  A query row
-    # that is missing or has a NULL/empty vector takes the Catalyst plan.
+    # the module's round-before-rank contract intact: rel is JVM F.round
+    # over the bit-exact raw cosine; the _ms carry uses
+    # veckernels.spark_round_vec (proven == F.round); per-step collects are
+    # 1-row reads of the pick
     from fs2_data_spark.functions import veckernels as VK
     spark = emb.sparkSession
-    qrow = (emb.filter(F.col(id_col) == int(query_id))
-            .select(_as_double(F.col(vec_col)).alias("qv")).collect())
-    qv = list(qrow[0][0]) if qrow and qrow[0][0] is not None else None
-    if qv:
-        dim = len(qv)
-        pool = (emb.filter(F.col(id_col) != int(query_id))
-                .select(id_col, vec_col))
-        aug = VK.mmr_rel_kernel(pool, id_col, vec_col, qv, dim)
-        # localCheckpoint per stage: each greedy step both collects a
-        # 1-row top and feeds the next kernel — without truncation the
-        # k-step lineage re-runs every earlier kernel per step (O(k^2)
-        # pool passes, measured slower than the interpreted plan)
-        cand = aug.select("vec_id", "v", "nrm",
-                          F.round("rel_raw", round_dp).alias("rel"),
-                          F.lit(0.0).alias("_ms")).localCheckpoint()
-        picks_rows = []
-        for step in range(1, int(k) + 1):
-            c2 = cand.withColumn(
-                "_mmr",
-                F.lit(lam) * F.col("rel") - F.lit(oml) * F.col("_ms"))
-            sel = (c2.orderBy(F.col("_mmr").desc(), F.col("vec_id"))
-                   .limit(1)
-                   .select("vec_id", "rel",
-                           F.round("_mmr", 6).alias("mmr"), "v", "nrm")
-                   .collect())
-            if not sel:
-                break
-            r = sel[0]
-            picks_rows.append((step, r["vec_id"], r["rel"], r["mmr"]))
-            if step < int(k):
-                cand = VK.mmr_ms_update_kernel(
-                    cand.filter(F.col("vec_id") != F.lit(r["vec_id"])),
-                    list(r["v"]), float(r["nrm"]), round_dp,
-                    dim).localCheckpoint()
-        idt = emb.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            picks_rows, f"step int, vec_id {idt}, rel double, mmr double")
-    base = emb.select(F.col(id_col).alias("vec_id"),
-                      _as_double(F.col(vec_col)).alias("_v"))
-    n = base.select("vec_id", "_v", _norm(F.col("_v")).alias("_nrm"))
-    q = (n.filter(F.col("vec_id") == int(query_id))
-         .select(F.col("_v").alias("_qv"), F.col("_nrm").alias("_qn")))
-    cand = (n.filter(F.col("vec_id") != int(query_id))
-            .crossJoin(F.broadcast(q))
-            .select("vec_id", "_v", "_nrm",
-                    F.round(_cos(_dot(F.col("_v"), F.col("_qv")),
-                                 F.col("_nrm"), F.col("_qn")),
-                            round_dp).alias("rel"),
-                    F.lit(0.0).alias("_ms")))
+    idt = emb.schema[id_col].dataType.simpleString()
+    schema = f"step int, vec_id {idt}, rel double, mmr double"
+    qid = F.lit(query_id)
+    qrow = emb.filter(F.col(id_col) == qid).select(vec_col).limit(1).toArrow()
+    if qrow.num_rows == 0:
+        return spark.createDataFrame([], schema)
+    qv = VK.list_to_mat(qrow.column(0))[0]
+    pool = emb.filter(F.col(id_col) != qid).select(id_col, vec_col)
+    aug = VK.mmr_rel_kernel(pool, id_col, vec_col, qv.tolist(), len(qv))
+    # localCheckpoint per stage: each greedy step both collects a 1-row top
+    # and feeds the next kernel — without truncation the k-step lineage
+    # re-runs every earlier kernel per step (O(k^2) pool passes)
+    cand = aug.select("vec_id", "v", "nrm",
+                      F.round("rel_raw", round_dp).alias("rel"),
+                      F.lit(0.0).alias("_ms")).localCheckpoint()
     picks = []
     for step in range(1, int(k) + 1):
         c2 = cand.withColumn(
             "_mmr", F.lit(lam) * F.col("rel") - F.lit(oml) * F.col("_ms"))
-        sel = c2.orderBy(F.col("_mmr").desc(), F.col("vec_id")).limit(1)
-        picks.append(sel.select(F.lit(step).alias("step"), "vec_id", "rel",
-                                F.round("_mmr", 6).alias("mmr")))
-        sv = sel.select(F.col("vec_id").alias("_sid"),
-                        F.col("_v").alias("_sv"),
-                        F.col("_nrm").alias("_sn"))
-        cand = (cand.crossJoin(F.broadcast(sv))
-                .filter(F.col("vec_id") != F.col("_sid"))
-                .select("vec_id", "_v", "_nrm", "rel",
-                        F.greatest(
-                            F.col("_ms"),
-                            F.round(_cos(_dot(F.col("_v"), F.col("_sv")),
-                                         F.col("_nrm"), F.col("_sn")),
-                                    round_dp)).alias("_ms")))
-    out = picks[0]
-    for p in picks[1:]:
-        out = out.unionByName(p)
-    return out
+        sel = (c2.orderBy(F.col("_mmr").desc(), F.col("vec_id"))
+               .limit(1)
+               .select("vec_id", "rel", F.round("_mmr", 6).alias("mmr"),
+                       "v", "nrm")
+               .collect())
+        if not sel:
+            break
+        r = sel[0]
+        picks.append((step, r["vec_id"], r["rel"], r["mmr"]))
+        if step < int(k):
+            cand = VK.mmr_ms_update_kernel(
+                cand.filter(F.col("vec_id") != F.lit(r["vec_id"])),
+                list(r["v"]), float(r["nrm"]), round_dp,
+                len(r["v"])).localCheckpoint()
+    return spark.createDataFrame(picks, schema)
 
 
 def mmr_oracle_sql(

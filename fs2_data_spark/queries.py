@@ -4991,22 +4991,37 @@ _STREAM_QUERY_SEQ = [0]
 _STAGED_STREAM_DIRS: set[str] = set()
 
 
+def _stream_source_path(sf_dir: str, tag: str) -> str:
+    """Staging path of one streaming source: the process id plus a stable
+    md5 of tag+sf_dir (NOT the salted builtin ``hash``), so it is the same
+    for every call in one process and never shared by two processes staging
+    the same source at once."""
+    import hashlib  # noqa: PLC0415
+    import os  # noqa: PLC0415
+    import tempfile  # noqa: PLC0415
+
+    digest = hashlib.md5(f"{tag}|{sf_dir}".encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(),
+                        f"fs2_stream_src_{os.getpid()}_{tag}_{digest}")
+
+
 def _stage_stream_source(df: DataFrame, sf_dir: str, tag: str) -> str:
     """Stage a bounded file-source snapshot for a streaming smoke.
 
-    Deterministic naming (stable md5 of tag+sf_dir — NOT the salted builtin
-    ``hash``) and written exactly once per process regardless of what a
-    previous process left under the same path: a stale or partial snapshot
-    from an earlier run can never leak into the stream (VERDICT r05 #2
-    instrumentation — the old ``_SUCCESS``-guarded ``hash(sf_dir)`` path
-    reused whatever an earlier process had staged)."""
-    import hashlib  # noqa: PLC0415
+    Written exactly once per process regardless of what an earlier process
+    left under the same path, so a stale or partial snapshot can never leak
+    into the stream (VERDICT r05 #2), and removed when the process exits.
+    The path is per process (:func:`_stream_source_path`), so two processes
+    running the same smoke at once never overwrite each other's files
+    mid-stream (``FAILED_READ_FILE.FILE_NOT_EXIST``)."""
+    import atexit  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
 
-    digest = hashlib.md5(f"{tag}|{sf_dir}".encode()).hexdigest()[:16]
-    src = f"/tmp/fs2_stream_src_{tag}_{digest}"
+    src = _stream_source_path(sf_dir, tag)
     if src not in _STAGED_STREAM_DIRS:
         df.write.mode("overwrite").parquet(src)
         _STAGED_STREAM_DIRS.add(src)
+        atexit.register(shutil.rmtree, src, True)
     return src
 
 

@@ -1,9 +1,11 @@
 """The one Arrow kernel runner (``functions/arrow_kernel.run_kernel``, and
 its per-row form ``run_rows``) and the contracts it gives every kernel: ids
 of any type ride through uncast, astral text hashes like the Catalyst
-expressions, NULL vectors project to NULL, a NULL document follows one rule
-in every per-row engine, and no ``mapInArrow``/``mapInPandas`` or
-integral-id gate lives outside the runner."""
+expressions, NULL vectors project to NULL (``jl_project``) or read as the
+zero vector (the cosine operators), ragged vectors raise, a NULL document
+follows one rule in every per-row engine, no ``mapInArrow``/``mapInPandas``
+or integral-id gate lives outside the runner, and the vector operators keep
+no Catalyst twin."""
 
 import ast
 import uuid
@@ -72,6 +74,40 @@ def test_no_mapinarrow_or_integral_id_gate_outside_runner():
                          for n in ast.walk(node.args[1])}
                 if kinds & _INTEGRAL and rel not in _GATE_OK:
                     bad.append(f"{rel}:{node.lineno} integral-id gate")
+    assert not bad, bad
+
+
+# the vector operators that run only their Arrow kernels: no join, cross
+# join or broadcast (the shapes of the deleted Catalyst twins) inside them
+_KERNEL_ONLY = {"operators/similarity.py": {"cosine_topk", "ivf_index",
+                                            "mmr_select"},
+                "operators/quantize.py": {"quantized_topk"}}
+_GONE = {"_KERNEL_MAX_QUERIES", "int_l2_sq"}
+
+
+def test_vector_operators_have_no_catalyst_twin():
+    """``cosine_topk``, ``ivf_index``, ``mmr_select`` and ``quantized_topk``
+    call no ``.join(``, ``.crossJoin(`` or ``F.broadcast(``, and the
+    query-count gate ``_KERNEL_MAX_QUERIES`` and the twin-only ``int_l2_sq``
+    are defined or used nowhere in the package."""
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        for f in tree.body:
+            if (isinstance(f, ast.FunctionDef)
+                    and f.name in _KERNEL_ONLY.get(rel, ())):
+                bad += [f"{rel}:{n.lineno} {f.name} {n.func.attr}"
+                        for n in ast.walk(f)
+                        if isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr in ("join", "crossJoin",
+                                            "broadcast")]
+        for node in ast.walk(tree):
+            name = getattr(node, "name", None) or getattr(
+                node, "id", None) or getattr(node, "attr", None)
+            if name in _GONE:
+                bad.append(f"{rel}:{getattr(node, 'lineno', 0)} {name}")
     assert not bad, bad
 
 
@@ -241,6 +277,83 @@ def test_jl_project_ragged_vector_raises(spark):
         jl_project(df, dim=4, out_dim=3).collect()
 
 
+# --- cosine operators: NULL = zero vector, ragged raises, tiles add up ------
+
+
+def _vec_df(spark, rows):
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+_VECS = [(i, [float((i * 7 + j) % 5) for j in range(4)]) for i in range(12)]
+
+
+def test_cosine_topk_ragged_query_raises(spark):
+    """A 3-dim query next to a 4-dim one raises; the deleted Catalyst twin
+    (chosen for mixed query dims) padded it and returned NULL cosines."""
+    from fs2_data_spark.operators.similarity import cosine_topk
+    q = _vec_df(spark, [(100, [1.0, 2.0, 3.0, 4.0]), (101, [1.0, 2.0, 3.0])])
+    with pytest.raises(Exception, match="ragged vector"):
+        cosine_topk(q, _vec_df(spark, _VECS), k=2).collect()
+
+
+def test_cosine_topk_null_query_is_zero_vector(spark):
+    """A NULL query vector is the zero vector, next to a real query or
+    alone: cosine 0.0 to every row, ties broken by id."""
+    from fs2_data_spark.operators.similarity import cosine_topk
+    corpus = _vec_df(spark, _VECS)
+    for q in ([(100, None), (101, [1.0, 2.0, 3.0, 4.0])], [(100, None)]):
+        got = sorted(tuple(r) for r in cosine_topk(
+            _vec_df(spark, q), corpus, k=2).collect() if r.q_vec_id == 100)
+        assert got == [(100, 0, 0.0), (100, 1, 0.0)]
+
+
+def test_ivf_index_ragged_seed_raises(spark):
+    """A 2-dim vector among 4-dim ones (every row a seed at n_cells=7)
+    raises; the deleted twin put every 4-dim row in its cell."""
+    from fs2_data_spark.operators.similarity import ivf_index
+    rows = _VECS[:6] + [(6, [1.0, 2.0])]
+    with pytest.raises(Exception, match="ragged vector"):
+        ivf_index(_vec_df(spark, rows), n_cells=7)[1].collect()
+
+
+def test_mmr_select_null_query_is_zero_vector(spark):
+    """A NULL query vector is the zero vector: every ``rel`` is 0.0 and the
+    picks follow diversity (the deleted twin's result); a missing query id
+    gives no rows with the operator's schema."""
+    from fs2_data_spark.operators.similarity import mmr_select
+    df = _vec_df(spark, [(0, None)] + _VECS[1:])
+    got = [tuple(r) for r in mmr_select(df, 0, k=3).orderBy("step").collect()]
+    assert got == [(1, 1, 0.0, 0.0), (2, 2, 0.0, -0.14589),
+                   (3, 5, 0.0, -0.16377)]
+    missing = mmr_select(df, 99, k=3)
+    assert missing.dtypes == [("step", "int"), ("vec_id", "bigint"),
+                              ("rel", "double"), ("mmr", "double")]
+    assert missing.count() == 0
+
+
+@pytest.mark.parametrize("name", ["cosine_topk", "quantized_topk"])
+def test_query_tiles_equal_halves(spark, name):
+    """With more queries than one tile, the full call equals the union of
+    the calls on the two halves (each inside one tile)."""
+    from fs2_data_spark.functions.veckernels import _Q_BLOCK
+    from fs2_data_spark.operators.quantize import quantized_topk
+    from fs2_data_spark.operators.similarity import cosine_topk
+    n = _Q_BLOCK + 200
+    df = _vec_df(spark, [(i, [float((i * 7 + j * 3) % 11) - 5.0
+                              for j in range(4)]) for i in range(n)]).cache()
+
+    def run(pred):
+        if name == "cosine_topk":
+            return cosine_topk(df.filter(pred), df, k=2)
+        return quantized_topk(df, pred, dim=4, k=2)
+
+    vid = F.col("vec_id")
+    full = _rows(run(vid >= 0))
+    halves = _rows(run(vid < n // 2)) + _rows(run(vid >= n // 2))
+    assert len(full) == 2 * n
+    assert full == sorted(halves)
+
+
 # --- string ids: same result as integer ids, relabelled ---------------------
 
 
@@ -261,6 +374,7 @@ def _ann_case(name):
         cosine_topk,
         ivf_topk,
         lsh_bucket_topk,
+        mmr_select,
         semantic_dedup,
     )
 
@@ -299,6 +413,9 @@ def _ann_case(name):
             "embeddings", lambda e, s: quantized_topk(
                 e, F.col("vec_id") < (F.lit(_label(5)) if s else 5), k=3),
             ["q_vec_id", "n_vec_id"]),
+        "mmr_select": (
+            "embeddings", lambda e, s: mmr_select(e, _label(0) if s else 0,
+                                                  k=3), ["vec_id"]),
     }
     return table[name]
 
@@ -306,7 +423,7 @@ def _ann_case(name):
 @pytest.mark.parametrize("name", [
     "blocked_edit_pairs", "jaccard_lsh_pairs", "segment_dedup",
     "cosine_topk", "lsh_bucket_topk", "ivf_topk", "semantic_dedup",
-    "quantized_topk"])
+    "quantized_topk", "mmr_select"])
 def test_string_ids_equal_integer_ids_relabelled(request, name):
     table, run, id_cols = _ann_case(name)
     base = request.getfixturevalue(table)

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from fs2_data_spark.operators.quantize import (
     corpus_dim_stats,
     dequantize_error,
-    int_l2_sq,
     quantize,
     quantized_topk,
 )
@@ -75,15 +74,18 @@ def test_codes_in_range_constant_dim_zero(coded):
 
 
 def test_int_l2_sq_exact(spark, coded):
-    rows, qdf = coded
+    """Every pair's squared L2 from the top-k kernel (k = all neighbours)
+    equals the Python integer computation over the reference codes."""
+    rows, _ = coded
     codes = _py_quantize(rows)
-    pairs = (qdf.alias("a").crossJoin(qdf.alias("b"))
-             .filter(F.col("a.id") < F.col("b.id"))
-             .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"),
-                     int_l2_sq(F.col("a.q"), F.col("b.q")).alias("d")))
-    for r in pairs.collect():
-        ref = sum((x - y) ** 2 for x, y in zip(codes[r.i], codes[r.j]))
-        assert r.d == ref
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    pairs = quantized_topk(df, F.lit(True), id_col="id", vec_col="v",
+                           dim=DIM, k=len(rows)).collect()
+    assert len(pairs) == len(rows) * (len(rows) - 1)
+    for r in pairs:
+        ref = sum((x - y) ** 2
+                  for x, y in zip(codes[r.q_vec_id], codes[r.n_vec_id]))
+        assert r.dist_sq == ref
 
 
 def test_topk_matches_bruteforce_and_partition_invariant(spark):

@@ -87,3 +87,31 @@ def test_candles_equal_batch_operator_across_batch_sizes(spark, tmp_path):
         s = {(r.user_id, r.win_start_us): (r.open, r.high, r.low, r.close,
                                            r.n) for r in got.collect()}
         assert s == batch, f"parity broke at maxFilesPerTrigger={trigger_files}"
+
+
+def test_stream_source_staging_path_is_per_process(spark):
+    """The streaming smokes' staged file source lives under a per-process
+    path: the same for every call in one process (staged once), different
+    in another process, so two processes running the same smoke at once
+    never overwrite each other's files."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from fs2_data_spark.queries import _stage_stream_source, _stream_source_path
+
+    here = _stream_source_path("/data/sf0.01", "ij")
+    assert here == _stream_source_path("/data/sf0.01", "ij")
+    assert here != _stream_source_path("/data/sf0.01", "sess")
+    other = subprocess.run(
+        [sys.executable, "-c",
+         "from fs2_data_spark.queries import _stream_source_path; "
+         "print(_stream_source_path('/data/sf0.01', 'ij'))"],
+        capture_output=True, text=True, check=True, timeout=120,
+        cwd=Path(__file__).resolve().parent.parent).stdout.strip()
+    assert other and other != here
+
+    df = spark.createDataFrame([(1, 2.0)], "user_id int, value double")
+    src = _stage_stream_source(df, "/data/test-staging", "t")
+    assert src == _stage_stream_source(df, "/data/test-staging", "t")
+    assert spark.read.parquet(src).count() == 1
