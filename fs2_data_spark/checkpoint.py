@@ -8,26 +8,31 @@ pull-based parsers (every accumulator is complete at chunk boundaries, e.g.
 
 Design (no Iceberg jars in-sandbox, so snapshot ids are content hashes):
 
-- the output is partitioned by a bucket column (``pmod(xxhash64(key), n)``) —
-  deterministic, so a re-run reproduces the same partition contents;
-- each completed bucket gets ``manifest/part-<i>.json`` recording partition
+- the output is partitioned by a bucket column (``pmod(xxhash64(key), n)``)
+  into ``bucket=<i>/`` directories — deterministic, so a re-run reproduces
+  the same partition contents;
+- each completed bucket gets ``_manifests/part-<i>.json`` recording partition
   id, input snapshot id, row count, and an order-insensitive xor checksum of
-  row hashes (cheap, distributed, and permutation-safe);
+  row hashes (cheap, distributed, and permutation-safe). One rollup gives
+  every bucket's count and checksum and their total, the input snapshot id:
+  run, verify and resume take a fixed number of jobs;
 - ``resume_plan`` diffs manifests against the requested buckets so a restart
-  recomputes only missing/invalid buckets — writes are idempotent
-  (dynamic partition overwrite of exactly that bucket).
+  recomputes only missing/invalid buckets, dropping their manifests first.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 BUCKET_COL = "__bucket"
+_EMPTY = (0, f"{0:016x}")
 
 
 @dataclass
@@ -43,16 +48,26 @@ def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
     return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
 
 
+def _checksums(df: DataFrame, by: str | None = None) -> dict:
+    """``{group: (row count, checksum)}`` from one aggregate: the count and
+    the ``%016x`` xor of ``xxhash64(struct(row))`` over the columns but
+    ``by``, per ``by`` value and, keyed ``None``, for the whole frame.
+    Groups without rows are absent: their stats are ``_EMPTY``."""
+    h = F.xxhash64(F.struct(*[F.col(c) for c in df.columns if c != by]))
+    rows = df.rollup(*[by] if by else []).agg(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(h).alias("s")).collect()
+    return {r[by] if by else None: (r.n, f"{(r.s or 0) & 0xFFFFFFFFFFFFFFFF:016x}")
+            for r in rows}
+
+
+def _snapshot_of(stats: dict) -> str:
+    return "%d-%s" % stats.get(None, _EMPTY)
+
+
 def input_snapshot_id(df: DataFrame) -> str:
     """Content-hash snapshot id of an input (stands in for an Iceberg
     snapshot): xor of row hashes — order- and partitioning-insensitive."""
-    row = df.select(
-        F.xxhash64(F.struct(*[F.col(c) for c in df.columns])).alias("h")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(h)").alias("s"),
-    ).first()
-    return f"{row.n}-{(row.s or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
+    return _snapshot_of(_checksums(df))
 
 
 def _manifest_dir(path: str) -> str:
@@ -64,15 +79,11 @@ def _manifest_path(path: str, pid: int) -> str:
 
 
 def completed_partitions(path: str) -> dict[int, PartitionManifest]:
-    d = _manifest_dir(path)
     out: dict[int, PartitionManifest] = {}
-    if not os.path.isdir(d):
-        return out
-    for f in os.listdir(d):
-        if f.startswith("part-") and f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                m = PartitionManifest(**json.load(fh))
-            out[m.partition_id] = m
+    for f in glob.glob(os.path.join(_manifest_dir(path), "part-*.json")):
+        with open(f) as fh:
+            m = PartitionManifest(**json.load(fh))
+        out[m.partition_id] = m
     return out
 
 
@@ -84,35 +95,32 @@ def resume_plan(path: str, n_buckets: int, input_snapshot: str) -> list[int]:
             if b not in done or done[b].input_snapshot != input_snapshot]
 
 
-def write_partition(
-    df_bucketed: DataFrame,
-    path: str,
-    bucket: int,
-    input_snapshot: str,
-) -> PartitionManifest:
-    """Idempotently (over)write one bucket + its manifest. The manifest is
-    written AFTER the data: a crash between the two leaves a recomputable
-    bucket, never a wrong manifest."""
-    part = df_bucketed.filter(F.col(BUCKET_COL) == bucket).drop(BUCKET_COL)
-    target = os.path.join(path, f"bucket={bucket}")
-    part.write.mode("overwrite").parquet(target)
-
-    stats = part.select(
-        F.xxhash64(F.struct(*[F.col(c) for c in part.columns])).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("s")).first()
-    m = PartitionManifest(
-        partition_id=bucket,
-        input_snapshot=input_snapshot,
-        row_count=int(stats.n),
-        checksum=f"{(stats.s or 0) & 0xFFFFFFFFFFFFFFFF:016x}",
-        written_at=time.time(),
-    )
+def write_partition(df_bucketed: DataFrame, path: str, buckets: list[int],
+                    input_snapshot: str, stats: dict) -> list[PartitionManifest]:
+    """(Over)write ``buckets`` and their manifests, ``stats`` being
+    ``_checksums`` by bucket. Their manifests and directories are dropped,
+    all of them are written in one ``partitionBy`` append job, and only then
+    are the manifests published: a crash leaves buckets without a manifest,
+    never a manifest over other data."""
+    for b in buckets:
+        if os.path.exists(_manifest_path(path, b)):
+            os.remove(_manifest_path(path, b))
+        shutil.rmtree(os.path.join(path, f"bucket={b}"), ignore_errors=True)
+    rows = df_bucketed.filter(F.col(BUCKET_COL).isin(buckets))
+    rows.withColumnRenamed(BUCKET_COL, "bucket").write.mode("append") \
+        .partitionBy("bucket").parquet(path)
+    if not glob.glob(os.path.join(path, "bucket=*")):  # no rows: keep the schema
+        rows.drop(BUCKET_COL).write.parquet(os.path.join(path, f"bucket={buckets[0]}"))
     os.makedirs(_manifest_dir(path), exist_ok=True)
-    tmp = _manifest_path(path, bucket) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(asdict(m), fh)
-    os.replace(tmp, _manifest_path(path, bucket))  # atomic publish
-    return m
+    written = []
+    for b in buckets:
+        m = PartitionManifest(b, input_snapshot, *stats.get(b, _EMPTY), time.time())
+        tmp = _manifest_path(path, b) + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(asdict(m), fh)
+        os.replace(tmp, _manifest_path(path, b))  # atomic publish
+        written.append(m)
+    return written
 
 
 def run_resumable(
@@ -125,15 +133,15 @@ def run_resumable(
     """Compute/refresh all stale buckets; returns a summary. A re-invocation
     after a crash (or with unchanged input) only touches missing buckets.
 
-    ``df`` is evaluated once per call: the bucketed frame is persisted
-    first, so the snapshot job (over the cached plan minus the bucket
-    column, the same rows as ``df``) fills the cache every bucket write
-    then reads."""
+    ``df`` is evaluated once per call: the bucketed frame is persisted, one
+    grouped ``_checksums`` job fills the cache and gives the snapshot id and
+    every manifest's stats, and the one write job reads the cache."""
     bucketed = with_bucket(df, key, n_buckets).persist()
     try:
-        snap = input_snapshot or input_snapshot_id(bucketed.drop(BUCKET_COL))
+        stats = _checksums(bucketed, BUCKET_COL)
+        snap = input_snapshot or _snapshot_of(stats)
         todo = resume_plan(path, n_buckets, snap)
-        written = [write_partition(bucketed, path, b, snap) for b in todo]
+        written = write_partition(bucketed, path, todo, snap, stats) if todo else []
     finally:
         bucketed.unpersist()
     return {
@@ -151,14 +159,10 @@ def read_resumable(spark: SparkSession, path: str) -> DataFrame:
 
 
 def verify_manifests(spark: SparkSession, path: str) -> list[int]:
-    """Re-checksum each bucket against its manifest; returns corrupt ids."""
-    bad = []
-    for pid, m in completed_partitions(path).items():
-        part = spark.read.parquet(os.path.join(path, f"bucket={pid}"))
-        stats = part.select(
-            F.xxhash64(F.struct(*[F.col(c) for c in part.columns])).alias("h")
-        ).agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("s")).first()
-        chk = f"{(stats.s or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
-        if stats.n != m.row_count or chk != m.checksum:
-            bad.append(pid)
-    return bad
+    """Re-checksum every bucket against its manifest in one grouped
+    aggregate over ``read_resumable``; returns the corrupt ids, sorted. A
+    missing bucket directory reads as an empty bucket."""
+    found = (_checksums(read_resumable(spark, path), "bucket")
+             if glob.glob(os.path.join(path, "bucket=*")) else {})
+    return sorted(pid for pid, m in completed_partitions(path).items()
+                  if found.get(pid, _EMPTY) != (m.row_count, m.checksum))

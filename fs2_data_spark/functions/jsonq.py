@@ -691,21 +691,6 @@ def json_tokenize(df: DataFrame, col: str, keep: list[str] | None = None,
                     errors=(ValueError, TypeError), strict=mode == "strict")
 
 
-def render_json_pretty(df: DataFrame, col: str, out_col: str = "pretty",
-                       indent: int = 2) -> DataFrame:
-    """``json.render.prettyPrint`` analogue (reference
-    ``json/package.scala:291-293``): stable indented rendering of a JSON
-    string column."""
-    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
-
-    def pretty(raw):
-        return [(json.dumps(json_loads_strict(raw), indent=indent,
-                            ensure_ascii=False),)]
-
-    return run_rows(df, pretty, [col], f"`{out_col}` string",
-                    keys=df.columns, per_doc=True)
-
-
 def jq_run(df: DataFrame, col: str, program: str,
            keep: list[str] | None = None,
            mode: str = "strict") -> DataFrame:

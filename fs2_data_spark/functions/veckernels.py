@@ -300,7 +300,8 @@ def l2_int_topk_candidates(
     order yields the identical distances, so per-batch exact top-k is
     trivially a superset-free candidate set (each batch emits exactly its
     own top-k under the global comparator).  Emits
-    ``(n_vec_id, q_vec_id, dist_sq)``, ids in their own types."""
+    ``(n_vec_id, q_vec_id, dist_sq)``, ids in their own types.  A row with
+    NULL codes (a NULL vector) raises ``ValueError("NULL vector ...")``."""
     import pyspark.sql.functions as F  # noqa: PLC0415
 
     q_key = id_values(q_ids)
@@ -310,6 +311,8 @@ def l2_int_topk_candidates(
     def fn(id_arr, code):
         nb = len(code)
         ids = id_values(id_arr)
+        if code.null_count or code.flatten().null_count:
+            raise ValueError("NULL vector in the quantized corpus")
         vals = np.asarray(code.flatten(), dtype=np.int64)
         if vals.size != nb * dim:
             raise ValueError("ragged code rows")

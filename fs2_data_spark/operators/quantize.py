@@ -111,7 +111,8 @@ def quantized_topk(
     batches, the queries tiled in fixed blocks so memory stays bounded
     whatever their count.  All-integer squared-L2, so any association
     order is value-identical and per-batch exact top-k prunes candidates
-    with no rounding discipline needed.
+    with no rounding discipline needed.  A NULL vector, query or corpus,
+    has no distance and raises ``ValueError("NULL vector ...")``.
     """
     import numpy as np  # noqa: PLC0415
 
@@ -121,8 +122,10 @@ def quantized_topk(
                              query_pred.alias("is_q"))
     coded = quantize(base, "v", dim)
     q_rows = coded.filter("is_q").select("id", "q").toArrow()
-    q_codes = np.array(q_rows.column(1).to_pylist(),
-                       dtype=np.int64).reshape(-1, dim)
+    q_list = q_rows.column(1).to_pylist()
+    if any(c is None or None in c for c in q_list):
+        raise ValueError("NULL vector among the quantized_topk queries")
+    q_codes = np.array(q_list, dtype=np.int64).reshape(-1, dim)
     cand = VK.l2_int_topk_candidates(
         coded, q_rows.column(0).combine_chunks(), q_codes, "id", "q", k, dim)
     w = Window.partitionBy("q_vec_id").orderBy(

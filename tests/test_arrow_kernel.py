@@ -517,8 +517,6 @@ _NULL_DOC = {
         df, "doc", "$.a", lambda v: v, mode=m), "transformed"),
     "json_merge_patch": (_JSON, lambda df, m: JQ.json_merge_patch(
         df, "doc", "doc", mode=m), "merged"),
-    "render_json_pretty": (_JSON, lambda df, m: JQ.render_json_pretty(
-        df, "doc"), "pretty"),
     "pretty_json": (_JSON, lambda df, m: RENDER.pretty_json(
         df, "doc", mode=m), "pretty"),
     "pretty_xml": (_XML, lambda df, m: RENDER.pretty_xml(

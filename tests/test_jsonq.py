@@ -280,13 +280,6 @@ def test_json_transform_dataframe(spark):
     assert json.loads(out.transformed) == {"a": {"b": 4}, "c": [{"b": 9}]}
 
 
-def test_render_json_pretty(spark):
-    from fs2_data_spark.functions.jsonq import render_json_pretty
-    df = spark.createDataFrame([(1, '{"a":[1,2]}')], "id int, js string")
-    assert render_json_pretty(df, "js").first().pretty == \
-        '{\n  "a": [\n    1,\n    2\n  ]\n}'
-
-
 def test_select_path_all_max_matches_and_nest(spark):
     from fs2_data_spark.functions.jsonq import select_path_all
     df = spark.createDataFrame(

@@ -88,6 +88,17 @@ def test_int_l2_sq_exact(spark, coded):
         assert r.dist_sq == ref
 
 
+@pytest.mark.parametrize("query_id", [0, 3], ids=["corpus", "query"])
+def test_null_vector_raises(spark, query_id):
+    """Row 3's NULL vector has NULL codes and no distance: it raises on
+    either side instead of ranking as the all-minimum vector."""
+    rows = [(i, None if i == 3 else v) for i, v in _vecs(12)]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    with pytest.raises(Exception, match="NULL vector"):
+        quantized_topk(df, F.col("id") == query_id, id_col="id", vec_col="v",
+                       dim=DIM, k=len(rows)).collect()
+
+
 def test_topk_matches_bruteforce_and_partition_invariant(spark):
     rows = _vecs(60, seed=9)
     df = spark.createDataFrame(
