@@ -12,12 +12,15 @@ Design (no Iceberg jars in-sandbox, so snapshot ids are content hashes):
   into ``bucket=<i>/`` directories — deterministic, so a re-run reproduces
   the same partition contents;
 - each completed bucket gets ``_manifests/part-<i>.json`` recording partition
-  id, input snapshot id, row count, and an order-insensitive xor checksum of
-  row hashes (cheap, distributed, and permutation-safe). One rollup gives
-  every bucket's count and checksum and their total, the input snapshot id:
-  run, verify and resume take a fixed number of jobs;
+  id, input snapshot id, row count, an order-insensitive xor checksum of
+  row hashes (cheap, distributed, and permutation-safe) and the bucket
+  count of its layout. One rollup gives every bucket's count and checksum
+  and their total, the input snapshot id: run, verify and resume take a
+  fixed number of jobs;
 - ``resume_plan`` diffs manifests against the requested buckets so a restart
-  recomputes only missing/invalid buckets, dropping their manifests first.
+  recomputes only missing/invalid buckets, dropping their manifests first; a
+  run with another bucket count recomputes every bucket and drops the ids
+  beyond its count.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ class PartitionManifest:
     row_count: int
     checksum: str
     written_at: float
+    n_buckets: int | None = None  # absent in older manifests: reads as stale
 
 
 def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -89,23 +93,39 @@ def completed_partitions(path: str) -> dict[int, PartitionManifest]:
 
 def resume_plan(path: str, n_buckets: int, input_snapshot: str) -> list[int]:
     """Buckets still to compute: missing manifests, plus manifests written
-    from a different input snapshot (stale lineage -> recompute)."""
+    from a different input snapshot or bucket count (stale lineage ->
+    recompute)."""
     done = completed_partitions(path)
     return [b for b in range(n_buckets)
-            if b not in done or done[b].input_snapshot != input_snapshot]
+            if b not in done or (done[b].input_snapshot, done[b].n_buckets)
+            != (input_snapshot, n_buckets)]
 
 
-def write_partition(df_bucketed: DataFrame, path: str, buckets: list[int],
-                    input_snapshot: str, stats: dict) -> list[PartitionManifest]:
-    """(Over)write ``buckets`` and their manifests, ``stats`` being
-    ``_checksums`` by bucket. Their manifests and directories are dropped,
-    all of them are written in one ``partitionBy`` append job, and only then
-    are the manifests published: a crash leaves buckets without a manifest,
-    never a manifest over other data."""
+def _drop(path: str, buckets) -> None:
+    """Remove the manifests and ``bucket=<i>/`` directories of ``buckets``."""
     for b in buckets:
         if os.path.exists(_manifest_path(path, b)):
             os.remove(_manifest_path(path, b))
         shutil.rmtree(os.path.join(path, f"bucket={b}"), ignore_errors=True)
+
+
+def _drop_beyond(path: str, n_buckets: int) -> None:
+    """Drop every bucket id ``>= n_buckets`` left by a layout with more
+    buckets: its directory or its manifest."""
+    ids = {int(d.rsplit("=", 1)[1])
+           for d in glob.glob(os.path.join(path, "bucket=*"))}
+    _drop(path, [b for b in ids | set(completed_partitions(path)) if b >= n_buckets])
+
+
+def write_partition(df_bucketed: DataFrame, path: str, buckets: list[int],
+                    input_snapshot: str, stats: dict,
+                    n_buckets: int) -> list[PartitionManifest]:
+    """(Over)write ``buckets`` of an ``n_buckets`` layout and their
+    manifests, ``stats`` being ``_checksums`` by bucket. Their manifests and
+    directories are dropped, all of them are written in one ``partitionBy``
+    append job, and only then are the manifests published: a crash leaves
+    buckets without a manifest, never a manifest over other data."""
+    _drop(path, buckets)
     rows = df_bucketed.filter(F.col(BUCKET_COL).isin(buckets))
     rows.withColumnRenamed(BUCKET_COL, "bucket").write.mode("append") \
         .partitionBy("bucket").parquet(path)
@@ -114,7 +134,8 @@ def write_partition(df_bucketed: DataFrame, path: str, buckets: list[int],
     os.makedirs(_manifest_dir(path), exist_ok=True)
     written = []
     for b in buckets:
-        m = PartitionManifest(b, input_snapshot, *stats.get(b, _EMPTY), time.time())
+        m = PartitionManifest(b, input_snapshot, *stats.get(b, _EMPTY),
+                              time.time(), n_buckets)
         tmp = _manifest_path(path, b) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(asdict(m), fh)
@@ -141,7 +162,9 @@ def run_resumable(
         stats = _checksums(bucketed, BUCKET_COL)
         snap = input_snapshot or _snapshot_of(stats)
         todo = resume_plan(path, n_buckets, snap)
-        written = write_partition(bucketed, path, todo, snap, stats) if todo else []
+        _drop_beyond(path, n_buckets)
+        written = (write_partition(bucketed, path, todo, snap, stats, n_buckets)
+                   if todo else [])
     finally:
         bucketed.unpersist()
     return {

@@ -22,8 +22,7 @@ surface) with their full expressiveness:
 The reference compiles these to stream automata; a Spark column is already a
 materialized document, so the engine here is a value-level evaluator run
 per row through ``functions/arrow_kernel.run_rows`` (the UDx tier for logic
-Catalyst cannot express: recursion over untyped nesting). For *typed* or
-single-match paths prefer ``functions/jsonpath.py`` (pure Catalyst).
+Catalyst cannot express: recursion over untyped nesting).
 """
 
 from __future__ import annotations
@@ -292,9 +291,6 @@ class _JqParser:
 
 def parse_jq(program: str):
     return _JqParser(program).parse()
-
-
-_MISSING = object()  # sentinel: filter found nothing (vs matched null)
 
 
 def _has_fanout(node) -> bool:

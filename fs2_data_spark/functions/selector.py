@@ -213,92 +213,6 @@ def eval_selector(value, steps: list[_Step]) -> list:
     return vals
 
 
-class _Nothing:
-    """No selected content under this node. Compared with isinstance, never
-    identity: the kernel closure crosses a pickle boundary to the Python
-    workers, which re-creates module-level sentinels."""
-
-
-_NOTHING = _Nothing()
-
-
-def filter_selector(value, steps: list[_Step]):
-    """Skeleton-preserving selection — the ``wrap`` mode of ``json.filter``
-    (reference ``internal/ObjectWrapper.scala``): matched values stay at
-    their original positions inside their enclosing objects/arrays; siblings
-    not on any selector path are dropped. Returns the filtered document, or
-    the internal nothing-sentinel when no content survives."""
-    if not steps:
-        return value
-    s, rest = steps[0], steps[1:]
-    if s.kind == "this":
-        return filter_selector(value, rest)
-    if s.kind == "name":
-        if not isinstance(value, dict):
-            if s.strict:
-                raise WrongContainerError(f"name selector on {type(value).__name__}")
-            return _NOTHING
-        if s.mandatory:
-            missing = set(s.names) - set(value)
-            if missing:
-                raise MissingFieldError(missing)
-        wanted = set(s.names)
-        out = {}
-        for k, v in value.items():
-            if k in wanted:
-                sub = filter_selector(v, rest)
-                if not isinstance(sub, _Nothing):
-                    out[k] = sub
-        return out if out else _NOTHING
-    if s.kind in ("index", "range"):
-        if not isinstance(value, list):
-            if s.strict:
-                raise WrongContainerError(f"index selector on {type(value).__name__}")
-            return _NOTHING
-        if s.kind == "index":
-            chosen = [v for i, v in enumerate(value) if i in set(s.idxs)]
-        else:
-            chosen = value[max(s.a, 0):max(s.b, 0)]
-        out = [sub for v in chosen
-               if not isinstance(sub := filter_selector(v, rest), _Nothing)]
-        return out if out else _NOTHING
-    # iterate
-    if isinstance(value, list):
-        out = [sub for v in value
-               if not isinstance(sub := filter_selector(v, rest), _Nothing)]
-        return out if out else _NOTHING
-    if isinstance(value, dict):
-        outd = {}
-        for k, v in value.items():
-            sub = filter_selector(v, rest)
-            if not isinstance(sub, _Nothing):
-                outd[k] = sub
-        return outd if outd else _NOTHING
-    if s.strict:
-        raise WrongContainerError(f"iterator on {type(value).__name__}")
-    return _NOTHING
-
-
-def apply_selector_wrapped(df: DataFrame, col: str, selector: str,
-                           keep: list[str] | None = None,
-                           mode: str = "strict",
-                           out_col: str = "filtered") -> DataFrame:
-    """``json.filter(selector, wrap=true)`` analogue: one row per document
-    with the skeleton-preserving filtered JSON (null when nothing matched)."""
-    from fs2_data_spark.functions.arrow_kernel import run_rows  # noqa: PLC0415
-
-    steps = parse_selector(selector)
-
-    def filtered(raw):
-        res = filter_selector(json_loads_strict(raw), steps)
-        return [(None if isinstance(res, _Nothing) else _render(res),)]
-
-    return run_rows(df, filtered, [col], f"`{out_col}` string",
-                    keys=_keep_keys(df, col, keep),
-                    errors=(SelectorError, ValueError, TypeError),
-                    strict=mode == "strict", per_doc=True)
-
-
 def apply_selector(df: DataFrame, col: str, selector: str,
                    keep: list[str] | None = None,
                    mode: str = "strict") -> DataFrame:

@@ -61,17 +61,6 @@ def tok_iterate(df: DataFrame, tokens: str = "tokens", keep: list[str] | None = 
     return df.select(*keep, F.posexplode(tokens).alias("pos", "token"))
 
 
-def tok_transform_at(tokens: Column | str, positions: Column | str | None, fn) -> Column:
-    """``ast.transform`` analogue: apply ``fn(token)`` at selected positions
-    (all when ``positions`` is None), keep others — reference
-    ``json/src/main/scala/fs2/data/json/ast/package.scala:35``."""
-    t = _c(tokens)
-    if positions is None:
-        return F.transform(t, fn)
-    p = _c(positions)
-    return F.transform(t, lambda x, i: F.when(F.array_contains(p, i), fn(x)).otherwise(x))
-
-
 def tok_fingerprint(tokens: Column | str, mod: int = FINGERPRINT_MOD) -> Column:
     """Deterministic positional fingerprint ``sum((i+1) * t_i) mod m`` —
     a rolling-hash-style document fingerprint that is order-sensitive (two

@@ -349,8 +349,8 @@ def l2_int_topk_candidates(
 # ---------------------------------------------------------------------------
 
 def hyperplane_weights(n_planes: int, dim: int, seed: int) -> np.ndarray:
-    """(n_planes, dim) float64 weight matrix — exact replica of
-    ``operators.similarity.hyperplane_signature``'s per-element arithmetic:
+    """(n_planes, dim) float64 weight matrix — exact replica of the
+    DuckDB mirror ``queries._hyperplane_sig_sql``'s per-element arithmetic:
     ``((j*2654435761 + p*40503 + seed) mod 1000003)/1000003.0 - 0.5``."""
     j = np.arange(dim, dtype=np.int64)
     w = np.empty((n_planes, dim), dtype=np.float64)
@@ -369,7 +369,7 @@ def lsh_augment_kernel(
     seed: int,
 ):
     """Kernel producing ``(vec_id, v array<double>, nrm, sig)`` —
-    bit-identical to ``similarity.hyperplane_signature`` + ``_norm`` over
+    bit-identical to ``queries._hyperplane_sig_sql`` + the L2 norm over
     the double-cast vector: the signature's per-plane projection is the
     same left-to-right fold of ``x * w(p, j)`` and the sign test is the
     same ``proj > 0``."""

@@ -16,10 +16,7 @@ Scale shape per round:
   planning read, same class as the connected-components convergence count;
 - **apply**: a pure per-row rewrite — zero shuffle — as an Arrow kernel
   that edits the flat ``ListArray`` buffers with numpy (vectorized, no
-  per-row Python).  :func:`merge_pair_expr` is the same rewrite as a
-  Catalyst ``aggregate`` fold for use inside a ``select`` (interpreted
-  lambda, each step copies the accumulator: quadratic memory traffic on
-  long sequences);
+  per-row Python);
 - the corpus is ``localCheckpoint``-ed every round so round ``r`` does not
   re-execute rounds ``0..r-1`` (the connected-components lineage lesson).
 
@@ -67,26 +64,6 @@ def pair_counts(df: DataFrame, tokens: str = "tokens") -> DataFrame:
     return (df.select(F.explode(pairs).alias("p"))
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def merge_pair_expr(tokens: Column | str, a: int, b: int, new_id: int) -> Column:
-    """Catalyst fold tier: greedy leftmost merge of ``(a, b) -> new_id`` as
-    a pure ``aggregate`` expression (no Python).  The fold appends each
-    token unless the accumulator's last element is ``a`` and the incoming
-    token is ``b`` — replacing the last element implements exactly the
-    "position consumed by the previous merge" rule, because a consumed
-    position's output is ``new_id``, never ``a``.  Each step copies the
-    accumulator, so :func:`apply_merges_arrow` is the engine's path."""
-    t = _c(tokens)
-
-    def step(acc, x):
-        hit = ((F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (x == b))
-        return (F.when(hit,
-                       F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                                F.array(F.lit(new_id).cast("int"))))
-                .otherwise(F.concat(acc, F.array(x))))
-
-    return F.aggregate(t, F.array().cast("array<int>"), step)
 
 
 def _merge_flat(vals, offs, a: int, b: int, z: int):

@@ -1,10 +1,16 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash group-by), MinHash+LSH (shingle -> signature -> band ->
-bucket-join), SimHash Hamming buckets, n-gram/word-set Jaccard, and
-embedding-cosine near-dup. All candidate generation is equi-join shaped
-(bucket keys), so at 100 TB every stage is one hash shuffle — no pairwise
-cross products outside buckets.
+Shingle-set Jaccard pairs by MinHash LSH (signature -> band ->
+bucket-join, then exact verification), sorted-neighborhood blocking, the
+connected-components clustering that turns pairs into keep/drop verdicts,
+segment rewrite dedup (C4 repeated segments, CCNet boilerplate),
+content-defined chunking and intra-document repetition statistics.
+Candidate generation is equi-join shaped (bucket keys), so at 100 TB every
+stage is one hash shuffle — no pairwise cross products outside buckets.
+
+The registry's SimHash, winnowing and embedding near-dup queries build
+their plans from the Arrow kernels in ``functions/textkernels.py`` and
+``functions/veckernels.py`` directly.
 """
 
 from __future__ import annotations
@@ -12,95 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fs2_data_spark.functions import text as TXT
-from fs2_data_spark.operators.similarity import (
-    _as_double,
-    _cos,
-    _dot,
-    _norm,
-)
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                keep: str = "min") -> DataFrame:
-    """Keep one canonical row per exact text duplicate group (md5 grouping;
-    canonical = min/max id for determinism). Returns the deduplicated rows."""
-    order = F.col(id_col).asc() if keep == "min" else F.col(id_col).desc()
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(order)
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Candidate near-duplicate pairs (id1 < id2) sharing >= 1 LSH band.
-
-    signature -> bands -> explode -> self-equi-join on (band_id, band_val):
-    the join key is the bucket, so skew is bounded by bucket size, and the
-    shuffle is linear in corpus size (vs quadratic all-pairs)."""
-    n_bands = k // rows_per_band
-    sig = (df.select(F.col(id_col).alias("id"),
-                     TXT.word_codes(text_col).alias("__wc"))
-           .select("id", *TXT.minhash_signature_from(F.col("__wc"), k=k)))
-    band_cols = []
-    for b in range(n_bands):
-        # bounded 64-bit mix of the band's components (a positional-base mix
-        # like v*P + mh overflows bigint for rows_per_band >= 3, silently
-        # corrupting band keys); xxhash64 is deterministic and collision-safe
-        members = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        v = F.xxhash64(*members)
-        band_cols.append(F.struct(F.lit(b).alias("band_id"), v.alias("band_val")))
-    bands = sig.select("id", F.explode(F.array(*band_cols)).alias("band")).select(
-        "id", "band.band_id", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-                   & (F.col("a.band_val") == F.col("b.band_val"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-            .distinct())
-
-
-def simhash_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                   bits: int = 16) -> DataFrame:
-    """SimHash value per doc + bucket size (identical simhash = near-dup
-    candidate group). For Hamming-distance-1 candidates, join on simhash
-    with one bit flipped (bits x corpus rows — still linear)."""
-    w = Window.partitionBy("sh")
-    return (df.select(F.col(id_col).alias("id"), TXT.simhash(text_col, bits).alias("sh"))
-            .withColumn("bucket_size", F.count(F.lit(1)).over(w)))
-
-
-def jaccard_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: list[str] | None = None,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Word-set Jaccard >= threshold pairs, blocked by ``block_cols`` to keep
-    the word self-join bounded (blocking is the scale lever: choose columns
-    so blocks fit comfortably in a task)."""
-    block_cols = block_cols or []
-    w = df.select(F.col(id_col).alias("id"), *block_cols,
-                  F.explode(F.array_distinct(TXT.words(text_col))).alias("word"))
-    sz = w.groupBy("id").agg(F.count(F.lit(1)).alias("nw"))
-    a, b = w.alias("a"), w.alias("b")
-    cond = (F.col("a.word") == F.col("b.word")) & (F.col("a.id") < F.col("b.id"))
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = (a.join(b, cond)
-             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .agg(F.count(F.lit(1)).alias("ninter")))
-    s1 = sz.select(F.col("id").alias("id1"), F.col("nw").alias("nw1"))
-    s2 = sz.select(F.col("id").alias("id2"), F.col("nw").alias("nw2"))
-    jac = F.col("ninter").cast("double") / (F.col("nw1") + F.col("nw2") - F.col("ninter"))
-    return (inter.join(s1, "id1").join(s2, "id2")
-            .filter(jac >= threshold)
-            .select("id1", "id2", jac.alias("jaccard")))
 
 
 def jaccard_lsh_pairs(
@@ -161,67 +78,6 @@ def jaccard_lsh_pairs(
             .select("id1", "id2", F.round(jac, 6).alias("jaccard")))
 
 
-def winnow_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Near-dup candidate pairs by shared winnowing fingerprints
-    (``functions/text.winnow_fingerprints`` — the MOSS detection
-    primitive): any shared run of ``w + k - 1`` words guarantees a shared
-    fingerprint, so unlike MinHash banding the candidate set cannot miss a
-    long verbatim overlap.  Returns ``(id1, id2, n_shared)`` with
-    ``id1 < id2`` and at least ``min_shared`` common fingerprints.
-
-    Scale shape: explode the per-doc fingerprint set (~|shingles|/w rows
-    per doc), one equi-join shuffle on the fingerprint value, one count
-    aggregation — the same two-shuffle template as the Jaccard candidate
-    path, with the guarantee replacing the probability."""
-    from fs2_data_spark.functions.text import (  # noqa: PLC0415
-        winnow_fingerprints_from,
-        word_hashes,
-    )
-    fp = (df.select(F.col(id_col).alias("id"),
-                    word_hashes(text_col).alias("wh"))
-          .select("id", F.explode(
-              winnow_fingerprints_from(F.col("wh"), k, w)).alias("fp")))
-    a = fp.select(F.col("id").alias("id1"), "fp")
-    b = fp.select(F.col("id").alias("id2"), "fp")
-    return (a.join(b, "fp")
-            .filter(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= min_shared))
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH bucketing: only pairs
-    sharing a hyperplane signature are scored (recall<1 by design; raise
-    recall with more bands of fewer planes)."""
-    from fs2_data_spark.operators.similarity import hyperplane_signature
-    e = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"),
-        hyperplane_signature(F.col(vec_col), n_planes, dim).alias("sig"),
-    ).withColumn("nrm", _norm(F.col("v")))
-    a, b = e.alias("a"), e.alias("b")
-    cos = _cos(_dot(F.col("a.v"), F.col("b.v")), F.col("a.nrm"), F.col("b.nrm"))
-    return (a.join(b, (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-                    cos.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold))
-
-
 def _token_spans(df: DataFrame, tokens: str, id_col: str, k: int) -> DataFrame:
     """(id, pos, span_h) for every k-token window (rolling hash, JVM-side)."""
     n = F.size(F.col(tokens))
@@ -236,72 +92,6 @@ def _token_spans(df: DataFrame, tokens: str, id_col: str, k: int) -> DataFrame:
 
     return df.select(id_col, F.posexplode(F.transform(idxs, span_hash))
                      .alias("pos", "span_h"))
-
-
-def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  tokens: str = "tokens", id_col: str = "doc_id",
-                  k: int = 8) -> DataFrame:
-    """Benchmark decontamination: flag every corpus document sharing at
-    least one ``k``-token span with the benchmark set (the n-gram-overlap
-    test-set leakage check of a training-data pipeline).
-
-    The benchmark side reduces to its DISTINCT span hashes — the small
-    dimension table — and is explicitly broadcast, so the corpus side is a
-    map-side semi-join: no shuffle of corpus spans at any scale.  Returns
-    ``(id, n_contaminated_spans, contaminated)`` per corpus document."""
-    c = _token_spans(corpus, tokens, id_col, k)
-    b = _token_spans(benchmark, tokens, id_col, k).select("span_h").distinct()
-    hits = (c.join(F.broadcast(b), "span_h")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_contaminated_spans")))
-    return (corpus.select(id_col).distinct()
-            .join(hits, id_col, "left")
-            .select(id_col,
-                    F.coalesce("n_contaminated_spans", F.lit(0))
-                    .alias("n_contaminated_spans"))
-            .withColumn("contaminated", F.col("n_contaminated_spans") > 0))
-
-
-def duplicate_spans(df: DataFrame, tokens: str = "tokens",
-                    id_col: str = "doc_id", k: int = 8,
-                    min_docs: int = 2, exact: bool = False) -> DataFrame:
-    """Cross-document duplicated token spans: every position whose ``k``-token
-    window hash also occurs in at least ``min_docs`` distinct documents — the
-    candidate-generation stage of exact-substring training-data dedup
-    (the rolling-hash analogue of suffix-array span dedup; the reference's
-    shingle machinery generalized from bigrams, ``tok_ngrams``).
-
-    Fully JVM-side: per-row rolling hashes via transform/aggregate (O(n*k)
-    work, embarrassingly parallel), posexplode to (doc, pos, hash), one
-    hash-keyed aggregation for document counts, one equi-join back — no
-    cross product, no Python. Hash collisions can over-report (candidate
-    semantics, like the LSH paths); ``exact=True`` keys the aggregation on
-    the token slice itself instead — collision-free at the cost of
-    shuffling ``k`` tokens per span instead of one 8-byte hash."""
-    if exact:
-        n = F.size(F.col(tokens))
-        idxs = F.when(n >= k, F.sequence(F.lit(0), n - k)
-                      ).otherwise(F.array().cast("array<int>"))
-
-        def span_slice(i):
-            return F.slice(F.col(tokens), i + 1, k)
-        spans = (df.select(id_col, F.posexplode(F.transform(idxs, span_slice))
-                           .alias("pos", "span")))
-        key = "span"
-    else:
-        spans = _token_spans(df, tokens, id_col, k)
-        key = "span_h"
-    counts = (spans.groupBy(key)
-              .agg(F.countDistinct(id_col).alias("n_docs"))
-              .filter(F.col("n_docs") >= min_docs))
-    joined = spans.join(counts, key)
-    if exact:
-        # emit the same schema as the hash path (hash recomputed post-join)
-        def step(a, x):
-            return (a * F.lit(31) + x) % F.lit(1_000_000_007)
-        joined = joined.withColumn(
-            "span_h", F.aggregate("span", F.lit(0).cast("long"), step))
-    return joined.select(id_col, "pos", "span_h", "n_docs")
 
 
 def repetition_stats(df: DataFrame, tokens: str = "tokens", k: int = 4,
@@ -579,7 +369,7 @@ def cdc_chunks(df: DataFrame, tokens: str = "tokens",
     tokens + the window constraint).
 
     Everything is per-row JVM array arithmetic riding the scan — zero
-    shuffle, O(n*k) per doc like :func:`duplicate_spans`'s span hashes,
+    shuffle, O(n*k) per doc like :func:`_token_spans`'s span hashes,
     same 31-fold rolling hash so the DuckDB oracle replays it exactly.
     Returns exploded chunks: ``(id_col, chunk_no, start_pos, chunk_len,
     chunk_h)`` (the chunk token content is hashed, not carried — join back
@@ -614,29 +404,6 @@ def cdc_chunks(df: DataFrame, tokens: str = "tokens",
             .select(id_col, F.posexplode(chunk).alias("chunk_no", "c")))
     return rows.select(id_col, "chunk_no", F.col("c.start_pos"),
                        F.col("c.chunk_len"), F.col("c.chunk_h"))
-
-
-def cdc_dedup_stats(df: DataFrame, tokens: str = "tokens",
-                    id_col: str = "doc_id", k: int = 4,
-                    divisor: int = 16) -> DataFrame:
-    """Corpus-level CDC dedup audit: how many tokens would chunk-level
-    content-addressed storage save? One hash aggregation over the chunk
-    table (``(count-1) * len`` summed per distinct chunk hash — every copy
-    after the first is free). Returns a single row ``(n_chunks,
-    n_distinct_chunks, total_tokens, dup_tokens, dedup_ratio)``."""
-    ch = cdc_chunks(df, tokens, id_col, k, divisor)
-    per = (ch.groupBy("chunk_h")
-           .agg(F.count(F.lit(1)).alias("cnt"),
-                F.max("chunk_len").alias("clen")))
-    return per.agg(
-        F.sum("cnt").alias("n_chunks"),
-        F.count(F.lit(1)).alias("n_distinct_chunks"),
-        F.sum(F.col("cnt") * F.col("clen")).alias("total_tokens"),
-        F.sum((F.col("cnt") - 1) * F.col("clen")).alias("dup_tokens"),
-    ).select(
-        "n_chunks", "n_distinct_chunks", "total_tokens", "dup_tokens",
-        (F.col("dup_tokens").cast("double")
-         / F.col("total_tokens").cast("double")).alias("dedup_ratio"))
 
 
 def global_rank(

@@ -48,20 +48,3 @@ def k_anonymity_audit(
                  F.countDistinct(sensitive).alias("n_sensitive"))
             .withColumn("k_violation", F.col("n") < F.lit(k))
             .withColumn("l_violation", F.col("n_sensitive") < F.lit(ell)))
-
-
-def flag_risky_rows(
-    df: DataFrame,
-    quasi: Sequence[str],
-    sensitive: str,
-    k: int = 5,
-    ell: int = 2,
-) -> DataFrame:
-    """Row-level view of the same audit: every input row annotated with
-    its class's ``n``, ``n_sensitive`` and violation flags — the
-    suppression work-list.  One aggregation + one equi-join of the
-    class table back onto the corpus (broadcast when the
-    quasi-identifier cardinality allows, shuffle hash join otherwise —
-    left to the planner/AQE, both are linear)."""
-    classes = k_anonymity_audit(df, quasi, sensitive, k=k, ell=ell)
-    return df.join(classes, on=list(quasi), how="left")

@@ -77,32 +77,6 @@ def stratified_sample(
     return df.filter(h < thr)
 
 
-def temperature_rates(
-    counts: dict[str, int],
-    alpha: float = 0.5,
-    target_total: int | None = None,
-) -> dict[str, float]:
-    """Temperature-sampling rates per stratum (multilingual/multi-source
-    rebalancing, public recipe from the multilingual-LM literature): sample
-    stratum ``s`` proportional to ``n_s ** alpha`` — ``alpha=1`` keeps the
-    natural distribution, ``alpha=0`` gives uniform across strata, values
-    in between flatten the head and boost the tail.
-
-    Returns ``{stratum: rate}`` where ``rate = p_s * T / n_s`` with
-    ``p_s = n_s**alpha / sum n**alpha`` and ``T = target_total`` (default:
-    the current total).  Rates may exceed 1 — feed them to
-    :func:`stratified_resample`, which upsamples deterministically.
-    Driver-side planning math over the per-stratum count table (a
-    vocabulary-sized aggregate, same class as the hot-key planning reads).
-    """
-    if not counts:
-        return {}
-    total = sum(counts.values())
-    t = target_total if target_total is not None else total
-    z = sum(n ** alpha for n in counts.values())
-    return {s: (n ** alpha / z) * t / n for s, n in counts.items()}
-
-
 def stratified_resample(
     df: DataFrame,
     rates: dict[str, float],
@@ -239,32 +213,6 @@ def hash_split_sql(
         f"WHEN ({h}) < {thr} THEN '{name}'"
         for name, thr in split_thresholds(weights, "portable"))
     return f"CASE {cases} END"
-
-
-def mixing_rates(
-    df: DataFrame,
-    target_weights: dict[str, float],
-    budget_rows: int,
-    stratum_col: str = "source",
-) -> dict[str, float]:
-    """Per-stratum keep rates that hit a target mixture.
-
-    Given desired mixture weights (normalized internally) and a total row
-    budget, computes ``rate_s = min(1, budget * w_s / n_s)`` from the actual
-    per-stratum counts — one aggregation over the corpus and a
-    strata-bounded collect (a planning read, same category as
-    ``detect_hot_keys``).  Oversubscribed strata cap at 1.0 (can't sample
-    more than exists); renormalize and re-run if exact totals matter more
-    than exact proportions.
-    """
-    total_w = sum(target_weights.values())
-    counts = {r[0]: r[1] for r in
-              df.groupBy(stratum_col).agg(F.count(F.lit(1))).collect()}
-    rates = {}
-    for s, w in target_weights.items():
-        n = counts.get(s, 0)
-        rates[s] = 0.0 if n == 0 else min(1.0, budget_rows * (w / total_w) / n)
-    return rates
 
 
 def cap_per_group(

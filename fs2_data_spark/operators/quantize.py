@@ -133,21 +133,3 @@ def quantized_topk(
     return (cand.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
             .select("q_vec_id", "n_vec_id", "dist_sq"))
-
-
-def dequantize_error(coded: DataFrame, vec_col: str = "v", dim: int = 64,
-                     stats: DataFrame | None = None) -> DataFrame:
-    """Reconstruction-error diagnostics: max absolute per-element error of
-    ``mn_j + code_j * (mx_j - mn_j) / 255`` against the original vector.
-    Bounded by half a quantization step per dimension."""
-    if stats is None:
-        stats = corpus_dim_stats(coded, vec_col, dim)
-    joined = coded.crossJoin(F.broadcast(stats))
-    errs = F.array(*[
-        F.abs(F.col(f"mn_{j}")
-              + F.element_at(F.col("q"), j + 1)
-              * (F.col(f"mx_{j}") - F.col(f"mn_{j}")) / F.lit(255.0)
-              - F.element_at(F.col(vec_col), j + 1))
-        for j in range(dim)])
-    return joined.select(*coded.columns,
-                         F.array_max(errs).alias("max_abs_err"))

@@ -93,34 +93,6 @@ def cosine_topk(
             .filter(F.col("__rn") <= k).drop("__rn"))
 
 
-def hyperplane_signature(vec: F.Column, n_planes: int = 8, dim: int = 64,
-                         seed: int = 42, cast: bool = True) -> F.Column:
-    """Random-hyperplane LSH signature (bigint in [0, 2^n_planes)).
-
-    Plane p, dim j weight = deterministic pseudo-random in [-0.5, 0.5):
-    ``((j*2654435761 + p*40503 + seed) mod 1000003)/1000003 - 0.5`` — pure
-    arithmetic, reproducible anywhere (incl. an ANSI-SQL oracle).
-    ``cast=False`` when ``vec`` is already a staged ``array<double>`` column
-    (avoids re-casting inside every plane's interpreted fold)."""
-    v = _as_double(vec) if cast else vec
-
-    def weight_fn(p: int):
-        return lambda x, j: x * (
-            F.pmod(j.cast("bigint") * 2_654_435_761 + p * 40_503 + seed,
-                   F.lit(1_000_003)).cast("double") / 1_000_003.0 - 0.5
-        )
-
-    sig = F.lit(0).cast("bigint")
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.lit(dim - 1)), weight_fn(p)),
-            F.lit(0.0), lambda a, x: a + x,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << p).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint"))
-    return sig
-
-
 def ivf_index(
     corpus: DataFrame,
     id_col: str = "vec_id",

@@ -130,28 +130,6 @@ def kmv_sketch(
             .agg(F.sort_array(F.collect_list(hash_col)).alias("kmv")))
 
 
-def kmv_merge(a: DataFrame, b: DataFrame, group_col: str = "source",
-              k: int = 16) -> DataFrame:
-    """Monoid merge: union both sides' kept values, re-take the k smallest.
-
-    ``take_k(kmv(A) ∪ kmv(B)) = kmv(A ∪ B)`` exactly — the law the sketch
-    tests pin.  Runs entirely in array expressions after a full outer join
-    on the group key (sketch-sized inputs, so the join is trivially
-    broadcastable in practice).
-    """
-    empty = F.expr("CAST(array() AS ARRAY<BIGINT>)")
-    merged = (a.withColumnRenamed("kmv", "_ka")
-               .join(b.withColumnRenamed("kmv", "_kb"), group_col, "full")
-               .select(
-                   group_col,
-                   F.slice(
-                       F.array_sort(F.array_distinct(F.concat(
-                           F.coalesce(F.col("_ka"), empty),
-                           F.coalesce(F.col("_kb"), empty)))),
-                       1, k).alias("kmv")))
-    return merged
-
-
 def kmv_estimate(sketch: DataFrame, k: int = 16,
                  domain: int = KMV_P) -> DataFrame:
     """Cardinality estimate from a KMV sketch.
@@ -200,13 +178,6 @@ def cms_sketch(
             .groupBy(F.col("e.row").alias("row"),
                      F.col("e.bucket").alias("bucket"))
             .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Monoid merge: elementwise counter addition over (row, bucket)."""
-    return (a.unionByName(b)
-             .groupBy("row", "bucket")
-             .agg(F.sum("cnt").alias("cnt")))
 
 
 def cms_point_query(
@@ -271,8 +242,7 @@ def cms_point_query(
 #
 # Registers merge by elementwise MAX — the monoid that lets per-shard /
 # per-snapshot sketches maintain corpus-level distinct counts at 100 TB
-# without re-scanning (same maintenance shape as kmv_merge, fixed 2^P-row
-# state).
+# without re-scanning (fixed 2^P-row state).
 
 HLL_P = 6
 HLL_M = 1 << HLL_P                    # 64 registers
@@ -316,14 +286,6 @@ def hll_registers(elems: DataFrame, group_col: str = "source",
                     hll_rho(hll_tail(h)).alias("rho"))
             .groupBy(group_col, "bucket")
             .agg(F.max("rho").alias("r")))
-
-
-def hll_merge(a: DataFrame, b: DataFrame,
-              group_col: str = "source") -> DataFrame:
-    """Monoid merge: elementwise register max over (group, bucket)."""
-    return (a.unionByName(b)
-             .groupBy(group_col, "bucket")
-             .agg(F.max("r").alias("r")))
 
 
 def hll_estimate(registers: DataFrame,
@@ -510,14 +472,6 @@ def hist_sketch(df: DataFrame, group_col: str = "source",
     blen = F.length(F.bin(F.col(value).cast("bigint"))).cast("integer")
     return (df.groupBy(F.col(group_col), blen.alias("blen"))
               .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def hist_merge(a: DataFrame, b: DataFrame,
-               group_col: str = "source") -> DataFrame:
-    """Monoid merge: elementwise count addition over (group, blen)."""
-    return (a.unionByName(b)
-             .groupBy(group_col, "blen")
-             .agg(F.sum("cnt").alias("cnt")))
 
 
 def hist_quantiles(sketch: DataFrame, group_col: str = "source",

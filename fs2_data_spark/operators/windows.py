@@ -180,20 +180,6 @@ def with_ranks(
     return out
 
 
-def top_k_per_group(
-    df: DataFrame, key: str | Sequence[str], order: str | Column, k: int, desc: bool = True
-) -> DataFrame:
-    """Top-k rows per group — the relational analogue of fs2-data's
-    ``maxMatch`` short-circuit (reference
-    ``finite-state/shared/src/main/scala/fs2/data/pfsa/TreeQueryPipe.scala:99-107``)."""
-    oc = F.col(order) if isinstance(order, str) else order
-    w = Window.partitionBy(*([key] if isinstance(key, str) else list(key))).orderBy(
-        oc.desc() if desc else oc
-    )
-    return (df.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") <= k).drop("__rn"))
-
-
 def with_ewma(
     df: DataFrame,
     value: str = "value",

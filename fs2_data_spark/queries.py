@@ -2790,10 +2790,10 @@ def ann_topk(spark, sf_dir):
 
 
 def _hyperplane_sig_sql(n_planes: int = 8, dim: int = 64, seed: int = 42) -> str:
-    """DuckDB mirror of operators.similarity.hyperplane_signature: identical
-    per-element weight arithmetic and sequential summation order, so the sign
-    decisions are bit-for-bit reproducible (DuckDB lambdas index 1-based ->
-    j = i - 1)."""
+    """DuckDB mirror of functions.veckernels.lsh_augment_kernel's signature:
+    identical per-element weight arithmetic and sequential summation order,
+    so the sign decisions are bit-for-bit reproducible (DuckDB lambdas index
+    1-based -> j = i - 1)."""
     terms = []
     for p in range(n_planes):
         w = f"(((i - 1) * 2654435761 + {p * 40_503 + seed}) % 1000003)"
@@ -3510,10 +3510,6 @@ def winnow_fp_docs(spark, sf_dir):
     shared 6-word run forces a shared fingerprint — MinHash only makes it
     likely); pure per-row HOFs riding the scan, exact int64 arithmetic, so
     the oracle replays every fingerprint bit-for-bit."""
-    from fs2_data_spark.functions.text import (
-        winnow_fingerprints_from,
-        word_hashes,
-    )
     from fs2_data_spark.functions.textkernels import winnow_fp_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     out = winnow_fp_kernel(d, "doc_id", "text", k=3, w=4)

@@ -46,15 +46,3 @@ def read_jsonl(
         return df.withColumn("ok", F.col(CORRUPT).isNull()).withColumnRenamed(
             CORRUPT, "error_record")
     raise ValueError(f"unknown mode: {mode!r} (use 'strict' or 'attempt')")
-
-
-def parse_json_col(
-    df: DataFrame, col: str, schema: T.StructType | str, mode: str = "strict"
-) -> DataFrame:
-    """``from_json`` over an embedded JSON string column (e.g. events.props),
-    with the same strict/attempt modes."""
-    opts = {"mode": "FAILFAST"} if mode == "strict" else {"mode": "PERMISSIVE"}
-    out = df.withColumn(f"{col}_parsed", F.from_json(F.col(col), schema, opts))
-    if mode == "attempt":
-        out = out.withColumn("ok", F.col(f"{col}_parsed").isNotNull())
-    return out

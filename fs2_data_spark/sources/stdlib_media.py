@@ -1,18 +1,16 @@
-"""No-dependency media codecs: PGM/PPM, BMP, and WAV via stdlib + numpy.
+"""No-dependency image codecs: PGM/PPM and BMP via stdlib + numpy.
 
-The multimodal operators (``operators/multimodal.py``) probe for the full
-codec libraries (Pillow, soundfile) at call time; this module is the tier
-below — formats simple enough to decode deterministically with numpy and the
-stdlib ``wave`` module, so the *real* (non-fake) decode branch runs even in
-containers that ship neither library (VERDICT r04 missing-item #1):
+The multimodal operators (``operators/multimodal.py``) probe for Pillow at
+call time; this module is the tier below — formats simple enough to decode
+deterministically with numpy and ``struct``, so the *real* (non-fake) decode
+branch runs even in containers that ship no Pillow (VERDICT r04
+missing-item #1):
 
 - **PGM (P5) / PPM (P6)**: binary netpbm rasters. RGB reduces to luma with
   the ITU-R BT.601 integer weights PIL uses for ``convert("L")``
   (``(299*R + 587*G + 114*B) // 1000``), so the two tiers agree on gray.
 - **BMP**: uncompressed (BI_RGB) 8-bit grayscale-palette and 24-bit BGR,
   bottom-up or top-down rows, 4-byte row padding.
-- **WAV**: PCM 8/16/32-bit via stdlib ``wave``; channels average to mono;
-  samples scale to [-1, 1] like ``soundfile.read``.
 
 All decoders take ``bytes`` and return numpy arrays; they raise
 ``ValueError`` on malformed payloads and are pure functions — safe inside
@@ -21,9 +19,7 @@ Arrow kernels.
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 
 import numpy as np
 
@@ -32,15 +28,13 @@ _LUMA = np.array([299, 587, 114], dtype=np.int64)
 
 def sniff(raw: bytes) -> str | None:
     """Identify a payload this module can decode: 'pgm' | 'ppm' | 'bmp' |
-    'wav' | None."""
+    None."""
     if raw[:2] == b"P5":
         return "pgm"
     if raw[:2] == b"P6":
         return "ppm"
     if raw[:2] == b"BM":
         return "bmp"
-    if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-        return "wav"
     return None
 
 
@@ -145,42 +139,3 @@ def encode_pgm(px: np.ndarray) -> bytes:
     px = np.ascontiguousarray(px, dtype=np.uint8)
     h, w = px.shape
     return f"P5\n{w} {h}\n255\n".encode() + px.tobytes()
-
-
-def decode_wav(raw: bytes) -> tuple[np.ndarray, int]:
-    """WAV PCM payload -> (mono float64 samples in [-1, 1], sample_rate).
-
-    8-bit PCM is unsigned (offset 128); 16/32-bit are signed little-endian.
-    Multi-channel audio averages to mono — the same convention a
-    band-energy/MFCC front end uses.
-    """
-    with wave.open(io.BytesIO(raw), "rb") as wf:
-        n_ch = wf.getnchannels()
-        width = wf.getsampwidth()
-        sr = wf.getframerate()
-        frames = wf.readframes(wf.getnframes())
-    if width == 1:
-        s = np.frombuffer(frames, dtype=np.uint8).astype(np.float64)
-        s = (s - 128.0) / 128.0
-    elif width == 2:
-        s = np.frombuffer(frames, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 4:
-        s = np.frombuffer(frames, dtype="<i4").astype(np.float64) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported WAV sample width {width}")
-    if n_ch > 1:
-        s = s.reshape(-1, n_ch).mean(axis=1)
-    return s, sr
-
-
-def encode_wav(samples: np.ndarray, sr: int = 16000) -> bytes:
-    """Mono float samples in [-1, 1] -> 16-bit PCM WAV payload."""
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    pcm16 = np.floor(pcm * 32767.0 + 0.5).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(sr)
-        wf.writeframes(pcm16.tobytes())
-    return buf.getvalue()

@@ -266,9 +266,6 @@ def xml_events(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
     return _run_events(df, parse_one, xml_col, key_col, mode)
 
 
-RAW_EVENT_SCHEMA = EVENT_SCHEMA + ", is_cdata boolean"
-
-
 def xml_events_raw(df: DataFrame, xml_col: str = "xml",
                    key_col: str = "doc_key", mode: str = "strict",
                    entities: dict[str, str] | None = None) -> DataFrame:
@@ -434,19 +431,6 @@ def xml_dom(df: DataFrame, xml_col: str = "xml", key_col: str = "doc_key",
                     keys=[_doc_key(key_col, key_col)],
                     errors=(ET.ParseError, AttributeError),
                     strict=mode == "strict", per_doc=True)
-
-
-def split_qname(col):
-    """Resolve a Clark-notation name (``{uri}local``, the form the parser
-    emits for namespaced documents — the namespaceResolver surface of
-    reference ``xml/src/main/scala/fs2/data/xml/package.scala``) into a
-    ``struct(ns_uri, local)``. Non-namespaced names get a null ns_uri."""
-    from pyspark.sql import functions as F
-    c = F.col(col) if isinstance(col, str) else col
-    ns = F.when(c.startswith("{"), F.regexp_extract(c, r"^\{(.*)\}", 1))
-    local = F.when(c.startswith("{"),
-                   F.regexp_extract(c, r"^\{.*\}(.*)$", 1)).otherwise(c)
-    return F.struct(ns.alias("ns_uri"), local.alias("local"))
 
 
 def xml_render(events: DataFrame, key_col: str = "doc_key") -> DataFrame:

@@ -10,9 +10,8 @@ state like fs2-data's bounded open-tag stack bounds memory (reference
 
 ``streaming_session_aggregate`` — gap-based session windows via the native
 ``session_window`` aggregation (state-store-backed, watermark-expired).
-``windowed_counts`` — tumbling/sliding event-time aggregation.
 
-Both are micro-batch testable: drive with a file/memory source and
+It is micro-batch testable: drive with a file/memory source and
 ``processAllAvailable()`` (see tests/test_streaming.py).
 """
 
@@ -173,25 +172,6 @@ def streaming_running_features(
             .groupBy(key)
             .applyInPandasWithState(
                 fn, out_schema, state_schema, "update", timeout_conf))
-
-
-def windowed_counts(
-    events: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Tumbling (or sliding) event-time counts per key."""
-    win = F.window(F.col(ts), window, slide) if slide else F.window(F.col(ts), window)
-    events = events.withColumn(ts, F.col(ts).cast("timestamp"))
-    return (
-        events.withWatermark(ts, watermark)
-        .groupBy(win.alias("w"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(key, F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"), "n")
-    )
 
 
 def streaming_dedup(

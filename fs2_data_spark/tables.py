@@ -122,24 +122,6 @@ TOKENS_SQL = (
 )
 
 
-def tokenize_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents(doc_id, text, lang, source, n_chars) -> input_hint token table.
-
-    Deterministic, engine-agnostic tokenizer (``len(word)*256 + ascii(word)``)
-    so a DuckDB oracle can reproduce token arrays exactly (token-array
-    equality is the per-row invariant from BASELINE.json). Stays entirely in
-    whole-stage codegen: split/filter/transform are JVM higher-order
-    functions, no Python.
-    """
-    tokens = tokens_col(text_col)
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        tokens.alias("tokens"),
-        F.size(tokens).alias("n_tok"),
-        F.col("source").alias("source"),
-    )
-
-
 def token_sequences_fast(
     spark: SparkSession,
     n_rows: int,

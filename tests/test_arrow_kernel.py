@@ -4,8 +4,9 @@ of any type ride through uncast, astral text hashes like the Catalyst
 expressions, NULL vectors project to NULL (``jl_project``) or read as the
 zero vector (the cosine operators), ragged vectors raise, a NULL document
 follows one rule in every per-row engine, no ``mapInArrow``/``mapInPandas``
-or integral-id gate lives outside the runner, and the vector operators keep
-no Catalyst twin."""
+or integral-id gate lives outside the runner, the vector operators keep
+no Catalyst twin, and every public library function has a caller or is a
+test's named reference."""
 
 import ast
 import uuid
@@ -109,6 +110,110 @@ def test_vector_operators_have_no_catalyst_twin():
             if name in _GONE:
                 bad.append(f"{rel}:{getattr(node, 'lineno', 0)} {name}")
     assert not bad, bad
+
+
+# --- guard: every library function has a caller ----------------------------
+
+# what calls the library from outside: the driver entry point, the
+# benchmarks and the tools
+_CALLERS = ("__spark_entry__.py", "bench.py", "bench_extra.py", "perfbench",
+            "jobs", "tools")
+# functions that only a test calls, each kept as the reference the test
+# compares a registry path against: qualified name -> the test (or the test
+# helper) that names it
+_TEST_REFERENCES = {
+    "functions.text.minhash_signature_shingles": "test_arrow_kernel.py::_case",
+    "functions.text.minhash_signature": "test_arrow_kernel.py::_case",
+    "functions.text.winnow_fingerprints": "test_arrow_kernel.py::_case",
+    "functions.text.hashed_bow": "test_arrow_kernel.py::_case",
+    "functions.text.simhash": "test_arrow_kernel.py::_case",
+    "functions.tokens.token_entropy": "test_arrow_kernel.py::_case",
+    "operators.seqops.skipgram_pairs": "test_arrow_kernel.py::_case",
+    "operators.dedup.cdc_chunks": "test_arrow_kernel.py::_case",
+    "operators.curriculum.quantile_buckets_sql":
+        "test_curriculum.py::test_sql_mirror_matches_duckdb",
+    "sources.stdlib_media.encode_pgm":
+        "test_streaming_multimodal.py::test_stdlib_pnm_roundtrip_and_luma",
+    "sources.binary_codecs.transcode_msgpack_to_json":
+        "test_formats.py::test_transcode_json_to_cbor_and_back",
+}
+
+
+def _uses(node, strings=False):
+    """Names ``node`` reads: bare names, attributes, the imported name behind
+    a local alias that is read, and (``strings``) identifier-valued string
+    constants — perfbench's tracer wraps functions by name. Docstrings and
+    comments do not count."""
+    out, alias = set(), {}
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            alias.update((a.asname or a.name, a.name) for a in n.names)
+        elif (strings and isinstance(n, ast.Constant)
+              and isinstance(n.value, str) and n.value.isidentifier()):
+            out.add(n.value)
+    return out | {alias[u] for u in out if u in alias}
+
+
+def _reach(defs, roots):
+    """Closure of ``roots`` over the names each reached definition reads."""
+    seen, todo = set(), [r for r in roots if r in defs]
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += [u for _, d in defs[name] for u in _uses(d) - {name}
+                     if u in defs]
+    return seen
+
+
+def test_every_public_function_has_a_caller_or_is_a_reference():
+    """A public function of the package is reached from a caller (the
+    package's own module-level code and ``@_q`` registry queries, or
+    ``_CALLERS``), is exported by a package ``__all__``, or is a
+    ``_TEST_REFERENCES`` entry that its test names and nothing else
+    reaches. A package use counts only from reached code, so a helper whose
+    one caller is test-only is flagged too. Names match across modules, an
+    over-approximation."""
+    defs, roots, public = {}, set(), {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).with_suffix("").as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.ClassDef)):
+                defs.setdefault(st.name, []).append((rel, st))
+                for d in st.decorator_list:
+                    roots |= _uses(d)
+                    if getattr(getattr(d, "func", None), "id", None) == "_q":
+                        roots.add(st.name)
+                if (isinstance(st, ast.FunctionDef)
+                        and not st.name.startswith("_")):
+                    public[f"{rel.replace('/', '.')}.{st.name}"] = st.name
+            else:
+                roots |= _uses(st)
+                if (path.name == "__init__.py" and isinstance(st, ast.Assign)
+                        and any(getattr(t, "id", "") == "__all__"
+                                for t in st.targets)):
+                    roots |= set(ast.literal_eval(st.value))
+    root = PKG.parent
+    for entry in _CALLERS:
+        for path in ([root / entry] if entry.endswith(".py")
+                     else sorted((root / entry).rglob("*.py"))):
+            roots |= _uses(ast.parse(path.read_text(), entry), strings=True)
+    reached = _reach(defs, roots)
+    refs = {public[q] for q in _TEST_REFERENCES}
+    covered = _reach(defs, roots | refs)
+    assert sorted(q for q, n in public.items() if n not in covered) == []
+    assert sorted(q for q in _TEST_REFERENCES if public[q] in reached) == []
+    tests = Path(__file__).resolve().parent
+    for q, where in _TEST_REFERENCES.items():
+        file, fn = where.split("::")
+        body = [f for f in ast.parse((tests / file).read_text()).body
+                if getattr(f, "name", None) == fn]
+        assert body and public[q] in _uses(body[0]), (q, where)
 
 
 # --- astral text: kernels == Catalyst on emoji ------------------------------
@@ -511,8 +616,6 @@ _NULL_DOC = {
         df, "doc", "id", mode=m), None),
     "xml_events_raw": (_XML, lambda df, m: XML.xml_events_raw(
         df, "doc", "id", mode=m), None),
-    "apply_selector_wrapped": (_JSON, lambda df, m: SEL.apply_selector_wrapped(
-        df, "doc", ".a", mode=m), "filtered"),
     "json_transform": (_JSON, lambda df, m: JQ.json_transform(
         df, "doc", "$.a", lambda v: v, mode=m), "transformed"),
     "json_merge_patch": (_JSON, lambda df, m: JQ.json_merge_patch(

@@ -12,7 +12,6 @@ from fs2_data_spark.operators.bpe import (
     _merge_flat,
     apply_merges_arrow,
     bpe_learn,
-    merge_pair_expr,
     pair_counts,
 )
 
@@ -118,14 +117,6 @@ def test_pair_counts_matches_reference(spark):
     got = {(r.a, r.b): r.cnt
            for r in pair_counts(_mk(spark, rows)).collect()}
     assert got == dict(_ref_pair_counts(rows))
-
-
-def test_merge_pair_expr_matches_reference(spark):
-    rows = _rand_corpus(6)
-    df = _mk(spark, rows).withColumn(
-        "m", merge_pair_expr("tokens", 1, 1, 77))
-    got = {r.doc_id: list(r.m) for r in df.collect()}
-    assert got == {i: _ref_merge(t, 1, 1, 77) for i, t in enumerate(rows)}
 
 
 def test_apply_merges_arrow_chain(spark):

@@ -1,6 +1,8 @@
 """Resumable writes: lineage manifests, idempotent re-runs, crash resume,
 stale-input invalidation."""
 
+import glob
+import json
 import os
 import shutil
 
@@ -121,6 +123,39 @@ def test_stale_input_invalidates(spark, tmp_path):
         want = with_bucket(df, "doc_id", 4).groupBy("__bucket").count().collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
         assert verify_manifests(spark, path) == []
+
+
+@pytest.mark.parametrize("first,second", [((200, 8), (150, 4)),
+                                          ((200, 4), (200, 8)),
+                                          ((200, 8), (200, 4))],
+                         ids=["shrink-new-input", "grow", "shrink"])
+def test_bucket_count_change_rewrites_layout(spark, tmp_path, first, second):
+    """A re-run into the same path with another bucket count recomputes
+    every bucket and leaves no bucket of the old layout behind."""
+    path = str(tmp_path / "out")
+    run_resumable(_data(spark, first[0]), path, key="doc_id", n_buckets=first[1])
+    df, n = _data(spark, second[0]), second[1]
+    r = run_resumable(df, path, key="doc_id", n_buckets=n)
+    assert sorted(r["computed"]) == list(range(n))
+    got = read_resumable(spark, path).select(*df.columns).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, df.collect()))
+    assert sorted(completed_partitions(path)) == list(range(n))
+    assert verify_manifests(spark, path) == []
+
+
+def test_manifest_without_bucket_count_is_recomputed_once(spark, tmp_path):
+    df, path = _data(spark), str(tmp_path / "out")
+    run_resumable(df, path, key="doc_id", n_buckets=4)
+    for f in glob.glob(os.path.join(path, "_manifests", "part-*.json")):
+        with open(f) as fh:
+            m = json.load(fh)
+        del m["n_buckets"]
+        with open(f, "w") as fh:
+            json.dump(m, fh)
+    assert sorted(run_resumable(df, path, key="doc_id", n_buckets=4)["computed"]) \
+        == list(range(4))
+    assert run_resumable(df, path, key="doc_id", n_buckets=4)["computed"] == []
+    assert read_resumable(spark, path).count() == 200
 
 
 def test_bucketing_is_deterministic(spark):

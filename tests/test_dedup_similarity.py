@@ -4,13 +4,8 @@ brute-force is the oracle for the LSH variants."""
 import pyspark.sql.functions as F
 import pytest
 
-from fs2_data_spark.operators.dedup import (
-    embedding_near_dups,
-    exact_dedup,
-    jaccard_dedup_pairs,
-    minhash_lsh_candidates,
-    simhash_groups,
-)
+from fs2_data_spark.functions import veckernels as VK
+from fs2_data_spark.functions.textkernels import simhash_kernel
 from fs2_data_spark.operators.similarity import cosine_topk, lsh_bucket_topk
 
 
@@ -23,33 +18,12 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_exact_dedup(spark, docs):
-    kept = exact_dedup(docs)
-    ids = sorted(r.doc_id for r in kept.collect())
-    assert ids == [0, 2, 3, 5]  # 1 dups 0, 4 dups 3
-
-
-def test_minhash_candidates_contain_planted_pairs(spark, docs):
-    pairs = {(r.id1, r.id2) for r in minhash_lsh_candidates(docs).collect()}
-    assert (0, 1) in pairs          # identical text always collides
-    assert (3, 4) in pairs
-    assert (0, 2) in pairs or (1, 2) in pairs  # near-dup should share a band
-
-
 def test_simhash_identical_texts_same_hash(spark, docs):
-    sh = {r.id: r.sh for r in simhash_groups(docs).collect()}
+    sh = {r.doc_id: r.sh
+          for r in simhash_kernel(docs, "doc_id", "text", 16).collect()}
     assert sh[0] == sh[1] and sh[3] == sh[4]
     # near-dup: small Hamming distance
     assert bin(sh[0] ^ sh[2]).count("1") <= 4
-
-
-def test_jaccard_pairs(spark, docs):
-    pairs = {(r.id1, r.id2): r.jaccard
-             for r in jaccard_dedup_pairs(docs, threshold=0.5).collect()}
-    assert pairs[(0, 1)] == 1.0
-    assert pairs[(3, 4)] == 1.0
-    assert pairs[(0, 2)] > 0.9
-    assert (0, 3) not in pairs
 
 
 @pytest.fixture(scope="module")
@@ -91,9 +65,17 @@ def test_lsh_topk_matches_exact_on_buckets(spark, vecs):
 
 
 def test_embedding_near_dups(spark, vecs):
-    pairs = embedding_near_dups(vecs, threshold=0.999, n_planes=4, dim=4)
-    got = {(r.id1, r.id2) for r in pairs.collect()}
-    assert all(a % 8 == b % 8 for a, b in got)
+    """The ``emb_near_dups`` plan: hyperplane-LSH cells, then the exact
+    cosine verify of every same-cell pair."""
+    aug = VK.lsh_augment_kernel(vecs, "vec_id", "embedding", n_planes=4,
+                                dim=4, seed=42)
+    raw = VK.cell_pair_candidates(aug.select("vec_id", "v", "sig"),
+                                  threshold=0.999, round_dp=4,
+                                  id_col="vec_id", vec_col="v",
+                                  cell_col="sig")
+    got = {(r.j, r.i)
+           for r in raw.filter(F.round("cos_raw", 4) >= 0.999).collect()}
+    assert all(a < b and a % 8 == b % 8 for a, b in got)
     assert len(got) >= 20  # 8 groups x C(5,2)=10 pairs, LSH keeps most
 
 # --- shingle-LSH jaccard: recall vs the exact all-pairs formulation --------
@@ -189,75 +171,6 @@ def test_ivf_canonical_mode(spark, vecs):
     assert set(ivf) == set(exact)
     hits = sum(1 for q in exact if ivf[q] == exact[q])
     assert hits >= 0.8 * len(exact), (hits, len(exact))
-
-
-def test_duplicate_spans_candidates(spark):
-    """Exact-substring dedup candidates: shared k-window -> both docs report
-    the span at the right positions; unique windows never reported."""
-    from fs2_data_spark.operators.dedup import duplicate_spans
-    df = spark.createDataFrame(
-        [(1, [1, 2, 3, 4, 5, 6]), (2, [9, 1, 2, 3, 4, 8]),
-         (3, [7, 7, 7]), (4, [5, 6, 7, 8])],
-        "doc_id bigint, tokens array<int>")
-    out = sorted((r.doc_id, r.pos, r.n_docs)
-                 for r in duplicate_spans(df, k=4).collect())
-    assert out == [(1, 0, 2), (2, 1, 2)]
-    # within-doc repetition alone does not cross the min_docs bar
-    rep = spark.createDataFrame([(1, [1, 2, 1, 2, 1, 2, 1, 2])],
-                                "doc_id bigint, tokens array<int>")
-    assert duplicate_spans(rep, k=4).count() == 0
-
-
-def test_duplicate_spans_plan_no_python_no_cartesian(spark):
-    import io
-    from contextlib import redirect_stdout
-    from fs2_data_spark.functions.arrow_kernel import PYTHON_NODES
-    from fs2_data_spark.operators.dedup import duplicate_spans
-    df = spark.createDataFrame([(1, [1, 2, 3, 4])],
-                               "doc_id bigint, tokens array<int>")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        duplicate_spans(df, k=2).explain("formatted")
-    plan = buf.getvalue()
-    for marker in ("CartesianProduct", *PYTHON_NODES):
-        assert marker not in plan
-
-
-def test_duplicate_spans_exact_mode_agrees(spark):
-    """exact=True (slice-keyed, collision-free) equals the hash path on
-    collision-free data, same output schema."""
-    from fs2_data_spark.operators.dedup import duplicate_spans
-    import random
-    rng = random.Random(5)
-    shared = [rng.randint(0, 1000) for _ in range(6)]
-    rows = [(i, [rng.randint(0, 1000) for _ in range(rng.randint(0, 4))]
-             + shared + [rng.randint(0, 1000) for _ in range(3)])
-            for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id bigint, tokens array<int>")
-    a = sorted(map(tuple, duplicate_spans(df, k=6).collect()))
-    b = sorted(map(tuple, duplicate_spans(df, k=6, exact=True).collect()))
-    assert a == b and len(a) >= 10
-
-
-def test_decontaminate_flags_and_plan(spark):
-    from fs2_data_spark.operators.dedup import decontaminate
-    corpus = spark.createDataFrame(
-        [(1, [1, 2, 3, 4, 5]), (2, [9, 9, 9, 9]), (3, [0, 1, 2, 3, 4]),
-         (4, [])],
-        "doc_id bigint, tokens array<int>")
-    bench = spark.createDataFrame([(100, [1, 2, 3, 4])],
-                                  "doc_id bigint, tokens array<int>")
-    out = decontaminate(corpus, bench, k=4)
-    got = {r.doc_id: (r.n_contaminated_spans, r.contaminated)
-           for r in out.collect()}
-    assert got == {1: (1, True), 2: (0, False), 3: (1, True), 4: (0, False)}
-    # the benchmark span table must be broadcast (map-side semi-join)
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert "BroadcastHashJoin" in buf.getvalue()
 
 
 def test_repetition_stats_values_and_no_shuffle(spark):

@@ -1,7 +1,7 @@
 """Format coverage: CBOR/MessagePack codecs (RFC 8949 Appendix-A-style
 vectors + Hypothesis roundtrip laws, the reference's test strategy:
 ``cbor/shared/src/test/scala/fs2/data/cbor/ParserSpec.scala:36-56``,
-``RoundtripTest.scala``), XML event parsing, JSON path selection."""
+``RoundtripTest.scala``), XML event parsing, JSON wrapping."""
 
 import json
 
@@ -9,9 +9,6 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fs2_data_spark.functions.jsonpath import (
-    iterate_array, render_json, select_path, unwrap_array, wrap_as_array,
-)
 from fs2_data_spark.sources.binary_codecs import (
     cbor_decode, cbor_encode, msgpack_decode, msgpack_encode,
     transcode_cbor_to_json, transcode_msgpack_to_json,
@@ -128,30 +125,6 @@ def test_xml_texts_at(spark):
     df = spark.createDataFrame([("d1", XML_DOC)], "doc_key string, xml string")
     vals = [r.value for r in xml_texts_at(df, "xml", "item").orderBy("event_no").collect()]
     assert vals == ["hello", "world", "deep"]
-
-
-def test_select_path_and_iterate(spark):
-    df = spark.createDataFrame(
-        [(1, '{"a": {"b": [10, 20, 30]}, "c": "x"}'), (2, '{"c": "y"}')],
-        "id bigint, js string")
-    got = {r.id: (r.b0, r.c) for r in df.select(
-        "id", select_path("js", "$.a.b[0]").alias("b0"),
-        select_path("js", "$.c").alias("c")).collect()}
-    assert got[1] == ("10", "x")
-    assert got[2] == (None, "y")    # missing path -> null (lenient selector)
-
-
-def test_wrap_unwrap_roundtrip(spark):
-    df = spark.createDataFrame(
-        [("d", 0, "x"), ("d", 1, "y"), ("e", 0, "z")],
-        "doc string, pos int, v string")
-    wrapped = wrap_as_array(df, ["doc"], "v", order_col="pos")
-    got = {r.doc: r.vs for r in wrapped.collect()}
-    assert got == {"d": ["x", "y"], "e": ["z"]}
-    back = unwrap_array(wrapped, "vs")
-    assert back.count() == 3
-    rendered = render_json(wrapped).first()
-    assert '"vs"' in rendered.json
 
 
 # --- MessagePack extension + timestamp types (msgpack/low/model.scala:48-62) -

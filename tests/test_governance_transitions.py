@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 
 from fs2_data_spark.operators.drift import mutual_information
 from fs2_data_spark.operators.encoding import trend_slope
-from fs2_data_spark.operators.governance import (flag_risky_rows,
-                                                 k_anonymity_audit)
+from fs2_data_spark.operators.governance import k_anonymity_audit
 from fs2_data_spark.operators.sessionize import session_transitions
 
 
@@ -39,19 +38,6 @@ def test_k_anonymity_flags_small_and_uniform_classes(spark):
     assert audit["b"].k_violation and audit["b"].l_violation
     assert audit["b"].n == 3 and audit["b"].n_sensitive == 1
     assert not audit["c"].k_violation and not audit["c"].l_violation
-
-
-def test_flag_risky_rows_joins_back(spark):
-    rows = [(1, 7, "x", _ts(0), 1.0), (2, 7, "x", _ts(1), 1.0),
-            (3, 8, "y", _ts(0), 1.0)] + [
-        (10 + i, i, "z", _ts(i), 1.0) for i in range(9)]
-    out = flag_risky_rows(_events(spark, rows), quasi=["event_type"],
-                          sensitive="user_id", k=3, ell=2).collect()
-    by_id = {r.event_id: r for r in out}
-    assert len(out) == len(rows)
-    assert by_id[1].k_violation and by_id[1].l_violation   # n=2, 1 user
-    assert by_id[3].k_violation                             # n=1
-    assert not by_id[10].k_violation and not by_id[10].l_violation
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fs2_data_spark.operators.mixing import (
-    mixing_rates,
     portable_unit_hash,
     stratified_sample,
 )
@@ -56,15 +55,6 @@ def test_portable_hash_matches_duckdb(spark):
         "SELECT i, ((i * 2654435761 + 42) % 1000003 * 40503 + 17) % 999983 "
         "FROM range(500) t(i)").fetchall())
     assert got == exp
-
-
-def test_mixing_rates_math(spark, corpus):
-    rates = mixing_rates(corpus, {"web": 1, "code": 1, "books": 2},
-                         budget_rows=2000)
-    # web: 2000*(1/4)/6000, code: 500/3000, books: capped at 1.0 (1000 < 1000)
-    assert abs(rates["web"] - 500 / 6000) < 1e-12
-    assert abs(rates["code"] - 500 / 3000) < 1e-12
-    assert rates["books"] == 1.0
 
 
 # --- packing ---------------------------------------------------------------
@@ -177,26 +167,7 @@ def test_hash_split_sql_matches_duckdb(spark, corpus):
     assert got == exp
 
 
-# --- temperature rates + resampling ---------------------------------------
-
-def test_temperature_rates_math():
-    from fs2_data_spark.operators.mixing import temperature_rates
-    counts = {"a": 900, "b": 100}
-    # alpha=1: natural distribution -> every rate 1.0
-    nat = temperature_rates(counts, alpha=1.0)
-    assert nat == {"a": 1.0, "b": 1.0}
-    # alpha=0: uniform across strata -> expected rows equal per stratum
-    uni = temperature_rates(counts, alpha=0.0)
-    assert abs(uni["a"] * 900 - uni["b"] * 100) < 1e-9
-    # alpha=0.5 boosts the tail, trims the head, preserves the total
-    t = temperature_rates(counts, alpha=0.5)
-    assert t["b"] > 1.0 > t["a"]
-    assert abs(t["a"] * 900 + t["b"] * 100 - 1000) < 1e-9
-    # explicit target_total rescales
-    t2 = temperature_rates(counts, alpha=0.5, target_total=500)
-    assert abs(t2["a"] * 900 + t2["b"] * 100 - 500) < 1e-9
-    assert temperature_rates({}) == {}
-
+# --- resampling ------------------------------------------------------------
 
 def _portable_hash(i, seed):
     return ((i * 2_654_435_761 + seed) % 1_000_003 * 40_503 + 17) % 999_983

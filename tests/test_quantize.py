@@ -15,12 +15,12 @@ Load-bearing properties pinned here:
 import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fs2_data_spark.operators.quantize import (
     corpus_dim_stats,
-    dequantize_error,
     quantize,
     quantized_topk,
 )
@@ -128,5 +128,8 @@ def test_dequantize_error_bounded(spark, coded):
     mx = [max(r[1][j] for r in rows) for j in range(DIM)]
     steps = [(hi - lo) / 255.0 for lo, hi in zip(mn, mx)]
     bound = max(s / 2 for s in steps) + 1e-12
-    for r in dequantize_error(qdf, "v", DIM).collect():
-        assert r.max_abs_err <= bound
+    got = qdf.collect()
+    v = np.array([r.v for r in got])
+    q = np.array([r.q for r in got], dtype=np.float64)
+    lo, hi = np.array(mn), np.array(mx)
+    assert float(np.abs(lo + q * (hi - lo) / 255.0 - v).max()) <= bound

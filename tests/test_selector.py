@@ -112,40 +112,3 @@ def test_apply_selector_dataframe(spark):
         apply_selector(df, "js", ".f!", mode="strict").collect()
     out2 = apply_selector(df, "js", ".f!", mode="attempt").collect()
     assert [(r.id, r.value) for r in out2] == [(1, "[5,6]")]
-
-
-# ----- wrap mode (json.filter(selector, wrap=true)) ---------------------------
-
-def test_filter_selector_wrap_skeleton():
-    from fs2_data_spark.functions.selector import _NOTHING, filter_selector
-    doc = json.loads('{"a": {"b": 1, "c": 2}, "z": 0}')
-    assert filter_selector(doc, parse_selector(".a.b")) == {"a": {"b": 1}}
-    assert filter_selector(doc, parse_selector('.["a", "z"]')) == \
-        {"a": {"b": 1, "c": 2}, "z": 0}
-    arr = json.loads('{"l": [{"v": 1}, {"w": 2}, {"v": 3}]}')
-    assert filter_selector(arr, parse_selector(".l.[].v?")) == \
-        {"l": [{"v": 1}, {"v": 3}]}
-    assert filter_selector(doc, parse_selector(".missing?")) is _NOTHING
-
-
-def test_apply_selector_wrapped_dataframe(spark):
-    from fs2_data_spark.functions.selector import apply_selector_wrapped
-    df = spark.createDataFrame(
-        [(1, '{"a": {"b": 5, "c": 6}, "z": 0}'), (2, '{"z": 1}')],
-        "id int, js string")
-    out = {r.id: r.filtered
-           for r in apply_selector_wrapped(df, "js", ".a?.b?").collect()}
-    assert json.loads(out[1]) == {"a": {"b": 5}}
-    assert out[2] is None
-
-
-def test_select_path_variant(spark):
-    from pyspark.sql import functions as F
-    from fs2_data_spark.functions.jsonpath import parse_variant, select_path_variant
-    df = spark.createDataFrame([(1, '{"a": {"b": [5, 7]}}')], "id int, js string")
-    v = df.select("id", parse_variant("js").alias("var"))
-    out = v.select(
-        "id",
-        select_path_variant("var", "$.a.b[1]", "int").alias("x"),
-        select_path_variant("var", "$.a.zz", "int").alias("miss")).first()
-    assert out.x == 7 and out.miss is None

@@ -21,18 +21,22 @@ from fs2_data_spark.operators.dedup import segment_dedup
 from fs2_data_spark.operators.quality import gopher_rules
 from fs2_data_spark.operators.sketches import (
     KMV_P,
-    cms_merge,
     cms_point_query,
     cms_sketch,
     kmv_estimate,
     kmv_hash,
-    kmv_merge,
     kmv_sketch,
 )
 
 
 def _elems(spark, rows):
     return spark.createDataFrame(rows, "source string, h bigint")
+
+
+def _fold(a, b, keys, agg):
+    """The monoid merge of two sketch frames: ``agg`` over ``keys`` of their
+    union — how shards' sketches combine without re-scanning."""
+    return a.unionByName(b).groupBy(*keys).agg(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -61,9 +65,10 @@ def test_kmv_merge_law(spark):
                + [("t", h) for h in (2, 4)])
     b = _elems(spark, [("s", h) for h in (3, 9, 11, 2)])
     k = 4
-    merged = kmv_merge(kmv_sketch(a, k=k), kmv_sketch(b, k=k), k=k)
+    got = {}
+    for r in kmv_sketch(a, k=k).unionByName(kmv_sketch(b, k=k)).collect():
+        got[r.source] = sorted(set(got.get(r.source, [])) | set(r.kmv))[:k]
     whole = kmv_sketch(a.unionByName(b), k=k)
-    got = {r.source: r.kmv for r in merged.collect()}
     want = {r.source: r.kmv for r in whole.collect()}
     assert got == want == {"s": [1, 2, 3, 5], "t": [2, 4]}
 
@@ -121,8 +126,9 @@ def test_cms_merge_law(spark):
     occ = _occ(spark, [("w%d" % i, 2 * i + 1) for i in range(30)])
     half_a = occ.filter(F.col("h") % 2 == 0).select("h")
     half_b = occ.filter(F.col("h") % 2 == 1).select("h")
-    merged = cms_merge(cms_sketch(half_a, depth=3, width=16),
-                       cms_sketch(half_b, depth=3, width=16))
+    merged = _fold(cms_sketch(half_a, depth=3, width=16),
+                   cms_sketch(half_b, depth=3, width=16),
+                   ["row", "bucket"], F.sum("cnt").alias("cnt"))
     whole = cms_sketch(occ.select("h"), depth=3, width=16)
     as_map = lambda df: {(r.row, r.bucket): r.cnt for r in df.collect()}  # noqa: E731
     assert as_map(merged) == as_map(whole)
@@ -302,7 +308,7 @@ def test_hll_merge_law(spark):
     # including overlapping elements
     import random
     from fs2_data_spark.operators.sketches import (
-        hll_estimate, hll_merge, hll_registers, kmv_hash)
+        hll_estimate, hll_registers, kmv_hash)
     rng = random.Random(23)
     a_vals = [rng.randrange(10 ** 15) for _ in range(400)]
     b_vals = a_vals[:100] + [rng.randrange(10 ** 15) for _ in range(300)]
@@ -313,12 +319,12 @@ def test_hll_merge_law(spark):
                       kmv_hash(F.col("x")).alias("h")))
         return hll_registers(el)
 
-    merged = {(r.bucket, r.r)
-              for r in hll_merge(regs(a_vals), regs(b_vals)).collect()}
+    merged = _fold(regs(a_vals), regs(b_vals), ["source", "bucket"],
+                   F.max("r").alias("r"))
     union = {(r.bucket, r.r) for r in regs(a_vals + b_vals).collect()}
-    assert merged == union
+    assert {(r.bucket, r.r) for r in merged.collect()} == union
     # and the estimate is a pure function of the registers
-    e1 = hll_estimate(hll_merge(regs(a_vals), regs(b_vals))).collect()[0]
+    e1 = hll_estimate(merged).collect()[0]
     e2 = hll_estimate(regs(a_vals + b_vals)).collect()[0]
     assert (e1.sum_scaled, e1.n_zero, e1.est_distinct) == \
            (e2.sum_scaled, e2.n_zero, e2.est_distinct)
@@ -517,13 +523,12 @@ def test_hist_quantile_containment(spark):
 def test_hist_merge_monoid_law(spark):
     """sketch(A) + sketch(B) == sketch(A union B), hence identical
     quantile read-outs — the property that lets shards fold at 100 TB."""
-    from fs2_data_spark.operators.sketches import (hist_merge,
-                                                   hist_quantiles,
-                                                   hist_sketch)
+    from fs2_data_spark.operators.sketches import hist_quantiles, hist_sketch
     a = [(i * 13) % 997 for i in range(200)]
     b = [(i * 31) % 4093 for i in range(150)]
-    merged = hist_merge(hist_sketch(_hist_df(spark, a)),
-                        hist_sketch(_hist_df(spark, b)))
+    merged = _fold(hist_sketch(_hist_df(spark, a)),
+                   hist_sketch(_hist_df(spark, b)), ["source", "blen"],
+                   F.sum("cnt").alias("cnt"))
     whole = hist_sketch(_hist_df(spark, a + b))
     assert (sorted(map(tuple, merged.collect()))
             == sorted(map(tuple, whole.collect())))

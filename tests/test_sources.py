@@ -6,7 +6,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 
 from fs2_data_spark.sources.csvsrc import decode_cells, read_csv, write_csv
-from fs2_data_spark.sources.jsonl import parse_json_col, read_jsonl
+from fs2_data_spark.sources.jsonl import read_jsonl
 
 
 @pytest.fixture(scope="module")
@@ -75,13 +75,6 @@ def test_csv_roundtrip(spark, tmp_path):
     write_csv(df, out)
     back = read_csv(spark, out, schema="id bigint, s string", header=True)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_parse_json_col_on_events(spark, events):
-    out = parse_json_col(events.limit(50), "props", "k int", mode="attempt")
-    rows = out.collect()
-    assert all(r.ok for r in rows)
-    assert all(r.props_parsed.k is not None for r in rows)
 
 
 def test_decode_text_charsets(spark):

@@ -4,7 +4,7 @@ binary-column plumbing."""
 import pytest
 from pyspark.sql import functions as F
 
-from fs2_data_spark.operators.multimodal import attach_media_meta, decode_image, sample_frames
+from fs2_data_spark.operators.multimodal import attach_media_meta, decode_image
 from fs2_data_spark.streaming.sessions import streaming_session_aggregate
 
 
@@ -51,15 +51,6 @@ def test_decode_image_fake_is_deterministic(spark, media):
     assert a == b
     assert all(len(v) == 16 for v in a.values())
     assert all(0.0 <= x <= 1.0 for v in a.values() for x in v)
-
-
-def test_sample_frames(spark, media):
-    out = sample_frames(media, every_n_bytes=16, max_frames=3).collect()
-    assert all(r.frame_no >= 0 and len(r.frame_stub) == 1 for r in out)
-    per_media = {}
-    for r in out:
-        per_media.setdefault(r.media_id, []).append(r.byte_offset)
-    assert all(offs == sorted(offs) for offs in per_media.values())
 
 
 def test_streaming_running_features_matches_batch(spark, events, tmp_path):
@@ -139,41 +130,6 @@ def test_running_state_fold_chunking_invariant():
     assert ref[4] == int(rows["ts"].max().value // 1000)
 
 
-def test_resize_image_stub(spark):
-    """resize plumbing: binary in -> width*height binary out, deterministic,
-    partitioning-invariant; real path raises NotImplementedError."""
-    import pytest as _pytest
-    from fs2_data_spark.operators.multimodal import resize_image
-
-    rows = [(i, bytes(range(i % 7, 250, 3))) for i in range(20)]
-    df = spark.createDataFrame(rows, "media_id bigint, payload binary")
-    out = resize_image(df, width=4, height=4, fake=True)
-    got = {r.media_id: bytes(r.resized) for r in out.collect()}
-    assert all(len(v) == 16 for v in got.values())
-    # deterministic + independent of partitioning
-    got2 = {r.media_id: bytes(r.resized)
-            for r in resize_image(df.repartition(7), width=4, height=4,
-                                  fake=True).collect()}
-    assert got == got2
-    with _pytest.raises(Exception, match="NotImplementedError|imaging"):
-        resize_image(df, fake=False).collect()
-
-
-def test_extract_audio_features_stub(spark):
-    from fs2_data_spark.operators.multimodal import extract_audio_features
-
-    rows = [(i, bytes([(i * 37 + j) % 256 for j in range(600)]))
-            for i in range(10)]
-    df = spark.createDataFrame(rows, "media_id bigint, payload binary")
-    out = extract_audio_features(df, n_bands=6, fake=True).collect()
-    assert all(len(r.audio_features) == 6 for r in out)
-    assert all(0.0 <= v <= 1.0 for r in out for v in r.audio_features)
-    # deterministic across runs
-    out2 = extract_audio_features(df, n_bands=6, fake=True).collect()
-    assert [(r.media_id, list(r.audio_features)) for r in sorted(out, key=lambda r: r.media_id)] == \
-           [(r.media_id, list(r.audio_features)) for r in sorted(out2, key=lambda r: r.media_id)]
-
-
 def test_streaming_late_data_dropped_by_watermark(spark, tmp_path):
     """§2.9 late-data semantics: an event older than the committed watermark
     arriving in a later micro-batch is DROPPED — the finalized session keeps
@@ -220,16 +176,14 @@ def test_streaming_late_data_dropped_by_watermark(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Real-decode paths (VERDICT r03 item #6): light up when the codec libraries
-# are importable; skipped in this container (which ships neither).
+# Real-decode paths (VERDICT r03 item #6): light up when Pillow is
+# importable; skipped where it is absent.
 # ---------------------------------------------------------------------------
 
 from fs2_data_spark.operators.multimodal import probe  # noqa: E402
 
 needs_pil = pytest.mark.skipif(probe("PIL.Image") is None,
                                reason="Pillow not installed in this container")
-needs_soundfile = pytest.mark.skipif(probe("soundfile") is None,
-                                     reason="soundfile not installed")
 
 
 @needs_pil
@@ -245,36 +199,8 @@ def test_decode_image_real_path(spark):
     assert all(abs(f - 128 / 255) < 1e-6 for f in out[0].features)
 
 
-@needs_pil
-def test_resize_image_real_path(spark):
-    import io
-    from PIL import Image
-    from fs2_data_spark.operators.multimodal import resize_image
-    buf = io.BytesIO()
-    Image.new("L", (32, 32), color=7).save(buf, format="PNG")
-    df = spark.createDataFrame([(1, buf.getvalue())], "media_id bigint, payload binary")
-    out = resize_image(df, width=4, height=4).collect()
-    assert len(out[0].resized) == 16 and set(out[0].resized) == {7}
-
-
-@needs_soundfile
-def test_extract_audio_features_real_path(spark):
-    import io
-    import numpy as np
-    import soundfile
-    from fs2_data_spark.operators.multimodal import extract_audio_features
-    buf = io.BytesIO()
-    soundfile.write(buf, np.full(4800, 0.5), 48000, format="WAV")
-    df = spark.createDataFrame([(1, buf.getvalue())], "media_id bigint, payload binary")
-    out = extract_audio_features(df, n_bands=6).collect()
-    assert len(out[0].audio_features) == 6
-    assert all(abs(f - 0.5) < 1e-2 for f in out[0].audio_features)
-
-
 no_pil = pytest.mark.skipif(probe("PIL.Image") is not None,
                             reason="Pillow present: PIL tier shadows the stdlib tier")
-no_soundfile = pytest.mark.skipif(probe("soundfile") is not None,
-                                  reason="soundfile present: shadows stdlib WAV tier")
 
 
 def test_stdlib_pnm_roundtrip_and_luma():
@@ -312,19 +238,6 @@ def test_stdlib_bmp_decode():
     assert px.dtype == np.uint8
 
 
-def test_stdlib_wav_roundtrip():
-    import numpy as np
-    from fs2_data_spark.sources.stdlib_media import decode_wav, encode_wav, sniff
-
-    s = np.sin(np.linspace(0, 6.0, 480))
-    raw = encode_wav(s, sr=16000)
-    assert sniff(raw) == "wav"
-    got, sr = decode_wav(raw)
-    assert sr == 16000 and len(got) == 480
-    # quantize ~1.5e-5 + the 32767-encode/32768-decode scale skew ~3e-5
-    assert float(np.abs(got - s).max()) < 1e-4
-
-
 @no_pil
 def test_decode_image_stdlib_real_path(spark):
     """The REAL (non-fake) branch runs in this container via the stdlib
@@ -338,39 +251,6 @@ def test_decode_image_stdlib_real_path(spark):
     out = decode_image(df, out_dim=8).collect()
     assert len(out[0].features) == 8
     assert all(abs(f - 128 / 255) < 1e-6 for f in out[0].features)
-
-
-@no_pil
-def test_resize_image_stdlib_real_path(spark):
-    import numpy as np
-    from fs2_data_spark.operators.multimodal import resize_image
-    from fs2_data_spark.sources.stdlib_media import encode_pgm
-
-    raw = encode_pgm(np.full((32, 32), 7, dtype=np.uint8))
-    df = spark.createDataFrame([(1, raw)], "media_id bigint, payload binary")
-    out = resize_image(df, width=4, height=4).collect()
-    assert len(out[0].resized) == 16 and set(out[0].resized) == {7}
-    # area-average: a half-black/half-white image lands mid-gray
-    grad = np.zeros((8, 8), dtype=np.uint8)
-    grad[:, 4:] = 255
-    df2 = spark.createDataFrame([(2, encode_pgm(grad))],
-                                "media_id bigint, payload binary")
-    r = bytes(resize_image(df2, width=1, height=1).collect()[0].resized)
-    assert r == bytes([128])  # floor(127.5 + 0.5)
-
-
-@no_soundfile
-def test_extract_audio_features_stdlib_real_path(spark):
-    """Mirrors test_extract_audio_features_real_path via stdlib WAV."""
-    import numpy as np
-    from fs2_data_spark.operators.multimodal import extract_audio_features
-    from fs2_data_spark.sources.stdlib_media import encode_wav
-
-    raw = encode_wav(np.full(4800, 0.5), sr=48000)
-    df = spark.createDataFrame([(1, raw)], "media_id bigint, payload binary")
-    out = extract_audio_features(df, n_bands=6).collect()
-    assert len(out[0].audio_features) == 6
-    assert all(abs(f - 0.5) < 1e-2 for f in out[0].audio_features)
 
 
 def test_stub_error_names_missing_library(spark):

@@ -7,9 +7,8 @@ import pytest
 
 from fs2_data_spark.functions.tokens import (
     tok_fingerprint, tok_index, tok_iterate, tok_ngrams, tok_slice, tok_stats,
-    tok_transform_at,
 )
-from fs2_data_spark.tables import token_sequences, tokenize_documents
+from fs2_data_spark.tables import token_sequences, tokens_col
 
 
 @pytest.fixture(scope="module")
@@ -49,16 +48,6 @@ def test_iterate_preserves_document_order(spark, toks):
         (0, 1), (1, 2), (2, 3), (3, 4), (4, 5)]
 
 
-def test_transform_at_selected_positions(spark, toks):
-    # ast.transform analogue: double tokens at positions {0, 2}
-    got = toks.select(
-        "doc_id",
-        tok_transform_at("tokens", F.array(F.lit(0), F.lit(2)), lambda x: x * 2).alias("out"),
-    )
-    assert _m(got)["d1"] == [2, 2, 6, 4, 5]
-    assert _m(got)["d2"] == [14]
-
-
 def test_fingerprint_is_order_sensitive(spark):
     df = spark.createDataFrame([("a", [1, 2, 3]), ("b", [3, 2, 1])],
                                "doc_id string, tokens array<int>")
@@ -95,13 +84,11 @@ def test_generator_invariants(spark):
 
 
 def test_tokenize_documents_matches_python(spark, documents):
-    got = tokenize_documents(documents.limit(20)).collect()
-    src = {r.doc_id: r.text for r in documents.limit(20).collect()}
+    got = documents.limit(20).select(
+        "doc_id", "text", tokens_col("text").alias("tokens")).collect()
     for r in got:
-        words = [w for w in src[int(r.doc_id)].split(" ") if w]
-        exp = [len(w) * 256 + ord(w[0]) for w in words]
-        assert r.tokens == exp
-        assert r.n_tok == len(exp)
+        words = [w for w in r.text.split(" ") if w]
+        assert r.tokens == [len(w) * 256 + ord(w[0]) for w in words]
 
 
 def test_tok_index_mandatory_modes(spark):

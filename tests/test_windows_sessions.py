@@ -5,7 +5,7 @@ import datetime as dt
 import numpy as np
 
 from fs2_data_spark.operators.sessionize import session_aggregate, sessionize
-from fs2_data_spark.operators.windows import top_k_per_group, with_lag_lead, with_ranks, with_rolling
+from fs2_data_spark.operators.windows import with_lag_lead, with_ranks, with_rolling
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -42,10 +42,9 @@ def test_rolling_matches_pandas(spark, events):
 
 def test_ranks_and_topk(spark, events):
     ranked = with_ranks(events, key="user_id", order="value", desc=True)
-    top3 = top_k_per_group(events, "user_id", "value", k=3, desc=True)
     pdf = events.toPandas()
     exp_top3 = pdf.sort_values("value", ascending=False).groupby("user_id").head(3)
-    assert top3.count() == len(exp_top3)
+    assert ranked.filter("row_number <= 3").count() == len(exp_top3)
     r1 = {r.user_id: r.value for r in ranked.filter("row_number = 1").collect()}
     exp_max = pdf.groupby("user_id")["value"].max()
     for uid, v in r1.items():

@@ -1,6 +1,7 @@
-"""Winnowing fingerprints (functions/text.py) + pair candidates
-(operators/dedup.py): pure-Python reference parity and the MOSS coverage
-guarantee (any shared w+k-1-word run => a shared fingerprint)."""
+"""Winnowing fingerprints (functions/text.py, and the registry's
+``winnow_fp_kernel``) + shared-fingerprint pair candidates: pure-Python
+reference parity and the MOSS coverage guarantee (any shared w+k-1-word run
+=> a shared fingerprint)."""
 
 import random
 
@@ -8,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fs2_data_spark.functions.text import winnow_fingerprints
-from fs2_data_spark.operators.dedup import winnow_pairs
+from fs2_data_spark.functions.textkernels import winnow_fp_kernel
 
 K, W = 3, 4
 
@@ -74,15 +75,23 @@ def test_winnow_edges(spark):
     assert len(got[2]) == 1 and len(got[3]) == 1
 
 
+def _shared_pairs(spark, rows, min_shared):
+    """``{(id1, id2): n_shared}`` for the document pairs whose
+    ``winnow_fp_kernel`` fingerprints share at least ``min_shared``."""
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    fp = {r.doc_id: set(r.fp)
+          for r in winnow_fp_kernel(df, "doc_id", "text", K, W).collect()}
+    shared = {(a, b): len(fp[a] & fp[b]) for a in fp for b in fp if a < b}
+    return {p: n for p, n in shared.items() if n >= min_shared}
+
+
 def test_winnow_pairs_detects_planted_overlap(spark):
     rng = random.Random(29)
     run = _words(rng, 12, vocab=9)
     rows = [(0, (_words(rng, 20) + " " + run).strip()),
             (1, (run + " " + _words(rng, 20)).strip())] + \
            [(i, _words(rng, 25, vocab=200)) for i in range(2, 30)]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    pairs = {(r.id1, r.id2) for r in
-             winnow_pairs(df, min_shared=2).collect()}
+    pairs = _shared_pairs(spark, rows, min_shared=2)
     assert (0, 1) in pairs
     # unrelated docs over a 200-word vocab shouldn't flood the candidates
     assert len(pairs) < 30
@@ -90,8 +99,6 @@ def test_winnow_pairs_detects_planted_overlap(spark):
 
 def test_winnow_pairs_min_shared_filter(spark):
     rows = [(0, "p q r s t u"), (1, "p q r s t u"), (2, "x y z x y z x")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    got = {(r.id1, r.id2): r.n_shared
-           for r in winnow_pairs(df, min_shared=1).collect()}
+    got = _shared_pairs(spark, rows, min_shared=1)
     assert (0, 1) in got and got[(0, 1)] >= 1
     assert all(2 not in p for p in got)
