@@ -31,7 +31,7 @@ import json
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------------
 # JSONPath: parse

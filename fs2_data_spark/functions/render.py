@@ -47,10 +47,8 @@ def text(s: str) -> tuple:
     return (TEXT, s)
 
 
-# softline / softbreak (Renderer.scala): a space/empty if it fits, else a
-# new line
+# softline (Renderer.scala): a space if it fits, else a new line
 SOFTLINE = (GROUP_BEGIN, LINE, GROUP_END)
-SOFTBREAK = (GROUP_BEGIN, BREAK, GROUP_END)
 
 
 def words(s: str, boundary: str = r"\s+") -> list[tuple]:

@@ -31,7 +31,7 @@ discrete/bounded-cardinality scores.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def quantile_bucket_map(

@@ -12,11 +12,14 @@ the same tagged union and running frame as every as-of operator
     1. split each key's timeline into time buckets;
     2. compute the operator within (key, bucket) partitions — parallel even
        for a single hot key;
-    3. aggregate one summary row per (key, bucket) — thousands of rows, not
-       billions;
-    4. resolve cross-bucket carries on the summary with a cheap per-key
-       window (prefix sums / LOCF over buckets);
-    5. join carries back on ``struct(key)`` (NULL-safe) and combine.
+    3. aggregate ONE summary row per (key, bucket) over the windowed union
+       — the last right payload, the first and last left row and the left
+       session flags in a single conditional aggregate; thousands of rows,
+       not billions;
+    4. resolve cross-bucket carries on that summary with a cheap per-key
+       window (prefix sums / LOCF / neighbours over buckets);
+    5. join the carries back once, on ``struct(key)`` (NULL-safe), and
+       combine.
 
 This module keeps the sampled detection that decides which keys take that
 path.  Results equal the single-window plan (pinned by

@@ -4050,7 +4050,7 @@ FROM per
 """)
 def cdc_dedup_stats_docs(spark, sf_dir):
     """Content-defined-chunking dedup audit (``operators/dedup.py
-    cdc_chunks``/``cdc_dedup_stats``): Rabin-style boundaries wherever the
+    cdc_chunks`` as an Arrow kernel): Rabin-style boundaries wherever the
     4-token rolling window hash is ``% 16 == 0``, then one hash aggregation
     over chunk hashes measures the tokens a content-addressed chunk store
     would save. Chunking rides the scan (zero shuffle, per-row O(n*k));
@@ -5625,8 +5625,8 @@ def decontaminate_docs(spark, sf_dir):
     set; corpus docs sharing any 8-token span with it are flagged with their
     overlapping-span counts.  Benchmark span hashes are broadcast (map-side
     semi-join — no corpus-side shuffle)."""
-    # r6: span hashes via the Arrow token kernel; the broadcast semi-join
-    # + counts + left restore keep the exact decontaminate() shape
+    # r6: span hashes via the Arrow token kernel; a broadcast semi-join,
+    # per-doc counts and a left restore give every document one row
     from fs2_data_spark.functions.textkernels import token_spans_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     spans = (token_spans_kernel(d, "doc_id", "text", k=8)

@@ -35,7 +35,6 @@ EVENT_FIELDS = ("event_no int, depth int, event string, "
                 "name string, attrs map<string,string>, text string, "
                 "parent string, path string, owner_no int, ok boolean, "
                 "error string")
-EVENT_SCHEMA = "doc_key string, " + EVENT_FIELDS
 
 
 def _doc_key(key_col: str, name: str = "doc_key"):

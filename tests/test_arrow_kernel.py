@@ -147,7 +147,8 @@ def _uses(node, strings=False):
     out, alias = set(), {}
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            if not isinstance(n.ctx, ast.Store):
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.ImportFrom):
@@ -214,6 +215,67 @@ def test_every_public_function_has_a_caller_or_is_a_reference():
         body = [f for f in ast.parse((tests / file).read_text()).body
                 if getattr(f, "name", None) == fn]
         assert body and public[q] in _uses(body[0]), (q, where)
+
+
+def _module(rel: str, level: int = 0, name: str | None = None) -> str:
+    """Dotted module of package file ``rel`` (``level``/``name``: the
+    module a relative ``from`` import in that file names)."""
+    parts = ["fs2_data_spark", *Path(rel).with_suffix("").parts]
+    if parts[-1] == "__init__":
+        parts.pop()
+    if level:
+        parts = parts[:len(parts) - level + (rel.endswith("__init__.py"))]
+        parts += name.split(".") if name else []
+    return ".".join(parts)
+
+
+def test_every_module_level_name_is_used():
+    """A module-level import of the package is read in its own module (or
+    listed in its ``__all__``), or another module, a test or a caller
+    imports it from there; a module-level constant is read somewhere in the
+    package, ``_CALLERS`` or the tests. The two kinds of dead name the
+    function guard above cannot see."""
+    root = PKG.parent
+    trees = {f"fs2_data_spark/{p.relative_to(PKG).as_posix()}": p
+             for p in sorted(PKG.rglob("*.py"))}
+    for entry in (*_CALLERS, "tests"):
+        trees.update((p.relative_to(root).as_posix(), p) for p in (
+            [root / entry] if entry.endswith(".py")
+            else sorted((root / entry).rglob("*.py"))))
+    trees = {rel: ast.parse(p.read_text(), rel) for rel, p in trees.items()}
+    read, imported_from = set(), set()
+    for rel, tree in trees.items():
+        read |= _uses(tree, strings=not rel.startswith("fs2_data_spark/"))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module != "__future__":
+                mod = (_module(rel.removeprefix("fs2_data_spark/"), n.level,
+                               n.module) if n.level else n.module)
+                imported_from |= {(mod, a.name) for a in n.names}
+    bad = []
+    for rel, tree in trees.items():
+        if not rel.startswith("fs2_data_spark/"):
+            continue
+        mod, own = _module(rel.removeprefix("fs2_data_spark/")), _uses(tree)
+        for st in tree.body:
+            if isinstance(st, ast.Assign) and any(
+                    getattr(t, "id", "") == "__all__" for t in st.targets):
+                own |= set(ast.literal_eval(st.value))
+        for st in tree.body:
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                if getattr(st, "module", None) == "__future__":
+                    continue
+                for a in st.names:
+                    name = a.asname or a.name.split(".")[0]
+                    if name not in own and (mod, name) not in imported_from:
+                        bad.append(f"{rel}:{st.lineno} import {name}")
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                for t in getattr(st, "targets", [getattr(st, "target", None)]):
+                    for n in ast.walk(t):
+                        if (isinstance(n, ast.Name)
+                                and not n.id.startswith("__")
+                                and n.id not in read):
+                            bad.append(f"{rel}:{st.lineno} {n.id}")
+    assert not bad, bad
 
 
 # --- astral text: kernels == Catalyst on emoji ------------------------------

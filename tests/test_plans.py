@@ -94,6 +94,25 @@ def test_fused_segmented_carry_join_shuffle_avoids_broadcast(spark):
     assert "BroadcastExchange" not in plan
 
 
+def test_fused_segmented_one_summary_one_join(spark):
+    """The segmented plan settles every cross-bucket carry on one
+    per-(key, bucket) summary joined back once: one join node, no
+    whole-partition frame, and at most six hash exchanges (the union and
+    the right-side dedup on each side of the join, plus the summary's
+    aggregate and per-key windows)."""
+    import re
+
+    from fs2_data_spark.pipeline import fused_pit_features
+    from fs2_data_spark.tables import observations, token_sequences
+    seqs = token_sequences(spark, 1000, n_docs=50).drop("tokens")
+    obs = observations(spark, 300, n_docs=50)
+    df = fused_pit_features(seqs, obs, gap_s=1800, bucket_us=3_600_000_000)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"[-+] \w*(?:Join|CartesianProduct)\b", plan)) == 1
+    assert "unboundedfollowing" not in plan.lower()
+    assert plan.count("Exchange hashpartitioning") <= 6
+
+
 def test_asof_plans_use_one_builder_and_running_frame(spark):
     """One as-of union builder, one running frame: no following frame
     (Spark re-scans it per row) and no second hand-built union in the

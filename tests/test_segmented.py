@@ -38,9 +38,11 @@ def test_detect_hot_keys(spark, payload):
     assert len(hot) <= 3
 
 
-def test_pipeline_hybrid_equals_normal(spark, payload):
+# None sizes the buckets from the hot subset's span, as the benchmarks run it
+@pytest.mark.parametrize("bucket_us", [BUCKET_US, None], ids=["fixed", "auto"])
+def test_pipeline_hybrid_equals_normal(spark, payload, bucket_us):
     seqs, obs = payload
-    hybrid = pit_feature_pipeline(seqs, obs, gap_s=1800, bucket_us=BUCKET_US,
+    hybrid = pit_feature_pipeline(seqs, obs, gap_s=1800, bucket_us=bucket_us,
                                   hot_keys=["doc_0"])
     plain = pit_feature_pipeline(seqs, obs, gap_s=1800, hot_keys=[])
     cols = sorted(set(hybrid.columns) & set(plain.columns))
@@ -54,5 +56,5 @@ def test_pipeline_hybrid_equals_normal(spark, payload):
     assert plain.count() == seqs.count()
     for hot in (["doc_0"], ["doc_0", None]):
         hybrid = pit_feature_pipeline(n_seqs, n_obs, gap_s=1800,
-                                      bucket_us=BUCKET_US, hot_keys=hot)
+                                      bucket_us=bucket_us, hot_keys=hot)
         assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols)), hot
