@@ -1,5 +1,5 @@
-"""fused_pit_features (one-exchange/one-sort plan) and the Arrow token
-kernel must exactly equal their composed / expression-level references."""
+"""fused_pit_features (one window stage) and the Arrow token kernel must
+exactly equal their composed / expression-level references."""
 
 import numpy as np
 import pytest
@@ -66,21 +66,35 @@ def _null_keys(df):
         "doc_id", F.when(~F.col("doc_id").isin("doc_1", "doc_2"), F.col("doc_id")))
 
 
+def _null_ts(seqs, obs):
+    """NULL ``event_time`` on every 17th sequence, NULL ``obs_time`` on
+    about a seventh of the observations."""
+    return (seqs.withColumn("event_time", F.when(F.col("seq_no") % 17 != 0,
+                                                 F.col("event_time"))),
+            obs.withColumn("obs_time", F.when(
+                F.pmod(F.xxhash64("doc_id", "obs_time"), F.lit(7)) != 0,
+                F.col("obs_time"))))
+
+
 _BUCKETS = [60_000_000, 45 * 60 * 1_000_000, 10**13]
 
 
 @pytest.mark.parametrize(
-    "bucket_us,null_keys",
-    [pytest.param(b, False, id=str(b)) for b in _BUCKETS]
-    + [pytest.param(b, True, id=f"null_keys-{b}") for b in _BUCKETS])
-def test_fused_segmented_equals_fused(spark, payload, bucket_us, null_keys):
+    "bucket_us,nulls",
+    [pytest.param(b, None, id=str(b)) for b in _BUCKETS]
+    + [pytest.param(b, "keys", id=f"null_keys-{b}") for b in _BUCKETS]
+    + [pytest.param(b, "ts", id=f"null_ts-{b}") for b in _BUCKETS])
+def test_fused_segmented_equals_fused(spark, payload, bucket_us, nulls):
     """The segmented physical plan (skew-proof (key, time-bucket) windows +
     summary carries) must be value-identical to the single-window plan for
     every bucket size, incl. the degenerate one-bucket case — and for NULL
-    keys, whose carries join back NULL-safe."""
+    keys, whose carries join back NULL-safe, and NULL timestamps, which
+    form each key's first (NULL) bucket."""
     seqs, obs = payload
-    if null_keys:
+    if nulls == "keys":
         seqs, obs = _null_keys(seqs), _null_keys(obs)
+    elif nulls == "ts":
+        seqs, obs = _null_ts(seqs, obs)
     a = fused_pit_features(seqs, obs, gap_s=1800)
     b = fused_pit_features(seqs, obs, gap_s=1800, bucket_us=bucket_us)
     cols = sorted(a.columns)

@@ -23,6 +23,12 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def hash_exchanges(plan: str) -> int:
+    """Hash exchanges in a formatted plan: its tree prints ``Exchange (n)``
+    and the partitioning on the node's ``Arguments:`` line."""
+    return plan.count("Arguments: hashpartitioning")
+
+
 def assert_no_python(plan: str) -> None:
     for marker in PYTHON_NODES:
         assert marker not in plan, f"Python stage in plan: {marker}"
@@ -49,13 +55,13 @@ def test_asof_union_single_exchange(spark):
     """The as-of union-window plan: ONE hash exchange feeds the window chain
     (no join node, no second shuffle for the window stages)."""
     plan = plan_of(q(spark, "asof_join_events"))
-    assert plan.count("Exchange hashpartitioning") <= 2
+    assert 1 <= hash_exchanges(plan) <= 2
     assert "SortMergeJoin" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
 def test_fused_pit_single_window_chain(spark):
     plan = plan_of(q(spark, "pit_fused_events"))
-    assert plan.count("Exchange hashpartitioning") <= 2
+    assert 1 <= hash_exchanges(plan) <= 2
     assert "CartesianProduct" not in plan
 
 
@@ -111,6 +117,25 @@ def test_fused_segmented_one_summary_one_join(spark):
     assert len(re.findall(r"[-+] \w*(?:Join|CartesianProduct)\b", plan)) == 1
     assert "unboundedfollowing" not in plan.lower()
     assert plan.count("Exchange hashpartitioning") <= 6
+
+
+def test_pipeline_hybrid_is_one_plan(spark):
+    """The hot-key router is a bucket column inside one plan: the hybrid
+    pipeline has the segmented plan's shape — one carry join, each input
+    read twice (the window stage and the summary), at most six hash
+    exchanges — not a second plan unioned on."""
+    import re
+
+    from fs2_data_spark.pipeline import pit_feature_pipeline
+    from fs2_data_spark.tables import observations, token_sequences
+    seqs = token_sequences(spark, 1000, n_docs=50)
+    obs = observations(spark, 300, n_docs=50)
+    df = pit_feature_pipeline(seqs, obs, gap_s=1800, hot_keys=["doc_0"],
+                              bucket_us=3_600_000_000)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"[-+] \w*(?:Join|CartesianProduct)\b", plan)) == 1
+    assert plan.count("Exchange hashpartitioning") <= 6
+    assert plan.count("Range (") <= 4
 
 
 def test_asof_plans_use_one_builder_and_running_frame(spark):

@@ -58,3 +58,14 @@ def test_pipeline_hybrid_equals_normal(spark, payload, bucket_us):
         hybrid = pit_feature_pipeline(n_seqs, n_obs, gap_s=1800,
                                       bucket_us=bucket_us, hot_keys=hot)
         assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols)), hot
+
+    # NULL timestamps on both sides: a hot key's NULL-ts rows form its
+    # first (NULL) bucket
+    t_seqs = seqs.withColumn("event_time", F.when(F.col("seq_no") % 17 != 0,
+                                                  F.col("event_time")))
+    t_obs = obs.withColumn("obs_time", F.when(
+        F.pmod(F.xxhash64("doc_id", "obs_time"), F.lit(7)) != 0, F.col("obs_time")))
+    hybrid = pit_feature_pipeline(t_seqs, t_obs, gap_s=1800, bucket_us=bucket_us,
+                                  hot_keys=["doc_0"])
+    plain = pit_feature_pipeline(t_seqs, t_obs, gap_s=1800, hot_keys=[])
+    assert _sorted(hybrid.select(cols)) == _sorted(plain.select(cols))
